@@ -25,16 +25,11 @@ object ChangeLogs {
       .agg(map_from_entries(array_sort(collect_list(struct(mapKey, mapValue))))
         .as(as))
 
-  /** Several map columns per group key in ONE aggregation pass — the fused
-    * form for metrics sharing an upstream frame (keeps the sorted-entries
-    * determinism invariant in one place). */
-  def perKeyMulti(df: DataFrame, groupKey: Column, mapKey: Column,
-      values: Seq[(Column, String)]): DataFrame = {
-    val aggs = values.map { case (v, name) =>
-      map_from_entries(array_sort(collect_list(struct(mapKey, v)))).as(name)
-    }
-    df.groupBy(groupKey).agg(aggs.head, aggs.tail: _*)
-  }
+  /** Map over an already key-sorted entry array: element `e` becomes the
+    * entry `key(e) → value(e)` (the non-aggregate twin of [[perKey]]). */
+  def mapOf(entries: Column, key: Column => Column,
+      value: Column => Column): Column =
+    map_from_entries(transform(entries, e => struct(key(e), value(e))))
 
   /** Whole-frame collapse to a single map row (the reference's shape). */
   def global(df: DataFrame, mapKey: Column, mapValue: Column,
@@ -54,11 +49,18 @@ object ChangeLogs {
     * must already be a valid JSON fragment (number / boolean / object /
     * quoted string); keys render unquoted via CAST(.. AS STRING). */
   def jsonLog(mapKey: Column, jsonValue: Column): Column =
+    jsonObject(
+      array_sort(collect_list(struct(mapKey.as("k"), jsonValue.as("j")))),
+      _("k"), _("j"))
+
+  /** `{"k1":v1,…}` over an already key-sorted entry array: element `e`
+    * renders as key `key(e)` and JSON fragment `json(e)`; a null fragment
+    * drops its entry (the non-aggregate twin of [[jsonLog]]). */
+  def jsonObject(entries: Column, key: Column => Column,
+      json: Column => Column): Column =
     concat(lit("{"),
-      concat_ws(",",
-        transform(
-          array_sort(collect_list(struct(mapKey.as("k"), jsonValue.as("j")))),
-          e => concat(lit("\""), e("k").cast("string"), lit("\":"), e("j")))),
+      concat_ws(",", transform(entries, e =>
+        concat(lit("\""), key(e).cast("string"), lit("\":"), json(e)))),
       lit("}"))
 
   /** JSON boolean fragment. */

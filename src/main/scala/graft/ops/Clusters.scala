@@ -79,8 +79,8 @@ object Clusters {
   }
 
   /** [[clusterMap]] rendered as one sorted-JSON string — the driver-
-    * verifiable twin of the map-typed library form (same recipe as
-    * `Pipelines.tokenDocumentsJson`): per timestamp a
+    * verifiable twin of the map-typed library form (the same [[ChangeLogs]]
+    * JSON helpers render `Pipelines.tokenDocumentsJson`): per timestamp a
     * `{"LOW":[…],"MEDIUM":[…],"HIGH":[…]}` object with sorted wallet
     * arrays, timestamps sorted, byte-identical to a DuckDB string_agg
     * oracle. */

@@ -3,7 +3,7 @@ package graft.pipelines
 import graft.Tables
 import graft.io.Sinks
 import graft.ops._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -16,10 +16,14 @@ import org.apache.spark.sql.types.DecimalType
   * Key structural change (SURVEY §7.4.6): no driver-side token loops — every
   * stage keeps `contract_address` as a grouping column and computes ALL
   * tokens in one distributed pass; per-token whale thresholds come from a
-  * joined market lookup instead of per-token HTTP fetches
-  * (reference: common/Coingecko.scala). Sinks are upsert-by-key parquet
-  * (idempotent under retry — the property the reference's wall-clock keys
-  * break, SURVEY §4.6).
+  * market lookup built on the driver instead of per-token HTTP fetches
+  * (reference: common/Coingecko.scala). Where the reference re-scans its
+  * source once per metric (SURVEY §4), the token documents here are one
+  * linear chain over one scan of the transfers: both legs of each transfer
+  * → per (token, wallet, hour) → per (token, hour) → per (token, day) → per
+  * token, with the map and JSON renderings reading the same per-token row.
+  * Sinks are upsert-by-key parquet (idempotent under retry — the property
+  * the reference's wall-clock keys break, SURVEY §4.6).
   */
 object Pipelines {
 
@@ -35,32 +39,43 @@ object Pipelines {
     Sinks.upsertParquet(spark, Keys.transferEdges(spark, sfDir),
       "_key", "block_number", s"$outDir/transfers")
 
-  /** Double-entry legs for all tokens: (token, address, t, delta). */
-  private def legsAll(spark: SparkSession, sfDir: String): DataFrame = {
-    val t = Tables.transfers(spark, sfDir)
-    t.select(col("contract_address"), col("from_address").as("address"),
-        Num.hourBucket(col("transact_at")).as("t"), negate(col("value")).as("delta"))
-      .unionByName(
-        t.select(col("contract_address"), col("to_address").as("address"),
-          Num.hourBucket(col("transact_at")).as("t"), col("value").as("delta")))
-  }
+  private val tok = col("contract_address")
+  private val ClusterNames = Seq("LOW", "MEDIUM", "HIGH")
+
+  /** Both legs of every transfer from ONE scan of the transfers: (token,
+    * address, hour, signed delta, received value, incoming). The sender's
+    * leg carries -value, the receiver's +value and the received value, so
+    * each transfer has exactly one incoming leg. */
+  private def legsAll(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.transfers(spark, sfDir)
+      .select(tok, Num.hourBucket(col("transact_at")).as("t"), explode(array(
+        struct(col("from_address").as("address"), negate(col("value")).as("delta"),
+          lit(null).cast("double").as("received"), lit(false).as("incoming")),
+        struct(col("to_address").as("address"), col("value").as("delta"),
+          col("value").as("received"), lit(true).as("incoming")))).as("leg"))
+      .select(tok, col("t"), col("leg.*"))
 
   /** Per-(token, wallet, hour) running balance with holder/whale flags —
-    * the all-token generalization of [[graft.ops.Balances]]; one shuffle
-    * keyed by (token, address), window reuses it. */
+    * the all-token generalization of [[graft.ops.Balances]]. The same
+    * aggregate also carries the wallet's leg count `n`, its exact-decimal
+    * received `volume` and received-transfer count `received_n`, which the
+    * token documents roll up per hour. */
   def walletStates(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy("contract_address", "address").orderBy("t")
-    val market = Skew.tokenMarket(spark)
-      .withColumn("whale_threshold", col("circulating_supply") * WhaleRatio)
-      .select("contract_address", "whale_threshold")
+    val supply = typedLit(Skew.TokenMarket.toMap)
     legsAll(spark, sfDir)
+      .repartition(tok, col("address")) // one exchange serves agg and window
       .groupBy("contract_address", "address", "t")
-      .agg(sum(col("delta").cast(Dec)).as("ddelta"))
+      .agg(sum(col("delta").cast(Dec)).as("ddelta"), count(lit(1)).as("n"),
+        Num.dsumDec(col("received")).as("volume"),
+        count(when(col("incoming"), 1)).as("received_n"))
       .withColumn("balance",
         sum(col("ddelta")).over(w.rowsBetween(Window.unboundedPreceding, 0))
           .cast("double"))
       .withColumn("prev_balance", lag(col("balance"), 1).over(w))
-      .join(broadcast(market), Seq("contract_address"))
+      // tokens without market data drop out, as an inner join would
+      .withColumn("whale_threshold", supply(tok) * WhaleRatio)
+      .filter(col("whale_threshold").isNotNull)
       .withColumn("is_holder",
         when(col("balance") > HolderThreshold
           || (col("prev_balance") > HolderThreshold && col("balance").isNull), true)
@@ -106,121 +121,95 @@ object Pipelines {
       dappDocuments(spark, sfDir).withColumn("ver", lit(1L)),
       "_key", "ver", s"$outDir/dapps")
 
-  // ── Shared per-metric frames for the token documents ─────────────────
-  // Each is one grouped aggregation; BOTH document renderings (map-typed
-  // library form and JSON-string driver form) assemble from these, so the
-  // expensive subtrees exist exactly once in the code.
+  // ── Token documents: one linear chain over the wallet states ──────────
+  // (token, address, hour) → (token, hour) → (token, day) → token; both
+  // document renderings read the same per-token row.
 
-  private val tok = col("contract_address")
-
-  /** (token, hour, exact-decimal volume, tx count) — one scan/shuffle feeds
-    * both the volume and tx-count change logs (the reference re-scans its
-    * source once per metric — SURVEY §4, caching absent). */
-  private def hourlyVolTx(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.transfers(spark, sfDir)
-      .groupBy(tok, Num.hourBucket(col("transact_at")).as("t"))
-      .agg(Num.dsumDec(col("value")).as("volume"), count(lit(1)).as("n"))
-
-  /** One grouped (token, hour, address) frame feeds BOTH the unique-wallet
-    * map (rows per (token, hour) = distinct addresses) and the cluster map. */
-  private def perAddrHourly(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.transfers(spark, sfDir)
-      .select(tok, Num.hourBucket(col("transact_at")).as("t"),
-        explode(array(col("from_address"), col("to_address"))).as("address"))
-      .groupBy(tok, col("t"), col("address"))
-      .agg(count(lit(1)).as("n"))
-
-  /** (token, day, avg = n/24.0) — the reference's /24 quirk (C3). */
-  private def dailyAvg(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.transfers(spark, sfDir)
-      .groupBy(tok, Num.dayBucket(col("transact_at")).as("d"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("avg", col("n").cast("double") / 24.0)
-
-  /** (token, hour, distinct interacting dapps). */
-  private def dappHourly(spark: SparkSession, sfDir: String): DataFrame = {
-    val reg = Tables.dapps(spark)
-      .select(col("dapp_id"), explode(col("addresses")).as("address"))
-    legsAll(spark, sfDir)
-      .join(broadcast(reg), Seq("address"))
-      .groupBy(tok, col("t"))
-      .agg(countDistinct("dapp_id").as("nd"))
+  /** Address → ids of the registry dapps listing it, built on the driver. */
+  private def dappIdsOf(address: Column): Column = {
+    val ids = typedLit(Tables.DappRegistry
+      .flatMap { case (id, _, addrs) => addrs.map(_ -> id) }
+      .groupMap(_._1)(_._2))
+    ids(address)
   }
 
-  /** (token, hour, holder count, whale count) — one pass over the
-    * (expensive) windowed wallet-state subtree produces both counts. */
-  private def holderWhaleHourly(spark: SparkSession, sfDir: String): DataFrame =
-    walletStates(spark, sfDir)
+  /** One row per token: `hours`, the key-sorted per-hour metrics (volume,
+    * transfer count n, distinct wallets u, holders h, whales w, distinct
+    * dapps nd, LOW/MEDIUM/HIGH wallet lists), and `days`, the key-sorted
+    * per-day transfer averages (n/24.0 — the reference's /24 quirk, C3).
+    * Every hourly metric is one aggregate over the wallet states; the day
+    * regroup carries its hours along instead of re-aggregating the legs. */
+  private def tokenLogs(spark: SparkSession, sfDir: String): DataFrame = {
+    def wallets(cluster: String) = sort_array(collect_list(
+      when(Clusters.clusterOf(col("n")) === cluster, col("address")))).as(cluster)
+    val hour = walletStates(spark, sfDir)
       .groupBy(tok, col("t"))
-      .agg(sum(col("is_holder").cast("int")).as("h"),
-        sum(col("is_whale").cast("int")).as("w"))
-
-  /** (token, hour, LOW/MEDIUM/HIGH sorted wallet lists). */
-  private def clusterArrays(spark: SparkSession, sfDir: String): DataFrame = {
-    val empty = array().cast("array<string>")
-    perAddrHourly(spark, sfDir)
-      .withColumn("cluster", Clusters.clusterOf(col("n")))
-      .groupBy(tok, col("t"))
-      .pivot("cluster", Seq("LOW", "MEDIUM", "HIGH"))
-      .agg(sort_array(collect_list(col("address"))))
-      .select(tok, col("t"),
-        coalesce(col("LOW"), empty).as("LOW"),
-        coalesce(col("MEDIUM"), empty).as("MEDIUM"),
-        coalesce(col("HIGH"), empty).as("HIGH"))
+      .agg(sum("volume").as("volume"), Seq(
+        // non-null like a count, so the map type has valueContainsNull=false
+        coalesce(sum("received_n"), lit(0L)).as("n"), count(lit(1)).as("u"),
+        sum(col("is_holder").cast("int")).as("h"),
+        sum(col("is_whale").cast("int")).as("w"),
+        size(array_distinct(flatten(collect_list(dappIdsOf(col("address"))))))
+          .cast("long").as("nd")) ++ ClusterNames.map(wallets): _*)
+    hour.repartition(tok) // one exchange serves the day and token regroups
+      .groupBy(tok, Num.dayBucket(col("t")).as("d"))
+      .agg(sum("n").as("day_n"),
+        collect_list(struct(hour.columns.tail.map(col): _*)).as("hours"))
+      .groupBy(tok)
+      .agg(array_sort(flatten(collect_list(col("hours")))).as("hours"),
+        array_sort(collect_list(struct(col("d"),
+          (col("day_n").cast("double") / 24.0).as("avg")))).as("days"))
   }
 
-  /** Per-token market/info scalars (broadcastable 5-row dimension). */
-  private def infoFrame(spark: SparkSession): DataFrame =
-    Skew.tokenMarket(spark)
-      .join(Skew.tokenInfo(spark), Seq("contract_address"))
-      .select(tok, col("contract_address").as("address"),
-        col("circulating_supply"), col("name"), col("symbol"),
-        col("decimals"), col("logo"))
+  /** Per-token market/info scalars, joined on the driver (5 rows). */
+  private def infoFrame(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    val supply = Skew.TokenMarket.toMap
+    Skew.TokenInfo
+      .collect { case (t, name, symbol, decimals, logo) if supply.contains(t) =>
+        (t, t, supply(t), name, symbol, decimals, logo) }
+      .toDF("contract_address", "address", "circulating_supply", "name",
+        "symbol", "decimals", "logo")
+  }
+
+  /** Every token of [[infoFrame]] with its eight change logs, rendered from
+    * the per-token row by `logs` (in the reference's column order) and
+    * completed by `absent` (which sees null for a token without transfers),
+    * keyed and ordered by token. */
+  private def documents(spark: SparkSession, sfDir: String,
+      absent: Column => Column)(logs: Column*): DataFrame = {
+    val names = Seq("tradingVolumeChangeLogs", "numberOfTransferChangeLogs",
+      "numberOfAddressChangeLogs", "averageNumberOfTransactionPerDay",
+      "numberOfDappChangeLogs", "numberOfHolderChangeLogs",
+      "numberOfWhaleWalletChangeLogs", "walletClusterByNumberOfTransfer")
+    val info = infoFrame(spark)
+    info.join(tokenLogs(spark, sfDir)
+        .select(tok +: logs.zip(names).map { case (l, n) => l.as(n) }: _*),
+        Seq("contract_address"), "left")
+      .select(info.columns.map(col) ++ names.map(n => absent(col(n)).as(n)): _*)
+      .withColumn("_key", tok)
+      .orderBy("contract_address")
+  }
 
   /** Token enrichment (EnhanceTokenEnricher): one document per token holding
-    * every change-log map the reference stores — computed as grouped
-    * aggregations over shared scans and stitched with tiny per-token joins
-    * (5 rows a side, broadcast), not the reference's 9-frame
-    * monotonically_increasing_id reduce-join. */
+    * every change-log map the reference stores, each map's entries sorted
+    * by key — not the reference's 9-frame monotonically_increasing_id
+    * reduce-join. A token with no dapp hour has a null dapp map. */
   def tokenDocuments(spark: SparkSession, sfDir: String): DataFrame = {
-    val volumeAndTxMaps = ChangeLogs.perKeyMulti(
-      hourlyVolTx(spark, sfDir)
-        .withColumn("volume", col("volume").cast("double")),
-      tok, col("t"), Seq(
-        col("volume") -> "tradingVolumeChangeLogs",
-        col("n") -> "numberOfTransferChangeLogs"))
-
-    val uniqueMap = ChangeLogs.perKey(
-      perAddrHourly(spark, sfDir).groupBy(tok, col("t")).agg(count(lit(1)).as("u")),
-      tok, col("t"), col("u"), "numberOfAddressChangeLogs")
-
-    val avgMap = ChangeLogs.perKey(dailyAvg(spark, sfDir),
-      tok, col("d"), col("avg"), "averageNumberOfTransactionPerDay")
-
-    val dappMap = ChangeLogs.perKey(dappHourly(spark, sfDir),
-      tok, col("t"), col("nd"), "numberOfDappChangeLogs")
-
-    val holderAndWhaleMaps = ChangeLogs.perKeyMulti(
-      holderWhaleHourly(spark, sfDir),
-      tok, col("t"), Seq(
-        col("h") -> "numberOfHolderChangeLogs",
-        col("w") -> "numberOfWhaleWalletChangeLogs"))
-
-    val clusterMap = ChangeLogs.perKey(
-      clusterArrays(spark, sfDir)
-        .select(tok, col("t"), struct(
-          struct(col("LOW").as("addresses")).as("LOW"),
-          struct(col("MEDIUM").as("addresses")).as("MEDIUM"),
-          struct(col("HIGH").as("addresses")).as("HIGH"))
-          .as("clusters")),
-      tok, col("t"), col("clusters"), "walletClusterByNumberOfTransfer")
-
-    Seq(volumeAndTxMaps, uniqueMap, avgMap, dappMap, holderAndWhaleMaps,
-        clusterMap)
-      .foldLeft(infoFrame(spark))((acc, m) =>
-        acc.join(m, Seq("contract_address"), "left"))
-      .withColumn("_key", col("contract_address"))
-      .orderBy("contract_address")
+    def log(entries: Column, key: String)(value: Column => Column) =
+      ChangeLogs.mapOf(entries, _(key), value)
+    val hours = col("hours")
+    val dappHours = filter(hours, _("nd") > 0)
+    documents(spark, sfDir, identity)(
+      log(hours, "t")(_("volume").cast("double")),
+      log(hours, "t")(_("n")),
+      log(hours, "t")(_("u")),
+      log(col("days"), "d")(_("avg")),
+      when(size(dappHours) > 0, log(dappHours, "t")(_("nd"))),
+      log(hours, "t")(_("h")),
+      log(hours, "t")(_("w")),
+      log(hours, "t")(e => struct(ClusterNames.map(c =>
+        struct(e(c).cast("array<string>").as("addresses")).as(c)): _*)))
   }
 
   /** [[tokenDocuments]] with every change-log map rendered as a sorted JSON
@@ -229,64 +218,22 @@ object Pipelines {
     * oracle. Rendering rules: volumes stay DECIMAL into the string, counts
     * are integers, the /24 average renders through fixed `%.6f` (raw double
     * toString differs across engines), cluster lists are sorted JSON string
-    * arrays. Tokens missing a metric coalesce to the empty object. */
+    * arrays. A missing log (no transfers, or no dapp hour) is `{}`. */
   def tokenDocumentsJson(spark: SparkSession, sfDir: String): DataFrame = {
-    val volumeAndTxJson = hourlyVolTx(spark, sfDir)
-      .groupBy(tok)
-      .agg(
-        ChangeLogs.jsonLog(col("t"), col("volume").cast("string"))
-          .as("tradingVolumeChangeLogs"),
-        ChangeLogs.jsonLog(col("t"), col("n").cast("string"))
-          .as("numberOfTransferChangeLogs"))
-
-    val uniqueJson = perAddrHourly(spark, sfDir)
-      .groupBy(tok, col("t")).agg(count(lit(1)).as("u"))
-      .groupBy(tok)
-      .agg(ChangeLogs.jsonLog(col("t"), col("u").cast("string"))
-        .as("numberOfAddressChangeLogs"))
-
-    val avgJson = dailyAvg(spark, sfDir)
-      .groupBy(tok)
-      .agg(ChangeLogs.jsonLog(col("d"), format_string("%.6f", col("avg")))
-        .as("averageNumberOfTransactionPerDay"))
-
-    val dappJson = dappHourly(spark, sfDir)
-      .groupBy(tok)
-      .agg(ChangeLogs.jsonLog(col("t"), col("nd").cast("string"))
-        .as("numberOfDappChangeLogs"))
-
-    val holderWhaleJson = holderWhaleHourly(spark, sfDir)
-      .groupBy(tok)
-      .agg(
-        ChangeLogs.jsonLog(col("t"), col("h").cast("string"))
-          .as("numberOfHolderChangeLogs"),
-        ChangeLogs.jsonLog(col("t"), col("w").cast("string"))
-          .as("numberOfWhaleWalletChangeLogs"))
-
-    val clusterJson = clusterArrays(spark, sfDir)
-      .groupBy(tok)
-      .agg(ChangeLogs.jsonLog(col("t"), concat(
-        lit("{\"LOW\":{\"addresses\":"), ChangeLogs.jsonStrArray(col("LOW")),
-        lit("},\"MEDIUM\":{\"addresses\":"), ChangeLogs.jsonStrArray(col("MEDIUM")),
-        lit("},\"HIGH\":{\"addresses\":"), ChangeLogs.jsonStrArray(col("HIGH")),
-        lit("}}")))
-        .as("walletClusterByNumberOfTransfer"))
-
-    val logCols = Seq("tradingVolumeChangeLogs", "numberOfTransferChangeLogs",
-      "numberOfAddressChangeLogs", "averageNumberOfTransactionPerDay",
-      "numberOfDappChangeLogs", "numberOfHolderChangeLogs",
-      "numberOfWhaleWalletChangeLogs", "walletClusterByNumberOfTransfer")
-
-    Seq(volumeAndTxJson, uniqueJson, avgJson, dappJson, holderWhaleJson,
-        clusterJson)
-      .foldLeft(infoFrame(spark))((acc, m) =>
-        acc.join(m, Seq("contract_address"), "left"))
-      .select(col("contract_address") +: col("address") +:
-        col("circulating_supply") +: col("name") +: col("symbol") +:
-        col("decimals") +: col("logo") +:
-        logCols.map(c => coalesce(col(c), lit("{}")).as(c)): _*)
-      .withColumn("_key", col("contract_address"))
-      .orderBy("contract_address")
+    def log(entries: Column, key: String)(value: Column => Column) =
+      ChangeLogs.jsonObject(entries, _(key), value)
+    val hours = col("hours")
+    documents(spark, sfDir, coalesce(_, lit("{}")))(
+      log(hours, "t")(_("volume").cast("string")),
+      log(hours, "t")(_("n").cast("string")),
+      log(hours, "t")(_("u").cast("string")),
+      log(col("days"), "d")(e => format_string("%.6f", e("avg"))),
+      log(filter(hours, _("nd") > 0), "t")(_("nd").cast("string")),
+      log(hours, "t")(_("h").cast("string")),
+      log(hours, "t")(_("w").cast("string")),
+      log(hours, "t")(e => concat(lit("{"), concat_ws(",", ClusterNames.map(c =>
+        concat(lit(s"\"$c\":{\"addresses\":"), ChangeLogs.jsonStrArray(e(c)),
+          lit("}"))): _*), lit("}"))))
   }
 
   def enrichTokens(spark: SparkSession, sfDir: String, outDir: String): Unit =

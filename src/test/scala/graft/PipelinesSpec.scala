@@ -1,7 +1,9 @@
 package graft
 
 import graft.pipelines.Pipelines
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end runs of the four reference-pipeline equivalents. */
@@ -51,6 +53,106 @@ class PipelinesSpec extends AnyFunSuite {
     val flat = graft.ops.Metrics.hourlyVolume(spark, GraftSpark.Sf)
       .agg(sum("volume")).head().getDouble(0)
     assert(math.abs(fromMap - flat) < 1e-6)
+  }
+
+  private val LogNames = Seq("tradingVolumeChangeLogs",
+    "numberOfTransferChangeLogs", "numberOfAddressChangeLogs",
+    "averageNumberOfTransactionPerDay", "numberOfDappChangeLogs",
+    "numberOfHolderChangeLogs", "numberOfWhaleWalletChangeLogs",
+    "walletClusterByNumberOfTransfer")
+
+  /** Driver-side JSON rendering of one map-form change log, by the JSON
+    * form's documented rules: keys sorted, DECIMAL(…,2) volumes, `%.6f`
+    * averages, integer counts, sorted cluster arrays; a null value drops its
+    * entry and a null map is `{}`. */
+  private def renderLog(log: String, m: scala.collection.Map[Any, Any]): String = {
+    def strs(a: scala.collection.Seq[String]) =
+      a.map(x => "\"" + x + "\"").mkString("[", ",", "]")
+    def value(v: Any): String = (log, v) match {
+      case ("tradingVolumeChangeLogs", d: Double) =>
+        BigDecimal(d).setScale(2, BigDecimal.RoundingMode.HALF_UP)
+          .bigDecimal.toPlainString
+      case ("averageNumberOfTransactionPerDay", d: Double) =>
+        "%.6f".formatLocal(java.util.Locale.US, d)
+      case (_, r: Row) => Seq("LOW", "MEDIUM", "HIGH").map(c =>
+        s"\"$c\":{\"addresses\":" +
+          strs(r.getAs[Row](c).getSeq[String](0)) + "}").mkString("{", ",", "}")
+      case (_, n) => n.toString
+    }
+    Option(m).fold(Seq.empty[(Long, Any)])(_.toSeq
+        .map { case (k, v) => k.asInstanceOf[Long] -> v }.sortBy(_._1))
+      .collect { case (k, v) if v != null => s"\"$k\":" + value(v) }
+      .mkString("{", ",", "}")
+  }
+
+  /** The fixture events with every event of `dropped` removed, and every
+    * `noDapp` event whose transfer touches a registry wallet removed: in
+    * this dir `dropped` has no transfers and `noDapp` has no dapp hour. */
+  private def sfWithout(dropped: String, noDapp: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sf").toString
+    val reg = Tables.DappRegistry.flatMap(_._3)
+    val touching = Tables.transfers(spark, GraftSpark.Sf)
+      .filter(col("contract_address") === noDapp &&
+        (col("from_address").isin(reg: _*) || col("to_address").isin(reg: _*)))
+      .select(col("block_number").as("event_id"))
+    // copied raw, so the file keeps the fixture's ts encoding; the
+    // pipelines then read it through Tables.events
+    spark.read.parquet(s"${GraftSpark.Sf}/events.parquet")
+      .filter(col("event_type") =!= dropped)
+      .join(touching, Seq("event_id"), "left_anti")
+      .write.parquet(s"$dir/events.parquet")
+    dir
+  }
+
+  test("map-form token documents render to the JSON form, log by log") {
+    for (sf <- Seq(GraftSpark.Sf, sfWithout("signup", "view"))) {
+      val maps = Pipelines.tokenDocuments(spark, sf).collect()
+        .map(r => r.getAs[String]("_key") -> r).toMap
+      val jsons = Pipelines.tokenDocumentsJson(spark, sf).collect()
+        .map(r => r.getAs[String]("_key") -> r).toMap
+      assert(maps.keySet == jsons.keySet && maps.size == 5)
+      for ((token, m) <- maps; log <- LogNames)
+        assert(renderLog(log, m.getAs(log)) == jsons(token).getAs[String](log),
+          s"$sf $token $log")
+      if (sf != GraftSpark.Sf) {
+        assert(LogNames.forall(l => maps("signup").isNullAt(maps("signup").fieldIndex(l))))
+        assert(LogNames.forall(l => jsons("signup").getAs[String](l) == "{}"))
+        val dapp = "numberOfDappChangeLogs"
+        assert(maps("view").isNullAt(maps("view").fieldIndex(dapp)))
+        assert(jsons("view").getAs[String](dapp) == "{}")
+        assert(maps("view").getAs[Any]("numberOfHolderChangeLogs") != null)
+      } else
+        assert(maps.values.forall(_.getAs[Any]("numberOfDappChangeLogs") != null))
+    }
+  }
+
+  test("wallet balances end at the signed decimal sum of their transfers") {
+    val t = Tables.transfers(spark, GraftSpark.Sf)
+    val dec = (c: org.apache.spark.sql.Column) => c.cast(DecimalType(25, 2))
+    val direct = t.select(col("contract_address"), col("from_address").as("address"),
+        dec(-col("value")).as("v"))
+      .unionByName(t.select(col("contract_address"), col("to_address").as("address"),
+        dec(col("value")).as("v")))
+      .groupBy(concat_ws("_", col("contract_address"), col("address")).as("_key"))
+      .agg(sum("v").cast("double").as("expected"))
+    val last = Pipelines.walletDocuments(spark, GraftSpark.Sf)
+      .select(col("_key"),
+        element_at(map_values(col("balanceChangeLogs")), -1)("balance").as("last"))
+    val joined = direct.join(last, Seq("_key"), "full_outer")
+    assert(joined.count() == direct.count())
+    val bad = joined.filter(!(col("expected") <=> col("last")))
+    assert(bad.isEmpty, bad.limit(5).collect().mkString("\n"))
+  }
+
+  test("dapp interactions count every leg that lands on a registry wallet") {
+    val reg = Tables.DappRegistry.flatMap(_._3).toSet
+    val legs = Tables.transfers(spark, GraftSpark.Sf)
+      .select("from_address", "to_address").collect()
+      .iterator.flatMap(r => Seq(r.getString(0), r.getString(1)))
+      .count(reg.contains)
+    val total = Pipelines.dappDocuments(spark, GraftSpark.Sf)
+      .agg(sum("n_interactions")).head().getLong(0)
+    assert(legs > 0 && total == legs)
   }
 
   test("token enrichment writes and re-reads through the upsert sink") {

@@ -1,5 +1,10 @@
 package graft
 
+import graft.pipelines.Pipelines
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan assertions: the shapes that matter at 100 TB.
@@ -12,6 +17,18 @@ class PlanAuditSpec extends AnyFunSuite {
   private def plan(name: String): String = {
     val df = SparkEntry.queries(name)(spark, GraftSpark.Sf)
     df.queryExecution.executedPlan.toString
+  }
+
+  /** Nodes of the physical plan as it would run before any AQE re-plan:
+    * through an adaptive node's current plan, which holds the exchanges
+    * EnsureRequirements planted (its input plan holds only the explicit
+    * repartitions). */
+  private def physicalNodes(df: DataFrame): Seq[SparkPlan] = {
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case other => other +: other.children.flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan)
   }
 
   test("block-range predicates are pushed to the parquet scan") {
@@ -233,9 +250,6 @@ class PlanAuditSpec extends AnyFunSuite {
     // re-run), and a string count would also miscount: InMemoryRelation
     // prints its child plan inline at every reference, so nested caches
     // (the k-means iteration frames) inflate the text arbitrarily.
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.Exchange
     def countExchanges(plan: SparkPlan): Int = {
       var n = 0
       def walk(p: SparkPlan): Unit = p match {
@@ -255,6 +269,28 @@ class PlanAuditSpec extends AnyFunSuite {
         if (ex > ceilings(n)) Some(s"$n=$ex") else None
       }
     assert(offenders.isEmpty, s"queries over shuffle ceiling: $offenders")
+  }
+
+  test("token documents: one events scan feeds one linear exchange chain") {
+    // legs → (token, wallet) states → (token, hour) → token, rendered both
+    // ways from the same per-token row: one scan, and one exchange per
+    // level (the wallet, hour and token regroups, the per-token broadcast
+    // and the presentation sort). A per-metric subtree forked off the chain
+    // would add a scan and its exchanges.
+    def scans(df: DataFrame) = physicalNodes(df).collect {
+      case s: FileSourceScanExec =>
+        s.relation.location.rootPaths.map(_.getName).mkString(",") }
+    for ((name, df) <- Seq(
+        "tokenDocuments" -> Pipelines.tokenDocuments(spark, GraftSpark.Sf),
+        "tokenDocumentsJson" ->
+          Pipelines.tokenDocumentsJson(spark, GraftSpark.Sf))) {
+      val p = df.queryExecution.executedPlan
+      assert(scans(df) == Seq("events.parquet"), s"$name\n$p")
+      val exchanges = physicalNodes(df).count(_.isInstanceOf[Exchange])
+      assert(exchanges <= 5, s"$name: $exchanges exchanges\n$p")
+    }
+    assert(scans(Pipelines.walletStates(spark, GraftSpark.Sf)) ==
+      Seq("events.parquet"))
   }
 
   test("name linkage: variant index cached once, names re-attached broadcast") {
