@@ -18,7 +18,76 @@ import org.apache.spark.sql.types._
 object Tables {
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    model.Boundary.conform(name, spark.read.parquet(s"$sfDir/$name.parquet"))
+    model.Boundary.conform(name, parquet(spark, s"$sfDir/$name.parquet"))
+
+  /** An engine-owned, unpartitioned parquet path, read with the schema of
+    * [[parquetSchema]]. Every read of a table, sink or stream output the
+    * engine itself wrote goes through here rather than a bare
+    * `spark.read.parquet`, whose schema inference runs a one-task Spark job
+    * (`ParquetFileFormat.mergeSchemasInParallel`) on every call. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+
+  /** The schema `spark.read.parquet(path)` infers, taken from one footer
+    * read on the driver instead of an inference job. It is the same file
+    * (the first data file by path) and the same conversion: Spark's
+    * `readSchemaFromFooter`, which prefers Spark's own row-metadata key,
+    * over a converter with inference's session settings (binary-as-string,
+    * INT96, NTZ inference, nanos-as-long, unknown annotations). A path with
+    * no data file fails as inference does (see [[parquetDataFiles]]).
+    * Summary files (`_metadata`, `_common_metadata`) are not consulted;
+    * Spark writes none by default. */
+  def parquetSchema(spark: SparkSession, path: String): StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val (hconf, files) = parquetDataFiles(spark, path)
+    val conf = spark.sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation =
+        conf.parquetReaderRespectUnknownTypeAnnotation)
+    val first = files.head
+    val footer = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(first, hconf),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(first.getPath, footer), converter)
+  }
+
+  /** The data files of a parquet path, sorted by path, as Spark's file
+    * index lists them: recursive, skipping names that start with `.` or
+    * `_` (`_SUCCESS`, `_spark_metadata/`, `_temporary/`) and in-flight
+    * `._COPYING_` files. A missing path fails with Spark's
+    * `PATH_NOT_FOUND`, a path with no data file with its
+    * `UNABLE_TO_INFER_SCHEMA` — the errors `spark.read.parquet` raises. */
+  private def parquetDataFiles(spark: SparkSession, path: String)
+      : (org.apache.hadoop.conf.Configuration,
+         Seq[org.apache.hadoop.fs.FileStatus]) = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.spark.sql.AnalysisException
+    val hconf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(hconf)
+    if (!fs.exists(root))
+      throw new AnalysisException("PATH_NOT_FOUND",
+        Map("path" -> fs.makeQualified(root).toString))
+    def hidden(p: Path) = {
+      val n = p.getName
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")
+    }
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.filterNot(c => hidden(c.getPath))
+        .flatMap(walk)
+    val files = walk(fs.getFileStatus(root)).sortBy(_.getPath.toString)
+    if (files.isEmpty)
+      throw new AnalysisException("UNABLE_TO_INFER_SCHEMA",
+        Map("format" -> "Parquet"))
+    (hconf, files)
+  }
 
   /** Exact row count of a parquet table from file FOOTERS alone — a
     * driver-side metadata read, no Spark job. For sizing decisions made at
@@ -30,33 +99,19 @@ object Tables {
     * predicate/encoding. Falls back to `count()` only if the footer read
     * fails (corrupt footer, non-parquet layout). */
   def parquetRowCount(spark: SparkSession, sfDir: String,
-      name: String): Long = {
-    val path = s"$sfDir/$name.parquet"
+      name: String): Long =
     try {
-      val hconf = spark.sessionState.newHadoopConf()
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(hconf)
-      val it = fs.listFiles(root, true)
-      var total = 0L
-      var sawFile = false
-      while (it.hasNext) {
-        val st = it.next()
-        val n = st.getPath.getName
-        if (st.isFile && !n.startsWith("_") && !n.startsWith(".")) {
-          sawFile = true
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(st, hconf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try total += r.getRecordCount finally r.close()
-        }
-      }
-      require(sawFile, s"no data files under $path")
-      total
+      val (hconf, files) =
+        parquetDataFiles(spark, s"$sfDir/$name.parquet")
+      files.map { st =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hconf))
+        try r.getRecordCount finally r.close()
+      }.sum
     } catch {
       case scala.util.control.NonFatal(_) =>
         table(spark, sfDir, name).count()
     }
-  }
 
   /** Canonical event-time normalization: whatever the on-disk encoding of
     * `events.ts`, every consumer sees the same three columns —
@@ -99,17 +154,19 @@ object Tables {
     *    TIMESTAMP_NTZ would shift by the session zone), matching DuckDB's
     *    naive-as-UTC `epoch_ns`. */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$sfDir/events.parquet"
-    // raw FILE schema — the pinned re-read schema must match what's on disk
-    val fileSchema = spark.read.parquet(path).schema
-    val src = fileSchema("ts").dataType match {
-      case TimestampNTZType =>
-        model.Boundary.conform("events",
-          spark.read.schema(pinTsAsInstant(fileSchema)).parquet(path))
-      case _ => table(spark, sfDir, "events")
-    }
-    normalizeEventTime(src)
+    normalizeEventTime(model.Boundary.conform("events",
+      spark.read.schema(eventsReadSchema(spark, path)).parquet(path)))
+  }
+
+  /** The read schema of the events file at `path`: its footer schema
+    * (under the nanos-as-long flag), with an NTZ `ts` pinned to
+    * TimestampType (see [[events]]). */
+  private def eventsReadSchema(spark: SparkSession, path: String): StructType = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val fileSchema = parquetSchema(spark, path)
+    if (fileSchema("ts").dataType == TimestampNTZType) pinTsAsInstant(fileSchema)
+    else fileSchema
   }
 
   /** The file schema with `ts` re-typed TimestampType (see [[events]]). */
@@ -129,17 +186,12 @@ object Tables {
     * non-glob prefix. One spelling reads BOTH layouts: the driver's
     * single-file `events.parquet` and a cluster writer's
     * `events.parquet/part-*` directory. */
-  def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def eventsStream(spark: SparkSession, sfDir: String): DataFrame =
     // raw FILE schema (not the conformed one — the stream's explicit schema
     // must match what's on disk; Boundary coercions happen after the read)
-    val fileSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val pinned =
-      if (fileSchema("ts").dataType == LongType) fileSchema
-      else pinTsAsInstant(fileSchema)
-    normalizeEventTime(model.Boundary.conform("events",
-      spark.readStream.schema(pinned).parquet(s"$sfDir/{events}.parquet")))
-  }
+    normalizeEventTime(model.Boundary.conform("events", spark.readStream
+      .schema(eventsReadSchema(spark, s"$sfDir/events.parquet"))
+      .parquet(s"$sfDir/{events}.parquet")))
   def lineitem(spark: SparkSession, sfDir: String): DataFrame  = table(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame    = table(spark, sfDir, "orders")
   def customer(spark: SparkSession, sfDir: String): DataFrame  = table(spark, sfDir, "customer")

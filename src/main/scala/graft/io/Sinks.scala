@@ -69,7 +69,7 @@ object Sinks {
       else if (fs.exists(old)) Some(path + "__old")
       else None
     val existing = liveDir.map(p =>
-      spark.read.parquet(p).withColumn("_is_new", lit(0)))
+      graft.Tables.parquet(spark, p).withColumn("_is_new", lit(0)))
 
     val merged = existing match {
       case Some(prev) => prev.unionByName(incoming.withColumn("_is_new", lit(1)))
@@ -185,7 +185,7 @@ object Sinks {
     val v = version.orElse(latestVersion(spark, path)).getOrElse(
       throw new java.util.NoSuchElementException(
         s"readVersioned: no committed version under $path"))
-    spark.read.parquet(s"$path/v=${"%06d".format(v)}")
+    graft.Tables.parquet(spark, s"$path/v=${"%06d".format(v)}")
   }
 
   /** Small-files compaction: rewrite a parquet table into
@@ -205,7 +205,7 @@ object Sinks {
     val dst = new org.apache.hadoop.fs.Path(path)
     val old = new org.apache.hadoop.fs.Path(path + "__old")
     val staged = new org.apache.hadoop.fs.Path(path + "__staged")
-    val df = spark.read.parquet(path)
+    val df = graft.Tables.parquet(spark, path)
     val n = df.count()
     val files = math.max(1L,
       (n + targetRecordsPerFile - 1) / targetRecordsPerFile).toInt

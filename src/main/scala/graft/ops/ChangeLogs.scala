@@ -18,12 +18,14 @@ import org.apache.spark.sql.functions._
   */
 object ChangeLogs {
 
+  /** Aggregate: the group's `map<mapKey, mapValue>`, entries sorted by key. */
+  def mapLog(mapKey: Column, mapValue: Column): Column =
+    map_from_entries(array_sort(collect_list(struct(mapKey, mapValue))))
+
   /** One map column per group key. */
   def perKey(df: DataFrame, groupKey: Column, mapKey: Column, mapValue: Column,
       as: String): DataFrame =
-    df.groupBy(groupKey)
-      .agg(map_from_entries(array_sort(collect_list(struct(mapKey, mapValue))))
-        .as(as))
+    df.groupBy(groupKey).agg(mapLog(mapKey, mapValue).as(as))
 
   /** Map over an already key-sorted entry array: element `e` becomes the
     * entry `key(e) → value(e)` (the non-aggregate twin of [[perKey]]). */
@@ -34,9 +36,7 @@ object ChangeLogs {
   /** Whole-frame collapse to a single map row (the reference's shape). */
   def global(df: DataFrame, mapKey: Column, mapValue: Column,
       as: String): DataFrame =
-    df.groupBy()
-      .agg(map_from_entries(array_sort(collect_list(struct(mapKey, mapValue))))
-        .as(as))
+    df.groupBy().agg(mapLog(mapKey, mapValue).as(as))
 
   // ── JSON-string change logs ──────────────────────────────────────────
   // The map-typed forms above are the library surface; hash-based harnesses

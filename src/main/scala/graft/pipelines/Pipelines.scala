@@ -84,35 +84,48 @@ object Pipelines {
   }
 
   /** Wallet enrichment (WalletEnricher): one document per (token, wallet)
-    * with the `map<t, struct(is_whale, balance)>` change log. */
+    * with the `map<t, struct(is_whale, balance)>` change log, grouped in the
+    * states' own (token, wallet) partitioning. */
   def walletDocuments(spark: SparkSession, sfDir: String): DataFrame =
-    ChangeLogs.perKey(
-        walletStates(spark, sfDir)
-          .withColumn("k", concat_ws("_", col("contract_address"), col("address"))),
-        col("k"), col("t"),
-        struct(col("is_whale"), col("balance")), "balanceChangeLogs")
-      .withColumnRenamed("k", "_key")
-      .withColumn("address", substring_index(col("_key"), "_", -1))
+    walletStates(spark, sfDir)
+      .groupBy(tok, col("address"))
+      .agg(ChangeLogs.mapLog(col("t"), struct(col("is_whale"), col("balance")))
+        .as("balanceChangeLogs"))
+      .withColumn("_key", concat_ws("_", tok, col("address")))
+      // a null wallet keeps the key's last segment, so the column stays
+      // non-nullable
+      .select(col("_key"), col("balanceChangeLogs"),
+        coalesce(col("address"), substring_index(col("_key"), "_", -1))
+          .as("address"))
 
   def enrichWallets(spark: SparkSession, sfDir: String, outDir: String): Unit =
     Sinks.upsertParquet(spark,
       walletDocuments(spark, sfDir).withColumn("ver", lit(1L)),
       "_key", "ver", s"$outDir/wallets")
 
+  /** Address → ids of the registry dapps listing it, built on the driver. */
+  private def dappIdsOf(address: Column): Column = {
+    val ids = typedLit(Tables.DappRegistry
+      .flatMap { case (id, _, addrs) => addrs.map(_ -> id) }
+      .groupMap(_._1)(_._2))
+    ids(address)
+  }
+
   /** Dapp enrichment (DappEnricher): one document per (token, dapp) with the
     * sorted counterparty wallet list (deterministic; the reference's
     * collect_list order is run-dependent). */
   def dappDocuments(spark: SparkSession, sfDir: String): DataFrame = {
-    val reg = Tables.dapps(spark)
-      .select(col("dapp_id"), col("dapp_name"), explode(col("addresses")).as("address"))
+    val names = typedLit(Tables.DappRegistry.map { case (id, name, _) =>
+      id -> name }.toMap)
     legsAll(spark, sfDir)
-      .join(broadcast(reg), Seq("address"))
-      .groupBy("contract_address", "dapp_id", "dapp_name")
+      .select(tok, col("address"),
+        explode(dappIdsOf(col("address"))).as("dapp_id"))
+      .groupBy(tok, col("dapp_id"))
       .agg(sort_array(collect_set(col("address"))).as("address"),
         count(lit(1)).as("n_interactions"))
       .select(
-        concat_ws("_", col("contract_address"), col("dapp_id")).as("_key"),
-        col("dapp_id").as("idCMC"), col("dapp_name").as("name"),
+        concat_ws("_", tok, col("dapp_id")).as("_key"),
+        col("dapp_id").as("idCMC"), names(col("dapp_id")).as("name"),
         col("address"), col("n_interactions"))
   }
 
@@ -124,14 +137,6 @@ object Pipelines {
   // ── Token documents: one linear chain over the wallet states ──────────
   // (token, address, hour) → (token, hour) → (token, day) → token; both
   // document renderings read the same per-token row.
-
-  /** Address → ids of the registry dapps listing it, built on the driver. */
-  private def dappIdsOf(address: Column): Column = {
-    val ids = typedLit(Tables.DappRegistry
-      .flatMap { case (id, _, addrs) => addrs.map(_ -> id) }
-      .groupMap(_._1)(_._2))
-    ids(address)
-  }
 
   /** One row per token: `hours`, the key-sorted per-hour metrics (volume,
     * transfer count n, distinct wallets u, holders h, whales w, distinct
@@ -175,7 +180,7 @@ object Pipelines {
   /** Every token of [[infoFrame]] with its eight change logs, rendered from
     * the per-token row by `logs` (in the reference's column order) and
     * completed by `absent` (which sees null for a token without transfers),
-    * keyed and ordered by token. */
+    * keyed by token. */
   private def documents(spark: SparkSession, sfDir: String,
       absent: Column => Column)(logs: Column*): DataFrame = {
     val names = Seq("tradingVolumeChangeLogs", "numberOfTransferChangeLogs",
@@ -188,14 +193,19 @@ object Pipelines {
         Seq("contract_address"), "left")
       .select(info.columns.map(col) ++ names.map(n => absent(col(n)).as(n)): _*)
       .withColumn("_key", tok)
-      .orderBy("contract_address")
   }
 
   /** Token enrichment (EnhanceTokenEnricher): one document per token holding
     * every change-log map the reference stores, each map's entries sorted
     * by key — not the reference's 9-frame monotonically_increasing_id
     * reduce-join. A token with no dapp hour has a null dapp map. */
-  def tokenDocuments(spark: SparkSession, sfDir: String): DataFrame = {
+  def tokenDocuments(spark: SparkSession, sfDir: String): DataFrame =
+    tokenMapDocuments(spark, sfDir).orderBy("contract_address")
+
+  /** [[tokenDocuments]] without its presentation sort, for the upsert,
+    * whose key shuffle would discard the order anyway. */
+  private def tokenMapDocuments(spark: SparkSession,
+      sfDir: String): DataFrame = {
     def log(entries: Column, key: String)(value: Column => Column) =
       ChangeLogs.mapOf(entries, _(key), value)
     val hours = col("hours")
@@ -234,11 +244,12 @@ object Pipelines {
       log(hours, "t")(e => concat(lit("{"), concat_ws(",", ClusterNames.map(c =>
         concat(lit(s"\"$c\":{\"addresses\":"), ChangeLogs.jsonStrArray(e(c)),
           lit("}"))): _*), lit("}"))))
+      .orderBy("contract_address")
   }
 
   def enrichTokens(spark: SparkSession, sfDir: String, outDir: String): Unit =
     Sinks.upsertParquet(spark,
-      tokenDocuments(spark, sfDir).withColumn("ver", lit(1L)),
+      tokenMapDocuments(spark, sfDir).withColumn("ver", lit(1L)),
       "_key", "ver", s"$outDir/tokens")
 
   /** Fifth pipeline — the training-corpus store: the applied dedup decision

@@ -178,6 +178,6 @@ object StatefulBalances {
         q.awaitTermination()
       }
     }
-    compacted(spark.read.parquet(out))
+    compacted(graft.Tables.parquet(spark, out))
   }
 }

@@ -171,7 +171,7 @@ object StreamingMetrics {
         .start()
       q.awaitTermination()
     }
-    spark.read.parquet(outDir).orderBy("contract_address", "t")
+    graft.Tables.parquet(spark, outDir).orderBy("contract_address", "t")
   }
 
   /** Catalog form of the bounded stream: fresh sink/checkpoint dirs per
@@ -229,7 +229,7 @@ object StreamingMetrics {
     }
     val w = org.apache.spark.sql.expressions.Window.partitionBy("t")
       .orderBy(col("dvol").desc, col("token").asc)
-    spark.read.parquet(outDir)
+    graft.Tables.parquet(spark, outDir)
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= TopTokensK)
       .select(col("t"), col("rnk"), col("token"),
@@ -274,7 +274,7 @@ object StreamingMetrics {
         .start()
       q.awaitTermination()
     }
-    spark.read.parquet(out).orderBy("contract_address", "s_start")
+    graft.Tables.parquet(spark, out).orderBy("contract_address", "s_start")
   }
 
   /** PRODUCTION shape of the sliding-window volume: overlapping 2h/1h
@@ -315,7 +315,7 @@ object StreamingMetrics {
         .start()
       q.awaitTermination()
     }
-    spark.read.parquet(out).orderBy("contract_address", "w_start")
+    graft.Tables.parquet(spark, out).orderBy("contract_address", "w_start")
   }
 
   /** Streaming sliding-window twin of [[graft.ops.Metrics.slidingVolume]]:
@@ -473,7 +473,7 @@ object StreamingMetrics {
         .start()
       q.awaitTermination()
     }
-    spark.read.parquet(out).orderBy("t")
+    graft.Tables.parquet(spark, out).orderBy("t")
   }
 
   /** documents schema for the streaming dedup source. */
@@ -590,7 +590,7 @@ object StreamingMetrics {
         .start()
       q.awaitTermination()
     }
-    spark.read.parquet(out)
+    graft.Tables.parquet(spark, out)
       .groupBy("contract_address", "wallet")
       .agg(max(struct(col("n_ops"), col("last"))).as("m"))
       .select(col("contract_address"), col("wallet"),
@@ -654,7 +654,7 @@ object StreamingMetrics {
         .start()
       q.awaitTermination()
     }
-    spark.read.parquet(outDir)
+    graft.Tables.parquet(spark, outDir)
       .filter(col("contract_address") =!= "__sentinel__")
       .groupBy(col("contract_address"),
         (expr("unix_micros(t_ts) div 3600000000") * 3600)
@@ -718,7 +718,7 @@ object StreamingMetrics {
         .start()
       q.awaitTermination()
     }
-    val raw = spark.read.parquet(outDir)
+    val raw = graft.Tables.parquet(spark, outDir)
       .filter(coalesce(col("contract_address"), col("p_contract"))
         =!= "__sentinel__")
     StreamJoins.compactFullOuter(raw)
@@ -814,7 +814,7 @@ object StreamingMetrics {
         .start()
       q.awaitTermination()
     }
-    spark.read.parquet(outDir)
+    graft.Tables.parquet(spark, outDir)
       .groupBy(col("contract_address"),
         (expr("unix_micros(t_ts) div 3600000000") * 3600)
           .cast("long").as("t"))
@@ -881,7 +881,7 @@ object StreamingMetrics {
         .start()
       q.awaitTermination()
     }
-    spark.read.parquet(outDir)
+    graft.Tables.parquet(spark, outDir)
       .filter(col("contract_address") =!= "__sentinel__")
       .groupBy(col("contract_address"),
         (expr("unix_micros(t_ts) div 3600000000") * 3600)
@@ -925,7 +925,7 @@ object StreamingMetrics {
         .start()
       q.awaitTermination()
     }
-    spark.read.parquet(outDir)
+    graft.Tables.parquet(spark, outDir)
       .groupBy(col("contract_address"),
         (expr("unix_micros(t_ts) div 3600000000") * 3600)
           .cast("long").as("t"))

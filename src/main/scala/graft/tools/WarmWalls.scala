@@ -18,6 +18,12 @@ object WarmWalls {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("WARM_WALLS_PASSES", "5").toInt
     val names = if (args.nonEmpty) args.toSeq else Seq("q_pagerank_weighted")
+    val qmap = graft.SparkEntry.queries.toMap
+    val unknown = names.filterNot(qmap.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[warmwalls] unknown queries: ${unknown.mkString(" ")}")
+      sys.exit(2)
+    }
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -33,7 +39,6 @@ object WarmWalls {
     spark.sparkContext.setLogLevel("ERROR")
     spark.sparkContext.setCheckpointDir(
       java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
-    val qmap = graft.SparkEntry.queries.toMap
     names.foreach { n =>
       val fn = qmap(n)
       val walls = (1 to passes).map { _ =>
