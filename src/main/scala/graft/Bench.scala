@@ -134,39 +134,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // AQE partition right-sizing for cached plans (see Verify.scala:
-      // without it, Shared-frame consumers inherit the static partition
-      // count and tiny-stage scheduling dominates the iterative queries)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // sort-based shuffle writer for wide exchanges: the bypass writer
-      // opens one file per reducer per map task and NIO-merges them
-      // (32 partitions x 32 map tasks = 1024 creates+mmaps per exchange) --
-      // measured 42% of warm wall on the shuffle-heavy catalog subset. At
-      // production partition counts (>200) bypass never engages, so this
-      // pins wide local exchanges to the same writer path a cluster run
-      // uses. 4 = the streaming state shard count: state exchanges (tiny
-      // rows, many micro-batches) stay on the bypass path, where a
-      // file per reducer is mild and the sort writer's per-task
-      // buffering measured 1.4-3.9x worse on the stream-join family --
-      // while batch exchanges stay sort-based even in the driver's
-      // LOWER-core-count scaling run (8 cores -> 8 shuffle partitions,
-      // which a threshold of 8 would have flipped back to bypass;
-      // measured -17% on the shuffle-heavy subset at 8 cores).
-      .config("spark.shuffle.sort.bypassMergeThreshold", "4")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // reliable checkpoints for the iterative graph algorithms (LineageCut.Auto)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt")
-    spark.sparkContext.setCheckpointDir(ckpt.toString)
+    val spark = Session.local(cpus.toInt)
+    // session identity on both JSON lines: which master and how many
+    // default tasks produced the numbers
+    val sessionJson = s""""master":"${spark.sparkContext.master}",""" +
+      s""""parallelism":${spark.sparkContext.defaultParallelism}"""
 
     // Stage listener for the elevated-minimum attribution: every completed
     // stage is stamped with the pass label running at the time, so when a
@@ -283,7 +255,7 @@ object Bench {
       // a no-match filter must report, not crash after the full warmup
       println(s"""{"metric":"total_steady_min","value":0.0,"unit":"sec",""" +
         s""""n_queries":0,"error":"SPARK_GRAFT_BENCH_ONLY matched nothing",""" +
-        s""""sf":"$sfDir"}""")
+        s""""sf":"$sfDir",$sessionJson}""")
       spark.stop()
       return
     }
@@ -868,7 +840,8 @@ object Bench {
           storagePeakTop.map { case (l, m) => l -> m.toDouble }, "%.0f")}""" +
         (if (storagePeakMb > StoragePeakCeilingMb)
           s""","storage_peak_over_ceiling":true""" else "") +
-        s""","queries":$qs,"sf":"$sfDir","detail":"BENCH_DETAIL.json"}"""
+        s""","queries":$qs,"sf":"$sfDir",$sessionJson""" +
+        s""","detail":"BENCH_DETAIL.json"}"""
     // measure the fixed fields with an empty query map, then spend what's
     // left of the 2000-char tail (minus margin for sbt's own trailing
     // lines) on the slowest queries; n_shown's own width is ≤4 chars off
@@ -887,13 +860,16 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + jnum(v, "%.2f") }
       .mkString("{", ",", "}")
     println(compactLine(qs, kept.size))
+    // the temp dir Session.local made (Spark checkpoints into a subdir)
+    val ckpt = spark.sparkContext.getCheckpointDir.map(d =>
+      java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(d).getParent.toUri))
     spark.stop()
     // best-effort checkpoint dir cleanup (reliable checkpoint files are not
     // removed by the context cleaner for frames still referenced at exit)
     try {
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
+      ckpt.foreach(c => java.nio.file.Files.walk(c).iterator().asScala.toSeq
+        .reverse.foreach(p => java.nio.file.Files.deleteIfExists(p)))
     } catch { case _: Throwable => () }
   }
 }

@@ -207,7 +207,7 @@ object Tables {
     * (the embeddings table at test SFs) pins its scan to ONE task no matter
     * the byte-range splits, serializing downstream per-row kernels — the
     * ANN family's decimal dot products ran 3–4 s on one core with 31 idle
-    * (round-10 QueryProbe finding). Strictly widen-only: it never lowers an
+    * (round-10 stage audit, PERF.md). Strictly widen-only: it never lowers an
     * existing partition count — including on the ≤[[FanOutForceBytes]]
     * hollow-split insurance path, which repartitions to max(cores,
     * reported splits) — so a properly split production source passes
@@ -283,8 +283,8 @@ object Tables {
     * only (tokenize, shingle, per-token md5, winnowing): the test-SF
     * documents file is a single parquet row group, so its scan is ONE task
     * and every per-row kernel fused into that stage runs on one core with
-    * the rest idle (the same round-10 QueryProbe finding as the embeddings
-    * table). Widen-only, so a properly split production corpus passes
+    * the rest idle (the same round-10 stage-audit finding as the embeddings
+    * table, PERF.md). Widen-only, so a properly split production corpus passes
     * through shuffle-free. Cheap metadata selects and anything whose
     * output depends on file layout (Layout's `input_file_name` queries)
     * keep reading [[documents]] directly. */

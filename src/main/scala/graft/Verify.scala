@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,52 +15,20 @@ object Verify {
         case "@core" => SparkEntry.CoreQueries.mkString("^(", "|", ")$")
         case re => re
       }.map(_.r)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // let AQE right-size partitioning for CACHED plans too (off by
-      // default for compatibility): the session-shared frames otherwise
-      // materialize at the static shuffle partition count and pin every
-      // downstream stage's task count to it regardless of data volume —
-      // at sf0.1 that made each Luby/peel round of the iterative graph
-      // queries a parade of 32/64-task stages over kilobytes (q_mis 8.2 s
-      // steady; 3.2 s with this on, same plans, measured by MisProbe)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // sort-based shuffle writer for wide exchanges: the bypass writer
-      // opens one file per reducer per map task and NIO-merges them
-      // (32 partitions x 32 map tasks = 1024 creates+mmaps per exchange) --
-      // measured 42% of warm wall on the shuffle-heavy catalog subset. At
-      // production partition counts (>200) bypass never engages, so this
-      // pins wide local exchanges to the same writer path a cluster run
-      // uses. 4 = the streaming state shard count: state exchanges (tiny
-      // rows, many micro-batches) stay on the bypass path, where a
-      // file per reducer is mild and the sort writer's per-task
-      // buffering measured 1.4-3.9x worse on the stream-join family --
-      // while batch exchanges stay sort-based even in the driver's
-      // LOWER-core-count scaling run (8 cores -> 8 shuffle partitions,
-      // which a threshold of 8 would have flipped back to bypass;
-      // measured -17% on the shuffle-heavy subset at 8 cores).
-      .config("spark.shuffle.sort.bypassMergeThreshold", "4")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // reliable checkpoints for the iterative graph algorithms (LineageCut.Auto)
-    spark.sparkContext.setCheckpointDir(
-      Files.createTempDirectory("graft-ckpt").toString)
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
+    var ok = 0
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.findFirstIn(name).isDefined) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        ok += 1
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
       }
       // drop this query's query-local caches before the next one runs —
       // over 288 queries the dead entries' eviction pressure measurably
@@ -89,5 +56,8 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // one summary line naming every query that threw (stdout, last line)
+    println(s"""{"ok":$ok,"failed":${failed.size},"failed_names":""" +
+      failed.map(q).mkString("[", ",", "]") + "}")
   }
 }

@@ -223,21 +223,6 @@ object LineageCut {
   */
 object Graph {
 
-  /** Dev-probe round counters for [[connectedComponents]] — read by
-    * [[graft.tools.CcProbe]] (round-12: the 100× posture measurement for
-    * the dedup spine's clustering, mirroring [[SccStats]]/SccProbe).
-    * `observed` vs `fallback` additionally evidences whether the round's
-    * convergence flag rode the materialization (cutObserved) or paid the
-    * extra filter probe; zero overhead otherwise. */
-  private[graft] object CcStats {
-    @volatile var rounds = 0
-    @volatile var observed = 0
-    @volatile var fallback = 0
-    def reset(): Unit = { rounds = 0; observed = 0; fallback = 0 }
-    override def toString =
-      s"rounds=$rounds observed=$observed fallback=$fallback"
-  }
-
   /** Component label (= minimum reachable id) for every vertex of `edges`
     * (columns `src`, `dst`; undirected). Vertices only appear if they have
     * at least one edge — isolated documents are their own keeper by
@@ -294,12 +279,10 @@ object Graph {
         LineageCut.release(labels) // superseded round (the cut above consumed it)
         labels = updated.select("id", "label")
         converged = m.get("chg") match {
-          case Some(v) => CcStats.observed += 1
-            v == null || v.asInstanceOf[Int] == 0
-          case None => CcStats.fallback += 1
-            updated.filter(col("label") < col("old")).isEmpty
+          case Some(v) => v == null || v.asInstanceOf[Int] == 0
+          case None => updated.filter(col("label") < col("old")).isEmpty
         }
-        i += 1; CcStats.rounds += 1
+        i += 1
       }
       // an unconverged result is silently WRONG (multiple keepers inside
       // one duplicate cluster) — fail loudly instead
@@ -1396,20 +1379,6 @@ object Graph {
     * semi-joins/aggregates over the live edge set — O(|E|) per round, and
     * the live set only shrinks. Unconverged results throw loudly (a
     * silent partial SCC labeling would mislabel merged components). */
-  /** Dev-probe round counters for [[stronglyConnectedComponents]] — which
-    * inner loop the per-pass stage count concentrates in (trim vs color vs
-    * sweep) decides which restructure pays. Written only by the SCC loop,
-    * read by [[graft.tools.SccProbe]]; zero overhead otherwise. */
-  private[graft] object SccStats {
-    @volatile var outer = 0
-    @volatile var trim = 0
-    @volatile var color = 0
-    @volatile var sweep = 0
-    def reset(): Unit = { outer = 0; trim = 0; color = 0; sweep = 0 }
-    override def toString =
-      s"outer=$outer trim=$trim color=$color sweep=$sweep"
-  }
-
   def stronglyConnectedComponents(edges: DataFrame, maxOuter: Int = 12,
       maxProp: Int = 40, cutMode: LineageCut = LineageCut.Auto): DataFrame = {
     val raw = edges.select(col("src"), col("dst"))
@@ -1446,7 +1415,6 @@ object Graph {
         val (keep, nKeep) = LineageCut.cutCounted(
           ends.groupBy("v").agg(max(col("o")).as("o"), max(col("i")).as("i"))
             .filter(col("o") === 1 && col("i") === 1).select("v"), cutMode)
-        SccStats.trim += 1
         if (nKeep == nVerts) trimming = false
         else {
           done += LineageCut.cut(verts.join(keep, Seq("v"), "left_anti")
@@ -1491,7 +1459,6 @@ object Graph {
             case None => upd.filter(col("c") < col("old")).isEmpty
           }
           i += 1
-          SccStats.color += 1
         }
         if (!converged) throw new IllegalStateException(
           s"scc: forward coloring not converged after $maxProp rounds — " +
@@ -1519,7 +1486,6 @@ object Graph {
           LineageCut.release(reached) // superseded sweep round
           reached = r2; nReached = n2
           j += 1
-          SccStats.sweep += 1
         }
         if (growing) throw new IllegalStateException(
           s"scc: backward sweep not converged after $maxProp rounds — " +
@@ -1536,7 +1502,6 @@ object Graph {
         restrictLive()
       }
       outer += 1
-      SccStats.outer += 1
     }
     if (nVerts > 0) throw new IllegalStateException(
       s"scc: not converged after $maxOuter outer rounds — condensation " +
@@ -1855,31 +1820,6 @@ object Graph {
     out.orderBy("walk", "step")
   }
 
-  /** Dev-probe counters for [[kTruss]] — read by
-    * [[graft.tools.KtrussProbe]] (round-13: the 100× posture measurement
-    * for the heaviest catalog query, mirroring [[CcStats]]/[[SccStats]]).
-    * `supSum3` is Σ support over the initial edge frame = 3 × enumerated
-    * triangles, riding the initial materialization's observe — zero extra
-    * jobs; `deletions(i)` is the under-threshold edge count observed at
-    * materialization i (index 0 = initial support, then one per peel
-    * round). `observed`/`fallback` evidence whether each statistic rode
-    * the round's one action or paid the extra filter-count probe. */
-  private[graft] object TrussStats {
-    @volatile var rounds = 0
-    @volatile var observed = 0
-    @volatile var fallback = 0
-    @volatile var supSum3 = -1L
-    val deletions = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def reset(): Unit = {
-      rounds = 0; observed = 0; fallback = 0; supSum3 = -1L
-      deletions.clear()
-    }
-    override def toString =
-      s"rounds=$rounds observed=$observed fallback=$fallback " +
-        s"triangles=${if (supSum3 >= 0) supSum3 / 3 else -1} " +
-        s"deletions=${deletions.mkString("[", ",", "]")}"
-  }
-
   /** k-truss: the subgraph where every surviving edge closes ≥ k−2
     * triangles WITH other surviving edges — the community-core filter
     * one notch stronger than [[kCore]] (degree can be faked by a hub;
@@ -1952,7 +1892,7 @@ object Graph {
     // fanOut: AQE's advisory-size coalescing right-sizes these frames for
     // IO but not for the wedge join's compute density — a ~10 MB oriented
     // edge list lands on 1 partition and enumerates every wedge on one
-    // core (round-10 QueryProbe finding). Widen-only, so cluster-scale
+    // core (round-10 stage audit, PERF.md). Widen-only, so cluster-scale
     // frames (already past core count) pass through unchanged.
     val oriented = graft.Tables.fanOut(LineageCut.cut(undId
       .join(deg.select(col("v").as("a"), col("d").as("da")), Seq("a"))
@@ -1987,27 +1927,20 @@ object Graph {
     // (cutObserved, the SCC convention): the peel loop's "any deletions
     // this round?" probe costs zero extra jobs — the PREVIOUS round's
     // materialization already measured it.
-    def cutE(df: DataFrame, extra: Seq[Column] = Nil): (DataFrame, Long) = {
+    def cutE(df: DataFrame): (DataFrame, Long) = {
       val (out, m) = LineageCut.cutObserved(df, cutMode,
         Seq(sum(when(col("sup") < k - 2, lit(1L)).otherwise(lit(0L)))
-          .as("ndead")) ++ extra)
+          .as("ndead")))
       val n = m.get("ndead") match {
-        case Some(null) => TrussStats.observed += 1; 0L // empty frame
-        case Some(v) => TrussStats.observed += 1; v.asInstanceOf[Long]
-        case None => TrussStats.fallback += 1
-          out.filter(col("sup") < k - 2).count() // fallback
+        case Some(null) => 0L // empty frame
+        case Some(v) => v.asInstanceOf[Long]
+        case None => out.filter(col("sup") < k - 2).count() // fallback
       }
-      m.get("suptot").foreach(v =>
-        TrussStats.supSum3 = if (v == null) 0L else v.asInstanceOf[Long])
-      TrussStats.deletions += n
       (out, n)
     }
-    // suptot (Σ initial support = 3 × triangles) rides the same observe —
-    // probe evidence only, zero extra jobs
     var (e, nDead) = cutE(
       undId.select("eid").join(supOf(tri), Seq("eid"), "left")
-        .select(col("eid"), coalesce(col("sup"), lit(0L)).as("sup")),
-      Seq(sum(col("sup")).as("suptot")))
+        .select(col("eid"), coalesce(col("sup"), lit(0L)).as("sup")))
     LineageCut.release(und)
     var r = 1
     var converged = false
@@ -2036,7 +1969,6 @@ object Graph {
         LineageCut.release(e)
         e = nextE
         nDead = nd
-        TrussStats.rounds += 1
         if (r < rounds) { // the final round's list has no reader
           val nextTri = graft.Tables.fanOut(LineageCut.cut(
             tri.join(deadTri, keys, "left_anti"), cutMode))

@@ -260,9 +260,8 @@ object Wallet {
   val RfmBands = 3
 
   /** Per-wallet (rec_days, freq, mon) metric frame feeding
-    * [[rfmSegments]] — lifted out so [[graft.tools.RfmBandProbe]] can
-    * measure band-bucket occupancy on the same frame the query banding
-    * sees. */
+    * [[rfmSegments]] — lifted out so band-bucket occupancy can be measured
+    * on the same frame the query banding sees (PERF.md, round 13). */
   private[graft] def rfmMetrics(spark: SparkSession,
       sfDir: String): DataFrame = {
     val base = Tables.transfers(spark, sfDir)
@@ -288,7 +287,7 @@ object Wallet {
     * VALUE-RANGE bounds were flagged (r12 verdict) as a possible skew
     * trap for heavy-tailed `mon` — if most distinct values landed in one
     * bucket, phase 2's `partitionBy("rb")` would re-serialize. Measured
-    * (r13, [[graft.tools.RfmBandProbe]], sf0.1 and ScaleGen 100×): max
+    * (r13, sf0.1 and ScaleGen 100×; PERF.md): max
     * bucket holds 1.5% of `mon`'s distinct values (23 of 1,493; 188
     * nonempty buckets), so the linear bounds stand. If a future corpus
     * does collapse (probe before trusting), the one-line escape hatch is

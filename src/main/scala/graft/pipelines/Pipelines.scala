@@ -200,7 +200,13 @@ object Pipelines {
     * by key — not the reference's 9-frame monotonically_increasing_id
     * reduce-join. A token with no dapp hour has a null dapp map. */
   def tokenDocuments(spark: SparkSession, sfDir: String): DataFrame =
-    tokenMapDocuments(spark, sfDir).orderBy("contract_address")
+    byToken(tokenMapDocuments(spark, sfDir))
+
+  /** The presentation sort of the token documents: at most one row per
+    * [[infoFrame]] token, so one partition sorts them — a range
+    * `orderBy` would pay a sampling job and an exchange on every call. */
+  private def byToken(docs: DataFrame): DataFrame =
+    docs.coalesce(1).sortWithinPartitions("contract_address")
 
   /** [[tokenDocuments]] without its presentation sort, for the upsert,
     * whose key shuffle would discard the order anyway. */
@@ -233,7 +239,7 @@ object Pipelines {
     def log(entries: Column, key: String)(value: Column => Column) =
       ChangeLogs.jsonObject(entries, _(key), value)
     val hours = col("hours")
-    documents(spark, sfDir, coalesce(_, lit("{}")))(
+    byToken(documents(spark, sfDir, coalesce(_, lit("{}")))(
       log(hours, "t")(_("volume").cast("string")),
       log(hours, "t")(_("n").cast("string")),
       log(hours, "t")(_("u").cast("string")),
@@ -243,8 +249,7 @@ object Pipelines {
       log(hours, "t")(_("w").cast("string")),
       log(hours, "t")(e => concat(lit("{"), concat_ws(",", ClusterNames.map(c =>
         concat(lit(s"\"$c\":{\"addresses\":"), ChangeLogs.jsonStrArray(e(c)),
-          lit("}"))): _*), lit("}"))))
-      .orderBy("contract_address")
+          lit("}"))): _*), lit("}")))))
   }
 
   def enrichTokens(spark: SparkSession, sfDir: String, outDir: String): Unit =

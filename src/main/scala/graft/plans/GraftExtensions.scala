@@ -8,8 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * build sessions with
   *
   * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+  * graft.Session.local(cpus) // sets spark.sql.extensions to this class
   * }}}
   *
   * and the engine's semantics are active from the session's first query:
@@ -25,7 +24,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * query ran first); the `register(spark)` helpers remain as idempotent
   * fallbacks for sessions built without the extension.
   *
-  * Recommended alongside (set by every harness session, purely a
+  * Recommended alongside (set by [[graft.Session]], purely a
   * performance setting):
   * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true` —
   * without it, persisted frames materialize at the static shuffle

@@ -57,17 +57,10 @@ object CalibProbe {
   /** Ad-hoc anchor measurement: prints `warmed()` plus N raw readings on
     * the current box under the exact engine session confs. */
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "4")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val w = warmed(spark, cpus.toInt)
-    val reads = (1 to 10).map(_ => run(spark, cpus.toInt))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Session.local(cpus)
+    val w = warmed(spark, cpus)
+    val reads = (1 to 10).map(_ => run(spark, cpus))
     println(f"warmed=$w%.4f reads=${reads.map(r => f"$r%.4f").mkString(",")}")
     val sorted = reads.sorted
     println(f"median=${sorted(reads.size / 2)}%.4f min=${sorted.head}%.4f")

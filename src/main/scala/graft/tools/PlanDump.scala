@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for named catalog queries to files — the
@@ -16,26 +15,14 @@ import org.apache.spark.sql.execution.ExplainMode
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val dir = java.nio.file.Paths.get(
       sys.env.getOrElse("PLAN_DUMP_DIR", "plans/r13"))
     val suffix = sys.env.getOrElse("PLAN_DUMP_SUFFIX", "after")
     val names = sys.env.getOrElse("PLAN_DUMP_QUERIES", "q_setsim_join")
       .split(",").map(_.trim).filter(_.nonEmpty)
     java.nio.file.Files.createDirectories(dir)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+    val spark = graft.Session.local(cpus)
     names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, sfDir)
       df.count() // settle AQE + shared frames to the warm-pass shape

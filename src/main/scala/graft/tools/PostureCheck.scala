@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** 100×-posture evidence for the dedup spine: run the candidate-bounded
   * dedup queries against an sfDir (normally a ScaleGen-built documents-only
@@ -48,19 +47,8 @@ object PostureCheck {
     val sfDir = args(0)
     val queries =
       if (args.length > 1) args(1).split(",").toSeq else DefaultQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true") // match Bench/Verify (see Verify.scala)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-posture-ckpt").toString)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val spark = graft.Session.local(cpus)
     val tally = new ShuffleTally
     spark.sparkContext.addSparkListener(tally)
 
@@ -70,7 +58,7 @@ object PostureCheck {
     // cross-session yardstick): posture rows are compared CROSS-SESSION
     // (sf0.1 today vs scale100 tomorrow), so each report carries the same
     // yardstick BENCH_DETAIL's calib_sec uses — first run discarded (JIT)
-    val calib = CalibProbe.warmed(spark, cpus.toInt)
+    val calib = CalibProbe.warmed(spark, cpus)
 
     val out = queries.map { name =>
       graft.ops.Shared.clear(spark)

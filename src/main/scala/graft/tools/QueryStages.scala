@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Per-STAGE cost print for a handful of catalog queries — the drill-down
   * one level below [[CatalogProfile]] (which aggregates a query's stages
@@ -16,7 +15,7 @@ import org.apache.spark.sql.SparkSession
 object QueryStages {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val only = sys.env.getOrElse("QUERY_STAGES_ONLY", "^q_jaccard_top1$").r
     // knob A/B harness: QUERY_STAGES_CONFS="k=v;k=v" applied on top of the
     // Bench baseline, so a config's effect is measured on the same pass
@@ -24,37 +23,8 @@ object QueryStages {
     val extra = sys.env.getOrElse("QUERY_STAGES_CONFS", "")
       .split(";").filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    var b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // sort-based shuffle writer for wide exchanges: the bypass writer
-      // opens one file per reducer per map task and NIO-merges them
-      // (32 partitions x 32 map tasks = 1024 creates+mmaps per exchange) --
-      // measured 42% of warm wall on the shuffle-heavy catalog subset. At
-      // production partition counts (>200) bypass never engages, so this
-      // pins wide local exchanges to the same writer path a cluster run
-      // uses. 4 = the streaming state shard count: state exchanges (tiny
-      // rows, many micro-batches) stay on the bypass path, where a
-      // file per reducer is mild and the sort writer's per-task
-      // buffering measured 1.4-3.9x worse on the stream-join family --
-      // while batch exchanges stay sort-based even in the driver's
-      // LOWER-core-count scaling run (8 cores -> 8 shuffle partitions,
-      // which a threshold of 8 would have flipped back to bypass;
-      // measured -17% on the shuffle-heavy subset at 8 cores).
-      .config("spark.shuffle.sort.bypassMergeThreshold", "4")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    extra.foreach { case (k, v) => b = b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+      }.toMap
+    val spark = graft.Session.local(cpus, extra)
     val audit = new StageAudit(spark)
 
     val names = graft.SparkEntry.queries.toSeq.sortBy(_._1)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Scale spot-check: run a named subset of catalog queries against two
   * sfDirs (e.g. sf0.1 and a ScaleGen-built sf1.0) and print per-query
@@ -32,20 +31,8 @@ object ScaleCheck {
     val dirB = args(1)
     val queries =
       if (args.length > 2) args(2).split(",").toSeq else DefaultQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true") // match Bench/Verify (see Verify.scala)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-scale-ckpt")
-    spark.sparkContext.setCheckpointDir(ckpt.toString)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = graft.Session.local(cpus)
 
     val fns = graft.SparkEntry.queries
     def timeAll(dir: String): Seq[(String, Double, Long)] = {

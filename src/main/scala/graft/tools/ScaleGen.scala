@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthetic scale-up generator: replicate an sfDir's FACT tables `k`×
@@ -44,18 +44,12 @@ object ScaleGen {
     val dst = args(1)
     val k = args(2).toInt
     // optional 4th arg: comma-list of tables to generate (default: all) —
-    // a 100× documents-only corpus for the dedup-spine posture test does
-    // not need 100× lineitem written alongside it
+    // a 100× documents-only corpus for the dedup-spine posture measurement
+    // (PERF.md) does not need 100× lineitem written alongside it
     val wanted = args.lift(3).map(_.split(",").toSet)
     def want(name: String): Boolean = wanted.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = graft.Session.local(cpus)
 
     def write(df: DataFrame, name: String): Unit =
       if (want(name)) df.write.mode("overwrite").parquet(s"$dst/$name.parquet")

@@ -3,8 +3,8 @@ package graft.tools
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
-/** Stage-level profiler shared by the dev probes ([[MisProbe]],
-  * [[QueryProbe]], [[SimhashBandProbe]]) and, since round 11, by
+/** Stage-level profiler shared by the dev tools ([[CatalogProfile]],
+  * [[QueryStages]]) and, since round 11, by
   * [[graft.Bench]]'s elevated-minimum attribution: registers a listener
   * once, stamps every completed stage with the CALLER-SET label of the
   * work running at the time, and returns per labeled block the stage
@@ -12,9 +12,9 @@ import org.apache.spark.sql.SparkSession
   * chain + task metrics — the attribution that separates "this query is
   * compute-bound" (task time tracks bytes) from "this query is a parade of
   * tiny stages" (tasks ≫ data, the cached-plan partition-pinning shape
-  * round 10 caught on q_mis).
+  * round 10 caught on q_mis; PERF.md).
   *
-  * Labels assume blocks run ONE AT A TIME (both the probes and Bench are
+  * Labels assume blocks run ONE AT A TIME (both the tools and Bench are
   * strictly sequential). Stage events ride the ASYNC listener bus, so a
   * completion event can be DELIVERED well after its block's timer stops —
   * labeling by the value read at delivery time mislabels exactly the
@@ -84,8 +84,8 @@ final class StageAudit(spark: SparkSession) {
   }
 
   /** [[drainRows]], then keep polling until the async bus delivers no new
-    * row for `settleMs` (bounded by `timeoutMs`). Probe mains that report
-    * a pass's stage TOTALS (CcProbe/SccProbe posture tables) need the
+    * row for `settleMs` (bounded by `timeoutMs`). Tool mains that report
+    * a pass's stage TOTALS (CatalogProfile, QueryStages) need the
     * stragglers a plain drain misses on a laggy bus — otherwise the final
     * stages of a pass are silently discarded by the next pass's clearing
     * drain and the recorded profile under-reports. */
@@ -99,23 +99,6 @@ final class StageAudit(spark: SparkSession) {
       if (more.isEmpty) idle += 50 else { idle = 0; out ++= more }
     }
     out.toSeq
-  }
-
-  /** Time `f`, then print `[probe] <label> <sec> | stages/tasks/stageMs`
-    * and the `top` heaviest stages. */
-  def timed[A](label0: String, top: Int = 6)(f: => A): A = {
-    drainRows()
-    setLabel(label0)
-    val t0 = System.nanoTime(); val r = f
-    val sec = (System.nanoTime() - t0) / 1e9
-    val ss = drainRows()
-    println(f"[probe] $label0%-28s $sec%.2f s | stages=${ss.size} " +
-      f"stageMs=${ss.map(_.ms).sum} tasks=${ss.map(_.tasks).sum}")
-    ss.sortBy(-_.ms).take(top).foreach { s =>
-      println(f"[probe]    ${s.ms}%6d ms ${s.tasks}%4d tasks  ${s.desc} | " +
-        f"task=${s.taskMs}ms gc=${s.gcMs}ms sRead=${s.sReadB} " +
-        f"sWrite=${s.sWriteB}") }
-    r
   }
 }
 
@@ -134,46 +117,3 @@ object StageAudit {
   }
 }
 
-/** Stage-audited runner for arbitrary catalog queries:
-  * `QUERY_PROBE_ONLY='^(q_ktruss|q_scc)$' sbt "runMain graft.tools.QueryProbe"`.
-  * Runs the Bench shared warmup first (so Shared-frame costs don't land on
-  * the probed query), then 3 audited passes per query with the harness's
-  * per-query release discipline between queries. */
-object QueryProbe {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val only = sys.env.getOrElse("QUERY_PROBE_ONLY", "^q_nothing$").r
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("QUERY_PROBE_CACHED_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
-    val audit = new StageAudit(spark)
-    audit.timed("shared_warmup", top = 0) {
-      graft.ops.Dedup.clusterLabels(spark, sfDir).count()
-      graft.ops.Similarity.bruteForceTopK(spark, sfDir).count()
-      graft.ops.Similarity.labelCentroids(spark, sfDir).count()
-      graft.ops.Wallet.transferPageRank(spark, sfDir).count()
-      graft.ops.Wallet.transferCommunities(spark, sfDir).count()
-      graft.ops.Wallet.transferEdgesSym(spark, sfDir).count()
-    }
-    graft.ops.QueryLocal.drain(spark)
-    for ((name, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)
-        if only.findFirstIn(name).isDefined) {
-      for (pass <- 1 to 3)
-        audit.timed(s"$name pass$pass")(fn(spark, sfDir).count())
-      graft.ops.QueryLocal.release(spark)
-      graft.streaming.StreamState.unloadQuietly()
-      graft.util.TempDirs.sweep()
-    }
-    spark.stop()
-  }
-}

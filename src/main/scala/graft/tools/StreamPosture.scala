@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-posture evidence for the STREAMING spine: state is bounded by the
@@ -36,17 +35,8 @@ object StreamPosture {
     val sfDir = args(0)
     val shards = args.lift(1).map(_.toInt).getOrElse(12)
     val mode = args.lift(2).getOrElse("agg")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true") // match Bench/Verify (see Verify.scala)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = graft.Session.local(cpus)
 
     // time-range shards, written sequentially so file mod-times follow
     // event time and the FileStreamSource replays them in order

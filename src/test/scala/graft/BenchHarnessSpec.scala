@@ -55,16 +55,4 @@ class BenchHarnessSpec extends AnyFunSuite {
     // k caps the list after sorting — the biggest frames survive the cap
     assert(topFrames(snap, labels, 1) == Seq("shared:dedup_spine" -> 170L))
   }
-
-  test("truss stats: deletions/rounds/triangles reset cleanly") {
-    val s = ops.Graph.TrussStats
-    s.reset()
-    assert(s.toString.contains("rounds=0") && s.toString.contains(
-      "triangles=-1"))
-    s.supSum3 = 9L; s.deletions += 4L; s.rounds = 1
-    assert(s.toString.contains("triangles=3") &&
-      s.toString.contains("deletions=[4]"))
-    s.reset()
-    assert(s.deletions.isEmpty && s.supSum3 == -1L)
-  }
 }

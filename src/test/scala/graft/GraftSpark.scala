@@ -3,31 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run (suites share the JVM
-  * under `Test / fork := true`). */
+  * under `Test / fork := true`), built by [[Session.local]] so specs
+  * exercise the conf Bench and Verify run. The checkpoint dir makes
+  * LineageCut.Reliable runnable; Auto still picks Local here (local
+  * master) — GraphSpec pins the Reliable path explicitly. */
 object GraftSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      // same cached-plan AQE setting as Bench/Verify so specs exercise
-      // the plans the harness actually runs
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // checkpoint dir so LineageCut.Reliable is runnable; Auto still picks
-    // Local here (local master) — GraphSpec pins the Reliable path explicitly
-    s.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
-    s
-  }
+  lazy val spark: SparkSession = Session.local(4, Map(
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh").toString))
 
   val Sf = "/root/testdata/sf0.001"
 }

@@ -2,6 +2,7 @@ package graft
 
 import graft.pipelines.Pipelines
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -275,9 +276,10 @@ class PlanAuditSpec extends AnyFunSuite {
   test("token documents: one events scan feeds one linear exchange chain") {
     // legs → (token, wallet) states → (token, hour) → token, rendered both
     // ways from the same per-token row: one scan, and one exchange per
-    // level (the wallet, hour and token regroups, the per-token broadcast
-    // and the presentation sort). A per-metric subtree forked off the chain
-    // would add a scan and its exchanges.
+    // level (the wallet, hour and token regroups and the per-token
+    // broadcast). A per-metric subtree forked off the chain would add a
+    // scan and its exchanges. The presentation sort runs in one partition:
+    // a range exchange would cost a sampling job on every call.
     def scans(df: DataFrame) = physicalNodes(df).collect {
       case s: FileSourceScanExec =>
         s.relation.location.rootPaths.map(_.getName).mkString(",") }
@@ -287,8 +289,10 @@ class PlanAuditSpec extends AnyFunSuite {
           Pipelines.tokenDocumentsJson(spark, GraftSpark.Sf))) {
       val p = df.queryExecution.executedPlan
       assert(scans(df) == Seq("events.parquet"), s"$name\n$p")
-      val exchanges = physicalNodes(df).count(_.isInstanceOf[Exchange])
-      assert(exchanges <= 5, s"$name: $exchanges exchanges\n$p")
+      val exchanges = physicalNodes(df).collect { case e: Exchange => e }
+      assert(exchanges.size <= 5, s"$name: ${exchanges.size} exchanges\n$p")
+      assert(!exchanges.exists(_.outputPartitioning
+        .isInstanceOf[RangePartitioning]), s"$name: range exchange\n$p")
     }
     assert(scans(Pipelines.walletStates(spark, GraftSpark.Sf)) ==
       Seq("events.parquet"))
