@@ -131,6 +131,25 @@ object Bench {
     else if (ratios.isEmpty) 0.0
     else ratios.max
 
+  /** The compact line's query map: queries slowest first, each kept while
+    * its rendered entry (name + 12 chars) still fits `budget`, the rest
+    * folded into `_other`. A failed query (min < 0) folds like any other
+    * but adds nothing to the sum. */
+  private[graft] case class QueryFold(kept: Seq[(String, Double)],
+      folded: Seq[(String, Double)]) {
+    def other: Double = folded.collect { case (_, v) if v >= 0 => v }.sum
+  }
+  private[graft] def foldQueries(mins: Seq[(String, Double)],
+      budget: Int): QueryFold = {
+    val kept, folded = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+    var len = 0
+    mins.sortBy { case (_, v) => -v }.foreach { case q @ (n, _) =>
+      val e = n.length + 12
+      if (len + e < budget) { kept += q; len += e } else folded += q
+    }
+    QueryFold(kept.toSeq, folded.toSeq)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -809,7 +828,7 @@ object Bench {
     val coldTop = coldSpread.take(5)
       .map { case (n, r) => "\"" + n + "\":" + jnum(r, "%.1f") }
       .mkString("{", ",", "}")
-    def compactLine(qs: String, nShown: Int): String =
+    def compactLine(qs: String, nShown: Int, nOther: Int): String =
       s"""{"metric":"total_steady_min","value":${jnum(total, "%.2f")},"unit":"sec"""" +
         s""","calib_adj_series":${jnum(calibAdjSeries, "%.2f")}""" +
         s""","calib_adj":${jnum(calibAdj, "%.2f")}""" +
@@ -817,7 +836,7 @@ object Bench {
         s""","pass_semantics":"adjacent_pair:cold_incl_builds,steady_state_warm"""" +
         s""","calib_sec":[${jnum(calibStart, "%.2f")},${jnum(calibEnd, "%.2f")}]""" +
         s""","pass_totals":[${passTotals.map(jnum(_, "%.1f")).mkString(",")}]""" +
-        s""","n_queries":${names.size},"n_shown":$nShown""" +
+        s""","n_queries":${names.size},"n_shown":$nShown,"n_other":$nOther""" +
         s""","warm_anomalies":$anomaliesCompact""" +
         s""","anomalies_unresolved_n":${unresolved.size}""" +
         s""","elevated":$elevatedCompact""" +
@@ -844,32 +863,15 @@ object Bench {
         s""","detail":"BENCH_DETAIL.json"}"""
     // measure the fixed fields with an empty query map, then spend what's
     // left of the 2000-char tail (minus margin for sbt's own trailing
-    // lines) on the slowest queries; n_shown's own width is ≤4 chars off
-    // between the probe and final render — covered by the margin
-    val budget = 2000 - compactLine("{}", 0).length - 80
-    val bySlow = mins.sortBy { case (_, v) => -v }
-    val kept = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    var len = 0
-    bySlow.foreach { case (n, v) =>
-      val e = n.length + 12
-      if (len + e < budget) { kept += ((n, v)); len += e }
-    }
-    val keptSet = kept.map(_._1).toSet
-    val other = mins.collect { case (n, v) if !keptSet(n) && v >= 0 => v }.sum
-    val qs = (kept.toSeq :+ ("_other" -> other))
+    // lines) on the slowest queries; n_shown's and n_other's widths are
+    // each ≤4 chars off between the probe and final render — covered by
+    // the margin
+    val budget = 2000 - compactLine("{}", 0, 0).length - 80
+    val fold = foldQueries(mins, budget)
+    val qs = (fold.kept :+ ("_other" -> fold.other))
       .map { case (k, v) => "\"" + k + "\":" + jnum(v, "%.2f") }
       .mkString("{", ",", "}")
-    println(compactLine(qs, kept.size))
-    // the temp dir Session.local made (Spark checkpoints into a subdir)
-    val ckpt = spark.sparkContext.getCheckpointDir.map(d =>
-      java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(d).getParent.toUri))
+    println(compactLine(qs, fold.kept.size, fold.folded.size))
     spark.stop()
-    // best-effort checkpoint dir cleanup (reliable checkpoint files are not
-    // removed by the context cleaner for frames still referenced at exit)
-    try {
-      import scala.jdk.CollectionConverters._
-      ckpt.foreach(c => java.nio.file.Files.walk(c).iterator().asScala.toSeq
-        .reverse.foreach(p => java.nio.file.Files.deleteIfExists(p)))
-    } catch { case _: Throwable => () }
   }
 }

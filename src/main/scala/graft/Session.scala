@@ -45,15 +45,35 @@ object Session {
 
   /** A `local[cpus]` session with [[conf]] (then `extra` on top), log
     * level WARN and a fresh temp checkpoint dir (reliable checkpoints for
-    * the iterative graph algorithms, `LineageCut.Auto`). */
+    * the iterative graph algorithms, `LineageCut.Auto`), deleted at JVM
+    * exit whichever way the JVM ends. */
   def local(cpus: Int, extra: Map[String, String] = Map.empty): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config(conf(cpus) ++ extra)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    deleteAtExit(ckpt)
+    spark.sparkContext.setCheckpointDir(ckpt.toString)
     spark
   }
+
+  /** Delete `dir` and everything under it at JVM exit. Registered with
+    * Hadoop's hook manager below Spark's own hook (FileSystem priority +
+    * 30, which stops the context), so the delete runs after the context
+    * has stopped writing. Reliable-checkpoint files of frames still
+    * referenced at exit are never removed by the context cleaner. */
+  private def deleteAtExit(dir: java.nio.file.Path): Unit =
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(() =>
+      try {
+        import scala.jdk.CollectionConverters._
+        val walk = java.nio.file.Files.walk(dir)
+        try walk.iterator().asScala.toSeq.reverse
+          .foreach(p => java.nio.file.Files.deleteIfExists(p))
+        finally walk.close()
+      } catch {
+        case _: java.io.IOException | _: java.io.UncheckedIOException => ()
+      },
+      org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 20)
 }

@@ -7051,8 +7051,9 @@ object Catalog {
          |  AND i.a <> o.c
          |GROUP BY 1 ORDER BY 1""".stripMargin))),
 
-    // Per-vertex core numbers (tiers 1..4): nested k-core peeling; the
-    // oracle unrolls each tier's 8 peel rounds.
+    // Per-vertex core numbers (tiers 1..4): the engine runs the capped
+    // h-index loop; the oracle peels each tier 2..4 with
+    // Graph.CorenessPeelRounds (24) unrolled rounds.
     QEntry("q_coreness",
       (s, d) => Wallet.transferCoreness(s, d),
       Some {

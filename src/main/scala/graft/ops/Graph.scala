@@ -307,29 +307,13 @@ object Graph {
     * equality (a scalar per round, data never reaches the driver).
     *
     * `maxIter` doubles as the ORACLE CONTRACT: the DuckDB mirror unrolls
-    * exactly `maxIter` peel rounds, and once the loop converges within
-    * that bound the remaining unrolled rounds are no-op filters — so a
-    * converged result matches the oracle bit-for-bit, and an UNconverged
-    * one fails loudly instead of silently disagreeing. Peeling removes
-    * whole degree-layers per round, so real graphs converge in a handful
-    * of rounds; pathological chains would need more — raise both sides
-    * together. */
+    * exactly `maxIter` peel rounds, which are no-op filters once the loop
+    * has converged — so a converged result matches the oracle bit-for-bit,
+    * and an unconverged one fails loudly. `symmetricInput`: `edges` is
+    * already symmetric and distinct (skips a full union-distinct shuffle). */
   def kCore(edges: DataFrame, k: Int = 3, maxIter: Int = 8,
       cutMode: LineageCut = LineageCut.Auto,
-      symmetricInput: Boolean = false): DataFrame =
-    kCoreLiveEdges(edges, k, maxIter, cutMode, symmetricInput)
-      .groupBy(col("src").as("v"))
-      .agg(count(lit(1)).as("core_degree"))
-      .orderBy("v")
-
-  /** [[kCore]]'s peeling loop, returning the surviving symmetric LIVE
-    * EDGE set (a cut frame) instead of the per-vertex summary — the form
-    * [[coreness]] chains tiers over. `symmetricInput` skips the
-    * symmetrize+distinct when the caller feeds a set that already is
-    * (a previous tier's live edges): the union-distinct is a full
-    * shuffle, pure waste on idempotent input. */
-  private[ops] def kCoreLiveEdges(edges: DataFrame, k: Int, maxIter: Int,
-      cutMode: LineageCut, symmetricInput: Boolean = false): DataFrame = {
+      symmetricInput: Boolean = false): DataFrame = {
     val e = LineageCut.cut(
       edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst")),
       cutMode)
@@ -362,54 +346,68 @@ object Graph {
       if (!converged) throw new IllegalStateException(
         s"kCore: peeling not stable after $maxIter rounds — raise maxIter " +
           "AND the oracle's unroll count together")
-      live
+      live.groupBy(col("src").as("v"))
+        .agg(count(lit(1)).as("core_degree"))
+        .orderBy("v")
     } finally sym.unpersist()
   }
 
-  /** Highest core tier [[coreness]] resolves exactly. */
+  /** Highest core number [[coreness]] resolves exactly. */
   val CorenessMax = 4
 
-  /** Peel-round bound per tier in [[coreness]] (and its oracle's unroll
-    * count). Low tiers cascade long chains — k=2 peeling removes a path
-    * one END per round — so this is deliberately higher than [[kCore]]'s
-    * default. */
+  /** Round bound of [[coreness]]'s h-index loop and the peel-round
+    * unroll count per tier of its oracle. A path loses one vertex per end
+    * per round (in both), so this is deliberately above [[kCore]]'s. */
   val CorenessPeelRounds = 24
 
-  /** Per-vertex core numbers up to [[CorenessMax]]: coreness(v) = the
-    * largest k for which v survives k-core peeling (1 for any vertex with
-    * a non-loop edge). Computed as nested [[kCore]] runs for k =
-    * 2..[[CorenessMax]] — cores are nested (the (k+1)-core lives inside
-    * the k-core), so the max surviving tier is a sum of membership flags.
-    * Vertices at tier [[CorenessMax]] may have higher true coreness; the
-    * cap is the oracle contract (the DuckDB mirror unrolls the same
-    * tiers). Tiers CHAIN: cores are nested, so the k-core of the
-    * (k−1)-core IS the k-core of the full graph — each peel after the
-    * first runs over the previous tier's (usually much smaller) live
-    * edge set instead of the whole graph. Result-identical to
-    * independent full-graph peels (the oracle's formulation); measured
-    * at the 100× posture corpus this cut coreness from three full-graph
-    * peel cascades to one plus two short residual peels. */
+  /** Per-vertex core numbers capped at [[CorenessMax]] (the oracle
+    * contract: its DuckDB mirror unrolls the peel of tiers 2..4), 1 for
+    * any vertex with a non-loop edge. The capped h-index iteration
+    * (Montresor et al., IEEE TPDS 2013; Lü et al., Nature Comms 2016):
+    * est starts at min(degree, [[CorenessMax]]); each round sets est(v) =
+    * min(est(v), h), h = the largest j such that ≥ j neighbours have
+    * est ≥ j. Capping commutes with the h-operator (h_K(min(x, K)) =
+    * min(K, h(x))), so the loop settles at exactly min(coreness,
+    * [[CorenessMax]]). A round is one union-aggregate (the
+    * [[connectedComponents]] shape): est to every neighbour plus a self
+    * row with the neighbour list and old est, grouped by vertex, with the
+    * change count observed on the round's one cut. */
   def coreness(edges: DataFrame,
       cutMode: LineageCut = LineageCut.Auto,
       symmetricInput: Boolean = false): DataFrame = {
-    val base = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-    val verts = base.select(col("src").as("v"))
-      .unionByName(base.select(col("dst").as("v"))).distinct()
-    var live = edges
-    val tiers = (2 to CorenessMax).map { k =>
-      live = kCoreLiveEdges(live, k, CorenessPeelRounds, cutMode,
-        symmetricInput = symmetricInput || k > 2)
-      live.select(col("src").as("v")).distinct()
-        .withColumn(s"in$k", lit(1L))
+    val e = edges.select("src", "dst").filter(col("src") =!= col("dst"))
+    val sym = if (symmetricInput) e
+      else e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct()
+    var state = LineageCut.cut(sym.groupBy(col("src").as("v"))
+      .agg(collect_list(col("dst")).as("nbrs"))
+      .withColumn("est", least(size(col("nbrs")), lit(CorenessMax))), cutMode)
+    val noNbrs = lit(null).cast(state.schema("nbrs").dataType)
+    val h = (2 to CorenessMax).foldLeft(lit(1)) { (acc, j) =>
+      acc + when(count(when(col("ne") >= j, 1)) >= j, 1).otherwise(0) }
+    var converged = false
+    var i = 0
+    while (!converged && i < CorenessPeelRounds) {
+      val sent = state.select(explode(col("nbrs")).as("v"), noNbrs.as("nbrs"),
+        col("est").as("ne"), lit(null).cast("int").as("old"))
+      val self = state.select(col("v"), col("nbrs"),
+        lit(null).cast("int").as("ne"), col("est").as("old"))
+      val (next, m) = LineageCut.cutObserved(
+        sent.unionByName(self).groupBy("v")
+          .agg(max("nbrs").as("nbrs"), max("old").as("old"), h.as("h"))
+          .withColumn("est", least(col("h"), col("old"))),
+        cutMode,
+        Seq(sum(when(col("est") < col("old"), 1).otherwise(0)).as("chg")))
+      LineageCut.release(state) // superseded round (the cut above consumed it)
+      state = next.select("v", "nbrs", "est")
+      converged = m.get("chg").map(v => v == null || v == 0L)
+        .getOrElse(next.filter(col("est") < col("old")).isEmpty)
+      i += 1
     }
-    tiers.foldLeft(verts.withColumn("coreness", lit(1L))) { (acc, t) =>
-        val kcol = t.columns.last
-        acc.join(t, Seq("v"), "left")
-          .withColumn("coreness",
-            col("coreness") + coalesce(col(kcol), lit(0L)))
-          .drop(kcol)
-      }
+    if (!converged) throw new IllegalStateException(
+      s"coreness: not stable after $CorenessPeelRounds rounds — raise " +
+        "CorenessPeelRounds AND the oracle's unroll count together")
+    state.select(col("v"), col("est").cast("bigint").as("coreness"))
       .orderBy("v")
   }
 
@@ -1600,8 +1598,8 @@ object Graph {
     * rows shuffled per round carrying ≤ k·32-byte registers, map-side
     * combinable. State is |V|·k hashes, rounds are lineage-cut. Every
     * round's frame escapes to the caller (each radius is reported), so no
-    * round is superseded and none is released — the [[coreness]] tier
-    * pattern, not the [[bfsHops]] release pattern. */
+    * round is superseded and none is released (unlike the [[bfsHops]]
+    * release pattern). */
   private[graft] def anfSketches(edges: DataFrame, rounds: Int = AnfRounds,
       k: Int = AnfK, cutMode: LineageCut = LineageCut.Auto)
       : Seq[(Int, DataFrame)] = {

@@ -63,7 +63,7 @@ object Wallet {
     Graph.kCore(transferEdgesSym(spark, sfDir), symmetricInput = true)
 
   /** Per-vertex core numbers over the transfer graph ([[Graph.coreness]]),
-    * tiers chained over the same shared symmetric edge frame. */
+    * one h-index loop over the same shared symmetric edge frame. */
   def transferCoreness(spark: SparkSession, sfDir: String): DataFrame =
     Graph.coreness(transferEdgesSym(spark, sfDir), symmetricInput = true)
 

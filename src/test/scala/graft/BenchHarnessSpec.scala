@@ -55,4 +55,19 @@ class BenchHarnessSpec extends AnyFunSuite {
     // k caps the list after sorting — the biggest frames survive the cap
     assert(topFrames(snap, labels, 1) == Seq("shared:dedup_spine" -> 170L))
   }
+
+  test("query fold: kept and folded partition the input, _other sums the " +
+    "folded, n_other counts them") {
+    val mins = Seq("q_a" -> 4.0, "q_bb" -> 0.5, "q_c" -> 2.0,
+      "q_failed" -> -1.0, "q_longer_name" -> 1.0, "q_d" -> 0.25)
+    // room for three entries of a 3-char name (3 + 12 chars each)
+    val f = Bench.foldQueries(mins, 3 * 15 + 1)
+    assert(f.kept == Seq("q_a" -> 4.0, "q_c" -> 2.0, "q_d" -> 0.25))
+    assert((f.kept ++ f.folded).sortBy(_._1) == mins.sortBy(_._1))
+    assert(f.folded.map(_._1).toSet ==
+      Set("q_bb", "q_failed", "q_longer_name"))
+    assert(f.other == 1.5) // the failed query's -1.0 adds nothing
+    assert(Bench.foldQueries(mins, 10000).folded.isEmpty)
+    assert(Bench.foldQueries(mins, 0).kept.isEmpty)
+  }
 }

@@ -2,8 +2,6 @@ package graft
 
 import graft.io.Sinks
 import graft.pipelines.Pipelines
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -15,23 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class FooterSchemaSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
   import spark.implicits._
+  import GraftSpark.jobsDuring
 
   private def tmp(prefix: String) =
     java.nio.file.Files.createTempDirectory(prefix).toString
-
-  /** The jobs started while `body` runs, counted after a listener-bus drain. */
-  private def jobsDuring(body: => Unit): Seq[SparkListenerJobStart] = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(e)
-    }
-    ListenerBusAccess.drain(sc)
-    sc.addSparkListener(l)
-    try { body; ListenerBusAccess.drain(sc) }
-    finally sc.removeSparkListener(l)
-    seen.toArray(Array.empty[SparkListenerJobStart]).toSeq
-  }
 
   private def assertSameAsInference(path: String): Unit = {
     val inferred = spark.read.parquet(path).schema

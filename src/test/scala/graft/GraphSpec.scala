@@ -518,6 +518,82 @@ class GraphSpec extends AnyFunSuite {
       5L -> 2L, 6L -> 2L, 7L -> 1L))
   }
 
+  /** Driver-side core numbers capped at [[Graph.CorenessMax]]: peel the
+    * simple undirected graph at k = 2..4; a vertex's number is the
+    * largest k whose core it survives (1 with any non-loop edge). */
+  private def corenessRef[V](edges: Seq[(V, V)]): Map[V, Long] = {
+    val adj = edges.filter { case (a, b) => a != b }
+      .flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1).map { case (v, es) => v -> es.map(_._2).toSet }
+    (2 to Graph.CorenessMax).foldLeft(adj.map { case (v, _) => v -> 1L }) {
+      (core, k) =>
+        var alive = adj.keySet
+        var drop = Set.empty[V]
+        do {
+          drop = alive.filter(v => adj(v).count(alive) < k)
+          alive --= drop
+        } while (drop.nonEmpty)
+        core.map { case (v, c) => v -> (if (alive(v)) k.toLong else c) }
+    }
+  }
+
+  private def randomEdges(seed: Int): Seq[(String, String)] = {
+    val r = new scala.util.Random(seed)
+    val n = 30 + 5 * seed
+    Seq.fill(3 * n)((s"w${r.nextInt(n)}", s"w${r.nextInt(n)}"))
+  }
+
+  test("coreness: seeded random graphs with string ids match a driver peel") {
+    import spark.implicits._
+    for (seed <- 1 to 5) {
+      val edges = randomEdges(seed)
+      val want = corenessRef(edges)
+      assert(want.values.toSet.size >= 3, s"seed $seed: too few tiers")
+      assert(Graph.coreness(edges.toDF("src", "dst"))
+        .as[(String, Long)].collect().toMap == want, s"seed $seed")
+    }
+  }
+
+  test("coreness: K6 reads the cap, a path off a cycle needs many rounds, " +
+    "self-loop-only vertices are absent") {
+    import spark.implicits._
+    val k6 = for (a <- 1L to 6L; b <- a + 1 to 6L) yield (a, b)
+    assert(Graph.coreness(k6.toDF("src", "dst")).as[(Long, Long)].collect()
+      .toMap == (1L to 6L).map(_ -> Graph.CorenessMax.toLong).toMap)
+    // cycle 0..5, an 18-vertex path off vertex 5: the path's 1s reach
+    // vertex 5's neighbour one hop per round
+    val cycle = (0L to 5L).map(v => (v, (v + 1) % 6))
+    val path = (5L +: (100L to 117L)).sliding(2).map(p => (p(0), p(1))).toSeq
+    val loops = Seq((50L, 50L), (51L, 51L), (0L, 0L))
+    val edges = cycle ++ path ++ loops
+    val got = Graph.coreness(edges.toDF("src", "dst"))
+      .as[(Long, Long)].collect().toMap
+    assert(got == corenessRef(edges))
+    assert(got == ((0L to 5L).map(_ -> 2L) ++ (100L to 117L).map(_ -> 1L)).toMap)
+  }
+
+  test("coreness: rows are identical at 1 and 8 shuffle partitions, and " +
+    "the schema is unchanged") {
+    import spark.implicits._
+    val edges = randomEdges(7).toDF("src", "dst")
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    val rows = try Seq("1", "8").map { p =>
+      spark.conf.set(key, p)
+      Graph.coreness(edges).collect().toSeq
+    } finally spark.conf.set(key, saved)
+    assert(rows(0) == rows(1))
+    def json(nullableV: Boolean, vType: String) =
+      """{"type":"struct","fields":[{"name":"v","type":"""" + vType +
+        """","nullable":""" + nullableV + ""","metadata":{}},""" +
+        """{"name":"coreness","type":"long","nullable":false,"metadata":{}}]}"""
+    assert(Graph.coreness(edges).schema.json == json(true, "string"))
+    assert(Graph.coreness(Seq((1L, 2L)).toDF("src", "dst")).schema.json ==
+      json(false, "long"))
+    assert(ops.Wallet.transferCoreness(spark, GraftSpark.Sf).schema.json ==
+      json(true, "string"))
+  }
+
   test("scc: DAG chain is all singletons (trim alone resolves it)") {
     val got = sccOf(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)))
     assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L, 5L -> 5L))
