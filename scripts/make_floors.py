@@ -28,12 +28,11 @@ query-code or catalog change must not be passed at all (their floors
 describe retired plans); the drift guard below catches catalog-era
 mixing but cannot see plan changes.
 
-Writes name<TAB>floor_seconds per catalog query plus a `_calib`
-pseudo-entry (the sessions' CalibProbe means under the same outlier
-rule) so graft.Bench can report both yardsticks. `_shared_warmup` is
-excluded: it is a one-time build, not a steady-state floor. Only
-queries present in EVERY artifact get a floor (a query added after an
-old artifact must wait for a fresh controlled run).
+Writes name<TAB>floor_seconds per catalog query, an `_sf` scale tag and
+`_warmup:<part>` floors for the one-time shared builds. `_shared_warmup`
+is excluded: it is a one-time build total, not a steady-state floor.
+Only queries present in EVERY artifact get a floor (a query added after
+an old artifact must wait for a fresh controlled run).
 """
 import json, re, sys, datetime, os
 
@@ -75,12 +74,6 @@ def main(paths):
     sf_m = re.findall(r"sf([0-9]+(?:\.[0-9]+)?)", arts[0]["sf"])
     assert sf_m, f"cannot parse a numeric sf from {arts[0]['sf']!r}"
     sf_num = sf_m[-1]
-    # same outlier rule as the per-query floors: one session's lucky
-    # calib mean must not become a permanently-uncloseable yardstick
-    calibs = sorted(sum(a["calib_sec"]) / len(a["calib_sec"]) for a in arts)
-    calib = credible_floor(calibs)
-    if calib != calibs[0]:
-        print(f"  calib outlier rejected: {calibs[0]:.3f} -> {calib:.3f}")
     common = set(arts[0]["queries_min"])
     for a in arts[1:]:
         common &= set(a["queries_min"])
@@ -99,7 +92,7 @@ def main(paths):
         "# detector: per-query smallest CREDIBLE reading (>= 0.6 x median)",
         "# over the controlled artifacts",
         f"# {', '.join(os.path.basename(p) for p in paths)}",
-        f"# (calib_min={calib:.3f}s, sf={arts[0]['sf']}).",
+        f"# (sf={sf_num}).",
         f"# Generated {datetime.date.today().isoformat()} by"
         " scripts/make_floors.py — regenerate after query-code or catalog"
         " changes.",
@@ -107,7 +100,6 @@ def main(paths):
         " artifacts of the current code generation (the script enforces"
         " the count; the caller must not pass artifacts predating a plan"
         " change).",
-        f"_calib\t{calib:.4f}",
         f"_sf\t{sf_num}",
     ]
     # warmup-part floors (round-14, closing the r13 evidence blind spot):
@@ -136,7 +128,7 @@ def main(paths):
     out = "src/main/resources/bench_floors.tsv"
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")
-    print(f"wrote {out}: {n} query floors, _calib={calib:.3f}")
+    print(f"wrote {out}: {n} query floors")
     for name, lo, kept in rejected:
         print(f"  outlier rejected: {name} {lo:.2f} -> floor {kept:.2f}")
 

@@ -1,100 +1,89 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver-run benchmark: every catalog query at `SPARK_GRAFT_SF_DIR`.
+/** Driver-run benchmark: every catalog query at `SPARK_GRAFT_SF_DIR` on
+  * `local[SPARK_GRAFT_CPUS]`.
   *
-  * Each query runs as an ADJACENT cold→warm pair, reporting the per-query
-  * MIN: one-shot numbers on this box swing ±25% (JIT, GC, cache
-  * attribution), which round over round drowned real regressions in noise.
-  * The cold run pays JIT/codegen and the query's local cache builds; the
-  * warm run immediately after reuses those still-live frames and prices
-  * steady state (the number every earlier round's min reported). The
-  * query's local frames are released right after its pair, so live cache
-  * pressure is bounded by ONE query's working set beyond the [[ops.Shared]]
-  * frames — round 7 instead kept the whole catalog's pass-1 frames alive
-  * until pass 2, and that pileup's eviction churn taxed the heavy queries
-  * (q_setsim_join benched 3.8× its standalone cost). Queries whose warm
-  * run is still ≥ 2 s get a second warm run and a min-of-3 — bounding
-  * one-bad-sample noise exactly where a bad sample costs whole seconds.
-  * Pass totals are reported alongside so the cold number stays visible.
+  * Pass discipline: after an unpriced JVM warm-up, the session-shared
+  * frames ([[SharedWarmup]]) build, timed per part and priced once as
+  * `_shared_warmup`. Then each
+  * query, in name order, runs an adjacent cold→warm pair (plus a second
+  * warm sample when the first is ≥ 2 s), and its query-local frames,
+  * stream state and scratch dirs are released right after its group, so
+  * cache pressure never exceeds one query's working set beyond the shared
+  * frames. A query is priced at the min of its samples; a failed sample
+  * reads -1 and makes the query's min -1, so a broken query never looks
+  * fast.
   *
-  * CREDIBILITY INSTRUMENTATION (round 10 — the r9 verdict's directives,
-  * after the official artifact showed q_setsim_join at 8.7 s cold but
-  * 56.6 s warm and a 4-query cluster elevated only in the driver session):
+  * Output contract: two stdout lines, the compact one LAST.
+  *  - Compact line, at most 2000 chars (the driver's tail window; sbt's
+  *    trailing lines share it): `metric` = `total_steady_min`, `value` =
+  *    Σ query mins + `_shared_warmup`, `unit`, `n_queries`,
+  *    `samples_per_query`, `pass_semantics`, `pass_totals` (cold incl.
+  *    the warmup, warm), one count or short map per evidence gate below,
+  *    `storage_peak_mb`/`storage_peak_top`, session identity (`sf`,
+  *    `master`, `parallelism`) and `queries`: slowest first while a
+  *    length budget lasts, the rest summed into `_other`.
+  *  - Detail line, also written to `BENCH_DETAIL.json`: the headline,
+  *    full-precision per-query maps (`queries_min`, `pass1`..`pass3`,
+  *    `gc_sec`, `spread`, `warmup_parts`) and every evidence record.
   *
-  *  - `calib_sec` — [[tools.CalibProbe]] at session start/end, plus
-  *    `calib_series` every 64 queries and an EXTRA probe fired the moment
-  *    a warm anomaly is detected: an ambient spike mid-session is then
-  *    measured at the anomaly, not inferred from endpoints that were fine.
-  *  - `total_steady_min_calib_adj` — the headline total normalized by the
-  *    probe ([[tools.CalibProbe.RefCalibSec]]), so cross-session
-  *    comparison stops being a manual PERF.md exercise.
-  *  - `warm_anomalies` vs `spread_cold_top` — the r9 `spread_top` mixed
-  *    two shapes; only a NON-FIRST pass above 2× the query's min is the
-  *    shape that matters (cold ≫ warm is just a local cache build priced
-  *    where it belongs). Each anomaly carries its own diagnostics: the
-  *    at-the-moment calib probe, the GC fraction of the bad pass, how a
-  *    recovery sample ran, and any shared-frame storage events — the
-  *    report NAMES the mechanism instead of leaving a judge to read pass
-  *    arrays.
-  *  - `evict_events` — [[tools.CacheAudit]] snapshots around every pass;
-  *    any storage loss on a `shared:*`-labeled frame is an attributed
-  *    event (query, pass, frame, MBs). Empty is the claim "no eviction
-  *    fired"; non-empty is the named cause.
-  *  - `heals` — [[ops.Shared]] self-heal log: a shared frame whose cache
-  *    entry was dropped behind the holder's back re-persists on next
-  *    access and reports WHO triggered the rebuild.
-  *  - `state_nonzero` — [[streaming.StreamState.loadedProviderCount]]
-  *    after each query's unload: per-query EVIDENCE the provider registry
-  *    is empty (the r9 sweep-backlog fix verifying itself on the driver's
-  *    exact path).
+  * Evidence gates, each with the reason it exists:
+  *  - `warm_anomalies`: a non-first sample > 2× the query's min on a ≥ 1 s
+  *    query, with the bad pass's GC fraction, a recovery sample and any
+  *    shared-frame storage events — a mid-session disturbance must carry
+  *    its own diagnosis, not hide in the pass arrays.
+  *  - `warm_anomalies_unresolved`: the recovery sample and one more both
+  *    stay > 1.5× min — a query that does not recover is named.
+  *  - `elevated_minima`: session min > 2× the query's controlled floor
+  *    ([[tools.BenchFloors]]), with the best pass's [[tools.StageAudit]]
+  *    rows — every pass slow is the shape the session's own min cannot
+  *    see, and the rows attribute it without a re-run.
+  *  - `elevated_soft`: a min in the 1.5–2× floor band — under the hard
+  *    gate but the shape a co-tenant burst leaves; re-sampled from
+  *    leftover budget only.
+  *  - `post_burst_*`: every flagged query gets one more cold→warm pair
+  *    after the catalog (worst first, at most 20 pairs and 180 s) — a
+  *    burst that has passed closes the case in the artifact. Evidence
+  *    only: totals and mins are not updated.
+  *  - `warmup_elevated`/`warmup_post_burst`: the floor check for the
+  *    one-time shared builds, which have no warm pass; flagged parts are
+  *    rebuilt after the catalog.
+  *  - `evict_events`/`heals`: storage lost from a `shared:*` frame, and
+  *    shared frames rebuilt after their cache entry vanished — "no
+  *    eviction fired" is a claim only an empty log can make.
+  *  - `state_nonzero`: stream state providers still loaded after a
+  *    query's release — the registry must be empty between queries.
+  *  - `storage_peak_over_ceiling`: cached storage beyond
+  *    [[StoragePeakCeilingMb]] is unexplained growth, named by its frames.
   *
-  * Round 11 closes the one diagnostic gap round 10 proved: an ELEVATED
-  * MINIMUM — every pass slow, so no pass exceeds 2× the session's own min
-  * and `warm_anomalies` stays silent (the r10 driver five:
-  * q_join_cardinality 7.85 s vs 1.70 s controlled, clean eviction/state
-  * audit, FASTER calib probe). Detection needs an expectation EXTERNAL to
-  * the session:
-  *
-  *  - `elevated_minima` — session min > [[ElevatedMinRatio]]× the query's
-  *    [[tools.BenchFloors]] floor (a controlled builder session's mins,
-  *    checked into the repo) fires the anomaly evidence bundle (calib at
-  *    that moment, best-pass GC fraction) PLUS the [[tools.StageAudit]]
-  *    stage/task/shuffle breakdown of the BEST pass — captured passively
-  *    by a pass-labeled stage listener, so the elevation is attributed
-  *    (compute? GC? tiny-stage parade?) without a re-run.
-  *  - `warm_anomalies_unresolved` — an anomaly whose recovery sample is
-  *    still >1.5× min gets ONE more sample; still above → the query is
-  *    named here instead of blending into the pass arrays (r10
-  *    q_skipping_stats: recovery 2.24× and nothing fired).
-  *
-  * Round 12 closes the remaining judgment call: a flagged query's QUIET
-  * reading had to come from a separate controlled session.
-  *
-  *  - `post_burst_min` — end-of-session re-sample: every query that fired
-  *    `elevated_minima` or landed in `warm_anomalies_unresolved` gets one
-  *    more cold→warm pair AFTER the catalog completes (minutes later —
-  *    past any co-tenant burst), with its own calib probe. ≤2× floor
-  *    closes the case in-artifact; still-slow becomes a named plan
-  *    investigation. Evidence-only — totals/mins are not updated.
-  *  - `calib_adj_series` — the headline total re-weighted by the probes
-  *    BRACKETING each query's catalog segment (the endpoint `calib_adj`
-  *    under-corrects mid-session bursts by construction; r11 driver:
-  *    endpoints 0.50/0.76 vs a 0.95 in-catalog peak).
-  *  - floors carry an `_sf` scale tag and the check disables itself on a
-  *    session at a different scale; elevation straggler-polls and
-  *    post-burst pairs are capped so a whole-session burst can't multiply
-  *    its own cost.
-  *
-  * Output contract: the FINAL stdout line is one JSON object small enough
-  * to survive the driver's 2000-char tail capture (every earlier round
-  * lost its per-query map to that window — `"parsed": null` in
-  * BENCH_r{1,2,3}). The map keeps the slowest queries until a length
-  * budget is hit and folds the remainder into `_other`; the
-  * full-precision maps and event logs go to `BENCH_DETAIL.json` and an
-  * earlier (sacrificial) stdout line.
+  * The floor table carries an `_sf` tag; at another scale the floor
+  * checks are off. `SPARK_GRAFT_BENCH_ONLY` (a name regex) and the
+  * `SPARK_GRAFT_BENCH_FORCE_ELEVATE[_WARMUP]` self-test regexes are for
+  * development; the driver sets none of them.
   */
 object Bench {
+  /** The session-shared frames built before the catalog, in build order:
+    * part name, the [[ops.Shared]] tags the part builds, and the build.
+    * Bench prices them as `_shared_warmup` and [[tools.Probe]] runs the
+    * same list, so neither charges a one-time build to the first query
+    * that touches it. */
+  private[graft] val SharedWarmup: Seq[(String, Seq[String],
+      (SparkSession, String) => DataFrame)] = Seq(
+    ("dedup_spine", Seq("cluster_labels", "minhash_pairs", "minhash_sig_rows",
+      "shingles_arr"), (s, d) => ops.Dedup.clusterLabels(s, d)),
+    ("ann_exact_baseline", Seq("bf_topk"),
+      (s, d) => ops.Similarity.bruteForceTopK(s, d)),
+    ("label_means", Seq("label_means"),
+      (s, d) => ops.Similarity.labelCentroids(s, d)),
+    ("transfer_pagerank", Seq("transfer_pagerank"),
+      (s, d) => ops.Wallet.transferPageRank(s, d)),
+    ("transfer_lpa", Seq("transfer_communities"),
+      (s, d) => ops.Wallet.transferCommunities(s, d)),
+    // the symmetrized edge spine of kcore/coreness/ktruss/mis
+    ("transfer_edges_sym", Seq("transfer_edges_sym"),
+      (s, d) => ops.Wallet.transferEdgesSym(s, d)))
+
   /** A non-first pass this far above the query's min is an anomaly. */
   private val WarmAnomalyRatio = 2.0
   /** ...if the query is heavy enough for the ratio to mean seconds. */
@@ -165,12 +154,18 @@ object Bench {
     // name where the best pass's time went (stages/tasks/GC/shuffle)
     // without re-running anything.
     val audit = new tools.StageAudit(spark)
-    def calib(): Double = {
-      audit.setLabel("calib")
-      tools.CalibProbe.run(spark, cpus.toInt)
-    }
-    tools.CalibProbe.run(spark, cpus.toInt) // JIT warmup, discarded
-    val calibStart = calib()
+    // Unpriced JVM warm-up before anything is timed: fixed CPU+shuffle
+    // work, no data or cache dependence, run twice. The session's first
+    // jobs pay class loading, JIT and codegen ramp-up; without this they
+    // land on the first warmup part and inflate `_shared_warmup` by seconds
+    // (dedup_spine ~3–4 s at sf0.1 on 4 cores). The `_warmup:*` floors were
+    // measured after this same work, so they stay comparable.
+    audit.setLabel("_jvm_warmup")
+    for (_ <- 1 to 2)
+      spark.range(0L, 50000000L, 1L, cpus.toInt)
+        .selectExpr("id % 997 AS b", "xxhash64(id) AS h")
+        .groupBy("b").agg(org.apache.spark.sql.functions.sum("h"))
+        .count()
     // Controlled-session floors (tools.BenchFloors): external expectation
     // for the elevated-minimum check. Missing resource → empty map → the
     // check no-ops (new queries without floors are likewise skipped).
@@ -187,14 +182,9 @@ object Bench {
         System.err.println(s"[bench] floor table sf=$fs does not match " +
           s"session dir $sfDir (${ds.fold("no sf segment")(_.toString)}) — " +
           "elevated-minimum check disabled")
-        // keep only the scale-independent pseudo-entries: `_calib`
-        // measures box compute, a valid ambient yardstick at any scale;
-        // `_warmup:*` part floors are scale-DEPENDENT timings and must
-        // disable with the per-query floors
-        floorsRaw.view.filterKeys(Set("_calib", "_sf")).toMap
+        Map.empty[String, Double]
       case (None, _) => floorsRaw
     }
-    val floorCalib = floors.getOrElse("_calib", -1.0)
 
     // ── shared warmup, with every new RDD labeled by its creating part ──
     // Session-shared iterative frames (ops/Shared) build exactly once per
@@ -211,24 +201,10 @@ object Bench {
     }
     val warm0 = System.nanoTime()
     val warmupParts = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    // hoisted so the post-burst pass can REBUILD a burst-flagged part for
-    // exonerating evidence (round-13 verdict "what's wrong" #1: warmup
-    // parts had no floor and no post-burst coverage, so a burst-struck
-    // transfer_lpa shipped as an unexplained 0.81× warmup regression)
-    val warmupBuilds = Seq[(String, () => org.apache.spark.sql.DataFrame)](
-      ("dedup_spine", () => ops.Dedup.clusterLabels(spark, sfDir)), // + shingles/sigs
-      ("ann_exact_baseline", () => ops.Similarity.bruteForceTopK(spark, sfDir)),
-      ("label_means", () => ops.Similarity.labelCentroids(spark, sfDir)),
-      ("transfer_pagerank", () => ops.Wallet.transferPageRank(spark, sfDir)),
-      ("transfer_lpa", () => ops.Wallet.transferCommunities(spark, sfDir)),
-      // r10: the symmetrized edge spine (kcore/coreness/ktruss/mis) joins
-      // the labeled warmup so its one-time build stops landing on
-      // q_coreness's cold pass
-      ("transfer_edges_sym", () => ops.Wallet.transferEdgesSym(spark, sfDir)))
     val warmed = try {
-      warmupBuilds.foreach { case (part, build) =>
+      SharedWarmup.foreach { case (part, _, build) =>
         val t0 = System.nanoTime()
-        build().count()
+        build(spark, sfDir).count()
         warmupParts += part -> (System.nanoTime() - t0) / 1e9
         labelNew(s"shared:$part")
       }
@@ -286,14 +262,8 @@ object Bench {
     // intermediate (a dead lineage-cut round block the ContextCleaner
     // collected), not the shared frame. A real eviction (entry dropped)
     // keeps kind `gone` and stays in evict_shared_n.
-    val warmupTags = Map(
-      "shared:dedup_spine" -> Seq("cluster_labels", "minhash_pairs",
-        "minhash_sig_rows", "shingles_arr"),
-      "shared:ann_exact_baseline" -> Seq("bf_topk"),
-      "shared:label_means" -> Seq("label_means"),
-      "shared:transfer_pagerank" -> Seq("transfer_pagerank"),
-      "shared:transfer_lpa" -> Seq("transfer_communities"),
-      "shared:transfer_edges_sym" -> Seq("transfer_edges_sym"))
+    val warmupTags =
+      SharedWarmup.map { case (part, tags, _) => s"shared:$part" -> tags }.toMap
     def reclass(evs: Seq[tools.CacheAudit.Event]): Seq[tools.CacheAudit.Event] = {
       lazy val live = ops.Shared.liveTags(spark, sfDir)
       evs.map { e =>
@@ -306,7 +276,6 @@ object Bench {
     val events = scala.collection.mutable.ArrayBuffer.empty[tools.CacheAudit.Event]
     val heals = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     val stateNonzero = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    val calibSeries = scala.collection.mutable.ArrayBuffer.empty[(Int, Double, Long)]
     var storagePeakMb = 0L
     // the cached frames (by creator label) holding the storage at its
     // peak — r12's 641 MB driver peak was benign (zero evictions) but
@@ -318,8 +287,8 @@ object Bench {
     // One timed execution; the caller controls cache lifetimes. Failures
     // report as -1 so a broken query can never look fast. Returns
     // (seconds, gcSeconds) and folds storage diffs into `events`.
-    def timeOnce(name: String, fn: (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame, pass: String): (Double, Double) = {
+    def timeOnce(name: String, fn: (SparkSession, String) => DataFrame,
+        pass: String): (Double, Double) = {
       audit.setLabel(s"$name/$pass")
       val gc0 = tools.CacheAudit.gcSec()
       val t0 = System.nanoTime()
@@ -349,17 +318,16 @@ object Bench {
     // the Shared frames never exceeds one query's working set. A warm run
     // still ≥ 2 s gets one more warm sample (min-of-3 where variance
     // costs whole seconds). A WARM ANOMALY (non-first sample > 2× the
-    // group min on a ≥1 s query) triggers, in order: an immediate calib
-    // probe (was the box busy RIGHT THEN?), then one recovery sample
-    // (does steady state come back once whatever-it-was passes?).
-    final case class Anomaly(worst: Double, calibAt: Double, gcFrac: Double,
+    // group min on a ≥1 s query) triggers one recovery sample (does
+    // steady state come back once whatever-it-was passes?).
+    final case class Anomaly(worst: Double, gcFrac: Double,
         recovery: Double, recovery2: Double, sharedEvents: Int, healsN: Int)
     val anomalies = scala.collection.mutable.LinkedHashMap.empty[String, Anomaly]
     // session min > 2× the controlled floor (tools.BenchFloors) — the
     // every-pass-slow shape warm_anomalies cannot see; carries the best
     // pass's StageAudit breakdown so the elevation is attributed, not
     // just detected
-    final case class Elevated(min: Double, floor: Double, calibAt: Double,
+    final case class Elevated(min: Double, floor: Double,
         gcFracBest: Double, bestPass: String,
         stages: Seq[tools.StageAudit.Row])
     val elevated = scala.collection.mutable.LinkedHashMap.empty[String, Elevated]
@@ -367,7 +335,7 @@ object Bench {
     // 1.5× min: (recovery_ratio, recovery2_ratio)
     val unresolved =
       scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    val runs = names.zipWithIndex.map { case ((n, f), qi) =>
+    val runs = names.map { case (n, f) =>
       val evBefore = events.size
       val labeled =
         scala.collection.mutable.ArrayBuffer.empty[(String, (Double, Double))]
@@ -380,7 +348,6 @@ object Bench {
           labeled.drop(1).exists(_._2._1 > WarmAnomalyRatio * valid.min)) {
         val vmin = valid.min
         val worstPass = labeled.drop(1).maxBy(_._2._1)._2
-        val calibAt = calib()
         val recovery = timeOnce(n, f, "recovery")
         labeled += "recovery" -> recovery
         // a recovery sample still >1.5× min is the non-recovering shape
@@ -400,7 +367,6 @@ object Bench {
         }
         anomalies(n) = Anomaly(
           worst = worstPass._1 / vmin,
-          calibAt = calibAt,
           gcFrac = if (worstPass._1 > 0) worstPass._2 / worstPass._1 else 0.0,
           recovery = if (recovery._1 >= 0) recovery._1 / vmin else -1.0,
           recovery2 = recovery2,
@@ -424,14 +390,6 @@ object Bench {
       floors.get(n).foreach { floor =>
         if ((vmin >= ElevatedMinSec && floor > 0 &&
             vmin > ElevatedMinRatio * floor) || (forced && vmin > 0)) {
-          // cap the per-elevation calib probes: a session that is slow
-          // ACROSS THE BOARD (co-tenant for its whole duration) would
-          // otherwise spend 0.6 s × hundreds of queries re-measuring the
-          // same ambient; past the cap, -1 marks the reading NOT TAKEN
-          // (an hours-stale copy would misattribute exactly the sessions
-          // this feature exists for; fresher ambient context still lands
-          // in calib_series every 64 queries)
-          val calibAt = if (elevated.size < 12) calib() else -1.0
           val (bestLabel, best) = labeled.filter(_._2._1 >= 0).minBy(_._2._1)
           // stage-completed events ride the ASYNC listener bus: when the
           // best pass was the last thing run, its rows may not have been
@@ -439,18 +397,17 @@ object Bench {
           // bounded, and an empty breakdown under exactly the busy-box
           // conditions this diagnoses would defeat the feature)
           def bestRows() = groupRows.filter(_.label == s"$n/$bestLabel")
-          // same cap as the calib probes: a whole-session co-tenant burst
-          // can elevate dozens of queries (r11 session D: 13), and paying
-          // the up-to-2 s straggler poll on each would tax exactly the
-          // sessions this diagnoses — past the cap, take whatever rows
-          // already arrived
+          // capped: a whole-session co-tenant burst can elevate dozens of
+          // queries (r11 session D: 13), and paying the up-to-2 s straggler
+          // poll on each would tax exactly the sessions this diagnoses —
+          // past the cap, take whatever rows already arrived
           var waited = if (elevated.size < 12) 0 else 2000
           while (bestRows().isEmpty && waited < 2000) {
             Thread.sleep(50); waited += 50
             groupRows ++= audit.drainRows()
           }
           val rows = bestRows().sortBy(-_.ms).take(8).toSeq
-          elevated(n) = Elevated(vmin, floor, calibAt,
+          elevated(n) = Elevated(vmin, floor,
             if (best._1 > 0) best._2 / best._1 else 0.0, bestLabel, rows)
         }
       }
@@ -479,30 +436,21 @@ object Bench {
       for (id <- s2.keySet if labels.get(id).contains(s"q:$n"))
         labels(id) = s"live:$n"
       snap = s2
-      if (qi % 64 == 63)
-        calibSeries += ((qi, calib(), tools.CacheAudit.storageUsedMb(spark)))
       (n, samples)
     }
-    // the one-time shared-frame build is part of the true cold cost: it
-    // joins the report as its own entry (built once — no min-of-2), so the
-    // headline `value` DELIBERATELY includes it on top of the per-query
-    // mins; n_queries counts real catalog entries only
-    val calibEnd = calib()
 
     // ── post-burst re-sample (round-12 verdict directive #1) ──
-    // The detector can name an elevated query and the ambient AT the
-    // elevation, but a judge still had to diff controlled sessions to
-    // decide whether the box or the plan was slow. Close that loop inside
-    // the artifact: after the whole catalog (minutes later — a co-tenant
-    // burst has had time to pass), every query that fired elevated_minima
-    // or landed in warm_anomalies_unresolved gets one more cold→warm pair,
-    // recorded as `post_burst_min` with its own at-the-moment calib probe.
-    // post_burst_min ≤ 2× floor ⇒ burst confirmed, case closed in-artifact;
-    // still high on a quiet probe ⇒ a real plan investigation, named.
+    // The detector can name an elevated query, but a judge still had to
+    // diff controlled sessions to decide whether the box or the plan was
+    // slow. Close that loop inside the artifact: after the whole catalog
+    // (minutes later — a co-tenant burst has had time to pass), every
+    // query that fired elevated_minima or landed in
+    // warm_anomalies_unresolved gets one more cold→warm pair,
+    // recorded as `post_burst_min`: ≤ 2× floor ⇒ burst confirmed, case
+    // closed in-artifact; still high ⇒ a real plan investigation, named.
     // Evidence-only: totals and per-query mins are NOT updated (the
     // headline stays the catalog-window number).
-    final case class PostBurst(min: Double, calibAt: Double)
-    val postBurst = scala.collection.mutable.LinkedHashMap.empty[String, PostBurst]
+    val postBurst = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val fnByName = names.toMap
     val sessionMin = runs.map { case (n, samples) =>
       val ts = samples.map(_._1).filter(_ >= 0)
@@ -547,7 +495,6 @@ object Bench {
     resample.take(20).foreach { n =>
       if (System.nanoTime() - resampleDeadline < 0) fnByName.get(n).foreach { f =>
         resampled += 1
-        val calibAt = calib()
         val a = timeOnce(n, f, "post_burst_cold")
         val b = timeOnce(n, f, "post_burst_warm")
         ops.QueryLocal.release(spark)
@@ -558,7 +505,7 @@ object Bench {
         // local frames never read as evictions on a later diff
         snap = tools.CacheAudit.snapshot(spark)
         val vs = Seq(a._1, b._1).filter(_ >= 0)
-        postBurst(n) = PostBurst(if (vs.nonEmpty) vs.min else -1.0, calibAt)
+        postBurst(n) = if (vs.nonEmpty) vs.min else -1.0
       }
     }
     if (resampled < resample.size)
@@ -572,22 +519,19 @@ object Bench {
     // the query re-samples). Runs LAST: the query re-samples above still
     // need the live shared frames, and nothing after this reads them.
     // Evidence-only — the priced warmup number is not updated.
-    final case class WarmupPB(sec: Double, calibAt: Double)
     val warmupPostBurst =
-      scala.collection.mutable.LinkedHashMap.empty[String, WarmupPB]
+      scala.collection.mutable.LinkedHashMap.empty[String, Double]
     if (warmupElevated.nonEmpty &&
         System.nanoTime() - resampleDeadline < 0) {
       ops.Shared.clear(spark)
-      val calibAt = calib()
-      warmupBuilds.filter(p => warmupElevated.contains(p._1))
-        .foreach { case (part, build) =>
+      SharedWarmup.filter(p => warmupElevated.contains(p._1))
+        .foreach { case (part, _, build) =>
           if (System.nanoTime() - resampleDeadline < 0) {
             val t0 = System.nanoTime()
-            try build().count()
+            try build(spark, sfDir).count()
             catch { case e: Throwable => System.err.println(
               s"[bench] warmup post-burst $part failed: ${e.getMessage}") }
-            warmupPostBurst(part) =
-              WarmupPB((System.nanoTime() - t0) / 1e9, calibAt)
+            warmupPostBurst(part) = (System.nanoTime() - t0) / 1e9
           }
         }
       ops.QueryLocal.drain(spark)
@@ -620,7 +564,7 @@ object Bench {
         elevOk && unresOk && softOk
       }
     val postBurstClosed =
-      postBurst.count { case (n, pb) => postBurstClosedFor(n, pb.min) }
+      postBurst.count { case (n, pb) => postBurstClosedFor(n, pb) }
     val mins = runs.map { case (n, samples) =>
       val ts = samples.map(_._1)
       n -> (if (ts.exists(_ < 0)) -1.0 else ts.min)
@@ -644,36 +588,10 @@ object Bench {
     val passTotals = Seq(
       pass1.map(_._2).filter(_ >= 0).sum + math.max(warmSec, 0),
       pass2.map(_._2).filter(_ >= 0).sum)
+    // the one-time shared-frame build is part of the true cold cost: the
+    // headline DELIBERATELY includes `_shared_warmup` on top of the
+    // per-query mins; n_queries counts real catalog entries only
     val total = mins.map(_._2).filter(_ >= 0).sum
-    val calibMean = (calibStart + calibEnd) / 2
-    val calibAdj =
-      if (calibMean > 0) total * tools.CalibProbe.RefCalibSec / calibMean
-      else total
-    // SERIES-WEIGHTED calib adjustment (round-12 verdict directive #5):
-    // the endpoint probes under-correct mid-session bursts by construction
-    // (r11 driver: endpoints 0.50/0.76 while the in-catalog calib_series
-    // peaked at 0.95) — weight each query's min by the mean of the probes
-    // BRACKETING its segment of the name-sorted catalog instead. The
-    // endpoint `calib_adj` stays alongside for cross-round comparability.
-    val breakpoints: Seq[(Int, Double)] =
-      ((-1, calibStart) +:
-        calibSeries.map { case (qi, c, _) => (qi, c) }.toSeq) :+
-        (names.size, calibEnd)
-    def segCalib(qi: Int): Double = {
-      val before = breakpoints.filter(_._1 < qi).lastOption.map(_._2)
-        .getOrElse(calibStart)
-      val after = breakpoints.find(_._1 >= qi).map(_._2).getOrElse(calibEnd)
-      (before + after) / 2
-    }
-    def adj(sec: Double, c: Double): Double =
-      if (sec < 0) 0.0
-      else if (c > 0) sec * tools.CalibProbe.RefCalibSec / c else sec
-    val calibAdjSeries =
-      adj(math.max(warmSec, 0), segCalib(0)) +
-        runs.zipWithIndex.map { case ((n, samples), qi) =>
-          val ts = samples.map(_._1)
-          adj(if (ts.exists(_ < 0)) -1.0 else ts.min, segCalib(qi))
-        }.sum
     val sampleCounts = runs.map { case (_, samples) => samples.size }
 
     def jnum(v: Double, fmt: String): String = fmt.format(v)
@@ -685,21 +603,19 @@ object Bench {
     val anomaliesJson = anomalies.toSeq.map { case (n, a) =>
       "\"" + n + "\":{" +
         s""""worst":${jnum(a.worst, "%.2f")},""" +
-        s""""calib_at":${jnum(a.calibAt, "%.2f")},""" +
         s""""gc_frac":${jnum(a.gcFrac, "%.2f")},""" +
         s""""recovery":${jnum(a.recovery, "%.2f")},""" +
         s""""recovery2":${jnum(a.recovery2, "%.2f")},""" +
         s""""shared_events":${a.sharedEvents},"heals":${a.healsN}}"""
     }.mkString("{", ",", "}")
-    // post-burst evidence shared by both record kinds (directive r11 #1):
-    // min of the end-of-session cold→warm pair, its own calib, and the
-    // ratio against the record's own gate yardstick
+    // post-burst evidence shared by every record kind: min of the
+    // end-of-session cold→warm pair and its ratio against the record's own
+    // gate yardstick
     def postBurstFields(n: String, yardstick: Double): String =
       postBurst.get(n).map { pb =>
-        val ratio = if (pb.min >= 0 && yardstick > 0) pb.min / yardstick else -1.0
-        s""","post_burst_min":${jnum(pb.min, "%.2f")}""" +
-          s""","post_burst_ratio":${jnum(ratio, "%.2f")}""" +
-          s""","post_burst_calib":${jnum(pb.calibAt, "%.2f")}"""
+        val ratio = if (pb >= 0 && yardstick > 0) pb / yardstick else -1.0
+        s""","post_burst_min":${jnum(pb, "%.2f")}""" +
+          s""","post_burst_ratio":${jnum(ratio, "%.2f")}"""
       }.getOrElse("")
     // anomalies that failed BOTH recovery samples (directive r10 #3)
     val unresolvedJson = unresolved.toSeq.map { case (n, (r1, r2)) =>
@@ -713,7 +629,6 @@ object Bench {
       "\"" + n + "\":{" +
         s""""min":${jnum(e.min, "%.2f")},"floor":${jnum(e.floor, "%.2f")},""" +
         s""""ratio":${jnum(e.min / e.floor, "%.2f")},""" +
-        s""""calib_at":${jnum(e.calibAt, "%.2f")},""" +
         s""""gc_frac_best":${jnum(e.gcFracBest, "%.2f")},""" +
         s""""best_pass":"${e.bestPass}"""" +
         postBurstFields(n, e.floor) +
@@ -730,24 +645,12 @@ object Bench {
 
     // full-precision detail: a stdout line (fine if the tail truncates it)
     // and a file the judge can read whole
-    // series first (round-13 convention): calib_adj_series is the
-    // HEADLINE adjusted number — it brackets each query's segment of the
-    // catalog, so it corrects mid-session bursts the endpoint probes
-    // can't see, and it demonstrably tightens same-code session spread
-    // (r11 A-C recomputed + r12 A-F live). The endpoint calib_adj stays
-    // emitted for cross-round comparability with r4-r12 artifacts.
     val detail =
       s"""{"metric":"total_steady_min","value":$total,"unit":"sec","sf":"$sfDir"""" +
-        s""","calib_adj_series":${jnum(calibAdjSeries, "%.2f")}""" +
-        s""","total_steady_min_calib_adj":${jnum(calibAdj, "%.2f")}""" +
         s""","post_burst_n":${postBurst.size}""" +
         s""","post_burst_closed":$postBurstClosed""" +
-        s""","ref_calib_sec":${tools.CalibProbe.RefCalibSec}""" +
         s""","pass_semantics":"adjacent_pair:cold_incl_builds,steady_state_warm"""" +
         s""","samples_per_query":[${sampleCounts.min},${sampleCounts.max}]""" +
-        s""","calib_sec":[$calibStart,$calibEnd]""" +
-        s""","calib_series":[${calibSeries.map { case (qi, c, mb) =>
-          s"""[$qi,${jnum(c, "%.2f")},$mb]""" }.mkString(",")}]""" +
         s""","pass_totals":[${passTotals.mkString(",")}]""" +
         s""","storage_peak_mb":$storagePeakMb""" +
         s""","storage_peak_top":${mapJson(
@@ -771,12 +674,10 @@ object Bench {
         }.mkString("{", ",", "}")}""" +
         s""","warmup_post_burst":${warmupPostBurst.toSeq.map {
           case (p, pb) => "\"" + p +
-            s"""\":{"sec":${jnum(pb.sec, "%.2f")},""" +
+            s"""\":{"sec":${jnum(pb, "%.2f")},""" +
             s""""ratio":${jnum(warmupElevated.get(p)
-              .map(pb.sec / _._2).getOrElse(-1.0), "%.2f")},""" +
-            s""""calib_at":${jnum(pb.calibAt, "%.2f")}}"""
+              .map(pb / _._2).getOrElse(-1.0), "%.2f")}}"""
         }.mkString("{", ",", "}")}""" +
-        s""","floor_calib_sec":${jnum(floorCalib, "%.2f")}""" +
         s""","spread_cold_top":${mapJson(coldSpread.take(15), "%.2f")}""" +
         s""","evict_events":[${events.take(400).map(_.json).mkString(",")}]""" +
         s""","evict_events_n":${events.size}""" +
@@ -821,8 +722,8 @@ object Bench {
     // flagged by both shows its WORST ratio): ≤2.0 elevations / ≤1.5
     // anomalies reads as burst-confirmed directly off the compact line
     val postBurstCompact = postBurst.toSeq.take(6).map { case (n, pb) =>
-      val ratios = postBurstRatios(n, pb.min)
-      val r = if (pb.min >= 0 && ratios.nonEmpty) ratios.max else -1.0
+      val ratios = postBurstRatios(n, pb)
+      val r = if (pb >= 0 && ratios.nonEmpty) ratios.max else -1.0
       "\"" + n + "\":" + jnum(r, "%.1f")
     }.mkString("{", ",", "}")
     val coldTop = coldSpread.take(5)
@@ -830,11 +731,8 @@ object Bench {
       .mkString("{", ",", "}")
     def compactLine(qs: String, nShown: Int, nOther: Int): String =
       s"""{"metric":"total_steady_min","value":${jnum(total, "%.2f")},"unit":"sec"""" +
-        s""","calib_adj_series":${jnum(calibAdjSeries, "%.2f")}""" +
-        s""","calib_adj":${jnum(calibAdj, "%.2f")}""" +
         s""","samples_per_query":[${sampleCounts.min},${sampleCounts.max}]""" +
         s""","pass_semantics":"adjacent_pair:cold_incl_builds,steady_state_warm"""" +
-        s""","calib_sec":[${jnum(calibStart, "%.2f")},${jnum(calibEnd, "%.2f")}]""" +
         s""","pass_totals":[${passTotals.map(jnum(_, "%.1f")).mkString(",")}]""" +
         s""","n_queries":${names.size},"n_shown":$nShown,"n_other":$nOther""" +
         s""","warm_anomalies":$anomaliesCompact""" +
@@ -849,7 +747,7 @@ object Bench {
           .mkString("{", ",", "}")}""" +
         s""","warmup_pb":${warmupPostBurst.toSeq.take(3).map {
           case (p, pb) => "\"" + p + "\":" + jnum(warmupElevated.get(p)
-            .map(pb.sec / _._2).getOrElse(-1.0), "%.1f") }
+            .map(pb / _._2).getOrElse(-1.0), "%.1f") }
           .mkString("{", ",", "}")}""" +
         s""","spread_cold_top":$coldTop""" +
         s""","evict_shared_n":$sharedEventCount,"heals_n":${heals.size}""" +

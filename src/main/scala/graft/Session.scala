@@ -53,27 +53,8 @@ object Session {
       .config(conf(cpus) ++ extra)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt")
-    deleteAtExit(ckpt)
-    spark.sparkContext.setCheckpointDir(ckpt.toString)
+    spark.sparkContext.setCheckpointDir(
+      util.TempDirs.staging("graft-ckpt").toString)
     spark
   }
-
-  /** Delete `dir` and everything under it at JVM exit. Registered with
-    * Hadoop's hook manager below Spark's own hook (FileSystem priority +
-    * 30, which stops the context), so the delete runs after the context
-    * has stopped writing. Reliable-checkpoint files of frames still
-    * referenced at exit are never removed by the context cleaner. */
-  private def deleteAtExit(dir: java.nio.file.Path): Unit =
-    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(() =>
-      try {
-        import scala.jdk.CollectionConverters._
-        val walk = java.nio.file.Files.walk(dir)
-        try walk.iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        finally walk.close()
-      } catch {
-        case _: java.io.IOException | _: java.io.UncheckedIOException => ()
-      },
-      org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 20)
 }

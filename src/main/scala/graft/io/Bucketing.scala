@@ -30,7 +30,7 @@ object Bucketing {
     * threshold a test-scale orders side would broadcast and the bucketed
     * scan would prove nothing; the conf is restored in `finally`. */
   def ordersLineitemJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_buckets")
+    val dir = graft.util.TempDirs.staging("graft_buckets")
     graft.Tables.orders(spark, sfDir)
       .select("o_orderkey", "o_orderstatus")
       .write.bucketBy(NumBuckets, "o_orderkey").sortBy("o_orderkey")

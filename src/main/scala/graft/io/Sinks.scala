@@ -1,5 +1,6 @@
 package graft.io
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -57,11 +58,9 @@ object Sinks {
     * there) — so a died-and-retried upsert never loses earlier keys. */
   def upsertParquet(spark: SparkSession, incoming: DataFrame, keyCol: String,
       versionCol: String, path: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
-    val staged = new org.apache.hadoop.fs.Path(path + "__staged")
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val dst = new Path(path)
+    val old = new Path(path + "__old")
 
     // recover from a crash that promoted nothing after moving the live dir
     val liveDir =
@@ -85,23 +84,32 @@ object Sinks {
       .filter(col("_rn") === 1)
       .drop("_rn", "_is_new")
 
-    // parquet can't overwrite its own input in place — stage, then swap
-    winner.write.mode(SaveMode.Overwrite).parquet(staged.toString)
-    def mustRename(from: org.apache.hadoop.fs.Path,
-        to: org.apache.hadoop.fs.Path): Unit =
-      if (!fs.rename(from, to))
-        throw new java.io.IOException(s"upsertParquet: rename $from -> $to failed")
+    // parquet can't overwrite its own input in place — stage, then swap.
     // __old is only rotated when dst exists: when recovering from a crash
     // that already moved the live table to __old, deleting __old here would
     // leave a window with NO live copy on disk (a second crash before the
     // staged promote would silently drop every earlier key on the next
     // retry). Leaving __old in place until the promote keeps a live copy at
     // every instant.
-    if (fs.exists(dst)) {
+    winner.write.mode(SaveMode.Overwrite).parquet(path + "__staged")
+    promote(fs, path, fs.exists(dst), "upsertParquet")
+  }
+
+  /** Swap `path__staged` in as `path`: when `rotate`, drop any `__old` and
+    * move the live dir there; then promote the stage and drop `__old`.
+    * Every rename is checked and a failure names `caller`. */
+  private def promote(fs: FileSystem, path: String, rotate: Boolean,
+      caller: String): Unit = {
+    val dst = new Path(path)
+    val old = new Path(path + "__old")
+    def mustRename(from: Path, to: Path): Unit =
+      if (!fs.rename(from, to))
+        throw new java.io.IOException(s"$caller: rename $from -> $to failed")
+    if (rotate) {
       fs.delete(old, true)
       mustRename(dst, old)
     }
-    mustRename(staged, dst)
+    mustRename(new Path(path + "__staged"), dst)
     fs.delete(old, true)
   }
 
@@ -114,23 +122,22 @@ object Sinks {
     * (Delta log, Iceberg metadata pointer) builds on. Returns the new
     * version number. */
   def writeVersioned(spark: SparkSession, df: DataFrame, path: String): Long = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val root = new Path(path)
     fs.mkdirs(root)
     // next = 1 + max over BOTH the pointer and every v= dir on disk
     // (committed or not): a crash can leave a half-written max dir with no
     // pointer, and ErrorIfExists below must never collide with it
     val next = (latestVersion(spark, path).getOrElse(-1L) +:
       versionDirs(fs, root).map(_._1)).max + 1L
-    val vdir = new org.apache.hadoop.fs.Path(root, f"v=$next%06d")
+    val vdir = new Path(root, f"v=$next%06d")
     df.write.mode(SaveMode.ErrorIfExists).parquet(vdir.toString)
     // pointer swap is the commit: write sidecar, then OVERWRITE-rename over
     // _LATEST (FileContext supports atomic overwrite where FileSystem.rename
     // would need a delete first — a delete→rename pair has a crash window
     // with no pointer on disk at all)
-    val tmp = new org.apache.hadoop.fs.Path(root, "_LATEST.tmp")
-    val ptr = new org.apache.hadoop.fs.Path(root, "_LATEST")
+    val tmp = new Path(root, "_LATEST.tmp")
+    val ptr = new Path(root, "_LATEST")
     val out = fs.create(tmp, true)
     out.write(next.toString.getBytes("UTF-8")); out.close()
     org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri,
@@ -140,8 +147,7 @@ object Sinks {
   }
 
   /** All `v=NNNNNN` children of `root` with their version numbers. */
-  private def versionDirs(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[(Long, org.apache.hadoop.fs.Path)] =
+  private def versionDirs(fs: FileSystem, root: Path): Seq[(Long, Path)] =
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq
       .filter(_.isDirectory)
@@ -159,13 +165,11 @@ object Sinks {
     * job finished but whose pointer swap never ran (best effort by design:
     * the data is complete, only the commit record is lost). */
   def latestVersion(spark: SparkSession, path: String): Option[Long] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val ptr = new org.apache.hadoop.fs.Path(path, "_LATEST")
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val ptr = new Path(path, "_LATEST")
     if (!fs.exists(ptr)) {
-      val committed = versionDirs(fs, new org.apache.hadoop.fs.Path(path))
-        .filter { case (_, p) =>
-          fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")) }
+      val committed = versionDirs(fs, new Path(path))
+        .filter { case (_, p) => fs.exists(new Path(p, "_SUCCESS")) }
       if (committed.isEmpty) None else Some(committed.map(_._1).max)
     } else {
       val in = fs.open(ptr)
@@ -200,25 +204,14 @@ object Sinks {
   def compact(spark: SparkSession, path: String,
       targetRecordsPerFile: Long): Int = {
     require(targetRecordsPerFile > 0, "targetRecordsPerFile must be > 0")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
-    val staged = new org.apache.hadoop.fs.Path(path + "__staged")
     val df = graft.Tables.parquet(spark, path)
     val n = df.count()
     val files = math.max(1L,
       (n + targetRecordsPerFile - 1) / targetRecordsPerFile).toInt
     df.repartition(files).write
-      .mode(SaveMode.Overwrite).parquet(staged.toString)
-    def mustRename(from: org.apache.hadoop.fs.Path,
-        to: org.apache.hadoop.fs.Path): Unit =
-      if (!fs.rename(from, to))
-        throw new java.io.IOException(s"compact: rename $from -> $to failed")
-    fs.delete(old, true)
-    mustRename(dst, old)
-    mustRename(staged, dst)
-    fs.delete(old, true)
+      .mode(SaveMode.Overwrite).parquet(path + "__staged")
+    promote(FileSystem.get(spark.sparkContext.hadoopConfiguration), path,
+      rotate = true, "compact")
     files
   }
 }

@@ -30,8 +30,7 @@ object BinaryIntake {
 
   /** Stage one `.bin` file per document; returns the directory. */
   def stage(spark: SparkSession, sfDir: String): String = {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_binary_stage").toString
+    val dir = graft.util.TempDirs.staging("graft_binary_stage").toString
     import spark.implicits._
     graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("content"))

@@ -42,7 +42,7 @@ object CsvIntake {
   /** Stage the documents table as a CSV delivery (quoted, explicit null
     * sentinel, header) plus one corrupt file; returns the drop directory. */
   def stage(spark: SparkSession, sfDir: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv_drop")
+    val dir = graft.util.TempDirs.staging("graft_csv_drop")
     graft.Tables.documents(spark, sfDir)
       .write.mode("overwrite")
       .option("header", "true")

@@ -27,7 +27,7 @@ object OrcFormat {
   /** Stage the canonical events frame as ORC, partitioned by event type.
     * Returns the staging directory. */
   def stage(spark: SparkSession, sfDir: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc_stage")
+    val dir = graft.util.TempDirs.staging("graft_orc_stage")
     graft.Tables.events(spark, sfDir)
       .select("event_id", "ts", "user_id", "event_type", "value")
       .write.mode("overwrite")

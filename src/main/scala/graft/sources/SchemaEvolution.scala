@@ -33,7 +33,7 @@ object SchemaEvolution {
     * even doc_ids as v1 `(doc_id, text, lang)`, odd doc_ids as v2 with the
     * later `(source, n_chars)` columns. Returns the root directory. */
   def stage(spark: SparkSession, sfDir: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_schema_evo")
+    val dir = graft.util.TempDirs.staging("graft_schema_evo")
     val docs = graft.Tables.documents(spark, sfDir)
     docs.filter(col("doc_id") % 2 === 0)
       .select("doc_id", "text", "lang")

@@ -54,7 +54,7 @@ object TextIntake {
   /** Render documents as framed lines and write them as text shards;
     * returns the shard directory. */
   def stage(spark: SparkSession, sfDir: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_text_shards")
+    val dir = graft.util.TempDirs.staging("graft_text_shards")
     graft.Tables.documents(spark, sfDir)
       .select(concat_ws("\t",
         col("doc_id").cast("string"), esc(col("lang")), esc(col("source")),

@@ -1,28 +1,26 @@
 package graft.tools
 
 /** Per-query EXPECTED-MIN floor table for [[graft.Bench]]'s
-  * elevated-minimum detector (round-11 verdict directive #1).
+  * elevated-minimum detector.
   *
-  * Round 10 proved a diagnostic hole: `warm_anomalies` only fires when a
-  * NON-FIRST pass exceeds 2× the query's own session min, so a query whose
-  * every pass is slow — an ELEVATED MINIMUM, the exact shape of the
-  * driver-session five (q_join_cardinality 7.85 s vs 1.70 s controlled,
-  * same code, faster calib probe) — sails through unattributed. The fix
-  * needs an expectation EXTERNAL to the session: this table, the per-query
-  * steady-state mins of a controlled builder session (Bench alone on an
-  * otherwise idle box), checked into the repo. When a session min exceeds
-  * [[graft.Bench.ElevatedMinRatio]]× its floor, Bench captures the same
-  * evidence bundle warm anomalies get (at-the-moment calib probe, GC
-  * fraction) PLUS the [[StageAudit]] stage/task breakdown of the best
-  * pass, emitted under `elevated_minima` in BENCH_DETAIL.
+  * `warm_anomalies` only fires when a NON-FIRST pass exceeds 2× the
+  * query's own session min, so a query whose every pass is slow — an
+  * ELEVATED MINIMUM (round 10: q_join_cardinality 7.85 s in the driver
+  * session vs 1.70 s controlled, same code) — sails through. Catching it
+  * needs an expectation EXTERNAL to the session: this table, the
+  * per-query steady-state mins of controlled builder sessions (Bench
+  * alone on an otherwise idle box), checked into the repo. When a session
+  * min exceeds [[graft.Bench.ElevatedMinRatio]]× its floor, Bench records
+  * the best pass's GC fraction and [[StageAudit]] stage/task breakdown
+  * under `elevated_minima` in BENCH_DETAIL.
   *
   * Format (`bench_floors.tsv` resource): `#`-comment provenance header,
-  * then `name<TAB>floor_seconds` lines. The pseudo-entry `_calib` records
-  * the controlled session's [[CalibProbe]] mean so elevation records can
-  * show BOTH yardsticks. Regenerate with `scripts/make_floors.py` from a
-  * controlled BENCH_DETAIL.json whenever query code or the catalog
-  * changes — a stale floor fires a false elevation (annoying but loud)
-  * rather than masking a real one, the right failure direction. */
+  * then `name<TAB>floor_seconds` lines. Pseudo-entries: `_sf`, the scale
+  * the floors were measured at, and `_warmup:<part>`, the floors of the
+  * one-time shared builds. Regenerate with `scripts/make_floors.py` from
+  * controlled BENCH_DETAIL.json artifacts whenever query code or the
+  * catalog changes — a stale floor fires a false elevation (annoying but
+  * loud) rather than masking a real one, the right failure direction. */
 object BenchFloors {
   val Resource = "/bench_floors.tsv"
 
@@ -40,8 +38,8 @@ object BenchFloors {
     SfPattern.findAllMatchIn(dir).toSeq.lastOption
       .flatMap(m => scala.util.Try(m.group(1).toDouble).toOption)
 
-  /** name → controlled floor seconds (incl. the `_calib` pseudo-entry);
-    * empty when the resource is absent (elevation checks then no-op). */
+  /** name → controlled floor seconds (incl. the pseudo-entries); empty
+    * when the resource is absent (elevation checks then no-op). */
   def load(): Map[String, Double] = {
     val in = getClass.getResourceAsStream(Resource)
     if (in == null) return Map.empty

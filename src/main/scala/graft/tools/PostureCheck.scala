@@ -1,12 +1,10 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-
 /** 100×-posture evidence for the dedup spine: run the candidate-bounded
   * dedup queries against an sfDir (normally a ScaleGen-built documents-only
   * corpus at 100× sf0.1) and print, per query, wall time, output rows, and
-  * the TOTAL SHUFFLE BYTES the job moved (stage-listener sums of shuffle
-  * read/write + input/output).
+  * the TOTAL SHUFFLE BYTES the job moved ([[StageAudit]] sums of shuffle
+  * read/write and input, plus the largest stage's peak task memory).
   *
   * The point: the "bucketed, not all-pairs" claim predicts shuffle volume
   * ~linear in corpus size — candidate pairs are generated by equi-joins on
@@ -25,63 +23,35 @@ object PostureCheck {
     "q_dedup_exact", "q_minhash_sigs", "q_minhash_pairs",
     "q_dedup_clusters_star", "q_simhash_pairs", "q_setsim_join")
 
-  final class ShuffleTally extends SparkListener {
-    @volatile var shuffleRead = 0L
-    @volatile var shuffleWrite = 0L
-    @volatile var input = 0L
-    @volatile var peakTaskMem = 0L
-    def reset(): Unit = { shuffleRead = 0; shuffleWrite = 0; input = 0
-      peakTaskMem = 0 }
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      if (m != null) {
-        shuffleRead += m.shuffleReadMetrics.totalBytesRead
-        shuffleWrite += m.shuffleWriteMetrics.bytesWritten
-        input += m.inputMetrics.bytesRead
-        peakTaskMem = math.max(peakTaskMem, m.peakExecutionMemory)
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val queries =
       if (args.length > 1) args(1).split(",").toSeq else DefaultQueries
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
     val spark = graft.Session.local(cpus)
-    val tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
-
+    val audit = new StageAudit(spark)
     val fns = graft.SparkEntry.queries
-    // the bench's fixed constant-work ambient probe ([[CalibProbe]] — ONE
-    // shared definition; a forked copy would silently invalidate the
-    // cross-session yardstick): posture rows are compared CROSS-SESSION
-    // (sf0.1 today vs scale100 tomorrow), so each report carries the same
-    // yardstick BENCH_DETAIL's calib_sec uses — first run discarded (JIT)
-    val calib = CalibProbe.warmed(spark, cpus)
 
     val out = queries.map { name =>
       graft.ops.Shared.clear(spark)
       graft.ops.QueryLocal.release(spark)
       spark.sharedState.cacheManager.clearCache()
       graft.streaming.StreamState.unloadQuietly()
-      tally.reset()
+      audit.setLabel(name)
       val t0 = System.nanoTime()
       val n = try fns(name)(spark, sfDir).count()
         catch { case e: Throwable =>
           System.err.println(s"[posture] $name failed: ${e.getMessage}"); -1L }
       val sec = (System.nanoTime() - t0) / 1e9
-      // listener events post asynchronously (the bus drain API is
-      // private[spark]); a short settle is enough between sequential jobs
-      Thread.sleep(1000)
+      val rows = audit.drainRowsSettled().filter(_.label == name)
+      def mb(bytes: Long) = bytes / 1048576
       f""""$name":{"sec":$sec%.2f,"rows":$n,""" +
-        s""""shuffle_read_mb":${tally.shuffleRead / 1048576},""" +
-        s""""shuffle_write_mb":${tally.shuffleWrite / 1048576},""" +
-        s""""input_mb":${tally.input / 1048576},""" +
-        s""""peak_task_mem_mb":${tally.peakTaskMem / 1048576}}"""
+        s""""shuffle_read_mb":${mb(rows.map(_.sReadB).sum)},""" +
+        s""""shuffle_write_mb":${mb(rows.map(_.sWriteB).sum)},""" +
+        s""""input_mb":${mb(rows.map(_.inputB).sum)},""" +
+        s""""peak_task_mem_mb":${mb(rows.map(_.peakMemB).maxOption.getOrElse(0L))}}"""
     }
-    println(out.mkString(
-      f"""{"dir":"$sfDir","calib_sec":$calib%.2f,"queries":{""", ",", "}}"))
+    println(out.mkString(s"""{"dir":"$sfDir","queries":{""", ",", "}}"))
     spark.stop()
   }
 }

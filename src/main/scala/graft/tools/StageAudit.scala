@@ -3,8 +3,7 @@ package graft.tools
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
-/** Stage-level profiler shared by the dev tools ([[CatalogProfile]],
-  * [[QueryStages]]) and, since round 11, by
+/** Stage-level profiler shared by [[Probe]], [[PostureCheck]] and
   * [[graft.Bench]]'s elevated-minimum attribution: registers a listener
   * once, stamps every completed stage with the CALLER-SET label of the
   * work running at the time, and returns per labeled block the stage
@@ -20,8 +19,8 @@ import org.apache.spark.sql.SparkSession
   * labeling by the value read at delivery time mislabels exactly the
   * laggy-bus sessions the elevated-minimum feature diagnoses (a best
   * pass's final stages delivered after the next setLabel would carry the
-  * next pass's — or the calib probe's — label, and Bench's best-pass
-  * filter would come up empty). Rows are therefore bucketed by the
+  * next pass's label, and Bench's best-pass filter would come up empty).
+  * Rows are therefore bucketed by the
   * stage's own SUBMISSION wall-clock against the recorded (time, label)
   * transition history: a stage is always submitted while its block is
   * running, so the mapping is delivery-lag-immune. The transition list
@@ -48,8 +47,7 @@ final class StageAudit(spark: SparkSession) {
     * label — that is what was actually active; falling back to the
     * current label would re-introduce delivery-time mislabeling for
     * stages submitted before the caller's first setLabel (e.g. another
-    * suite's job on a shared test SparkContext, or Bench's discarded
-    * JIT-warmup probe). */
+    * suite's job on a shared test SparkContext). */
   private def labelAt(t: Long): String = {
     var res = ""
     val it = transitions.iterator()
@@ -61,7 +59,7 @@ final class StageAudit(spark: SparkSession) {
     res
   }
 
-  spark.sparkContext.addSparkListener(new SparkListener {
+  private val listener = new SparkListener {
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
       val i = sc.stageInfo
       val ms = (for {s <- i.submissionTime; c <- i.completionTime}
@@ -71,9 +69,14 @@ final class StageAudit(spark: SparkSession) {
         i.rddInfos.sortBy(_.id).map(_.name).mkString(">").take(70),
         ms, i.numTasks, m.executorRunTime, m.jvmGCTime,
         m.shuffleReadMetrics.totalBytesRead,
-        m.shuffleWriteMetrics.bytesWritten))
+        m.shuffleWriteMetrics.bytesWritten,
+        m.inputMetrics.bytesRead, m.peakExecutionMemory))
     }
-  })
+  }
+  spark.sparkContext.addSparkListener(listener)
+
+  /** Stop recording (a session that outlives the audit drops its rows). */
+  def close(): Unit = spark.sparkContext.removeSparkListener(listener)
 
   /** Return and clear every accumulated row. */
   def drainRows(): Seq[Row] = {
@@ -84,8 +87,8 @@ final class StageAudit(spark: SparkSession) {
   }
 
   /** [[drainRows]], then keep polling until the async bus delivers no new
-    * row for `settleMs` (bounded by `timeoutMs`). Tool mains that report
-    * a pass's stage TOTALS (CatalogProfile, QueryStages) need the
+    * row for `settleMs` (bounded by `timeoutMs`). Tools that report
+    * a pass's stage TOTALS (Probe, PostureCheck) need the
     * stragglers a plain drain misses on a laggy bus — otherwise the final
     * stages of a pass are silently discarded by the next pass's clearing
     * drain and the recorded profile under-reports. */
@@ -103,10 +106,12 @@ final class StageAudit(spark: SparkSession) {
 }
 
 object StageAudit {
-  /** One completed stage: the caller label active when it finished, its
-    * RDD chain, wall ms, task count, summed task metrics, shuffle bytes. */
+  /** One completed stage: the caller label active when it was submitted,
+    * its RDD chain, wall ms, task count, summed task metrics, shuffle
+    * bytes, input bytes and the stage's summed peak execution memory. */
   final case class Row(label: String, desc: String, ms: Long, tasks: Int,
-      taskMs: Long, gcMs: Long, sReadB: Long, sWriteB: Long) {
+      taskMs: Long, gcMs: Long, sReadB: Long, sWriteB: Long,
+      inputB: Long = 0L, peakMemB: Long = 0L) {
     /** Compact JSON for BENCH_DETAIL's elevated-minimum records. */
     def json: String = {
       val d = desc.replace("\\", "\\\\").replace("\"", "\\\"")

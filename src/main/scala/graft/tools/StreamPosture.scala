@@ -49,8 +49,7 @@ object StreamPosture {
         .withColumn("sh", expr(
           s"CAST((unix_micros(ts_t) - mn) * $shards" +
             " div greatest(mx - mn + 1, 1) AS INT)"))
-      val stage =
-        java.nio.file.Files.createTempDirectory("graft_sposture").toString
+      val stage = graft.util.TempDirs.staging("graft_sposture").toString
       for (k <- 0 until shards) {
         sharded.filter(col("sh") === k).drop("sh", "mn", "mx")
           .coalesce(1).write.mode("append").parquet(stage)
@@ -107,10 +106,8 @@ object StreamPosture {
           .agg(count(lit(1)).as("n"),
             sum(col("value").cast("decimal(25,2)")).as("v"))
     }
-    val sink =
-      java.nio.file.Files.createTempDirectory("graft_sposture_sink").toString
-    val ckpt =
-      java.nio.file.Files.createTempDirectory("graft_sposture_ckpt").toString
+    val sink = graft.util.TempDirs.staging("graft_sposture_sink").toString
+    val ckpt = graft.util.TempDirs.staging("graft_sposture_ckpt").toString
     val t0 = System.nanoTime()
     val q = agg.writeStream
       .outputMode("append")

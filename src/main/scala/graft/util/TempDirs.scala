@@ -1,56 +1,62 @@
 package graft.util
 
-/** Registry of per-invocation SCRATCH directories (bounded-stream sinks
-  * and checkpoints) so the harness can sweep them once the query that
-  * created them has fully materialized.
+import java.nio.file.{Files, Path}
+
+/** Every temp directory a graft JVM creates, and when it goes away.
   *
-  * The catalog's ~25 bounded streaming runners each create a fresh temp
-  * sink + checkpoint per invocation (fresh dirs are what make the runs
-  * deterministic and re-runnable); nothing reads the dirs again after the
-  * run drains and the caller materializes the returned frame. Left alone,
-  * a full bench session (341 queries × 2–3 passes) strews several hundred
-  * dead directories across `/tmp` — harmless to correctness, but exactly
-  * the kind of unaccounted environment drift a cross-session benchmark
-  * comparison cannot afford (and on a shared production cluster, leaked
-  * scratch is an operational bug outright).
+  *  - [[scratch]]: per-invocation SCRATCH (bounded-stream sinks and
+  *    checkpoints). The catalog's ~25 bounded streaming runners each
+  *    create a fresh sink + checkpoint per invocation (fresh dirs are what
+  *    make the runs deterministic and re-runnable); nothing reads them
+  *    again once the caller has materialized the returned frame. The
+  *    harness (Bench/Verify) calls [[sweep]] only AFTER the query's result
+  *    is materialized (counted or written) — the returned DataFrames read
+  *    the sink dir lazily, so sweeping early would yield empty reads.
+  *    Contract mirrors [[graft.ops.QueryLocal]].
+  *  - [[staging]]: source staging dirs, the session checkpoint dir and the
+  *    test warehouse. Their frames may be re-scanned later (a
+  *    [[graft.ops.Shared]] rebuild re-reads its whole lineage), so they
+  *    are never swept mid-run.
   *
-  * Contract mirrors [[graft.ops.QueryLocal]]: runner build sites call
-  * [[scratch]] instead of `Files.createTempDirectory`; the harness
-  * (Bench/Verify) calls [[sweep]] only AFTER the query's result is
-  * materialized (counted or written) — the returned DataFrames read the
-  * sink dir lazily, so sweeping early would yield empty reads. Library
-  * users who never sweep are exactly where they were before: dirs live
-  * until the OS cleans its temp space.
-  *
-  * NOT for the session checkpoint dir or source staging dirs whose frames
-  * may be re-scanned later (a [[graft.ops.Shared]] rebuild re-reads its
-  * whole lineage); only register directories that are garbage the moment
-  * the creating query finishes. */
+  * Both kinds are deleted at JVM exit if still present, by ONE shutdown
+  * hook registered on first use — a full bench session or test run
+  * otherwise strews hundreds of dead directories across `java.io.tmpdir`.
+  * The hook runs below Spark's own hook (Hadoop FileSystem priority + 30,
+  * which stops the context), so the delete runs after the context has
+  * stopped writing. */
 object TempDirs {
 
-  private val dirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+  private val dirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]
+  private val atExit = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
+
+  private lazy val hook: Unit =
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => atExit.forEach(p => delete(p)),
+      org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 20)
+
+  /** Create a temp directory deleted at JVM exit (never swept). */
+  def staging(prefix: String): Path = {
+    hook
+    val dir = Files.createTempDirectory(prefix)
+    atExit.add(dir)
+    dir
+  }
 
   /** Create and register a scratch directory; returns its path string. */
   def scratch(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
+    val p = staging(prefix)
     dirs.add(p)
     p.toString
   }
 
-  /** Delete (recursively, best-effort) every directory registered since
-    * the last sweep; returns how many were removed. Failures are ignored
-    * — a dir that cannot be deleted is no worse than the pre-sweep
-    * behavior (it waits for OS temp cleanup). */
+  /** Delete (recursively, best-effort) every scratch directory registered
+    * since the last sweep; returns how many were removed. A dir that
+    * cannot be deleted stays registered for the exit hook. */
   def sweep(): Int = {
     var n = 0
     var p = dirs.poll()
     while (p != null) {
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-          .foreach(f => java.nio.file.Files.deleteIfExists(f))
-        n += 1
-      } catch { case scala.util.control.NonFatal(_) => () }
+      if (delete(p)) { atExit.remove(p); n += 1 }
       p = dirs.poll()
     }
     n
@@ -58,4 +64,13 @@ object TempDirs {
 
   /** Number of registered, not-yet-swept directories (test/report hook). */
   def pending(): Int = dirs.size()
+
+  private def delete(dir: Path): Boolean =
+    try {
+      import scala.jdk.CollectionConverters._
+      val walk = Files.walk(dir)
+      try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
+      finally walk.close()
+      true
+    } catch { case scala.util.control.NonFatal(_) => false }
 }

@@ -3,19 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the [[tools.BenchFloors]] contract the elevated-minimum detector
-  * rides on: the checked-in resource parses, covers the catalog, carries
-  * the `_calib` yardstick, and a missing resource degrades to an empty
-  * map (detector no-ops) rather than throwing. */
+  * rides on: the checked-in resource parses, covers the catalog at
+  * steady-state scale, carries the `_sf` scale tag, and sf dirs parse. */
 class BenchFloorsSpec extends AnyFunSuite {
 
   test("checked-in floor table parses and covers the whole catalog") {
     val floors = tools.BenchFloors.load()
     assert(floors.nonEmpty, "bench_floors.tsv resource must be present")
-    // the controlled session's calib mean rides along for two-yardstick
-    // elevation records
-    assert(floors.contains("_calib"))
-    assert(floors("_calib") > 0.1 && floors("_calib") < 5.0,
-      s"calib ${floors("_calib")} outside any plausible probe range")
     // every catalog query has a floor (regenerate after catalog changes),
     // and every floor is a positive steady-state seconds value
     val missing = SparkEntry.queries.keySet -- floors.keySet
@@ -28,7 +22,7 @@ class BenchFloorsSpec extends AnyFunSuite {
     // a sub-10ms floor would make the 2x elevation gate fire on pure
     // scheduling noise; ElevatedMinSec guards the detector, but the
     // table itself should never carry such a value for a Spark query
-    val floors = tools.BenchFloors.load() - "_calib" - "_sf"
+    val floors = tools.BenchFloors.load() - "_sf"
     assert(floors.values.forall(_ >= 0.01))
   }
 

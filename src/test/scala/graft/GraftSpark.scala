@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
 object GraftSpark {
   lazy val spark: SparkSession = Session.local(4, Map(
     "spark.sql.warehouse.dir" ->
-      java.nio.file.Files.createTempDirectory("graft_wh").toString))
+      util.TempDirs.staging("graft_wh").toString))
 
   val Sf = "/root/testdata/sf0.001"
 

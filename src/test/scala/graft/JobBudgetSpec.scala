@@ -36,6 +36,26 @@ class JobBudgetSpec extends AnyFunSuite {
     assertWarmJobs(27)(Wallet.transferCoreness(spark, GraftSpark.Sf).collect())
   }
 
+  // the four upsert ops of token_etl, each into its own table of one sink
+  // dir; a warm call merges into the table its first call wrote
+  private lazy val sinkDir = util.TempDirs.staging("graft_jobs_sink").toString
+
+  test("a warm Pipelines.rawLoad launches at most 2 jobs") {
+    assertWarmJobs(2)(Pipelines.rawLoad(spark, GraftSpark.Sf, sinkDir))
+  }
+
+  test("a warm Pipelines.enrichWallets launches at most 3 jobs") {
+    assertWarmJobs(3)(Pipelines.enrichWallets(spark, GraftSpark.Sf, sinkDir))
+  }
+
+  test("a warm Pipelines.enrichDapps launches at most 3 jobs") {
+    assertWarmJobs(3)(Pipelines.enrichDapps(spark, GraftSpark.Sf, sinkDir))
+  }
+
+  test("a warm Pipelines.enrichTokens launches at most 6 jobs") {
+    assertWarmJobs(6)(Pipelines.enrichTokens(spark, GraftSpark.Sf, sinkDir))
+  }
+
   test("a warm Pipelines.tokenDocumentsJson launches at most 5 jobs") {
     assertWarmJobs(5)(Pipelines.tokenDocumentsJson(spark, GraftSpark.Sf).collect())
   }
