@@ -3,7 +3,10 @@
 BENCH_DETAIL.json artifacts (controlled sessions — Bench alone, or a
 full-pipeline session on an otherwise idle box).
 
-Usage: python3 scripts/make_floors.py <detail.json> [<detail.json> ...]
+Usage: python3 scripts/make_floors.py [--cpus N] <detail.json> [...]
+
+`--cpus N` names the core count of artifacts that predate Bench's
+`parallelism` key; an artifact that carries the key must agree with it.
 
 With several artifacts the floor is the PER-QUERY MIN across them — a
 single session's min still carries that session's ambient, and the
@@ -28,9 +31,11 @@ query-code or catalog change must not be passed at all (their floors
 describe retired plans); the drift guard below catches catalog-era
 mixing but cannot see plan changes.
 
-Writes name<TAB>floor_seconds per catalog query, an `_sf` scale tag and
-`_warmup:<part>` floors for the one-time shared builds. `_shared_warmup`
-is excluded: it is a one-time build total, not a steady-state floor.
+Writes name<TAB>floor_seconds per catalog query, `_sf` and `_cpus` tags
+(the scale and core count; graft.Bench checks both against its session)
+and `_warmup:<part>` floors for the one-time shared builds.
+`_shared_warmup` is excluded: it is a one-time build total, not a
+steady-state floor.
 Only queries present in EVERY artifact get a floor (a query added after
 an old artifact must wait for a fresh controlled run).
 """
@@ -53,7 +58,23 @@ def credible_floor(readings):
     return next(s for s in srt if s >= 0.6 * med)
 
 
-def main(paths):
+def session_cpus(arts, given):
+    """The one core count of every artifact: each artifact's `parallelism`
+    (local[N] gives N), else `given`. Floors from mixed core counts would
+    describe no session, so a disagreement refuses."""
+    seen = {a.get("parallelism", given) for a in arts}
+    assert None not in seen, (
+        "an artifact has no `parallelism` key — name its core count "
+        "with --cpus N")
+    assert len(seen) == 1, f"artifacts span different core counts: {seen}"
+    return int(seen.pop())
+
+
+def main(argv):
+    cpus = None
+    if argv[:1] == ["--cpus"]:
+        cpus, argv = int(argv[1]), argv[2:]
+    paths = argv
     # retention: bound the provenance list to the newest artifacts so the
     # table stays regenerable and old burst-struck sessions age out
     if len(paths) > MAX_ARTIFACTS:
@@ -74,6 +95,7 @@ def main(paths):
     sf_m = re.findall(r"sf([0-9]+(?:\.[0-9]+)?)", arts[0]["sf"])
     assert sf_m, f"cannot parse a numeric sf from {arts[0]['sf']!r}"
     sf_num = sf_m[-1]
+    cpus = session_cpus(arts, cpus)
     common = set(arts[0]["queries_min"])
     for a in arts[1:]:
         common &= set(a["queries_min"])
@@ -92,7 +114,7 @@ def main(paths):
         "# detector: per-query smallest CREDIBLE reading (>= 0.6 x median)",
         "# over the controlled artifacts",
         f"# {', '.join(os.path.basename(p) for p in paths)}",
-        f"# (sf={sf_num}).",
+        f"# (sf={sf_num}, cpus={cpus}).",
         f"# Generated {datetime.date.today().isoformat()} by"
         " scripts/make_floors.py — regenerate after query-code or catalog"
         " changes.",
@@ -101,6 +123,7 @@ def main(paths):
         " the count; the caller must not pass artifacts predating a plan"
         " change).",
         f"_sf\t{sf_num}",
+        f"_cpus\t{cpus}",
     ]
     # warmup-part floors (round-14, closing the r13 evidence blind spot):
     # `_warmup:<part>` entries give the one-time shared builds the same

@@ -57,10 +57,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - `storage_peak_over_ceiling`: cached storage beyond
   *    [[StoragePeakCeilingMb]] is unexplained growth, named by its frames.
   *
-  * The floor table carries an `_sf` tag; at another scale the floor
-  * checks are off. `SPARK_GRAFT_BENCH_ONLY` (a name regex) and the
-  * `SPARK_GRAFT_BENCH_FORCE_ELEVATE[_WARMUP]` self-test regexes are for
-  * development; the driver sets none of them.
+  * The floor table carries `_sf` and `_cpus` tags; at another scale or
+  * core count the floor checks are off. `SPARK_GRAFT_BENCH_ONLY` (a name
+  * regex) and the `SPARK_GRAFT_BENCH_FORCE_ELEVATE[_WARMUP]` self-test
+  * regexes are development aids; benchmark sessions set none of them.
   */
 object Bench {
   /** The session-shared frames built before the catalog, in build order:
@@ -169,21 +169,16 @@ object Bench {
     // Controlled-session floors (tools.BenchFloors): external expectation
     // for the elevated-minimum check. Missing resource → empty map → the
     // check no-ops (new queries without floors are likewise skipped).
-    // SCALE GUARD: the table's `_sf` pseudo-entry must match the numeric
-    // sf of this session's dir — floors measured at sf0.1 fired against
-    // an sf0.01 (or ScaleGen) session would mass-misfire, each elevation
-    // paying the straggler poll and bloating BENCH_DETAIL. Mismatch or
-    // an sf-less dir disables the check loudly. A legacy table without
-    // `_sf` keeps the old always-on behavior.
-    val floorsRaw = tools.BenchFloors.load()
-    val floors = (floorsRaw.get("_sf"), tools.BenchFloors.sfOf(sfDir)) match {
-      case (Some(fs), Some(ds)) if math.abs(fs - ds) < 1e-9 => floorsRaw
-      case (Some(fs), ds) =>
-        System.err.println(s"[bench] floor table sf=$fs does not match " +
-          s"session dir $sfDir (${ds.fold("no sf segment")(_.toString)}) — " +
-          "elevated-minimum check disabled")
+    // SESSION GUARD: floors measured at another scale or core count would
+    // mass-misfire, each elevation paying the straggler poll and bloating
+    // BENCH_DETAIL, so a table whose `_sf`/`_cpus` tags do not match this
+    // session disables the check loudly.
+    val floors = tools.BenchFloors.forSession(tools.BenchFloors.load(),
+        sfDir, cpus.toInt) match {
+      case Right(f) => f
+      case Left(why) =>
+        System.err.println(s"[bench] $why — elevated-minimum check disabled")
         Map.empty[String, Double]
-      case (None, _) => floorsRaw
     }
 
     // ── shared warmup, with every new RDD labeled by its creating part ──

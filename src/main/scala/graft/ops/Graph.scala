@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** How iterative algorithms cut lineage between rounds (a persist alone
@@ -364,14 +365,30 @@ object Graph {
     * contract: its DuckDB mirror unrolls the peel of tiers 2..4), 1 for
     * any vertex with a non-loop edge. The capped h-index iteration
     * (Montresor et al., IEEE TPDS 2013; Lü et al., Nature Comms 2016):
-    * est starts at min(degree, [[CorenessMax]]); each round sets est(v) =
+    * est starts at min(degree, [[CorenessMax]]); an update sets est(v) =
     * min(est(v), h), h = the largest j such that ≥ j neighbours have
     * est ≥ j. Capping commutes with the h-operator (h_K(min(x, K)) =
-    * min(K, h(x))), so the loop settles at exactly min(coreness,
-    * [[CorenessMax]]). A round is one union-aggregate (the
-    * [[connectedComponents]] shape): est to every neighbour plus a self
-    * row with the neighbour list and old est, grouped by vertex, with the
-    * change count observed on the round's one cut. */
+    * min(K, h(x))), and the operator reaches the same fixpoint under any
+    * asynchronous update order, so the loop settles at exactly
+    * min(coreness, [[CorenessMax]]) at any partitioning.
+    *
+    * A round is a block Gauss-Seidel step: one hash exchange on v builds
+    * every vertex's inbox (each neighbour's est, plus its own under
+    * u = v; no aggregate, so nothing sorts: an object hash aggregate
+    * falls back to sorting past 128 keys per task), then each partition
+    * applies the update to its own vertices until none drops
+    * ([[settleCoreness]]) — a neighbour in the partition is read from the
+    * sweep's current values, any other from the inbox. Estimates only
+    * fall, so an inbox value is an upper bound and every estimate is at
+    * or below its Jacobi value at the same round: the loop never runs
+    * more rounds than one update per vertex per round would, and a round
+    * in which nothing drops is the global fixpoint. Rounds fall only as
+    * far as partitions are local: a graph that fits one partition settles
+    * in the first round (the second confirms it), while hash-scattered
+    * vertices read mostly stale inbox values and take nearly the Jacobi
+    * count. The change count is observed on the round's one cut. Memory:
+    * a task holds its partition's vertex rows with their inboxes, O(the
+    * partition's edges). */
   def coreness(edges: DataFrame,
       cutMode: LineageCut = LineageCut.Auto,
       symmetricInput: Boolean = false): DataFrame = {
@@ -382,20 +399,18 @@ object Graph {
     var state = LineageCut.cut(sym.groupBy(col("src").as("v"))
       .agg(collect_list(col("dst")).as("nbrs"))
       .withColumn("est", least(size(col("nbrs")), lit(CorenessMax))), cutMode)
-    val noNbrs = lit(null).cast(state.schema("nbrs").dataType)
-    val h = (2 to CorenessMax).foldLeft(lit(1)) { (acc, j) =>
-      acc + when(count(when(col("ne") >= j, 1)) >= j, 1).otherwise(0) }
+    val out = StructType(state.schema.fields :+
+      StructField("old", IntegerType, false))
     var converged = false
     var i = 0
     while (!converged && i < CorenessPeelRounds) {
-      val sent = state.select(explode(col("nbrs")).as("v"), noNbrs.as("nbrs"),
-        col("est").as("ne"), lit(null).cast("int").as("old"))
-      val self = state.select(col("v"), col("nbrs"),
-        lit(null).cast("int").as("ne"), col("est").as("old"))
+      // every neighbour's est to v, and v's own under u = v
+      val inbox = state
+        .select(explode(col("nbrs")).as("v"), col("v").as("u"), col("est"))
+        .unionByName(state.select(col("v"), col("v").as("u"), col("est")))
+        .repartition(col("v"))
       val (next, m) = LineageCut.cutObserved(
-        sent.unionByName(self).groupBy("v")
-          .agg(max("nbrs").as("nbrs"), max("old").as("old"), h.as("h"))
-          .withColumn("est", least(col("h"), col("old"))),
+        inbox.mapPartitions(settleCoreness _)(Encoders.row(out)),
         cutMode,
         Seq(sum(when(col("est") < col("old"), 1).otherwise(0)).as("chg")))
       LineageCut.release(state) // superseded round (the cut above consumed it)
@@ -409,6 +424,54 @@ object Graph {
         "CorenessPeelRounds AND the oracle's unroll count together")
     state.select(col("v"), col("est").cast("bigint").as("coreness"))
       .orderBy("v")
+  }
+
+  /** One [[coreness]] round over a partition of inbox rows (v, u, est)
+    * to its local fixpoint: a worklist applies est(v) = min(est(v), h)
+    * and re-queues a dropped vertex's neighbours in the partition. Emits
+    * (v, nbrs, est, old), old = the vertex's own (u = v) entry. */
+  private def settleCoreness(rows: Iterator[Row]): Iterator[Row] = {
+    import scala.collection.mutable.ArrayBuffer
+    val at = new java.util.HashMap[Any, Int]
+    val ids = ArrayBuffer.empty[Any]
+    val old = ArrayBuffer.empty[Int]
+    val inbox = ArrayBuffer.empty[ArrayBuffer[(Any, Int)]]
+    rows.foreach { r =>
+      val v = r.get(0)
+      var i = at.getOrDefault(v, -1)
+      if (i < 0) {
+        i = ids.size; at.put(v, i)
+        ids += v; old += -1; inbox += ArrayBuffer.empty
+      }
+      if (r.get(1) == v) old(i) = r.getInt(2)
+      else inbox(i) += r.get(1) -> r.getInt(2)
+    }
+    val n = ids.size
+    // neighbour k of vertex i: its index in this partition, or -1 (remote)
+    val local = Array.tabulate(n)(i =>
+      inbox(i).map(e => at.getOrDefault(e._1, -1)).toArray)
+    val est = old.toArray
+    val queued = Array.fill(n)(true)
+    val work = new java.util.ArrayDeque[Int](n)
+    (0 until n).foreach(i => work.add(i))
+    val atLeast = new Array[Int](CorenessMax + 1)
+    while (!work.isEmpty) {
+      val i = work.poll()
+      queued(i) = false
+      java.util.Arrays.fill(atLeast, 0)
+      for (k <- local(i).indices) {
+        val x = if (local(i)(k) >= 0) est(local(i)(k)) else inbox(i)(k)._2
+        for (j <- 2 to math.min(x, CorenessMax)) atLeast(j) += 1
+      }
+      val h = 1 + (2 to CorenessMax).count(j => atLeast(j) >= j)
+      if (h < est(i)) {
+        est(i) = h
+        local(i).foreach(k => if (k >= 0 && !queued(k)) {
+          queued(k) = true; work.add(k) })
+      }
+    }
+    Iterator.tabulate(n)(i =>
+      Row(ids(i), inbox(i).map(_._1).toSeq, est(i), old(i)))
   }
 
   /** Per-vertex triangle counts by the ordered-join formulation: orient

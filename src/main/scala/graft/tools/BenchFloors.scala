@@ -15,10 +15,11 @@ package graft.tools
   * under `elevated_minima` in BENCH_DETAIL.
   *
   * Format (`bench_floors.tsv` resource): `#`-comment provenance header,
-  * then `name<TAB>floor_seconds` lines. Pseudo-entries: `_sf`, the scale
-  * the floors were measured at, and `_warmup:<part>`, the floors of the
-  * one-time shared builds. Regenerate with `scripts/make_floors.py` from
-  * controlled BENCH_DETAIL.json artifacts whenever query code or the
+  * then `name<TAB>floor_seconds` lines. Pseudo-entries: `_sf` and
+  * `_cpus`, the scale and core count the floors were measured at, and
+  * `_warmup:<part>`, the floors of the one-time shared builds.
+  * Regenerate with `scripts/make_floors.py` from controlled
+  * BENCH_DETAIL.json artifacts whenever query code or the
   * catalog changes — a stale floor fires a false elevation (annoying but
   * loud) rather than masking a real one, the right failure direction. */
 object BenchFloors {
@@ -37,6 +38,23 @@ object BenchFloors {
   def sfOf(dir: String): Option[Double] =
     SfPattern.findAllMatchIn(dir).toSeq.lastOption
       .flatMap(m => scala.util.Try(m.group(1).toDouble).toOption)
+
+  /** The table `floors` as it applies to a session over `sfDir` with
+    * `cpus` cores, or why it does not: floors from another scale or core
+    * count are meaningless expectations (a local[4] session against
+    * local[32] floors flags dozens of queries on core count alone). A
+    * table without a tag (legacy) matches any session on that axis; a
+    * tagged `_sf` against an sf-less dir does not match. */
+  def forSession(floors: Map[String, Double], sfDir: String,
+      cpus: Int): Either[String, Map[String, Double]] =
+    (floors.get("_sf"), sfOf(sfDir), floors.get("_cpus")) match {
+      case (Some(fs), ds, _) if !ds.exists(d => math.abs(fs - d) < 1e-9) =>
+        Left(s"floor table sf=$fs does not match session dir $sfDir " +
+          s"(${ds.fold("no sf segment")(_.toString)})")
+      case (_, _, Some(fc)) if fc != cpus =>
+        Left(s"floor table cpus=${fc.toInt} does not match the session's $cpus")
+      case _ => Right(floors)
+    }
 
   /** name → controlled floor seconds (incl. the pseudo-entries); empty
     * when the resource is absent (elevation checks then no-op). */

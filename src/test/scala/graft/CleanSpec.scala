@@ -13,7 +13,7 @@ class CleanSpec extends AnyFunSuite {
     // sequence(0, size(toks)-1, stride) throws on a zero-size array; the
     // guards must instead emit no chunks/spans for such docs (the oracle's
     // empty range() behavior) while keeping them in left-join outputs
-    val dir = java.nio.file.Files.createTempDirectory("graft_emptydoc").toString
+    val dir = util.TempDirs.staging("graft_emptydoc").toString
     Seq((1L, "alpha beta gamma", "en", "web", 16L),
         (2L, "", "en", "web", 0L),
         (3L, "   ", "en", "web", 3L),
@@ -340,7 +340,7 @@ class CleanSpec extends AnyFunSuite {
       assert(pml == hits * 1000 / n)
     }
     // a document made ENTIRELY of the corpus's top bigram scores 1000
-    val dir = java.nio.file.Files.createTempDirectory("graft_bgcov").toString
+    val dir = util.TempDirs.staging("graft_bgcov").toString
     Seq((1L, "a b a b a b", "en", "w", 11L), (2L, "a b c d", "en", "w", 7L),
         (3L, "x y", "en", "w", 3L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -77,7 +77,7 @@ class CurationSpec extends AnyFunSuite {
     // "aaab"×3: round 1 merges 'a a' (n=6); round 2 tie between
     // 'aa a' (3) and 'a b' (3) breaks lexicographically to 'a b';
     // round 3 merges the remaining 'aa ab'
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe").toString
+    val dir = util.TempDirs.staging("graft_bpe").toString
     Seq((1L, "aaab aaab aaab", "en", "src0"))
       .toDF("doc_id", "text", "lang", "source").selectExpr("doc_id", "text", "lang", "source", "CAST(length(text) AS BIGINT) AS n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -86,7 +86,7 @@ class CurationSpec extends AnyFunSuite {
     assert(got == Seq((1L, "a a", 6L), (2L, "a b", 3L), (3L, "aa ab", 3L)))
     // "aaaa": greedy left-to-right gives 'aa aa' (textbook), then the
     // word fully merges and the pair stream runs DRY without throwing
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_bpe2").toString
+    val dir2 = util.TempDirs.staging("graft_bpe2").toString
     Seq((1L, "aaaa", "en", "src0"))
       .toDF("doc_id", "text", "lang", "source").selectExpr("doc_id", "text", "lang", "source", "CAST(length(text) AS BIGINT) AS n_chars")
       .write.mode("overwrite").parquet(s"$dir2/documents.parquet")

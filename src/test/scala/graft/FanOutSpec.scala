@@ -36,7 +36,7 @@ class FanOutSpec extends AnyFunSuite {
     // trusted for a scan-rooted plan (the 100x signature build ran 209 s
     // in a single task behind exactly this shape)
     val cores = spark.sparkContext.defaultParallelism
-    val dir = java.nio.file.Files.createTempDirectory("fanout_rg").toString
+    val dir = util.TempDirs.staging("fanout_rg").toString
     (1 to 10000).toDF("x").coalesce(1).write.mode("overwrite").parquet(dir)
     val key = "spark.sql.files.maxPartitionBytes"
     val prev = spark.conf.get(key)

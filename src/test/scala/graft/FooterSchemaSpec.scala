@@ -16,7 +16,7 @@ class FooterSchemaSpec extends AnyFunSuite {
   import GraftSpark.jobsDuring
 
   private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    util.TempDirs.staging(prefix).toString
 
   private def assertSameAsInference(path: String): Unit = {
     val inferred = spark.read.parquet(path).schema

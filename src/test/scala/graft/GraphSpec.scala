@@ -594,6 +594,42 @@ class GraphSpec extends AnyFunSuite {
       json(true, "string"))
   }
 
+  test("coreness: uncoalesced 1, 8 and 32 partitions give the reference " +
+    "peel and the parent schema, and one partition settles in fewer jobs") {
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    // cycle 0..5 with an 18-vertex path off vertex 5 (Jacobi rounds: one
+    // hop per round), plus a seeded random graph with string ids
+    val cycle = (0L to 5L).map(v => (v, (v + 1) % 6))
+    val path = (5L +: (100L to 117L)).sliding(2).map(p => (p(0), p(1))).toSeq
+    val strings = randomEdges(3)
+    def schema(v: DataType, nullableV: Boolean) = StructType(Seq(
+      StructField("v", v, nullableV), StructField("coreness", LongType, false)))
+    val keys = Seq("spark.sql.adaptive.coalescePartitions.enabled",
+      "spark.sql.shuffle.partitions")
+    val saved = keys.map(k => k -> spark.conf.get(k))
+    val runs = try Seq("1", "8", "32").map { p =>
+      spark.conf.set(keys(0), "false")
+      spark.conf.set(keys(1), p)
+      var longs: org.apache.spark.sql.DataFrame = null
+      val jobs = GraftSpark.jobsDuring {
+        longs = Graph.coreness((cycle ++ path).toDF("src", "dst"))
+        longs.collect()
+      }.size
+      val strs = Graph.coreness(strings.toDF("src", "dst"))
+      assert(longs.schema == schema(LongType, false), p)
+      assert(strs.schema == schema(StringType, true), p)
+      (longs.as[(Long, Long)].collect().toSeq,
+        strs.as[(String, Long)].collect().toSeq, jobs)
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    runs.foreach { case (l, s, _) =>
+      assert(l == runs.head._1 && s == runs.head._2)
+      assert(l.toMap == corenessRef(cycle ++ path))
+      assert(s.toMap == corenessRef(strings))
+    }
+    assert(runs.head._3 < runs.last._3, runs.map(_._3))
+  }
+
   test("scc: DAG chain is all singletons (trim alone resolves it)") {
     val got = sccOf(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)))
     assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L, 5L -> 5L))

@@ -32,9 +32,16 @@ class JobBudgetSpec extends AnyFunSuite {
     } finally LineageCut.observeCooldownNanos = saved
   }
 
-  test("q_coreness: a warm Wallet.transferCoreness launches at most 27 jobs") {
-    assertWarmJobs(27)(Wallet.transferCoreness(spark, GraftSpark.Sf).collect())
+  test("q_coreness: a warm Wallet.transferCoreness launches at most 9 jobs") {
+    assertWarmJobs(9)(Wallet.transferCoreness(spark, GraftSpark.Sf).collect())
   }
+
+  // the other graph_stream ops, each called as the benchmark calls it
+  for ((q, ceiling) <- Seq("q_dedup_clusters" -> 3, "q_communities" -> 3,
+      "q_stream_dedup" -> 4, "q_stream_bounded_hourly" -> 5))
+    test(s"a warm $q launches at most $ceiling jobs") {
+      assertWarmJobs(ceiling)(SparkEntry.queries(q)(spark, GraftSpark.Sf).collect())
+    }
 
   // the four upsert ops of token_etl, each into its own table of one sink
   // dir; a warm call merges into the table its first call wrote

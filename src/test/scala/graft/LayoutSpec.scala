@@ -28,7 +28,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("z-clustered files tighten the non-leading dimension's extents") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zorder")
+    val tmp = util.TempDirs.staging("graft_zorder")
     val zPath = s"$tmp/z"
     val linPath = s"$tmp/lin"
     val files = 8
@@ -60,7 +60,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("hilbert-clustered files tighten extents like the z layout") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_hilbert")
+    val tmp = util.TempDirs.staging("graft_hilbert")
     val hPath = s"$tmp/h"
     val linPath = s"$tmp/lin"
     val files = 8
@@ -227,7 +227,7 @@ class LayoutSpec extends AnyFunSuite {
     // doc per batch of shorts costs arrival dearly, sorting isolates it
     locally {
       import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft_pad").toString
+      val dir = util.TempDirs.staging("graft_pad").toString
       val docs = (0L until 64L).map { i =>
         val len = if (i % 2 == 0) 1 else 100
         (i, Seq.fill(len.toInt)("w").mkString(" "), "en", "s0")

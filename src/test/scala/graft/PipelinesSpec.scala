@@ -11,7 +11,7 @@ class PipelinesSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
 
   private lazy val out =
-    java.nio.file.Files.createTempDirectory("graft_pipe").toString
+    util.TempDirs.staging("graft_pipe").toString
 
   test("raw load is idempotent under re-run") {
     Pipelines.rawLoad(spark, GraftSpark.Sf, out)
@@ -89,7 +89,7 @@ class PipelinesSpec extends AnyFunSuite {
     * `noDapp` event whose transfer touches a registry wallet removed: in
     * this dir `dropped` has no transfers and `noDapp` has no dapp hour. */
   private def sfWithout(dropped: String, noDapp: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sf").toString
+    val dir = util.TempDirs.staging("graft_sf").toString
     val reg = Tables.DappRegistry.flatMap(_._3)
     val touching = Tables.transfers(spark, GraftSpark.Sf)
       .filter(col("contract_address") === noDapp &&

@@ -11,9 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class ProbeSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
 
-  /** Actions of one q_coreness pass on the fixture: the initial cut, 11
-    * h-index rounds and the final count. */
-  private val CorenessActions = 13
+  /** Actions of one q_coreness pass on the fixture: the initial cut, 2
+    * h-index rounds (the state fits one partition, so the first settles
+    * it and the second confirms) and the final count. */
+  private val CorenessActions = 4
 
   private def probed(q: String, opts: tools.Probe.Opts = tools.Probe.Opts())(
       check: (tools.Probe, Seq[tools.Probe.Record]) => Unit): Unit = {
@@ -47,6 +48,8 @@ class ProbeSpec extends AnyFunSuite {
         assert(r.shapes.map(_._2).sum == CorenessActions, r.label)
         assert(r.json.contains(
           s""""rounds":{"actions":$CorenessActions,"shapes":${r.shapes.size},"""))
+        // a round is a hash exchange and a partition sweep: nothing sorts
+        assert(r.actionPlans.forall(!_.contains("SortAggregate")), r.label)
       }
       // no row under a pass's label arrived after its record was built,
       // and the records account for every stage the query ran

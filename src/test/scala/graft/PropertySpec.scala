@@ -122,7 +122,7 @@ class PropertySpec extends AnyFunSuite {
       n <- nameGen; nat <- Gen.choose(0, 1)
     } yield (n, nat))
     samples(tableGen, 4).foreach { rows =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_linkprop").toString
+      val dir = util.TempDirs.staging("graft_linkprop").toString
       rows.zipWithIndex.map { case ((n, nat), k) =>
         (k.toLong, n, nat, 0.0, "SEG") }
         .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
@@ -149,7 +149,7 @@ class PropertySpec extends AnyFunSuite {
     } yield ws.mkString(" ")
     val corpusGen = Gen.listOfN(25, docGen)
     samples(corpusGen, 4).foreach { texts =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_ssjprop").toString
+      val dir = util.TempDirs.staging("graft_ssjprop").toString
       texts.zipWithIndex.map { case (t, k) => (k.toLong, t, "en", "src0") }
         .toDF("doc_id", "text", "lang", "source").selectExpr("doc_id", "text", "lang", "source", "CAST(length(text) AS BIGINT) AS n_chars")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")

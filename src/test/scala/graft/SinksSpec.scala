@@ -9,7 +9,7 @@ class SinksSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("upsert-by-key: new versions replace, unseen keys append") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString
+    val dir = util.TempDirs.staging("graft_upsert").toString
     val path = s"$dir/t"
     val v1 = Seq(("k1", 1L, "a"), ("k2", 1L, "b")).toDF("key", "ver", "payload")
     Sinks.upsertParquet(spark, v1, "key", "ver", path)
@@ -21,7 +21,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("upsert is idempotent under redelivery (the K1 retry scenario)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert2").toString
+    val dir = util.TempDirs.staging("graft_upsert2").toString
     val path = s"$dir/t"
     val batch = Seq(("k1", 1L, "a"), ("k2", 1L, "b")).toDF("key", "ver", "payload")
     Sinks.upsertParquet(spark, batch, "key", "ver", path)
@@ -30,7 +30,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("upsert recovers from a crash that left the table in __old") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert3").toString
+    val dir = util.TempDirs.staging("graft_upsert3").toString
     val path = s"$dir/t"
     val v1 = Seq(("k1", 1L, "a"), ("k2", 1L, "b")).toDF("key", "ver", "payload")
     Sinks.upsertParquet(spark, v1, "key", "ver", path)
@@ -50,7 +50,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("csv sink round-trips with header") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val dir = util.TempDirs.staging("graft_csv").toString
     val df = Seq((1L, "x"), (2L, "y")).toDF("id", "s")
     Sinks.writeCsv(df, s"$dir/out")
     val back = spark.read.option("header", "true").csv(s"$dir/out")
@@ -59,7 +59,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("json sink round-trips values and schema (K3)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_json").toString
+    val dir = util.TempDirs.staging("graft_json").toString
     val df = Seq((1L, "x", 1.5), (2L, "y", -0.25)).toDF("id", "s", "v")
     Sinks.writeJson(df, s"$dir/out")
     val back = spark.read.json(s"$dir/out")
@@ -70,7 +70,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("partitioned write: lang-partitioned corpus with dynamic overwrite") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = util.TempDirs.staging("graft_part").toString
     val docs = Tables.documents(spark, GraftSpark.Sf)
     Sinks.writePartitioned(docs, s"$dir/corpus", Seq("lang"))
     // rewriting ONE partition must leave the others untouched
@@ -87,7 +87,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("orc sink round-trips with predicate pushdown on read") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val dir = util.TempDirs.staging("graft_orc").toString
     val df = Seq((1L, "x"), (2L, "y"), (3L, "z")).toDF("id", "s")
     Sinks.writeOrc(df, s"$dir/out")
     val back = spark.read.orc(s"$dir/out").filter(col("id") > 1)
@@ -97,7 +97,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("compaction: fragmented table rewritten to sized files, data intact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact")
+    val dir = util.TempDirs.staging("graft_compact")
     val path = s"$dir/t"
     val df = spark.range(1000).toDF("id")
       .withColumn("s", col("id").cast("string"))
@@ -117,7 +117,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("versioned writes: pointer commit, time travel, immutable snapshots") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_versioned")
+    val dir = util.TempDirs.staging("graft_versioned")
     val path = s"$dir/t"
     val v0 = Sinks.writeVersioned(spark, Seq((1L, "a")).toDF("id", "s"), path)
     val v1 = Sinks.writeVersioned(spark,
@@ -136,7 +136,7 @@ class SinksSpec extends AnyFunSuite {
   }
 
   test("versioned writes: a lost _LATEST pointer recovers from v= dirs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vrecover")
+    val dir = util.TempDirs.staging("graft_vrecover")
     val path = s"$dir/t"
     Sinks.writeVersioned(spark, Seq((1L, "a")).toDF("id", "s"), path)
     Sinks.writeVersioned(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "s"), path)

@@ -34,7 +34,7 @@ class SourcesFormatSpec extends AnyFunSuite {
       (6L, "en", "web", "\\n\\t\\r\\\\"),    // lookalikes, all escapes
       (7L, "e\tn", "w\nb", ""),              // metadata fields + empty text
       (8L, "en", "web", "plain"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_text_spec")
+    val dir = util.TempDirs.staging("graft_text_spec")
     val df = nasty.toDF("doc_id", "lang", "source", "text")
       .withColumn("n_chars", length(col("text")).cast("long"))
     // stage() reads Tables.documents; drive the same esc/frame path by

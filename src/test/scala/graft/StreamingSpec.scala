@@ -239,7 +239,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sc = spark.sqlContext
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_corpus").toString
+    val dir = util.TempDirs.staging("graft_stream_corpus").toString
     val input = MemoryStream[(Long, String, String)] // (doc_id, lang, text)
     val q = input.toDS().toDF("doc_id", "lang", "text")
       .writeStream.outputMode(OutputMode.Append)
@@ -262,7 +262,7 @@ class StreamingSpec extends AnyFunSuite {
   test("foreachBatch drives the upsert sink incrementally (K1 streaming form)") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_upsert").toString
+    val dir = util.TempDirs.staging("graft_stream_upsert").toString
     val path = s"$dir/t"
     val input = MemoryStream[(String, Long, String)]
     val q = input.toDS().toDF("key", "ver", "payload")
@@ -346,8 +346,8 @@ class StreamingSpec extends AnyFunSuite {
     val agg = StreamingMetrics.hourlyVolumeBounded(
       input.toDS().toDF("event_type", "sec", "value")
         .withColumn("ts_t", timestamp_seconds(col("sec"))))
-    val out = java.nio.file.Files.createTempDirectory("graft_hvb_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_hvb_ck").toString
+    val out = util.TempDirs.staging("graft_hvb_out").toString
+    val ckpt = util.TempDirs.staging("graft_hvb_ck").toString
     val q = agg.writeStream.outputMode(OutputMode.Append)
       .format("parquet").option("path", out)
       .option("checkpointLocation", ckpt).start()
@@ -381,8 +381,8 @@ class StreamingSpec extends AnyFunSuite {
     val agg = StreamingMetrics.sessionVolumeBounded(
       input.toDS().toDF("event_type", "sec", "value")
         .withColumn("ts_t", timestamp_seconds(col("sec"))))
-    val out = java.nio.file.Files.createTempDirectory("graft_svb_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_svb_ck").toString
+    val out = util.TempDirs.staging("graft_svb_out").toString
+    val ckpt = util.TempDirs.staging("graft_svb_ck").toString
     val q = agg.writeStream.outputMode(OutputMode.Append)
       .format("parquet").option("path", out)
       .option("checkpointLocation", ckpt).start()
@@ -406,8 +406,8 @@ class StreamingSpec extends AnyFunSuite {
   test("bounded hourly volume over testdata: file sink holds exactly the " +
     "watermark-closed prefix of the batch metric") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_hvb2_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_hvb2_ck").toString
+    val out = util.TempDirs.staging("graft_hvb2_out").toString
+    val ckpt = util.TempDirs.staging("graft_hvb2_ck").toString
     val streamed = StreamingMetrics
       .runHourlyVolumeBounded(spark, GraftSpark.Sf, out, ckpt)
       .as[(String, Long, Double)].collect().toSeq
@@ -459,8 +459,8 @@ class StreamingSpec extends AnyFunSuite {
     val agg = StreamingMetrics.slidingVolumeBounded(
       input.toDS().toDF("event_type", "sec", "value")
         .withColumn("ts_t", timestamp_seconds(col("sec"))))
-    val out = java.nio.file.Files.createTempDirectory("graft_slb_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_slb_ck").toString
+    val out = util.TempDirs.staging("graft_slb_out").toString
+    val ckpt = util.TempDirs.staging("graft_slb_ck").toString
     val q = agg.writeStream.outputMode(OutputMode.Append)
       .format("parquet").option("path", out)
       .option("checkpointLocation", ckpt).start()
@@ -515,8 +515,8 @@ class StreamingSpec extends AnyFunSuite {
       pr.toDS().toDF("p_contract", "sec", "price")
         .withColumn("p_ts", timestamp_seconds(col("sec"))).drop("sec"),
       3600L)
-    val out = java.nio.file.Files.createTempDirectory("graft_soj_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_soj_ck").toString
+    val out = util.TempDirs.staging("graft_soj_out").toString
+    val ckpt = util.TempDirs.staging("graft_soj_ck").toString
     val q = joined.writeStream.outputMode(OutputMode.Append)
       .format("parquet").option("path", out)
       .option("checkpointLocation", ckpt).start()
@@ -557,8 +557,8 @@ class StreamingSpec extends AnyFunSuite {
         pr.toDS().toDF("p_contract", "sec", "price", "p_id")
           .withColumn("p_ts", timestamp_seconds(col("sec"))).drop("sec"),
         3600L)
-    val out = java.nio.file.Files.createTempDirectory("graft_sfoj_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sfoj_ck").toString
+    val out = util.TempDirs.staging("graft_sfoj_out").toString
+    val ckpt = util.TempDirs.staging("graft_sfoj_ck").toString
     val q = joined.writeStream.outputMode(OutputMode.Append)
       .format("parquet").option("path", out)
       .option("checkpointLocation", ckpt).start()
