@@ -43,18 +43,16 @@ object Session {
     "spark.sql.codegen.cache.maxEntries" -> "10000",
     "spark.sql.extensions" -> "graft.plans.GraftExtensions")
 
-  /** A `local[cpus]` session with [[conf]] (then `extra` on top), log
-    * level WARN and a fresh temp checkpoint dir (reliable checkpoints for
-    * the iterative graph algorithms, `LineageCut.Auto`), deleted at JVM
-    * exit whichever way the JVM ends. */
+  /** A `local[cpus]` session with [[conf]] (then `extra` on top) and log
+    * level WARN. It sets no checkpoint dir: on a local master
+    * [[ops.LineageCut]] always cuts with `localCheckpoint`, so nothing
+    * would read one. */
   def local(cpus: Int, extra: Map[String, String] = Map.empty): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config(conf(cpus) ++ extra)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(
-      util.TempDirs.staging("graft-ckpt").toString)
     spark
   }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -9,51 +10,29 @@ import org.apache.spark.storage.StorageLevel
   * truncates re-computation but not the logical plan, which otherwise grows
   * exponentially with iterations and OOMs the driver stringifying it).
   *
-  *  - [[LineageCut.Local]]: `localCheckpoint` — blocks live on executor
-  *    storage. Fast (no extra job), but an executor loss destroys blocks
-  *    and fails the computation: single-JVM / dev default.
-  *  - [[LineageCut.Reliable]]: `checkpoint()` to the SparkContext's
-  *    checkpoint directory — survives executor loss; the choice for a real
-  *    cluster. Requires `setCheckpointDir`.
-  *  - [[LineageCut.Auto]]: Reliable when a checkpoint dir is configured
-  *    AND the master is non-local; Local otherwise. On a local master the
-  *    executors ARE the driver JVM — a reliable checkpoint survives
-  *    nothing a local block doesn't (JVM death kills the query either
-  *    way), so the per-round checkpoint write+job would be pure overhead:
-  *    measured at sf0.1, the iterative graph queries (MIS, alt-star CC,
-  *    HITS, PageRank) spend most of their wall time on exactly that. A
-  *    real cluster (the 100 TB target) still gets executor-loss safety
-  *    without touching call sites.
+  * One policy, decided in [[reliable]]: a reliable `checkpoint()` to the
+  * SparkContext's checkpoint directory when one is set AND the master is
+  * not local; `localCheckpoint` otherwise. A reliable cut survives
+  * executor loss, which is what a real cluster (the 100 TB target) needs.
+  * A local cut keeps its blocks in executor storage: no extra write, but
+  * an executor loss fails the computation. On a local master the
+  * executors ARE the driver JVM, so a reliable checkpoint survives nothing
+  * a local block doesn't (JVM death kills the query either way) and its
+  * per-round write would be pure overhead: measured at sf0.1, the
+  * iterative graph queries (MIS, alt-star CC, HITS, PageRank) spent most
+  * of their wall time on exactly that. Every graft session is local and
+  * sets no checkpoint dir, so it always cuts locally.
   */
-sealed trait LineageCut
 object LineageCut {
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-  case object Auto extends LineageCut
-  case object Local extends LineageCut
-  case object Reliable extends LineageCut
 
-  /** Eager lineage cut of `df` under `mode`. The reliable path persists
-    * before checkpointing: `Dataset.checkpoint` materializes with one job
-    * and writes the checkpoint files with a second, so without the cache
-    * the frame's whole subtree would compute twice per round. */
-  def cut(df: DataFrame, mode: LineageCut): DataFrame = {
-    val reliable = mode match {
-      case Reliable => true
-      case Local => false
-      case Auto =>
-        df.sparkSession.sparkContext.getCheckpointDir.isDefined &&
-          !df.sparkSession.sparkContext.isLocal
-    }
-    if (!reliable) df.localCheckpoint(true)
-    else {
-      require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "LineageCut.Reliable needs SparkContext.setCheckpointDir")
-      val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-      val out = cached.checkpoint(true)
-      cached.unpersist(false)
-      out
-    }
+  private def reliable(df: DataFrame): Boolean = {
+    val sc = df.sparkSession.sparkContext
+    sc.getCheckpointDir.isDefined && !sc.isLocal
   }
+
+  /** Eager lineage cut of `df`. */
+  def cut(df: DataFrame): DataFrame = cutAs(df, reliable(df), Nil)._1
 
   /** Deterministically drop the storage of a frame previously returned by
     * [[cut]]/[[cutCounted]] once it has been superseded and every consumer
@@ -76,17 +55,17 @@ object LineageCut {
     try org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd.MapPartitionsRDD",
       org.apache.logging.log4j.Level.ERROR)
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
 
   def release(df: DataFrame): Unit =
     try {
       silenceUnpersistWarn
       df.queryExecution.analyzed.foreach {
         case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          try lr.rdd.unpersist(false) catch { case _: Throwable => () }
+          try lr.rdd.unpersist(false) catch { case NonFatal(_) => () }
         case _ => ()
       }
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
   /** [[cut]] plus the frame's row count, computed from the SAME
     * materialization instead of a separate action afterwards — iterative
@@ -96,9 +75,8 @@ object LineageCut {
     * without this, 2 with). On the reliable path the count job is also the
     * job that fills the cache the checkpoint writer then reads, so nothing
     * is computed twice. */
-  def cutCounted(df: DataFrame, mode: LineageCut): (DataFrame, Long) = {
-    val (out, m) = cutObserved(df, mode,
-      Seq(count(lit(1)).as("n")))
+  def cutCounted(df: DataFrame): (DataFrame, Long) = {
+    val (out, m) = cutObserved(df, Seq(count(lit(1)).as("n")))
     // "_rows": the reliable path's mandatory cache-fill count, threaded
     // through so a metrics timeout there never re-scans the checkpoint
     val n = m.get("n").orElse(m.get("_rows"))
@@ -160,51 +138,54 @@ object LineageCut {
     * than the count job this saves), disables observation for a cooldown
     * window, after which the breaker re-arms itself (see [[observeArmed]]
     * — a transient co-tenant burst must not tax the rest of the session).
-    * Reserved key `_rows`: on the Reliable path the mandatory cache-fill
+    * Reserved key `_rows`: on the reliable path the mandatory cache-fill
     * count is threaded through under it, so [[cutCounted]] never
     * re-scans a checkpoint on fallback. */
-  def cutObserved(df: DataFrame, mode: LineageCut,
+  def cutObserved(df: DataFrame,
+      metrics: Seq[Column]): (DataFrame, Map[String, Any]) =
+    cutAs(df, reliable(df), metrics)
+
+  /** The one materialization behind [[cut]] (no `metrics`) and
+    * [[cutObserved]], on the branch `reliable` names; the public calls
+    * pass the policy's answer, specs pass `true` to drive the reliable
+    * branch on a local master. The reliable branch persists before
+    * checkpointing so the checkpoint writer reads the cache the
+    * cache-fill count filled, never the frame's subtree a second time. */
+  private[graft] def cutAs(df: DataFrame, reliable: Boolean,
       metrics: Seq[Column]): (DataFrame, Map[String, Any]) = {
-    val reliable = mode match {
-      case Reliable => true
-      case Local => false
-      case Auto =>
-        df.sparkSession.sparkContext.getCheckpointDir.isDefined &&
-          !df.sparkSession.sparkContext.isLocal
-    }
-    if (!observeArmed) return (cut(df, mode), Map.empty)
-    val obs = org.apache.spark.sql.Observation()
-    val observed = df.observe(obs, metrics.head, metrics.tail: _*)
-    var reliableCount = -1L
+    val obs =
+      if (metrics.nonEmpty && observeArmed) Some(Observation()) else None
+    val in = obs.fold(df)(df.observe(_, metrics.head, metrics.tail: _*))
+    var rows = -1L
     val out =
-      if (!reliable) observed.localCheckpoint(true)
+      if (!reliable) in.localCheckpoint(true)
       else {
-        require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-          "LineageCut.Reliable needs SparkContext.setCheckpointDir")
-        val cached = observed.persist(StorageLevel.MEMORY_AND_DISK)
-        reliableCount = cached.count()
+        val cached = in.persist(StorageLevel.MEMORY_AND_DISK)
+        if (obs.isDefined) rows = cached.count()
         val o = cached.checkpoint(true)
         cached.unpersist(false)
         o
       }
+    val m = obs.fold(Map.empty[String, Any])(awaitMetrics)
+    (out, if (rows >= 0) m + ("_rows" -> rows) else m)
+  }
+
+  private def awaitMetrics(obs: Observation): Map[String, Any] = {
     val t0 = System.nanoTime()
-    val m =
-      try {
-        val row = scala.concurrent.Await.result(obs.future,
-          scala.concurrent.duration.Duration(2, "s"))
-        val awaitMs = (System.nanoTime() - t0) / 1000000
-        if (awaitMs > 500) { slowAwaits += 1; if (slowAwaits >= 3)
-          disableObservation(s"$slowAwaits consecutive slow metric awaits " +
-            s"(last ${awaitMs}ms) — listener bus lag exceeds the cost of " +
-            "the count job this replaces")
-        } else slowAwaits = 0
-        row.getValuesMap[Any](row.schema.fieldNames.toIndexedSeq)
-      } catch { case _: java.util.concurrent.TimeoutException =>
-        disableObservation("metric await timed out after 2 s")
-        Map.empty[String, Any]
-      }
-    if (reliableCount >= 0) (out, m + ("_rows" -> reliableCount))
-    else (out, m)
+    try {
+      val row = scala.concurrent.Await.result(obs.future,
+        scala.concurrent.duration.Duration(2, "s"))
+      val awaitMs = (System.nanoTime() - t0) / 1000000
+      if (awaitMs > 500) { slowAwaits += 1; if (slowAwaits >= 3)
+        disableObservation(s"$slowAwaits consecutive slow metric awaits " +
+          s"(last ${awaitMs}ms) — listener bus lag exceeds the cost of " +
+          "the count job this replaces")
+      } else slowAwaits = 0
+      row.getValuesMap[Any](row.schema.fieldNames.toIndexedSeq)
+    } catch { case _: java.util.concurrent.TimeoutException =>
+      disableObservation("metric await timed out after 2 s")
+      Map.empty[String, Any]
+    }
   }
 }
 
@@ -234,17 +215,15 @@ object Graph {
     * each round references the previous one several times, so the
     * un-checkpointed plan tree grows exponentially with iterations (the
     * standard failure mode of iterative DataFrame algorithms; driver OOMs
-    * stringifying the plan long before any data moves). With
-    * [[LineageCut.Auto]] (the default), cluster sessions that configured a
-    * checkpoint dir get reliable `checkpoint()` and survive executor loss;
-    * local-master sessions use `localCheckpoint` (identical failure domain,
-    * none of the per-round write cost). */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20,
-      cutMode: LineageCut = LineageCut.Auto): DataFrame = {
+    * stringifying the plan long before any data moves). Cluster sessions
+    * that set a checkpoint dir get reliable `checkpoint()` and survive
+    * executor loss; local-master sessions use `localCheckpoint` (identical
+    * failure domain, none of the per-round write cost). */
+  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
     // checkpoint the edge list before symmetrizing: the union references it
     // twice, and the caller's edge plan (an LSH candidate generation, say)
     // is usually the most expensive subtree in sight
-    val e = LineageCut.cut(edges.select(col("src"), col("dst")), cutMode)
+    val e = LineageCut.cut(edges.select(col("src"), col("dst")))
     val sym = e
       .unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
@@ -252,7 +231,7 @@ object Graph {
     try {
       var labels = LineageCut.cut(
         sym.select(col("src").as("id")).distinct()
-          .withColumn("label", col("id")), cutMode)
+          .withColumn("label", col("id")))
       var converged = false
       var i = 0
       val lType = labels.schema("label").dataType
@@ -274,7 +253,6 @@ object Graph {
         val (updated, m) = LineageCut.cutObserved(
           prop.unionByName(self).groupBy("id")
             .agg(min(col("label")).as("label"), max(col("old")).as("old")),
-          cutMode,
           Seq(max(when(col("label") < col("old"), lit(1)).otherwise(lit(0)))
             .as("chg")))
         LineageCut.release(labels) // superseded round (the cut above consumed it)
@@ -313,18 +291,16 @@ object Graph {
     * and an unconverged one fails loudly. `symmetricInput`: `edges` is
     * already symmetric and distinct (skips a full union-distinct shuffle). */
   def kCore(edges: DataFrame, k: Int = 3, maxIter: Int = 8,
-      cutMode: LineageCut = LineageCut.Auto,
       symmetricInput: Boolean = false): DataFrame = {
     val e = LineageCut.cut(
-      edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst")),
-      cutMode)
+      edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst")))
     val sym =
       (if (symmetricInput) e
        else e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
          .distinct())
         .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      var (live, nLive) = LineageCut.cutCounted(sym, cutMode)
+      var (live, nLive) = LineageCut.cutCounted(sym)
       var converged = false
       var i = 0
       while (!converged && i < maxIter) {
@@ -336,8 +312,7 @@ object Graph {
           live
             .join(keep.select(col("v").as("src")), Seq("src"), "left_semi")
             .join(keep.select(col("v").as("dst")), Seq("dst"), "left_semi")
-            .select("src", "dst"),
-          cutMode)
+            .select("src", "dst"))
         converged = nPruned == nLive
         LineageCut.release(live) // superseded round
         live = pruned
@@ -390,7 +365,6 @@ object Graph {
     * a task holds its partition's vertex rows with their inboxes, O(the
     * partition's edges). */
   def coreness(edges: DataFrame,
-      cutMode: LineageCut = LineageCut.Auto,
       symmetricInput: Boolean = false): DataFrame = {
     val e = edges.select("src", "dst").filter(col("src") =!= col("dst"))
     val sym = if (symmetricInput) e
@@ -398,7 +372,7 @@ object Graph {
         .distinct()
     var state = LineageCut.cut(sym.groupBy(col("src").as("v"))
       .agg(collect_list(col("dst")).as("nbrs"))
-      .withColumn("est", least(size(col("nbrs")), lit(CorenessMax))), cutMode)
+      .withColumn("est", least(size(col("nbrs")), lit(CorenessMax))))
     val out = StructType(state.schema.fields :+
       StructField("old", IntegerType, false))
     var converged = false
@@ -411,7 +385,6 @@ object Graph {
         .repartition(col("v"))
       val (next, m) = LineageCut.cutObserved(
         inbox.mapPartitions(settleCoreness _)(Encoders.row(out)),
-        cutMode,
         Seq(sum(when(col("est") < col("old"), 1).otherwise(0)).as("chg")))
       LineageCut.release(state) // superseded round (the cut above consumed it)
       state = next.select("v", "nbrs", "est")
@@ -519,10 +492,10 @@ object Graph {
     * prefix is exactly reproducible.
     *
     * Returns (v, rank) for every vertex (union of srcs and dsts). */
-  def pageRank(edges: DataFrame, iterations: Int = 3, alpha: Double = 0.85,
-      cutMode: LineageCut = LineageCut.Auto): DataFrame = {
+  def pageRank(edges: DataFrame, iterations: Int = 3,
+      alpha: Double = 0.85): DataFrame = {
     val e = LineageCut.cut(
-      edges.select(col("src"), col("dst")).distinct(), cutMode)
+      edges.select(col("src"), col("dst")).distinct())
     val deg = e.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
     // base carries each vertex's out-degree (null = dangling) so the loop
     // never re-joins the degree table; the vertex count rides base's one
@@ -531,7 +504,7 @@ object Graph {
       e.select(col("src").as("v"))
         .unionByName(e.select(col("dst").as("v")))
         .distinct()
-        .join(deg, Seq("v"), "left"), cutMode)
+        .join(deg, Seq("v"), "left"))
     var ranks = base.withColumn("r", lit(1.0 / n))
     // Dangling mass as a DRIVER SCALAR: round k+1 needs the decimal-exact
     // dangling-rank sum of round k's output, which rides round k's one cut
@@ -569,10 +542,10 @@ object Graph {
       // the FINAL round's dangling mass is never consumed — observe (and
       // its metric await) only on rounds whose output feeds another round
       val (next, m) =
-        if (it < iterations) LineageCut.cutObserved(updated, cutMode,
+        if (it < iterations) LineageCut.cutObserved(updated,
           Seq(expr("CAST(SUM(CASE WHEN deg IS NULL THEN " +
             "CAST(r AS DECIMAL(38,18)) END) AS DOUBLE)").as("dang")))
-        else (LineageCut.cut(updated, cutMode), Map.empty[String, Any])
+        else (LineageCut.cut(updated), Map.empty[String, Any])
       if (ranksOwned) LineageCut.release(ranks)
       ranks = next; ranksOwned = true
       if (it < iterations) dang = dangOf(ranks, m)
@@ -588,16 +561,16 @@ object Graph {
     * map-side combinable, O(|E|)); rounds are lineage-cut. Returns only
     * vertices reached within the bound: (v, hops), hops ∈ [0, maxHops].
     * Pure integer min-plus arithmetic — deterministic everywhere. */
-  def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int = 4,
-      cutMode: LineageCut = LineageCut.Auto): DataFrame = {
+  def bfsHops(edges: DataFrame, seeds: DataFrame,
+      maxHops: Int = 4): DataFrame = {
     val e = LineageCut.cut(
-      edges.select(col("src"), col("dst")).distinct(), cutMode)
+      edges.select(col("src"), col("dst")).distinct())
     val verts = e.select(col("src").as("v"))
       .unionByName(e.select(col("dst").as("v"))).distinct()
     var dist = LineageCut.cut(
       verts.join(broadcast(seeds.select(col("v")).distinct()
           .withColumn("d0", lit(0))), Seq("v"), "left")
-        .select(col("v"), col("d0").as("dist")), cutMode)
+        .select(col("v"), col("d0").as("dist")))
     for (_ <- 1 to maxHops) {
       val nbr = e
         .join(dist.filter(col("dist").isNotNull)
@@ -606,8 +579,7 @@ object Graph {
         .agg((min(col("dist")) + 1).cast("int").as("nd"))
       val next = LineageCut.cut(
         dist.join(nbr, Seq("v"), "left")
-          .select(col("v"), least(col("dist"), col("nd")).as("dist")),
-        cutMode)
+          .select(col("v"), least(col("dist"), col("nd")).as("dist")))
       LineageCut.release(dist) // superseded round (initial dist is its own cut)
       dist = next
     }
@@ -627,15 +599,14 @@ object Graph {
     * map-side-combining mins, rounds lineage-cut like every iterative op
     * in this module. `edges` must carry (src, dst, w≥0). */
   def weightedShortestPaths(edges: DataFrame, seeds: DataFrame,
-      rounds: Int = 4, cutMode: LineageCut = LineageCut.Auto): DataFrame = {
-    val e = LineageCut.cut(edges.select(col("src"), col("dst"), col("w")),
-      cutMode)
+      rounds: Int = 4): DataFrame = {
+    val e = LineageCut.cut(edges.select(col("src"), col("dst"), col("w")))
     val verts = e.select(col("src").as("v"))
       .unionByName(e.select(col("dst").as("v"))).distinct()
     var dist = LineageCut.cut(
       verts.join(broadcast(seeds.select(col("v")).distinct()
           .withColumn("d0", lit(0L))), Seq("v"), "left")
-        .select(col("v"), col("d0").as("dist")), cutMode)
+        .select(col("v"), col("d0").as("dist")))
     for (_ <- 1 to rounds) {
       val nbr = e
         .join(dist.filter(col("dist").isNotNull)
@@ -644,8 +615,7 @@ object Graph {
         .agg(min(col("dist") + col("w")).as("nd"))
       val next = LineageCut.cut(
         dist.join(nbr, Seq("v"), "left")
-          .select(col("v"), least(col("dist"), col("nd")).as("dist")),
-        cutMode)
+          .select(col("v"), least(col("dist"), col("nd")).as("dist")))
       LineageCut.release(dist) // superseded round
       dist = next
     }
@@ -666,13 +636,12 @@ object Graph {
     * [[bfsHops]] state, each round one equi-join + grouped min, rounds
     * lineage-cut. Seed count is the precision/cost knob. */
   def harmonicCentrality(edges: DataFrame, seeds: DataFrame,
-      rounds: Int = 4, cutMode: LineageCut = LineageCut.Auto): DataFrame = {
+      rounds: Int = 4): DataFrame = {
     val e = LineageCut.cut(
       edges.filter(col("src") =!= col("dst"))
-        .select(col("src"), col("dst")).distinct(), cutMode)
+        .select(col("src"), col("dst")).distinct())
     var dist = LineageCut.cut(
-      seeds.select(col("v"), col("v").as("seed"), lit(0).cast("int").as("d")),
-      cutMode)
+      seeds.select(col("v"), col("v").as("seed"), lit(0).cast("int").as("d")))
     for (_ <- 1 to rounds) {
       val nbr = e
         .join(dist.select(col("v").as("src"), col("seed"), col("d")),
@@ -682,8 +651,7 @@ object Graph {
       val next = LineageCut.cut(
         dist.unionByName(nbr)
           .groupBy("v", "seed").agg(min(col("d")).cast("int").as("d"))
-          .select("v", "seed", "d"),
-        cutMode)
+          .select("v", "seed", "d"))
       LineageCut.release(dist) // superseded round
       dist = next
     }
@@ -711,15 +679,15 @@ object Graph {
     * (first-reached level wins, σ sums over all shortest parents).
     * Backward pass: per level, one DAG-edge join + grouped credit sum.
     * All joins keyed on (vertex, seed); rounds lineage-cut. */
-  def betweenness(edges: DataFrame, seeds: DataFrame, rounds: Int = 4,
-      cutMode: LineageCut = LineageCut.Auto): DataFrame = {
+  def betweenness(edges: DataFrame, seeds: DataFrame,
+      rounds: Int = 4): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val e = LineageCut.cut(
       edges.filter(col("src") =!= col("dst"))
-        .select(col("src"), col("dst")).distinct(), cutMode)
+        .select(col("src"), col("dst")).distinct())
     var dist = LineageCut.cut(
       seeds.select(col("v"), col("v").as("seed"), lit(0).cast("int").as("d"),
-        lit(1L).cast(dec).as("sigma")), cutMode)
+        lit(1L).cast(dec).as("sigma")))
     for (i <- 1 to rounds) {
       val cand = e
         .join(dist.filter(col("d") === i - 1)
@@ -730,7 +698,7 @@ object Graph {
         .join(dist.select("v", "seed"), Seq("v", "seed"), "left_anti")
         .select(col("v"), col("seed"), lit(i).cast("int").as("d"),
           col("sig").as("sigma"))
-      val next = LineageCut.cut(dist.unionByName(fresh), cutMode)
+      val next = LineageCut.cut(dist.unionByName(fresh))
       LineageCut.release(dist) // superseded forward round
       dist = next
     }
@@ -756,7 +724,7 @@ object Graph {
           Seq("v", "seed"), "left")
         .select(col("v"), col("seed"),
           coalesce(col("s"), lit(0L)).cast(dec).as("qd"))
-      prevQd = LineageCut.cut(lvl, cutMode)
+      prevQd = LineageCut.cut(lvl)
       acc = acc.unionByName(prevQd)
     }
     dist.filter(col("d") >= 1).select("v", "seed")
@@ -948,7 +916,6 @@ object Graph {
     * state ∈ mis|excluded|undecided, round = when decided (0 for
     * undecided). */
   def maximalIndependentSet(edges: DataFrame, rounds: Int = MisRounds,
-      cutMode: LineageCut = LineageCut.Auto,
       symmetricInput: Boolean = false): DataFrame = {
     // symmetricInput = the caller guarantees a DISTINCT symmetric edge set
     // without self-loops (both directions present — [[Wallet]]'s shared
@@ -964,7 +931,7 @@ object Graph {
       edges.filter(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
-        .distinct(), cutMode)
+        .distinct())
     // symmetric input lists every vertex as a src — one distinct over one
     // cached scan instead of a union of two
     val verts = if (symmetricInput)
@@ -972,7 +939,7 @@ object Graph {
     else und.select(col("a").as("v"))
       .unionByName(und.select(col("b").as("v"))).distinct()
     var live = LineageCut.cut(
-      verts.withColumn("p", md5(col("v").cast("string"))), cutMode)
+      verts.withColumn("p", md5(col("v").cast("string"))))
     var decided: DataFrame = null
     for (k <- 1 to rounds) {
       // Live edges with BOTH endpoint priorities riding along (plain inner
@@ -1015,7 +982,7 @@ object Graph {
       // union whose lineage depth is the (small, fixed) round count, so
       // checkpointing it every round would just add a write per round
       live = LineageCut.cut(
-        live.join(roundDecided.select("v"), Seq("v"), "left_anti"), cutMode)
+        live.join(roundDecided.select("v"), Seq("v"), "left_anti"))
     }
     decided.unionByName(live.select(col("v"),
       lit("undecided").as("state"), lit(0).as("round")))
@@ -1036,10 +1003,9 @@ object Graph {
     * without any sqrt). Fixed [[HitsRounds]] iterations; 9-digit render
     * absorbs the double→decimal cast ulp (the [[graft.ops.Quantize]]
     * mitigation). Returns (v, hub, authority) for every vertex. */
-  def hits(edges: DataFrame, rounds: Int = HitsRounds,
-      cutMode: LineageCut = LineageCut.Auto): DataFrame = {
+  def hits(edges: DataFrame, rounds: Int = HitsRounds): DataFrame = {
     val e = LineageCut.cut(
-      edges.select(col("src"), col("dst")).distinct(), cutMode)
+      edges.select(col("src"), col("dst")).distinct())
     // cut ONCE: the vertex universe is loop-invariant, but as a lazy plan
     // it was re-executed (union + two-level distinct + exchange) inside
     // EVERY half-round's normalization — r14 RoundPlans measured 7
@@ -1047,7 +1013,7 @@ object Graph {
     // compute loop invariants once, iterate over the cut)
     val verts = LineageCut.cut(
       e.select(col("src").as("v"))
-        .unionByName(e.select(col("dst").as("v"))).distinct(), cutMode)
+        .unionByName(e.select(col("dst").as("v"))).distinct())
     // L∞ normalization with the max riding the half-round's one
     // materialization as an OBSERVED metric (the cutObserved pattern the
     // CC loop uses for its convergence flag): the old spelling computed
@@ -1060,7 +1026,7 @@ object Graph {
     def normalizedCut(raw: DataFrame, c: String): DataFrame = {
       val full = verts.join(raw, Seq("v"), "left")
         .select(col("v"), coalesce(col(c), lit(0.0)).as("raw"))
-      val (cutFull, metrics) = LineageCut.cutObserved(full, cutMode,
+      val (cutFull, metrics) = LineageCut.cutObserved(full,
         Seq(max(col("raw")).as("m")))
       val m = metrics.get("m") match {
         case Some(d: java.lang.Double) => d.doubleValue()
@@ -1116,15 +1082,15 @@ object Graph {
     * keyed by src + a time filter + a map-side-combinable min, O(|E|)
     * shuffled bytes; rounds lineage-cut. */
   def temporalReachability(edges: DataFrame, seeds: DataFrame,
-      rounds: Int = 4, cutMode: LineageCut = LineageCut.Auto): DataFrame = {
+      rounds: Int = 4): DataFrame = {
     val e = LineageCut.cut(
-      edges.select(col("src"), col("dst"), col("t")).distinct(), cutMode)
+      edges.select(col("src"), col("dst"), col("t")).distinct())
     val verts = e.select(col("src").as("v"))
       .unionByName(e.select(col("dst").as("v"))).distinct()
     var arr = LineageCut.cut(
       verts.join(broadcast(seeds.select(col("v")).distinct()
           .withColumn("a0", lit(-1L))), Seq("v"), "left")
-        .select(col("v"), col("a0").as("arrived")), cutMode)
+        .select(col("v"), col("a0").as("arrived")))
     for (_ <- 1 to rounds) {
       val nbr = e
         .join(arr.filter(col("arrived").isNotNull)
@@ -1134,8 +1100,7 @@ object Graph {
         .agg(min(col("t")).as("na"))
       val next = LineageCut.cut(
         arr.join(nbr, Seq("v"), "left")
-          .select(col("v"), least(col("arrived"), col("na")).as("arrived")),
-        cutMode)
+          .select(col("v"), least(col("arrived"), col("na")).as("arrived")))
       LineageCut.release(arr) // superseded round
       arr = next
     }
@@ -1157,16 +1122,15 @@ object Graph {
     * + two grouped aggregations, all keyed by vertex — O(|E|) shuffled
     * bytes, same envelope as the other iterative algorithms; rounds are
     * lineage-cut. */
-  def labelPropagation(edges: DataFrame, rounds: Int = 3,
-      cutMode: LineageCut = LineageCut.Auto): DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int = 3): DataFrame = {
     val e = edges.filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst")).distinct()
     val sym = LineageCut.cut(
       e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct(), cutMode)
+        .distinct())
     var labels = LineageCut.cut(
       sym.select(col("src").as("id")).distinct()
-        .withColumn("label", col("id")), cutMode)
+        .withColumn("label", col("id")))
     for (_ <- 1 to rounds) {
       val counts = sym
         .join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
@@ -1185,7 +1149,7 @@ object Graph {
       val next = LineageCut.cut(
         counts.groupBy("id")
           .agg(min(struct((-col("c")).as("nc"), col("label"))).as("m"))
-          .select(col("id"), col("m.label").as("label")), cutMode)
+          .select(col("id"), col("m.label").as("label")))
       LineageCut.release(labels) // superseded round
       labels = next
     }
@@ -1204,16 +1168,16 @@ object Graph {
     * `edges` must be pre-aggregated per (src, dst) — parallel edges
     * summed upstream, where the combiner runs map-side. */
   def pageRankWeighted(edges: DataFrame, iterations: Int = 3,
-      alpha: Double = 0.85, cutMode: LineageCut = LineageCut.Auto): DataFrame = {
+      alpha: Double = 0.85): DataFrame = {
     val e = LineageCut.cut(
-      edges.select(col("src"), col("dst"), col("w")), cutMode)
+      edges.select(col("src"), col("dst"), col("w")))
     val deg = e.groupBy(col("src").as("v"))
       .agg(expr("CAST(SUM(CAST(w AS DECIMAL(38,18))) AS DOUBLE)").as("ws"))
     val (base, n) = LineageCut.cutCounted(
       e.select(col("src").as("v"))
         .unionByName(e.select(col("dst").as("v")))
         .distinct()
-        .join(deg, Seq("v"), "left"), cutMode)
+        .join(deg, Seq("v"), "left"))
     var ranks = base.withColumn("r", lit(1.0 / n))
     // dangling mass as an observed driver scalar — see [[pageRank]]'s
     // loop for the full rationale (identical change: the per-round
@@ -1243,10 +1207,10 @@ object Graph {
               lit(dang / n))).as("r"))
       // final round's dangling mass is never consumed — see [[pageRank]]
       val (next, m) =
-        if (it < iterations) LineageCut.cutObserved(updated, cutMode,
+        if (it < iterations) LineageCut.cutObserved(updated,
           Seq(expr("CAST(SUM(CASE WHEN ws IS NULL THEN " +
             "CAST(r AS DECIMAL(38,18)) END) AS DOUBLE)").as("dang")))
-        else (LineageCut.cut(updated, cutMode), Map.empty[String, Any])
+        else (LineageCut.cut(updated), Map.empty[String, Any])
       if (ranksOwned) LineageCut.release(ranks)
       ranks = next; ranksOwned = true
       if (it < iterations) dang = dangOf(ranks, m)
@@ -1266,10 +1230,9 @@ object Graph {
     * ignored. Throws if no seed is a vertex (the teleport distribution
     * would be undefined). */
   def pageRankPersonalized(edges: DataFrame, seeds: DataFrame,
-      iterations: Int = 3, alpha: Double = 0.85,
-      cutMode: LineageCut = LineageCut.Auto): DataFrame = {
+      iterations: Int = 3, alpha: Double = 0.85): DataFrame = {
     val e = LineageCut.cut(
-      edges.select(col("src"), col("dst")).distinct(), cutMode)
+      edges.select(col("src"), col("dst")).distinct())
     val deg = e.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
     // the seed count rides base's one materialization as an observed
     // metric (fallback: the filter-count job the r13 spelling always ran)
@@ -1281,7 +1244,6 @@ object Graph {
         .join(broadcast(seeds.select(col("v")).distinct()
           .withColumn("is_seed", lit(true))), Seq("v"), "left")
         .withColumn("is_seed", coalesce(col("is_seed"), lit(false))),
-      cutMode,
       Seq(count(when(col("is_seed"), lit(1))).as("s")))
     val s = sm.get("s") match {
       case Some(c: java.lang.Long) => c.longValue()
@@ -1319,10 +1281,10 @@ object Graph {
             lit(alpha) * coalesce(col("contrib"), lit(0.0))).as("r"))
       // final round's dangling mass is never consumed — see [[pageRank]]
       val (next, m) =
-        if (it < iterations) LineageCut.cutObserved(updated, cutMode,
+        if (it < iterations) LineageCut.cutObserved(updated,
           Seq(expr("CAST(SUM(CASE WHEN deg IS NULL THEN " +
             "CAST(r AS DECIMAL(38,18)) END) AS DOUBLE)").as("dang")))
-        else (LineageCut.cut(updated, cutMode), Map.empty[String, Any])
+        else (LineageCut.cut(updated), Map.empty[String, Any])
       if (ranksOwned) LineageCut.release(ranks)
       ranks = next; ranksOwned = true
       if (it < iterations) dang = dangOf(ranks, m)
@@ -1347,8 +1309,8 @@ object Graph {
     * fixed point is exactly the star graph {(x, componentMin) : x ≠ min}.
     * Deterministic (pure min arithmetic), so it is oracle-checkable by the
     * same recursive CTE as the propagation variant. */
-  def connectedComponentsAltStar(edges: DataFrame, maxIter: Int = 25,
-      cutMode: LineageCut = LineageCut.Auto): DataFrame = {
+  def connectedComponentsAltStar(edges: DataFrame,
+      maxIter: Int = 25): DataFrame = {
     // the star contraction drops self-loops up front; vertices whose ONLY
     // edges are self-loops must still come back as singleton components
     // (label = themselves) to honor the connectedComponents contract
@@ -1358,7 +1320,7 @@ object Graph {
       edges.filter(col("src") =!= col("dst"))
         .select(greatest(col("src"), col("dst")).as("src"),
           least(col("src"), col("dst")).as("dst"))
-        .distinct(), cutMode)
+        .distinct())
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -1386,7 +1348,7 @@ object Graph {
           .filter(col("v") =!= col("m"))
           .select(col("v").as("src"), col("m").as("dst"))
           .unionByName(smallMins.select(col("u").as("src"), col("m").as("dst")))
-          .distinct(), cutMode)
+          .distinct())
       converged = nextCount == eCount && next.except(e).isEmpty
       LineageCut.release(e) // superseded round (the except probe above was its last read)
       e = next
@@ -1441,21 +1403,21 @@ object Graph {
     * the live set only shrinks. Unconverged results throw loudly (a
     * silent partial SCC labeling would mislabel merged components). */
   def stronglyConnectedComponents(edges: DataFrame, maxOuter: Int = 12,
-      maxProp: Int = 40, cutMode: LineageCut = LineageCut.Auto): DataFrame = {
+      maxProp: Int = 40): DataFrame = {
     val raw = edges.select(col("src"), col("dst"))
     var (live, nLive) = LineageCut.cutCounted(
-      raw.filter(col("src") =!= col("dst")).distinct(), cutMode)
+      raw.filter(col("src") =!= col("dst")).distinct())
     // vertex universe keeps self-loop-only vertices: their SCC is themselves
     var (verts, nVerts) = LineageCut.cutCounted(
       raw.select(col("src").as("v"))
-        .unionByName(raw.select(col("dst").as("v"))).distinct(), cutMode)
+        .unionByName(raw.select(col("dst").as("v"))).distinct())
     val done = scala.collection.mutable.ListBuffer.empty[DataFrame]
     var outer = 0
     def restrictLive(): Unit = {
       val (l, n) = LineageCut.cutCounted(
         live.join(verts.withColumnRenamed("v", "src"), Seq("src"), "left_semi")
           .join(verts.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi")
-          .select("src", "dst"), cutMode)
+          .select("src", "dst"))
       LineageCut.release(live) // superseded (consumed by the cut above)
       live = l; nLive = n
     }
@@ -1475,11 +1437,11 @@ object Graph {
             .select(col("dst").as("v"), lit(0).as("o"), lit(1).as("i")))
         val (keep, nKeep) = LineageCut.cutCounted(
           ends.groupBy("v").agg(max(col("o")).as("o"), max(col("i")).as("i"))
-            .filter(col("o") === 1 && col("i") === 1).select("v"), cutMode)
+            .filter(col("o") === 1 && col("i") === 1).select("v"))
         if (nKeep == nVerts) trimming = false
         else {
           done += LineageCut.cut(verts.join(keep, Seq("v"), "left_anti")
-            .select(col("v"), col("v").as("scc_id")), cutMode)
+            .select(col("v"), col("v").as("scc_id")))
           LineageCut.release(verts) // superseded (consumed by the done cut)
           verts = keep; nVerts = nKeep
           restrictLive()
@@ -1487,7 +1449,7 @@ object Graph {
       }
       if (nVerts > 0) {
         // ---- 2. forward min-label colors to fixpoint
-        var colors = LineageCut.cut(verts.withColumn("c", col("v")), cutMode)
+        var colors = LineageCut.cut(verts.withColumn("c", col("v")))
         var converged = false
         var i = 0
         val cType = colors.schema("c").dataType
@@ -1510,7 +1472,7 @@ object Graph {
           // cut frame if observation metrics don't arrive
           val (upd, m) = LineageCut.cutObserved(
             prop.unionByName(self).groupBy("v")
-              .agg(min(col("c")).as("c"), max(col("old")).as("old")), cutMode,
+              .agg(min(col("c")).as("c"), max(col("old")).as("old")),
             Seq(max(when(col("c") < col("old"), lit(1)).otherwise(lit(0)))
               .as("chg")))
           LineageCut.release(colors) // superseded coloring round
@@ -1529,9 +1491,9 @@ object Graph {
           .join(colors.select(col("v").as("src"), col("c").as("cs")), Seq("src"))
           .join(colors.select(col("v").as("dst"), col("c").as("cd")), Seq("dst"))
           .filter(col("cs") === col("cd"))
-          .select(col("src"), col("dst")), cutMode)
+          .select(col("src"), col("dst")))
         var (reached, nReached) = LineageCut.cutCounted(
-          colors.filter(col("c") === col("v")).select(col("v")), cutMode)
+          colors.filter(col("c") === col("v")).select(col("v")))
         var growing = true
         var j = 0
         while (growing && j < maxProp) {
@@ -1542,7 +1504,7 @@ object Graph {
             .join(reached.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi")
             .select(col("src").as("v"))
           val (r2, n2) = LineageCut.cutCounted(
-            reached.unionByName(preds).distinct(), cutMode)
+            reached.unionByName(preds).distinct())
           growing = n2 > nReached
           LineageCut.release(reached) // superseded sweep round
           reached = r2; nReached = n2
@@ -1552,9 +1514,9 @@ object Graph {
           s"scc: backward sweep not converged after $maxProp rounds — " +
             "an SCC's internal diameter exceeds maxProp; raise it")
         done += LineageCut.cut(colors.join(reached, Seq("v"), "left_semi")
-          .select(col("v"), col("c").as("scc_id")), cutMode)
+          .select(col("v"), col("c").as("scc_id")))
         val (v2, n2) = LineageCut.cutCounted(
-          verts.join(reached, Seq("v"), "left_anti"), cutMode)
+          verts.join(reached, Seq("v"), "left_anti"))
         // the done cut and the verts cut above were the last consumers of
         // this outer round's coloring state — drop all of it
         LineageCut.release(colors); LineageCut.release(intra)
@@ -1664,16 +1626,15 @@ object Graph {
     * round is superseded and none is released (unlike the [[bfsHops]]
     * release pattern). */
   private[graft] def anfSketches(edges: DataFrame, rounds: Int = AnfRounds,
-      k: Int = AnfK, cutMode: LineageCut = LineageCut.Auto)
-      : Seq[(Int, DataFrame)] = {
+      k: Int = AnfK): Seq[(Int, DataFrame)] = {
     val e = LineageCut.cut(
       edges.filter(col("src") =!= col("dst"))
-        .select(col("src"), col("dst")).distinct(), cutMode)
+        .select(col("src"), col("dst")).distinct())
     val verts = e.select(col("src").as("v"))
       .unionByName(e.select(col("dst").as("v"))).distinct()
     var sk = LineageCut.cut(
       verts.select(col("v"),
-        array(md5(concat(col("v"), lit("|anf")))).as("sk")), cutMode)
+        array(md5(concat(col("v"), lit("|anf")))).as("sk")))
     val out = Seq.newBuilder[(Int, DataFrame)]
     for (r <- 1 to rounds) {
       val nbr = e
@@ -1685,8 +1646,7 @@ object Graph {
           .select(col("v"),
             slice(array_sort(array_distinct(
               when(col("nsks").isNull, col("sk"))
-                .otherwise(concat(col("sk"), col("nsks"))))), 1, k).as("sk")),
-        cutMode)
+                .otherwise(concat(col("sk"), col("nsks"))))), 1, k).as("sk")))
       sk = next
       out += r -> sk
     }
@@ -1713,8 +1673,8 @@ object Graph {
     * `(r, n_nodes, nf_est, n_saturated)`; `n_saturated` counts vertices
     * whose register overflowed into estimation (the rest are exact). */
   def neighborhoodFunction(edges: DataFrame, rounds: Int = AnfRounds,
-      k: Int = AnfK, cutMode: LineageCut = LineageCut.Auto): DataFrame =
-    nfFromSketches(anfSketches(edges, rounds, k, cutMode), k)
+      k: Int = AnfK): DataFrame =
+    nfFromSketches(anfSketches(edges, rounds, k), k)
 
   /** [[neighborhoodFunction]] over pre-built (possibly session-shared)
     * sketch rounds. */
@@ -1739,10 +1699,9 @@ object Graph {
     * `(eff_diameter, target_ppm, nf_at_diameter, nf_max)`. Cost: the
     * [[neighborhoodFunction]] rounds plus arithmetic over `rounds` rows. */
   def effectiveDiameter(edges: DataFrame, rounds: Int = AnfRounds,
-      k: Int = AnfK, ppm: Long = 900000L,
-      cutMode: LineageCut = LineageCut.Auto): DataFrame =
+      k: Int = AnfK, ppm: Long = 900000L): DataFrame =
     effectiveDiameterFromNf(
-      neighborhoodFunction(edges, rounds, k, cutMode), ppm)
+      neighborhoodFunction(edges, rounds, k), ppm)
 
   /** [[effectiveDiameter]] over a pre-built [[neighborhoodFunction]]
     * frame. */
@@ -1772,28 +1731,27 @@ object Graph {
     * THIS graph, measured, not assumed. */
   def anfCertificate(edges: DataFrame, seedCount: Int = 4,
       rounds: Int = AnfRounds, k: Int = AnfK,
-      cutMode: LineageCut = LineageCut.Auto,
       sketches: Option[Seq[(Int, DataFrame)]] = None): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val e = LineageCut.cut(
       edges.filter(col("src") =!= col("dst"))
-        .select(col("src"), col("dst")).distinct(), cutMode)
+        .select(col("src"), col("dst")).distinct())
     val verts = e.select(col("src").as("v"))
       .unionByName(e.select(col("dst").as("v"))).distinct()
     val seeds = verts.orderBy(expr("md5(v)"), col("v")).limit(seedCount)
     var pairs = LineageCut.cut(
-      seeds.select(col("v").as("seed"), col("v").as("w")), cutMode)
+      seeds.select(col("v").as("seed"), col("v").as("w")))
     val exacts = (1 to rounds).map { r =>
       val step = e
         .join(pairs.select(col("seed"), col("w").as("src")), Seq("src"))
         .select(col("seed"), col("dst").as("w"))
       pairs = LineageCut.cut(
-        pairs.unionByName(step).distinct(), cutMode)
+        pairs.unionByName(step).distinct())
       pairs.groupBy("seed").agg(count(lit(1)).as("n_exact"))
         .select(lit(r).as("r"), col("seed"), col("n_exact"))
     }
     val exact = exacts.reduce(_ unionByName _)
-    val est = sketches.getOrElse(anfSketches(edges, rounds, k, cutMode))
+    val est = sketches.getOrElse(anfSketches(edges, rounds, k))
       .map { case (r, sk) =>
         sk.join(seeds.select(col("v")), Seq("v"), "left_semi")
           .select(lit(r).as("r"), col("v").as("seed"),
@@ -1911,8 +1869,7 @@ object Graph {
     * why the DuckDB oracle can enumerate id-ordered and recount per
     * round instead. Lineage-cut per round; superseded rounds released.
     * Output: surviving (a, b) with final-round support. */
-  def kTruss(edges: DataFrame, k: Int = 4, rounds: Int = 4,
-      cutMode: LineageCut = LineageCut.Auto): DataFrame = {
+  def kTruss(edges: DataFrame, k: Int = 4, rounds: Int = 4): DataFrame = {
     // cut the deduped edge list ONCE: it feeds the degree count, the
     // orientation join, and the initial support join — left as lineage,
     // the self-join below would recompute the whole distinct three times
@@ -1920,7 +1877,7 @@ object Graph {
       edges.filter(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
-        .distinct(), cutMode)
+        .distinct())
     // orient ONCE by initial (degree, id): exactly-once enumeration needs
     // any fixed total order, and initial degrees are a good fan-out bound
     val deg = und.select(col("a").as("v"))
@@ -1942,7 +1899,7 @@ object Graph {
     // surviving-edge join. r14 measured: peel-state shuffle/checkpoint
     // bytes −60–75%, string hashing out of the support aggregate.
     val undId = LineageCut.cut(
-      und.withColumn("eid", monotonically_increasing_id()), cutMode)
+      und.withColumn("eid", monotonically_increasing_id()))
     // carry the dst endpoint's (degree) so the wedge join can order its
     // two legs without another degree lookup, and the edge's id so the
     // triangle list is built directly in id space; cut so (a) the three
@@ -1962,7 +1919,7 @@ object Graph {
         when(aFirst, col("a")).otherwise(col("b")).as("src"),
         when(aFirst, col("b")).otherwise(col("a")).as("dst"),
         when(aFirst, col("db")).otherwise(col("da")).as("dd"),
-        col("eid")), cutMode))
+        col("eid"))))
     // u -> v, u -> w wedges with (dv, v) < (dw, w) — each unordered leg
     // pair once, closed by the oriented v -> w edge: every triangle
     // exactly once, keyed by the ids of its three undirected edges
@@ -1976,7 +1933,7 @@ object Graph {
           (col("dv") === col("dw") && col("v") < col("w")))
         .join(oriented.select(col("src").as("v"), col("dst").as("w"),
           col("eid").as("e3")), Seq("v", "w"))
-        .select(col("e1"), col("e2"), col("e3")), cutMode))
+        .select(col("e1"), col("e2"), col("e3"))))
     LineageCut.release(oriented) // enumeration happens exactly once
     // per-edge triangle count over a (live) triangle list, in id space
     def supOf(t: DataFrame): DataFrame =
@@ -1989,7 +1946,7 @@ object Graph {
     // this round?" probe costs zero extra jobs — the PREVIOUS round's
     // materialization already measured it.
     def cutE(df: DataFrame): (DataFrame, Long) = {
-      val (out, m) = LineageCut.cutObserved(df, cutMode,
+      val (out, m) = LineageCut.cutObserved(df,
         Seq(sum(when(col("sup") < k - 2, lit(1L)).otherwise(lit(0L)))
           .as("ndead")))
       val n = m.get("ndead") match {
@@ -2032,7 +1989,7 @@ object Graph {
         nDead = nd
         if (r < rounds) { // the final round's list has no reader
           val nextTri = graft.Tables.fanOut(LineageCut.cut(
-            tri.join(deadTri, keys, "left_anti"), cutMode))
+            tri.join(deadTri, keys, "left_anti")))
           LineageCut.release(tri)
           tri = nextTri
         }

@@ -680,7 +680,7 @@ object TextAnalysis {
             expr("substring(w, pos, bl)")).as("acc"),
           (col("np") + 1L).as("np"))
       state = stepped.unionByName(done)
-      if (r % 4 == 0) state = LineageCut.cut(state, LineageCut.Auto)
+      if (r % 4 == 0) state = LineageCut.cut(state)
     }
     state
       .select(col("w"), col("c"), col("np").as("n_pieces"),
@@ -797,8 +797,7 @@ object TextAnalysis {
         .agg(min_by(col("k"), col("okey")).as("k"),
           min_by(col("score"), col("okey")).as("score"),
           min_by(col("acc"), col("okey")).as("acc"))
-      best = if (r % 4 == 0) LineageCut.cut(merged, LineageCut.Auto)
-        else merged
+      best = if (r % 4 == 0) LineageCut.cut(merged) else merged
     }
     best.filter(col("pos") === 1)
       .join(inWords, Seq("w"))

@@ -13,8 +13,7 @@ import java.nio.file.{Files, Path}
   *    is materialized (counted or written) — the returned DataFrames read
   *    the sink dir lazily, so sweeping early would yield empty reads.
   *    Contract mirrors [[graft.ops.QueryLocal]].
-  *  - [[staging]]: source staging dirs, the session checkpoint dir and the
-  *    test warehouse. Their frames may be re-scanned later (a
+  *  - [[staging]]: source staging dirs and the test warehouse. Their frames may be re-scanned later (a
   *    [[graft.ops.Shared]] rebuild re-reads its whole lineage), so they
   *    are never swept mid-run.
   *

@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run (suites share the JVM
   * under `Test / fork := true`), built by [[Session.local]] so specs
-  * exercise the conf Bench and Verify run. The checkpoint dir makes
-  * LineageCut.Reliable runnable; Auto still picks Local here (local
-  * master) — GraphSpec pins the Reliable path explicitly. */
+  * exercise the conf Bench and Verify run. Like every graft session it
+  * is local, so [[ops.LineageCut]] cuts with `localCheckpoint` here;
+  * LineageCutObserveSpec drives the reliable branch explicitly. */
 object GraftSpark {
   lazy val spark: SparkSession = Session.local(4, Map(
     "spark.sql.warehouse.dir" ->

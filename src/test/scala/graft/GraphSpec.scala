@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Graph, LineageCut}
+import graft.ops.Graph
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraphSpec extends AnyFunSuite {
@@ -40,23 +40,6 @@ class GraphSpec extends AnyFunSuite {
     assert(r(Seq((1L, 2L), (1L, 3L), (2L, 3L), (1L, 4L))).contains(hand))
     // orientation/duplication invariance: reversed + duplicated edges
     assert(r(Seq((1L, 0L), (0L, 1L), (2L, 0L), (0L, 3L))).contains(-1.0))
-  }
-
-  test("reliable checkpoint path: explicit Reliable mode (dir is configured)") {
-    // GraftSpark sets a checkpoint dir, so Auto (every test above) already
-    // runs Reliable; this pins the explicit mode in case the default moves
-    assert(spark.sparkContext.getCheckpointDir.isDefined)
-    val edges = Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("src", "dst")
-    val got = Graph.connectedComponents(edges, cutMode = LineageCut.Reliable)
-      .as[(Long, Long)].collect().toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
-  }
-
-  test("local mode still works when a checkpoint dir is configured") {
-    val edges = Seq((4L, 6L), (6L, 5L)).toDF("src", "dst")
-    val got = Graph.connectedComponents(edges, cutMode = LineageCut.Local)
-      .as[(Long, Long)].collect().toMap
-    assert(got == Map(4L -> 4L, 5L -> 4L, 6L -> 4L))
   }
 
   test("unconverged propagation fails loudly instead of returning wrong keepers") {

@@ -1,20 +1,57 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{Path => HPath}
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Pins [[ops.LineageCut.cutObserved]] — the round-11 move that collects
   * an iterative round's convergence statistic DURING its one
   * materialization action (removing a scan job per round for every
   * cutCounted consumer): the metrics arrive, the count is exact, and the
-  * cut frame stays a usable, released-on-demand local checkpoint. */
+  * cut frame stays a usable, released-on-demand local checkpoint. The
+  * reliable branch, which no local session takes, is driven through
+  * [[ops.LineageCut.cutAs]] with a checkpoint dir this spec sets. */
 class LineageCutObserveSpec extends AnyFunSuite {
   private lazy val spark = GraftSpark.spark
   import spark.implicits._
 
+  private lazy val ckptDir: Path = {
+    val dir = util.TempDirs.staging("graft-ckpt")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    dir
+  }
+
+  /** Names in a local directory given as a Hadoop path string. Listing
+    * one level only: the context cleaner may delete an earlier cut's
+    * `rdd-N` directory at any time, which a recursive walk trips over. */
+  private def names(dir: String): Set[String] = {
+    val ls = Files.list(Paths.get(new HPath(dir).toUri.getPath))
+    try ls.iterator().asScala.map(_.getFileName.toString).toSet
+    finally ls.close()
+  }
+
+  /** The `rdd-N` checkpoints under the session's checkpoint dir. */
+  private def checkpointedRdds(): Set[String] =
+    names(spark.sparkContext.getCheckpointDir.get)
+
+  /** [[ops.LineageCut.cutAs]] on the reliable branch, under [[ckptDir]]. */
+  private def cutReliable(df: DataFrame, metrics: Seq[Column]) = {
+    ckptDir
+    ops.LineageCut.cutAs(df, reliable = true, metrics)
+  }
+
+  /** The checkpoint file of the RDD a cut frame reads, if it has one. */
+  private def checkpointFile(cut: DataFrame): Option[String] =
+    cut.queryExecution.analyzed.collectFirst { case lr: LogicalRDD =>
+      lr.rdd.getCheckpointFile }.flatten
+
   test("cutCounted count rides the materialization and is exact") {
     val df = (1 to 1234).toDF("x").repartition(4)
-    val (cut, n) = ops.LineageCut.cutCounted(df, ops.LineageCut.Local)
+    val (cut, n) = ops.LineageCut.cutCounted(df)
     assert(n == 1234)
     // the frame is a real lineage cut: still fully readable
     assert(cut.as[Int].collect().sorted.toSeq == (1 to 1234))
@@ -23,7 +60,7 @@ class LineageCutObserveSpec extends AnyFunSuite {
 
   test("cutObserved returns caller metrics alongside the cut frame") {
     val df = (1 to 100).toDF("x")
-    val (cut, m) = ops.LineageCut.cutObserved(df, ops.LineageCut.Local,
+    val (cut, m) = ops.LineageCut.cutObserved(df,
       Seq(count(lit(1)).as("n"), max(col("x")).as("mx")))
     // the metrics MUST arrive on an idle local session — a guard here
     // would let a delivery regression (wrong listener registration, the
@@ -50,14 +87,14 @@ class LineageCutObserveSpec extends AnyFunSuite {
       ops.LineageCut.observeCooldownNanos = 50L * 1000 * 1000 // 50 ms
       ops.LineageCut.tripObservationForTest()
       assert(!ops.LineageCut.observeArmed, "trip must disable immediately")
-      val (cut1, m1) = ops.LineageCut.cutObserved(df, ops.LineageCut.Local,
+      val (cut1, m1) = ops.LineageCut.cutObserved(df,
         Seq(count(lit(1)).as("n")))
       assert(m1.isEmpty, "tripped breaker must fall back to plain cut")
       assert(cut1.count() == 50) // fallback frame still correct
       ops.LineageCut.release(cut1)
       Thread.sleep(150)
       assert(ops.LineageCut.observeArmed, "cooldown elapsed — must re-arm")
-      val (cut2, m2) = ops.LineageCut.cutObserved(df, ops.LineageCut.Local,
+      val (cut2, m2) = ops.LineageCut.cutObserved(df,
         Seq(count(lit(1)).as("n")))
       assert(m2.get("n").contains(50L),
         "metrics must ride the materialization again after the re-arm")
@@ -67,12 +104,74 @@ class LineageCutObserveSpec extends AnyFunSuite {
 
   test("empty frame: count 0, convergence-style max metric is null") {
     val df = spark.range(0).selectExpr("id AS x")
-    val (cut, m) = ops.LineageCut.cutObserved(df, ops.LineageCut.Local,
+    val (cut, m) = ops.LineageCut.cutObserved(df,
       Seq(max(when(col("x") > 0, lit(1)).otherwise(lit(0))).as("chg")))
     assert(m.nonEmpty,
       "observation metrics did not arrive within the bounded await")
     assert(m("chg") == null) // max over zero rows
     assert(cut.count() == 0)
     ops.LineageCut.release(cut)
+  }
+
+  test("reliable branch: rows preserved, count exact, metrics carry _rows") {
+    val df = (1 to 1234).toDF("x").repartition(4)
+    val (cut, m) = cutReliable(df,
+      Seq(count(lit(1)).as("n"), max(col("x")).as("mx")))
+    assert(m.nonEmpty,
+      "observation metrics did not arrive within the bounded await")
+    // what cutCounted reads: the observed count, else the cache-fill count
+    assert(m("n") == 1234L)
+    assert(m("_rows") == 1234L)
+    assert(m("mx") == 1234)
+    assert(cut.as[Int].collect().sorted.toSeq == (1 to 1234))
+    val file = checkpointFile(cut)
+    assert(file.exists(_.contains(ckptDir.toString)), file)
+    assert(names(file.get).exists(_.startsWith("part-")))
+    ops.LineageCut.release(cut) // file-backed: a no-op, frame still reads
+    assert(cut.count() == 1234)
+  }
+
+  test("reliable branch: a plain cut checkpoints and threads no _rows") {
+    val df = (1 to 300).toDF("x").repartition(3)
+    val (cut, m) = cutReliable(df, Nil)
+    assert(m.isEmpty)
+    assert(cut.as[Int].collect().sorted.toSeq == (1 to 300))
+    assert(checkpointFile(cut).exists(_.contains(ckptDir.toString)))
+  }
+
+  test("reliable branch with the breaker tripped: plain cut, no metrics") {
+    val df = (1 to 40).toDF("x")
+    val saved = ops.LineageCut.observeCooldownNanos
+    try {
+      ops.LineageCut.observeCooldownNanos = 60L * 1000 * 1000 * 1000
+      ops.LineageCut.tripObservationForTest()
+      val (cut, m) = cutReliable(df, Seq(count(lit(1)).as("n")))
+      assert(m.isEmpty, "tripped breaker: no metrics and no _rows")
+      assert(cut.count() == 40)
+      assert(checkpointFile(cut).isDefined)
+    } finally {
+      // a zero-cooldown trip re-arms at the next check: leave it armed
+      ops.LineageCut.observeCooldownNanos = 0L
+      ops.LineageCut.tripObservationForTest()
+      assert(ops.LineageCut.observeArmed)
+      ops.LineageCut.observeCooldownNanos = saved
+    }
+  }
+
+  test("local master with a checkpoint dir: cuts stay local, write no file") {
+    ckptDir
+    val before = checkpointedRdds()
+    val df = (1 to 500).toDF("x").repartition(4)
+    val cut = ops.LineageCut.cut(df)
+    val (counted, n) = ops.LineageCut.cutCounted(df)
+    val (observed, _) = ops.LineageCut.cutObserved(df,
+      Seq(count(lit(1)).as("n")))
+    assert(n == 500)
+    for (c <- Seq(cut, counted, observed)) {
+      assert(c.count() == 500)
+      assert(checkpointFile(c).isEmpty)
+    }
+    assert((checkpointedRdds() -- before).isEmpty)
+    Seq(cut, counted, observed).foreach(ops.LineageCut.release)
   }
 }

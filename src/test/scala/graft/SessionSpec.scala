@@ -17,7 +17,6 @@ class SessionSpec extends AnyFunSuite {
       assert(got == v, k)
     }
     assert(spark.sparkContext.master == "local[4]")
-    assert(spark.sparkContext.getCheckpointDir.isDefined)
   }
 
   test("the benchmark harness session carries exactly the Session conf") {

@@ -3,6 +3,7 @@ package graft
 import graft.streaming.{Sessionize, StreamingMetrics}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamingSpec extends AnyFunSuite {
@@ -619,6 +620,31 @@ class StreamingSpec extends AnyFunSuite {
         graft.ops.Num.dsum(col("value")).as("tx_volume"))
     assert(got.count() > 0)
     assert(got.exceptAll(batch).isEmpty && batch.exceptAll(got).isEmpty)
+  }
+
+  test("no-flush drains are exactly the dedup, inner-join and semi-join") {
+    // withStatePartitionsNoFlush turns the no-data micro-batch off, which
+    // withholds a watermark-GATED shape's final rows (outer/anti joins,
+    // append windows) without an error: pin the defs that call it, read
+    // as source text, so a new caller is a reviewed edit of this set
+    val call = "withStatePartitionsNoFlush("
+    val defLine = """^\s*(?:private(?:\[\w+\])?\s+)?def\s+(\w+)""".r.unanchored
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/streaming")
+    val walk = java.nio.file.Files.walk(dir)
+    val sources = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList finally walk.close()
+    val callers = sources.flatMap { f =>
+      val lines = java.nio.file.Files.readAllLines(f).asScala.toList
+      lines.indices.filter(i => lines(i).contains(call)).map { i =>
+        val owner = (i to 0 by -1).iterator.map(lines(_)).collectFirst {
+          case defLine(name) => name }
+        s"${f.getFileName}:${owner.getOrElse("?")}"
+      }
+    }
+    assert(callers.sorted == Seq(
+      "StreamingMetrics.scala:streamIntervalJoin",
+      "StreamingMetrics.scala:streamSemiJoin",
+      "StreamingMetrics.scala:streamingDedupHashes"))
   }
 }
 
