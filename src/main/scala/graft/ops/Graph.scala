@@ -148,9 +148,11 @@ object LineageCut {
   /** The one materialization behind [[cut]] (no `metrics`) and
     * [[cutObserved]], on the branch `reliable` names; the public calls
     * pass the policy's answer, specs pass `true` to drive the reliable
-    * branch on a local master. The reliable branch persists before
-    * checkpointing so the checkpoint writer reads the cache the
-    * cache-fill count filled, never the frame's subtree a second time. */
+    * branch on a local master. A plain reliable cut is one eager
+    * `checkpoint(true)`, whose one write job computes the frame once; an
+    * observed one runs the cache-fill count first, so it persists before
+    * checkpointing and the writer reads the cache that count filled,
+    * never the frame's subtree a second time. */
   private[graft] def cutAs(df: DataFrame, reliable: Boolean,
       metrics: Seq[Column]): (DataFrame, Map[String, Any]) = {
     val obs =
@@ -159,9 +161,10 @@ object LineageCut {
     var rows = -1L
     val out =
       if (!reliable) in.localCheckpoint(true)
+      else if (obs.isEmpty) in.checkpoint(true)
       else {
         val cached = in.persist(StorageLevel.MEMORY_AND_DISK)
-        if (obs.isDefined) rows = cached.count()
+        rows = cached.count()
         val o = cached.checkpoint(true)
         cached.unpersist(false)
         o

@@ -75,12 +75,12 @@ object StatefulBalances {
     * Update-mode drain (max n_legs = the last snapshot each account
     * emitted). Oracle = the batch net sums, so the custom processor's
     * arithmetic is hash-verified end to end, not just spec-asserted.
-    * RocksDB provider is required by transformWithState; restored after.
+    * The RocksDB provider transformWithState requires is pinned with the
+    * state shards for the drain and restored after.
     *
-    * Concurrency: the provider conf is session-global and the memory sink
-    * registers a catalog table, so the whole drain runs under the object
-    * lock (conf restore can't race) and the sink name carries a per-call
-    * unique suffix (two invocations never share a table). */
+    * Concurrency: the memory sink registers a catalog table, so the whole
+    * drain runs under the object lock and the sink name carries a
+    * per-call unique suffix (two invocations never share a table). */
   def streamTokenBalances(spark: SparkSession, sfDir: String): DataFrame =
     lock.synchronized { streamTokenBalances0(spark, sfDir) }
 
@@ -90,15 +90,10 @@ object StatefulBalances {
   private def streamTokenBalances0(spark: SparkSession,
       sfDir: String): DataFrame = {
     val tableName = s"graft_stream_balances_${invocation.incrementAndGet()}"
-    withRocksDb(spark) {
-      StreamingMetrics.withStatePartitions(spark) {
-        val q = runningBalances(spark, legStream(spark, sfDir))
-          .writeStream.outputMode(OutputMode.Update())
-          .format("memory").queryName(tableName)
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
+    StreamingMetrics.withStatePartitions(spark, RocksDb) {
+      StreamingMetrics.drainToMemory(
+        runningBalances(spark, legStream(spark, sfDir)).toDF(), tableName,
+        "update")
     }
     compacted(spark.table(tableName))
   }
@@ -126,18 +121,10 @@ object StatefulBalances {
       .as[Leg]
   }
 
-  /** RocksDB provider for the duration of `body`, restored after. */
-  private def withRocksDb[A](spark: SparkSession)(body: => A): A = {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
-    }
-  }
+  /** The RocksDB state-store provider conf transformWithState requires,
+    * pinned for a drain by [[StreamingMetrics.withStatePartitions]]. */
+  private val RocksDb = Seq("spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
   /** Changelog compaction: the LAST snapshot each account emitted (max
     * n_legs — strictly increasing per account) is its current state. */
@@ -159,24 +146,11 @@ object StatefulBalances {
     * path's arithmetic is hash-verified too. */
   def streamTokenBalancesChangelog(spark: SparkSession,
       sfDir: String): DataFrame = lock.synchronized {
-    val out =
-      graft.util.TempDirs.scratch("graft_balchg_sink")
-    val ckpt =
-      graft.util.TempDirs.scratch("graft_balchg_ckpt")
-    withRocksDb(spark) {
-      StreamingMetrics.withStatePartitions(spark) {
-        val q = runningBalances(spark, legStream(spark, sfDir))
-          .toDF()
-          .writeStream.outputMode(OutputMode.Update())
-          .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-              _: Long) =>
-            batch.write.mode("append").parquet(out)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+    val out = graft.util.TempDirs.scratch("graft_balchg_sink")
+    StreamingMetrics.withStatePartitions(spark, RocksDb) {
+      StreamingMetrics.drainBatches(
+        runningBalances(spark, legStream(spark, sfDir)).toDF(), "update",
+        "graft_balchg")(_.write.mode("append").parquet(out))
     }
     compacted(graft.Tables.parquet(spark, out))
   }

@@ -12,12 +12,32 @@ import org.apache.spark.sql.functions._
   */
 object StreamJoins {
 
-  /** Enrich a transfer stream with the latest price observations within the
-    * preceding `windowSeconds`: inner equi-join on the token plus an
-    * event-time range predicate. Expected columns:
+  /** Width of the interval join's event-time window: a price tick serves
+    * the transfers of the following hour. */
+  val IntervalSeconds = 3600L
+
+  /** The transfers stream joined to the price ticks of each transfer's
+    * preceding [[IntervalSeconds]]: an equi-join on the token plus an
+    * event-time range predicate, both sides watermarked. Expected columns:
     * `transfers(contract_address, value, t_ts)`,
     * `prices(p_contract, price, p_ts)` — distinct names keep the join
-    * condition unambiguous without aliases.
+    * condition unambiguous without aliases. `joinType` is one of
+    *  - `inner`: every qualifying (transfer, tick) pair, emitted as soon
+    *    as both sides are present;
+    *  - `left_outer`: the pairs, plus each transfer with no qualifying
+    *    tick once, NULL-padded — but only after the watermark has passed
+    *    the last point a matching tick could still arrive (until then the
+    *    row sits in state as a potential match);
+    *  - `full_outer`: the reconciliation shape — the pairs, unpriced
+    *    transfers AND unconsumed ticks, each unmatched side NULL-padded
+    *    once its watermark passes the match horizon. Both inputs must
+    *    carry unique row ids (`t_id`, `p_id`), which the output keeps with
+    *    `p_contract`;
+    *  - `left_semi`: each transfer with AT LEAST ONE qualifying tick, once
+    *    however many ticks match, as soon as the match arrives (unmatched
+    *    rows are dropped, not emitted, so nothing waits on the watermark).
+    * The output is `contract_address, value, t_ts` plus `price, p_ts` for
+    * `inner`/`left_outer`, and every input column for `full_outer`.
     *
     * The time BUCKET is folded into the equi-key: each tick is exploded
     * into the two window-width buckets it can serve (its own and the
@@ -27,13 +47,24 @@ object StreamJoins {
     * state store is a per-key multimap with no range index) — measured
     * 52 s at sf0.1 where the bucketed key runs in ~3 s, and quadratic in
     * stream length at scale. A pair within the window spans at most
-    * adjacent buckets and the transfer's own bucket is unique, so each
-    * qualifying pair is emitted exactly once — the range predicate's
-    * semantics are unchanged (the batch-twin equality spec and the DuckDB
-    * oracle state the join without buckets). */
-  def transfersWithRecentPrices(transfers: DataFrame, prices: DataFrame,
-      windowSeconds: Long = 3600L): DataFrame = {
-    val us = windowSeconds * 1000000L
+    * adjacent buckets and the transfer's own bucket is unique among a
+    * matching tick's two copies, so each qualifying pair is emitted
+    * exactly once, "no match in my bucket" IS "no match at all" (one NULL
+    * row per unmatched transfer), and a semi transfer sees every
+    * qualifying tick under one key — the range predicate's semantics are
+    * unchanged (the batch-twin equality spec and the DuckDB oracle state
+    * the join without buckets). The one exception is the tick side of
+    * `full_outer`: the two bucket copies have independent join states, so
+    * a tick matched only via its `b+1` copy still NULL-pads from its `b`
+    * copy, and the appended stream is a SUPERSET on the tick side that
+    * [[compactFullOuter]] compacts exactly. State and shuffle are the
+    * same for every join type: one (token, bucket)-keyed equi-join, state
+    * bounded by two watermarked buckets per side. */
+  def intervalJoin(transfers: DataFrame, prices: DataFrame,
+      joinType: String): DataFrame = {
+    require(Set("inner", "left_outer", "full_outer", "left_semi")(joinType),
+      s"unsupported interval join type: $joinType")
+    val us = IntervalSeconds * 1000000L
     // FLOOR division, not `div` (which truncates toward zero): for
     // pre-1970 event times truncation makes the buckets straddling zero
     // double-width, so a qualifying pair could land two buckets apart and
@@ -42,98 +73,29 @@ object StreamJoins {
     def floorBucket(tsCol: String): String =
       s"(unix_micros($tsCol) div $us) + " +
         s"(CASE WHEN unix_micros($tsCol) % $us < 0 THEN -1 ELSE 0 END)"
-    val t = transfers.withWatermark("t_ts", s"$windowSeconds seconds")
+    val t = transfers.withWatermark("t_ts", s"$IntervalSeconds seconds")
       .withColumn("t_b", expr(floorBucket("t_ts")))
-    val p = prices.withWatermark("p_ts", s"${2 * windowSeconds} seconds")
+    val p = prices.withWatermark("p_ts", s"${2 * IntervalSeconds} seconds")
       .withColumn("p_b", explode(expr(
         s"array(${floorBucket("p_ts")}, (${floorBucket("p_ts")}) + 1)")))
-    t.join(p,
+    val joined = t.join(p,
       col("contract_address") === col("p_contract") &&
         col("t_b") === col("p_b") &&
-        col("p_ts") >= col("t_ts") - expr(s"INTERVAL $windowSeconds SECONDS") &&
-        col("p_ts") <= col("t_ts"))
-      .select(col("contract_address"), col("value"), col("t_ts"),
-        col("price"), col("p_ts"))
-  }
-
-  /** LEFT OUTER variant of [[transfersWithRecentPrices]]: transfers with
-    * no qualifying price tick in the preceding window are emitted once,
-    * NULL-padded — but only after the watermark has passed the last point
-    * a matching tick could still arrive (until then the row sits in state
-    * as a potential match). This is the streaming outer-join contract
-    * Spark enforces by requiring both watermarks plus an event-time bound
-    * in the condition; without it the unmatched side could never be
-    * declared final.
-    *
-    * The bucket fold preserves outer semantics: every price a transfer
-    * can match carries the transfer's own (unique) bucket among its two
-    * exploded copies, so "no match in my bucket" IS "no match at all",
-    * and each unmatched transfer emits exactly one NULL row. */
-  def transfersWithRecentPricesOuter(transfers: DataFrame, prices: DataFrame,
-      windowSeconds: Long = 3600L): DataFrame = {
-    val us = windowSeconds * 1000000L
-    def floorBucket(tsCol: String): String =
-      s"(unix_micros($tsCol) div $us) + " +
-        s"(CASE WHEN unix_micros($tsCol) % $us < 0 THEN -1 ELSE 0 END)"
-    val t = transfers.withWatermark("t_ts", s"$windowSeconds seconds")
-      .withColumn("t_b", expr(floorBucket("t_ts")))
-    val p = prices.withWatermark("p_ts", s"${2 * windowSeconds} seconds")
-      .withColumn("p_b", explode(expr(
-        s"array(${floorBucket("p_ts")}, (${floorBucket("p_ts")}) + 1)")))
-    t.join(p,
-      col("contract_address") === col("p_contract") &&
-        col("t_b") === col("p_b") &&
-        col("p_ts") >= col("t_ts") - expr(s"INTERVAL $windowSeconds SECONDS") &&
+        col("p_ts") >= col("t_ts") -
+          expr(s"INTERVAL $IntervalSeconds SECONDS") &&
         col("p_ts") <= col("t_ts"),
-      "left_outer")
-      .select(col("contract_address"), col("value"), col("t_ts"),
-        col("price"), col("p_ts"))
+      joinType)
+    val out = joinType match {
+      case "left_semi" => Seq("contract_address", "value", "t_ts")
+      case "full_outer" => Seq("contract_address", "value", "t_ts", "t_id",
+        "p_contract", "price", "p_ts", "p_id")
+      case _ => Seq("contract_address", "value", "t_ts", "price", "p_ts")
+    }
+    joined.select(out.map(col): _*)
   }
 
-  /** FULL OUTER variant: BOTH unmatched sides NULL-pad once their
-    * watermark passes the last instant a match could arrive — the
-    * reconciliation shape ("every transfer priced, every tick consumed,
-    * and the leftovers of both visible in one stream").
-    *
-    * The bucket fold is asymmetric, so the exactly-once story differs by
-    * side. Transfers are not exploded: an unmatched transfer emits
-    * exactly one NULL row, as in the LEFT variant. Prices ARE exploded
-    * into two bucket copies whose join states are independent — a price
-    * matched only via its `b+1` copy still NULL-pads from its `b` copy,
-    * so the raw appended stream is a SUPERSET on the price side. The
-    * consumer compacts it exactly (drop NULL-padded price rows whose
-    * `p_id` also appears matched, dedup the rest by `p_id`) — the same
-    * sink-side compaction contract as the changelog twins, priced at one
-    * batch pass over the sink. Both inputs must therefore carry unique
-    * row ids (`t_id`, `p_id`).
-    *
-    * State and shuffle envelope are identical to the LEFT variant: one
-    * (token, bucket)-keyed equi-join, per-key state bounded by two
-    * watermarked buckets per side. */
-  def transfersWithRecentPricesFullOuter(transfers: DataFrame,
-      prices: DataFrame, windowSeconds: Long = 3600L): DataFrame = {
-    val us = windowSeconds * 1000000L
-    def floorBucket(tsCol: String): String =
-      s"(unix_micros($tsCol) div $us) + " +
-        s"(CASE WHEN unix_micros($tsCol) % $us < 0 THEN -1 ELSE 0 END)"
-    val t = transfers.withWatermark("t_ts", s"$windowSeconds seconds")
-      .withColumn("t_b", expr(floorBucket("t_ts")))
-    val p = prices.withWatermark("p_ts", s"${2 * windowSeconds} seconds")
-      .withColumn("p_b", explode(expr(
-        s"array(${floorBucket("p_ts")}, (${floorBucket("p_ts")}) + 1)")))
-    t.join(p,
-      col("contract_address") === col("p_contract") &&
-        col("t_b") === col("p_b") &&
-        col("p_ts") >= col("t_ts") - expr(s"INTERVAL $windowSeconds SECONDS") &&
-        col("p_ts") <= col("t_ts"),
-      "full_outer")
-      .select(col("contract_address"), col("value"), col("t_ts"),
-        col("t_id"), col("p_contract"), col("price"), col("p_ts"),
-        col("p_id"))
-  }
-
-  /** Exact compaction of [[transfersWithRecentPricesFullOuter]]'s appended
-    * superset: matched rows and NULL-padded transfers pass through
+  /** Exact compaction of the superset a `full_outer` [[intervalJoin]]
+    * appends: matched rows and NULL-padded transfers pass through
     * (exactly-once already); NULL-padded price rows are dropped when
     * their `p_id` also appears matched (the other bucket copy found the
     * pair) and deduped by `p_id` otherwise (every copy carries identical
@@ -148,38 +110,6 @@ object StreamJoins {
       .join(matched.select("p_id").distinct(), Seq("p_id"), "left_anti")
       .select(raw.columns.map(col).toIndexedSeq: _*)
     matched.unionByName(unmatchedTx).unionByName(unmatchedTick)
-  }
-
-  /** LEFT SEMI variant of [[transfersWithRecentPrices]]: transfers that
-    * had AT LEAST ONE qualifying price tick in the preceding window,
-    * emitted once — existence filtering as a stream, the streaming twin of
-    * the batch semi-join family (J5). Matched left rows emit as soon as
-    * the match arrives (no watermark wait — only unmatched rows need
-    * end-of-horizon declaration, and those are dropped, not emitted);
-    * state expires on both watermarks exactly like the inner variant.
-    *
-    * Exactly-once under the bucket fold: the transfer's own bucket is
-    * unique among a matching price's two exploded copies, so a transfer's
-    * join state sees every qualifying tick under one key, and LEFT SEMI
-    * emits the transfer once regardless of how many ticks match. */
-  def transfersWithRecentPricesSemi(transfers: DataFrame, prices: DataFrame,
-      windowSeconds: Long = 3600L): DataFrame = {
-    val us = windowSeconds * 1000000L
-    def floorBucket(tsCol: String): String =
-      s"(unix_micros($tsCol) div $us) + " +
-        s"(CASE WHEN unix_micros($tsCol) % $us < 0 THEN -1 ELSE 0 END)"
-    val t = transfers.withWatermark("t_ts", s"$windowSeconds seconds")
-      .withColumn("t_b", expr(floorBucket("t_ts")))
-    val p = prices.withWatermark("p_ts", s"${2 * windowSeconds} seconds")
-      .withColumn("p_b", explode(expr(
-        s"array(${floorBucket("p_ts")}, (${floorBucket("p_ts")}) + 1)")))
-    t.join(p,
-      col("contract_address") === col("p_contract") &&
-        col("t_b") === col("p_b") &&
-        col("p_ts") >= col("t_ts") - expr(s"INTERVAL $windowSeconds SECONDS") &&
-        col("p_ts") <= col("t_ts"),
-      "left_semi")
-      .select(col("contract_address"), col("value"), col("t_ts"))
   }
 
   /** Stream-STATIC enrichment: join a stream against a batch dimension

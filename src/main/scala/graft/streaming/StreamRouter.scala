@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Multi-sink routing with `foreachBatch` — the production pattern for
   * quality gates on an ingest stream: ONE pass over the documents stream
@@ -28,7 +27,6 @@ object StreamRouter {
   def qualityRoutedDocs(spark: SparkSession, sfDir: String): DataFrame = {
     val keepDir = graft.util.TempDirs.scratch("graft_rt_keep")
     val quarDir = graft.util.TempDirs.scratch("graft_rt_quar")
-    val ckpt = graft.util.TempDirs.scratch("graft_rt_ckpt")
 
     val flagged = graft.ops.TextAnalysis.gopherSignals(
       spark.readStream.schema(StreamingMetrics.DocumentsSchema)
@@ -37,7 +35,7 @@ object StreamRouter {
       .select(col("doc_id"), col("n_words"),
         coalesce(col("keep"), lit(false)).as("keep"))
 
-    val route: (Dataset[Row], Long) => Unit = (batch, _) => {
+    StreamingMetrics.drainBatches(flagged, "append", "graft_rt") { batch =>
       val b = batch.persist()
       try {
         b.filter(col("keep")).drop("keep")
@@ -46,12 +44,6 @@ object StreamRouter {
           .write.mode("append").parquet(quarDir)
       } finally b.unpersist()
     }
-    val q = flagged.writeStream
-      .foreachBatch(route)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
 
     // explicit schema: an all-keep or all-quarantine corpus leaves one sink
     // empty, and schema inference on an empty dir throws

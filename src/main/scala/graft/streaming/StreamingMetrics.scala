@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.TempDirs
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Structured Streaming twins of the batch change-log metrics.
@@ -14,10 +16,22 @@ import org.apache.spark.sql.types._
   * tumbling windows replace the integer-division bucketing, and state lives
   * in the checkpointed state store instead of ad-hoc driver futures.
   *
-  * [[hourlyVolumeStreaming]] executes the stream synchronously over the
-  * static testdata (memory sink, available-now semantics) and returns the
-  * same relation the batch query produces, so the DuckDB oracle for
-  * `q_volume_hourly` verifies the streaming engine end-to-end.
+  * Every catalog stream runs BOUNDED over the static testdata and returns
+  * a batch frame that a DuckDB oracle checks, so each runs one of three
+  * drains, chosen by its sink:
+  *  - [[drainToMemory]]: a memory sink drained by `processAllAvailable`,
+  *    read back with `spark.table` — the oracle harness for complete-mode
+  *    aggregations (it holds every group on the driver);
+  *  - [[drainToParquet]]: an AvailableNow append into a fresh scratch
+  *    parquet sink — the production shape of the watermarked twins,
+  *    read back with [[graft.Tables.parquet]];
+  *  - [[drainBatches]]: an AvailableNow `foreachBatch` — Update-mode
+  *    changelogs (no native file sink takes update output) and
+  *    multi-sink routing.
+  * The caller wraps the drain in [[withStatePartitions]] or
+  * [[withStatePartitionsNoFlush]], which pin the state shards (and the
+  * no-data batch) for the drain, and builds the read-back after the
+  * wrapper returns.
   */
 object StreamingMetrics {
 
@@ -38,15 +52,7 @@ object StreamingMetrics {
       .groupBy(col("contract_address"), window(col("ts_t"), "1 hour"))
       .agg(sum(col("value").cast(DecimalType(25, 2))).as("dvolume"))
 
-    withStatePartitions(spark) {
-      val q = stream.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(tableName)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
+    withStatePartitions(spark) { drainToMemory(stream, tableName, "complete") }
 
     spark.table(tableName)
       .select(
@@ -98,37 +104,44 @@ object StreamingMetrics {
     * not a session one. */
   val StateShufflePartitions = 4
 
-  /** Run `f` (which must BUILD, START, and DRAIN its streaming query —
-    * the first micro-batch captures the count into the checkpoint, so the
-    * conf must stay pinned through the drain) with the session's
-    * shuffle-partition conf at `n`, restoring the prior value after.
+  /** Run `f` (which must START and DRAIN its streaming query — the first
+    * micro-batch captures the count into the checkpoint, so the conf must
+    * stay pinned through the drain) with the session's shuffle-partition
+    * conf at [[StateShufflePartitions]] and any further `confs` set,
+    * restoring the prior values after.
     * Batch plans built after this returns are unaffected. The session
     * conf is shared state, so pin-run-restore is serialized PER SESSION
-    * (same discipline as [[StatefulBalances]]' provider conf) — catalog
-    * runs are sequential anyway; a caller wanting genuinely concurrent
-    * streams gives each its own `spark.newSession()`, whose conf (and
-    * lock) is independent, so independent sessions never block each
-    * other here. */
+    * ([[withSessionConfs]]) — catalog runs are sequential anyway; a
+    * caller wanting genuinely concurrent streams gives each its own
+    * `spark.newSession()`, whose conf (and lock) is independent, so
+    * independent sessions never block each other here. */
   private[streaming] def withStatePartitions[T](spark: SparkSession,
-      n: Int = StateShufflePartitions)(f: => T): T =
+      confs: Seq[(String, String)] = Nil)(f: => T): T =
     withSessionConfs(spark,
-      Seq("spark.sql.shuffle.partitions" -> n.toString))(f)
+      ("spark.sql.shuffle.partitions" -> StateShufflePartitions.toString) +:
+        confs)(f)
 
   /** Pin-run-restore a set of session confs around a streaming
     * build+start+drain, serialized per session (see [[withStatePartitions]]
     * — this is its generalization; the lock IS the session's SQLConf, the
     * exact object being mutated, unique per session, held by nothing else
-    * in this codebase). A conf unset before the call is restored to unset. */
-  private[streaming] def withSessionConfs[T](spark: SparkSession,
-      confs: Seq[(String, String)])(f: => T): T =
-    spark.sessionState.conf.synchronized {
-      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    * in this codebase). A conf unset before the call is restored to unset,
+    * also when `f` throws. "Unset" is read from the session's settings,
+    * not from `spark.conf.getOption`, which answers a registered conf's
+    * default for an unset key. */
+  private[graft] def withSessionConfs[T](spark: SparkSession,
+      confs: Seq[(String, String)])(f: => T): T = {
+    val sql = spark.sessionState.conf
+    sql.synchronized {
+      val prev = confs.map { case (k, _) =>
+        k -> Option.when(sql.contains(k))(sql.getConfString(k)) }
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
       try f finally prev.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)
       }
     }
+  }
 
   /** State shards + NO no-data micro-batch, for bounded drains whose
     * DECLARED OUTPUT is complete after the data batch: inner and semi
@@ -148,10 +161,47 @@ object StreamingMetrics {
     * (outer/anti joins, append-mode windowed aggregations): their final
     * rows emit IN the no-data batch and would be silently withheld. */
   private[streaming] def withStatePartitionsNoFlush[T](
-      spark: SparkSession, n: Int = StateShufflePartitions)(f: => T): T =
-    withSessionConfs(spark, Seq(
-      "spark.sql.shuffle.partitions" -> n.toString,
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))(f)
+      spark: SparkSession)(f: => T): T =
+    withStatePartitions(spark,
+      Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))(f)
+
+  /** Start `df` into the memory table `name` in output `mode` and drain
+    * everything available; read the result back with `spark.table(name)`. */
+  private[streaming] def drainToMemory(df: DataFrame, name: String,
+      mode: String): Unit = {
+    val q = df.writeStream.outputMode(mode).format("memory")
+      .queryName(name).start()
+    try q.processAllAvailable()
+    finally q.stop()
+  }
+
+  /** AvailableNow append of `df` into the parquet sink `sink`, checkpointed
+    * at `ckpt`; returns `sink`. */
+  private[streaming] def drainToParquet(df: DataFrame, sink: String,
+      ckpt: String): String = {
+    df.writeStream.outputMode("append").format("parquet")
+      .option("path", sink).option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    sink
+  }
+
+  /** [[drainToParquet]] into a fresh scratch pair `<prefix>_sink` /
+    * `<prefix>_ckpt` (fresh dirs make each run deterministic and
+    * re-runnable); returns the sink path. */
+  private[streaming] def drainToParquet(df: DataFrame,
+      prefix: String): String =
+    drainToParquet(df, TempDirs.scratch(s"${prefix}_sink"),
+      TempDirs.scratch(s"${prefix}_ckpt"))
+
+  /** AvailableNow drain of `df` in output `mode` through `write`, called
+    * once per micro-batch, checkpointed at a fresh scratch
+    * `<prefix>_ckpt`. */
+  private[streaming] def drainBatches(df: DataFrame, mode: String,
+      prefix: String)(write: DataFrame => Unit): Unit =
+    df.writeStream.outputMode(mode)
+      .foreachBatch((batch: DataFrame, _: Long) => write(batch))
+      .option("checkpointLocation", TempDirs.scratch(s"${prefix}_ckpt"))
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
 
   /** Run [[hourlyVolumeBounded]] over the static testdata into a PARQUET
     * sink (AvailableNow trigger) and return the sink's contents. Windows
@@ -161,15 +211,9 @@ object StreamingMetrics {
   def runHourlyVolumeBounded(spark: SparkSession, sfDir: String,
       outDir: String, checkpointDir: String): DataFrame = {
     withStatePartitions(spark) {
-      val q = hourlyVolumeBounded(graft.Tables.eventsStream(spark, sfDir))
-        .writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drainToParquet(
+        hourlyVolumeBounded(graft.Tables.eventsStream(spark, sfDir)),
+        outDir, checkpointDir)
     }
     graft.Tables.parquet(spark, outDir).orderBy("contract_address", "t")
   }
@@ -184,8 +228,7 @@ object StreamingMetrics {
     * deployment would emit later are exactly the rows withheld. */
   def streamBoundedHourly(spark: SparkSession, sfDir: String): DataFrame =
     runHourlyVolumeBounded(spark, sfDir,
-      graft.util.TempDirs.scratch("graft_hvb_sink"),
-      graft.util.TempDirs.scratch("graft_hvb_ckpt"))
+      TempDirs.scratch("graft_hvb_sink"), TempDirs.scratch("graft_hvb_ckpt"))
 
   /** PRODUCTION shape of the hourly top-K leaderboard: the per-(window,
     * token) volume/count aggregate streams with watermark + append into a
@@ -212,20 +255,9 @@ object StreamingMetrics {
     * lateness) — the DuckDB oracle states that predicate verbatim on the
     * batch leaderboard. */
   def streamBoundedTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    val outDir =
-      graft.util.TempDirs.scratch("graft_topk_sink")
-    val ckpt =
-      graft.util.TempDirs.scratch("graft_topk_ckpt")
-    withStatePartitions(spark) {
-      val q = topTokensBounded(graft.Tables.eventsStream(spark, sfDir))
-        .writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val outDir = withStatePartitions(spark) {
+      drainToParquet(topTokensBounded(graft.Tables.eventsStream(spark, sfDir)),
+        "graft_topk")
     }
     val w = org.apache.spark.sql.expressions.Window.partitionBy("t")
       .orderBy(col("dvol").desc, col("token").asc)
@@ -261,18 +293,9 @@ object StreamingMetrics {
   /** Catalog form of [[sessionVolumeBounded]] over the events file-stream:
     * parquet sink, AvailableNow drain, fresh dirs per invocation. */
   def streamBoundedSessions(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = graft.util.TempDirs.scratch("graft_svb_sink")
-    val ckpt = graft.util.TempDirs.scratch("graft_svb_ckpt")
-    withStatePartitions(spark) {
-      val q = sessionVolumeBounded(graft.Tables.eventsStream(spark, sfDir))
-        .writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val out = withStatePartitions(spark) {
+      drainToParquet(sessionVolumeBounded(
+        graft.Tables.eventsStream(spark, sfDir)), "graft_svb")
     }
     graft.Tables.parquet(spark, out).orderBy("contract_address", "s_start")
   }
@@ -302,18 +325,9 @@ object StreamingMetrics {
   /** Catalog form of [[slidingVolumeBounded]] over the events file-stream:
     * parquet sink, AvailableNow drain, fresh dirs per invocation. */
   def streamBoundedSliding(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = graft.util.TempDirs.scratch("graft_slb_sink")
-    val ckpt = graft.util.TempDirs.scratch("graft_slb_ckpt")
-    withStatePartitions(spark) {
-      val q = slidingVolumeBounded(graft.Tables.eventsStream(spark, sfDir))
-        .writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val out = withStatePartitions(spark) {
+      drainToParquet(slidingVolumeBounded(
+        graft.Tables.eventsStream(spark, sfDir)), "graft_slb")
     }
     graft.Tables.parquet(spark, out).orderBy("contract_address", "w_start")
   }
@@ -331,15 +345,7 @@ object StreamingMetrics {
       .agg(sum(col("value").cast(DecimalType(25, 2))).as("dvolume"),
         count(lit(1)).as("n"))
 
-    withStatePartitions(spark) {
-      val q = stream.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(tableName)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
+    withStatePartitions(spark) { drainToMemory(stream, tableName, "complete") }
 
     spark.table(tableName)
       .select(col("contract_address"),
@@ -364,15 +370,7 @@ object StreamingMetrics {
       .agg(sum(col("value").cast(DecimalType(25, 2))).as("dvolume"),
         count(lit(1)).as("n"))
 
-    withStatePartitions(spark) {
-      val q = stream.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(tableName)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
+    withStatePartitions(spark) { drainToMemory(stream, tableName, "complete") }
 
     spark.table(tableName)
       .select(col("contract_address"),
@@ -397,28 +395,13 @@ object StreamingMetrics {
     * window. */
   def streamDappHourly(spark: SparkSession, sfDir: String): DataFrame = {
     val tableName = "graft_stream_dapp_hourly"
-    val ev = graft.Tables.eventsStream(spark, sfDir)
-      .withColumn("t_sec", col("ts_sec"))
-    // both transfer legs, same derivation as Tables.transfers
-    val legs = ev
-      .select(col("t_sec"), col("user_id").cast("string").as("address"))
-      .unionByName(ev.select(col("t_sec"),
-        ((col("user_id") * 7 + col("event_id")) % 1000).cast("string")
-          .as("address")))
-    val reg = graft.Tables.dapps(spark).select(col("dapp_id"),
-      explode(col("addresses")).as("address"))
-    val enriched = legs.join(broadcast(reg), Seq("address"))
+    val enriched = dappLegs(spark, graft.Tables.eventsStream(spark, sfDir)
+        .withColumn("t_sec", col("ts_sec")), "t_sec")
       .groupBy(graft.ops.Num.hourBucket(col("t_sec")).as("t"))
       .agg(collect_set(col("dapp_id")).as("dapps"),
         count(lit(1)).as("n_interactions"))
     withStatePartitions(spark) {
-      val q = enriched.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(tableName)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+      drainToMemory(enriched, tableName, "complete")
     }
     spark.table(tableName)
       .select(col("t"), size(col("dapps")).cast("long").as("n_dapps"),
@@ -439,16 +422,8 @@ object StreamingMetrics {
     * event-time ms − lateness). */
   def dappHourlyBounded(spark: SparkSession, sfDir: String,
       lateness: String = "10 minutes"): DataFrame = {
-    val ev = graft.Tables.eventsStream(spark, sfDir)
-      .withWatermark("ts_t", lateness)
-    val legs = ev
-      .select(col("ts_t"), col("user_id").cast("string").as("address"))
-      .unionByName(ev.select(col("ts_t"),
-        ((col("user_id") * 7 + col("event_id")) % 1000).cast("string")
-          .as("address")))
-    val reg = graft.Tables.dapps(spark).select(col("dapp_id"),
-      explode(col("addresses")).as("address"))
-    legs.join(broadcast(reg), Seq("address"))
+    dappLegs(spark, graft.Tables.eventsStream(spark, sfDir)
+        .withWatermark("ts_t", lateness), "ts_t")
       .groupBy(window(col("ts_t"), "1 hour"))
       .agg(collect_set(col("dapp_id")).as("dapps"),
         count(lit(1)).as("n_interactions"))
@@ -457,21 +432,26 @@ object StreamingMetrics {
         col("n_interactions"))
   }
 
+  /** Both transfer legs of the events stream `ev` (same derivation as
+    * [[graft.Tables.transfers]]), each with its `time` column, joined to
+    * the broadcast dapp registry: one row per (leg, dapp) membership. */
+  private def dappLegs(spark: SparkSession, ev: DataFrame,
+      time: String): DataFrame = {
+    val legs = ev
+      .select(col(time), col("user_id").cast("string").as("address"))
+      .unionByName(ev.select(col(time),
+        ((col("user_id") * 7 + col("event_id")) % 1000).cast("string")
+          .as("address")))
+    val reg = graft.Tables.dapps(spark).select(col("dapp_id"),
+      explode(col("addresses")).as("address"))
+    legs.join(broadcast(reg), Seq("address"))
+  }
+
   /** Catalog form of [[dappHourlyBounded]]: parquet sink, AvailableNow
     * drain, fresh dirs per invocation. */
   def streamBoundedEnrich(spark: SparkSession, sfDir: String): DataFrame = {
-    val out = graft.util.TempDirs.scratch("graft_enb_sink")
-    val ckpt = graft.util.TempDirs.scratch("graft_enb_ckpt")
-    withStatePartitions(spark) {
-      val q = dappHourlyBounded(spark, sfDir)
-        .writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val out = withStatePartitions(spark) {
+      drainToParquet(dappHourlyBounded(spark, sfDir), "graft_enb")
     }
     graft.Tables.parquet(spark, out).orderBy("t")
   }
@@ -507,13 +487,7 @@ object StreamingMetrics {
     // dedup admits first-seen rows in the data batch (the watermark only
     // evicts state); the no-data batch adds no output — skip it
     withStatePartitionsNoFlush(spark) {
-      val q = deduped.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(tableName)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+      drainToMemory(deduped, tableName, "append")
     }
 
     spark.table(tableName)
@@ -531,7 +505,16 @@ object StreamingMetrics {
     * end-to-end. */
   def streamingCdcState(spark: SparkSession, sfDir: String): DataFrame = {
     val tableName = "graft_stream_cdc"
-    val stream = graft.Tables.eventsStream(spark, sfDir)
+    withStatePartitions(spark) {
+      drainToMemory(cdcState(spark, sfDir), tableName, "complete")
+    }
+    liveCdcRows(spark.table(tableName))
+  }
+
+  /** The CDC state aggregate over the events stream: per (token, wallet),
+    * the last op in version order and the op count. */
+  private def cdcState(spark: SparkSession, sfDir: String): DataFrame =
+    graft.Tables.eventsStream(spark, sfDir)
       .select(col("event_type").as("contract_address"),
         col("user_id").cast("string").as("wallet"),
         col("event_id").as("version"), col("value"),
@@ -540,23 +523,15 @@ object StreamingMetrics {
       .agg(max(struct(col("version"), col("op"), col("value"))).as("last"),
         count(lit(1)).as("n_ops"))
 
-    withStatePartitions(spark) {
-      val q = stream.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(tableName)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-
-    spark.table(tableName)
+  /** The CDC read-out: tombstoned keys dropped, last version and value
+    * per live key. */
+  private def liveCdcRows(state: DataFrame): DataFrame =
+    state
       .filter(col("last.op") =!= "D")
       .select(col("contract_address"), col("wallet"),
         col("last.version").as("last_version"),
         col("last.value").as("last_value"), col("n_ops"))
       .orderBy("contract_address", "wallet")
-  }
 
   /** PRODUCTION-sink form of [[streamingCdcState]]: the Update-mode CDC
     * aggregation streams into a parquet CHANGELOG via foreachBatch (update
@@ -566,99 +541,85 @@ object StreamingMetrics {
     * key (max n_ops — strictly increasing per key) and drops tombstones,
     * exactly like the memory-sink drain; same batch q_cdc_apply oracle. */
   def streamingCdcChangelog(spark: SparkSession, sfDir: String): DataFrame = {
-    val out =
-      graft.util.TempDirs.scratch("graft_cdcchg_sink")
-    val ckpt =
-      graft.util.TempDirs.scratch("graft_cdcchg_ckpt")
-    val stream = graft.Tables.eventsStream(spark, sfDir)
-      .select(col("event_type").as("contract_address"),
-        col("user_id").cast("string").as("wallet"),
-        col("event_id").as("version"), col("value"),
-        when(col("event_id") % 10 === 0, "D").otherwise("U").as("op"))
-      .groupBy("contract_address", "wallet")
-      .agg(max(struct(col("version"), col("op"), col("value"))).as("last"),
-        count(lit(1)).as("n_ops"))
+    val out = TempDirs.scratch("graft_cdcchg_sink")
     withStatePartitions(spark) {
-      val q = stream.writeStream
-        .outputMode("update")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drainBatches(cdcState(spark, sfDir), "update", "graft_cdcchg")(
+        _.write.mode("append").parquet(out))
     }
-    graft.Tables.parquet(spark, out)
+    liveCdcRows(graft.Tables.parquet(spark, out)
       .groupBy("contract_address", "wallet")
       .agg(max(struct(col("n_ops"), col("last"))).as("m"))
       .select(col("contract_address"), col("wallet"),
-        col("m.last").as("last"), col("m.n_ops").as("n_ops"))
-      .filter(col("last.op") =!= "D")
-      .select(col("contract_address"), col("wallet"),
-        col("last.version").as("last_version"),
-        col("last.value").as("last_value"), col("n_ops"))
-      .orderBy("contract_address", "wallet")
+        col("m.last").as("last"), col("m.n_ops").as("n_ops")))
   }
 
-  /** LEFT OUTER stream-stream interval join, catalog form: transfers
-    * NULL-pad when no price tick landed in their preceding hour
-    * ([[StreamJoins.transfersWithRecentPricesOuter]]); matched and
-    * unmatched rows roll up per (token, hour) from the append parquet
-    * sink.
+  /** Event type of the far-future sentinel rows: a token no real row
+    * carries. */
+  private val Sentinel = "__sentinel__"
+
+  /** The interval joins' two sides over the events stream, as
+    * `(transfers, ticks)`: every 5th event is a price tick
+    * `(p_contract, price, p_ts)`, the rest are transfers
+    * `(contract_address, value, t_ts)`, with the event id as `p_id`/`t_id`
+    * when `ids`. Without `sentinel` each side reads its own file source.
     *
-    * Determinism: append-mode outer rows become emittable only when the
-    * watermark passes the last instant a match could arrive, so each
-    * file-stream side is UNIONed with a one-row far-future sentinel
-    * (2100-01-01, from a memory source; a token no real row carries).
-    * After the AvailableNow drain the watermark exceeds every real
-    * event's horizon, the no-data batch flushes all withheld NULL rows,
-    * and the emitted set is EXACTLY the batch LEFT interval join — which
-    * is the oracle, stated on epoch microseconds. Sentinels join nothing
-    * and are dropped on read-out. */
-  def streamOuterIntervalJoin(spark: SparkSession, sfDir: String): DataFrame = {
+    * With `sentinel`, both sides read one file source and each is UNIONed
+    * with a one-row far-future sentinel (2100-01-01, from a memory source;
+    * ids −1/−2). Append-mode outer rows become emittable only when the
+    * watermark passes the last instant a match could arrive; after the
+    * AvailableNow drain the sentinels have pushed the watermark past every
+    * real event's horizon, the no-data batch flushes all withheld NULL
+    * rows, and the emitted set is EXACTLY the batch outer interval join —
+    * which is the oracle, stated on epoch microseconds. Sentinels join
+    * nothing and are dropped on read-out. */
+  private def joinSides(spark: SparkSession, sfDir: String,
+      sentinel: Boolean, ids: Boolean = false): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val sentinelUs = 4102444800L * 1000000L // 2100-01-01 epoch micros
-    val outDir =
-      graft.util.TempDirs.scratch("graft_soj_sink")
-    val ckpt =
-      graft.util.TempDirs.scratch("graft_soj_ckpt")
-    val ev = graft.Tables.eventsStream(spark, sfDir)
-    val tickSent = MemoryStream[Long]
-    tickSent.addData(sentinelUs)
-    val txSent = MemoryStream[Long]
-    txSent.addData(sentinelUs)
-    val ticks = ev.filter(col("event_id") % 5 === 0)
-      .select(col("event_type").as("p_contract"),
-        col("value").as("price"), col("ts_t").as("p_ts"))
-      .unionByName(tickSent.toDF().select(
-        lit("__sentinel__").as("p_contract"), lit(0.0).as("price"),
-        timestamp_micros(col("value")).as("p_ts")))
-    val txs = ev.filter(col("event_id") % 5 =!= 0)
-      .select(col("event_type").as("contract_address"),
-        col("value"), col("ts_t").as("t_ts"))
-      .unionByName(txSent.toDF().select(
-        lit("__sentinel__").as("contract_address"), lit(0.0).as("value"),
-        timestamp_micros(col("value")).as("t_ts")))
-    withStatePartitions(spark) {
-      val q = StreamJoins.transfersWithRecentPricesOuter(txs, ticks, 3600L)
-        .writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    def withId(cols: Column*)(id: Column): Seq[Column] =
+      if (ids) cols :+ id else cols
+    def events() = graft.Tables.eventsStream(spark, sfDir)
+    val (tickEv, txEv) =
+      if (sentinel) { val ev = events(); (ev, ev) } else (events(), events())
+    val ticks = tickEv.filter(col("event_id") % 5 === 0)
+      .select(withId(col("event_type").as("p_contract"),
+        col("value").as("price"), col("ts_t").as("p_ts"))(
+        col("event_id").as("p_id")): _*)
+    val txs = txEv.filter(col("event_id") % 5 =!= 0)
+      .select(withId(col("event_type").as("contract_address"),
+        col("value"), col("ts_t").as("t_ts"))(col("event_id").as("t_id")): _*)
+    def closed(side: DataFrame, id: Long): DataFrame = {
+      val s = MemoryStream[Long]
+      s.addData(4102444800L * 1000000L) // 2100-01-01 epoch micros
+      // in the side's column order: token, value, time and, with ids, id
+      val row = Seq(lit(Sentinel), lit(0.0), timestamp_micros(col("value")),
+        lit(id))
+      side.unionByName(s.toDF().select(side.columns.toSeq.zip(row)
+        .map { case (name, c) => c.as(name) }: _*))
     }
-    graft.Tables.parquet(spark, outDir)
-      .filter(col("contract_address") =!= "__sentinel__")
-      .groupBy(col("contract_address"),
-        (expr("unix_micros(t_ts) div 3600000000") * 3600)
-          .cast("long").as("t"))
+    if (sentinel) (closed(txs, -2L), closed(ticks, -1L)) else (txs, ticks)
+  }
+
+  /** The read-out's hour key `t`: epoch seconds of the hour holding the
+    * event-time expression `ts`. */
+  private def hourOf(ts: String): Column =
+    (expr(s"unix_micros($ts) div 3600000000") * 3600).cast("long").as("t")
+
+  /** LEFT OUTER stream-stream interval join, catalog form: transfers
+    * NULL-pad when no price tick landed in their preceding hour
+    * ([[StreamJoins.intervalJoin]] `left_outer`, closed by the sentinels
+    * of [[joinSides]]); matched and unmatched rows roll up per (token,
+    * hour) from the append parquet sink. */
+  def streamOuterIntervalJoin(spark: SparkSession, sfDir: String): DataFrame = {
+    val (txs, ticks) = joinSides(spark, sfDir, sentinel = true)
+    val out = withStatePartitions(spark) {
+      drainToParquet(StreamJoins.intervalJoin(txs, ticks, "left_outer"),
+        "graft_soj")
+    }
+    graft.Tables.parquet(spark, out)
+      .filter(col("contract_address") =!= Sentinel)
+      .groupBy(col("contract_address"), hourOf("t_ts"))
       .agg(sum(when(col("price").isNotNull, 1L).otherwise(0L)).as("n_pairs"),
         sum(when(col("price").isNull, 1L).otherwise(0L)).as("n_unmatched"),
         graft.ops.Num.dsum(col("price")).as("tick_volume"),
@@ -672,60 +633,26 @@ object StreamingMetrics {
     *
     * Same sentinel-drain determinism recipe as
     * [[streamOuterIntervalJoin]]. The price side's exploded bucket copies
-    * make the raw sink a superset ([[StreamJoins
-    * .transfersWithRecentPricesFullOuter]]); the read-out compacts
-    * exactly — NULL-padded price rows are dropped when their `p_id` also
-    * appears matched and deduped by `p_id` otherwise (all copies carry
-    * identical values, so the dedup is deterministic). The compacted set
-    * is EXACTLY the batch FULL interval join, which is the oracle. */
+    * make the raw sink a superset ([[StreamJoins.intervalJoin]]
+    * `full_outer`); the read-out compacts exactly — NULL-padded price
+    * rows are dropped when their `p_id` also appears matched and deduped
+    * by `p_id` otherwise (all copies carry identical values, so the dedup
+    * is deterministic). The compacted set is EXACTLY the batch FULL
+    * interval join, which is the oracle. */
   def streamFullOuterIntervalJoin(spark: SparkSession,
       sfDir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val sentinelUs = 4102444800L * 1000000L // 2100-01-01 epoch micros
-    val outDir =
-      graft.util.TempDirs.scratch("graft_sfoj_sink")
-    val ckpt =
-      graft.util.TempDirs.scratch("graft_sfoj_ckpt")
-    val ev = graft.Tables.eventsStream(spark, sfDir)
-    val tickSent = MemoryStream[Long]
-    tickSent.addData(sentinelUs)
-    val txSent = MemoryStream[Long]
-    txSent.addData(sentinelUs)
-    val ticks = ev.filter(col("event_id") % 5 === 0)
-      .select(col("event_type").as("p_contract"),
-        col("value").as("price"), col("ts_t").as("p_ts"),
-        col("event_id").as("p_id"))
-      .unionByName(tickSent.toDF().select(
-        lit("__sentinel__").as("p_contract"), lit(0.0).as("price"),
-        timestamp_micros(col("value")).as("p_ts"), lit(-1L).as("p_id")))
-    val txs = ev.filter(col("event_id") % 5 =!= 0)
-      .select(col("event_type").as("contract_address"),
-        col("value"), col("ts_t").as("t_ts"), col("event_id").as("t_id"))
-      .unionByName(txSent.toDF().select(
-        lit("__sentinel__").as("contract_address"), lit(0.0).as("value"),
-        timestamp_micros(col("value")).as("t_ts"), lit(-2L).as("t_id")))
-    withStatePartitions(spark) {
-      val q = StreamJoins
-        .transfersWithRecentPricesFullOuter(txs, ticks, 3600L)
-        .writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val (txs, ticks) = joinSides(spark, sfDir, sentinel = true, ids = true)
+    val out = withStatePartitions(spark) {
+      drainToParquet(StreamJoins.intervalJoin(txs, ticks, "full_outer"),
+        "graft_sfoj")
     }
-    val raw = graft.Tables.parquet(spark, outDir)
+    val raw = graft.Tables.parquet(spark, out)
       .filter(coalesce(col("contract_address"), col("p_contract"))
-        =!= "__sentinel__")
+        =!= Sentinel)
     StreamJoins.compactFullOuter(raw)
       .groupBy(
         coalesce(col("contract_address"), col("p_contract")).as("token"),
-        (expr("unix_micros(coalesce(t_ts, p_ts)) div 3600000000") * 3600)
-          .cast("long").as("t"))
+        hourOf("coalesce(t_ts, p_ts)"))
       .agg(
         sum(when(col("t_id").isNotNull && col("p_id").isNotNull, 1L)
           .otherwise(0L)).as("n_pairs"),
@@ -755,15 +682,7 @@ object StreamingMetrics {
       .groupBy(graft.ops.Num.hourBucket(col("t_sec")).as("t"), col("token"))
       .agg(sum(col("value").cast("decimal(25,2)")).as("dvol"),
         count(lit(1)).as("n"))
-    withStatePartitions(spark) {
-      val q = stream.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(tableName)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
+    withStatePartitions(spark) { drainToMemory(stream, tableName, "complete") }
     val w = org.apache.spark.sql.expressions.Window.partitionBy("t")
       .orderBy(col("dvol").desc, col("token").asc)
     spark.table(tableName)
@@ -776,11 +695,11 @@ object StreamingMetrics {
 
   /** STREAM-STREAM interval join, catalog form: price ticks (every 5th
     * event) joined to transfers (the rest) on token + "tick within the
-    * preceding hour of the transfer" via
-    * [[StreamJoins.transfersWithRecentPrices]] — both sides watermarked,
-    * state bounded by the interval horizon. The matched pairs stream
-    * append-mode into a parquet sink (AvailableNow); the per-(token, hour)
-    * pair rollup runs as a batch reporting query over the sink.
+    * preceding hour of the transfer" via [[StreamJoins.intervalJoin]]
+    * `inner` — both sides watermarked, state bounded by the interval
+    * horizon. The matched pairs stream append-mode into a parquet sink
+    * (AvailableNow); the per-(token, hour) pair rollup runs as a batch
+    * reporting query over the sink.
     *
     * Oracle contract: an INNER interval join emits every pair whose two
     * sides coexist in a micro-batch (the watermark only EVICTS state, it
@@ -789,35 +708,14 @@ object StreamingMetrics {
     * interval join, which the DuckDB mirror states directly on epoch
     * microseconds. */
   def streamIntervalJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val outDir =
-      graft.util.TempDirs.scratch("graft_ssj_sink")
-    val ckpt =
-      graft.util.TempDirs.scratch("graft_ssj_ckpt")
+    val (txs, ticks) = joinSides(spark, sfDir, sentinel = false)
     // inner join: every pair emits in the data batch; the no-data batch
     // would only evict state this bounded run discards — skip it
-    withStatePartitionsNoFlush(spark) {
-      val ticks = graft.Tables.eventsStream(spark, sfDir)
-        .filter(col("event_id") % 5 === 0)
-        .select(col("event_type").as("p_contract"),
-          col("value").as("price"), col("ts_t").as("p_ts"))
-      val txs = graft.Tables.eventsStream(spark, sfDir)
-        .filter(col("event_id") % 5 =!= 0)
-        .select(col("event_type").as("contract_address"),
-          col("value"), col("ts_t").as("t_ts"))
-      val q = StreamJoins.transfersWithRecentPrices(txs, ticks, 3600L)
-        .writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val out = withStatePartitionsNoFlush(spark) {
+      drainToParquet(StreamJoins.intervalJoin(txs, ticks, "inner"), "graft_ssj")
     }
-    graft.Tables.parquet(spark, outDir)
-      .groupBy(col("contract_address"),
-        (expr("unix_micros(t_ts) div 3600000000") * 3600)
-          .cast("long").as("t"))
+    graft.Tables.parquet(spark, out)
+      .groupBy(col("contract_address"), hourOf("t_ts"))
       .agg(count(lit(1)).as("n_pairs"),
         graft.ops.Num.dsum(col("price")).as("tick_volume"),
         graft.ops.Num.dsum(col("value")).as("tx_volume"))
@@ -833,32 +731,8 @@ object StreamingMetrics {
     * Output: transfers with NO price tick in the preceding hour, rolled
     * up per (token, hour); oracle = the batch NOT EXISTS. */
   def streamAntiJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val sentinelUs = 4102444800L * 1000000L // 2100-01-01 epoch micros
-    val outDir =
-      graft.util.TempDirs.scratch("graft_saj_sink")
-    val ckpt =
-      graft.util.TempDirs.scratch("graft_saj_ckpt")
-    val ev = graft.Tables.eventsStream(spark, sfDir)
-    val tickSent = MemoryStream[Long]
-    tickSent.addData(sentinelUs)
-    val txSent = MemoryStream[Long]
-    txSent.addData(sentinelUs)
-    val ticks = ev.filter(col("event_id") % 5 === 0)
-      .select(col("event_type").as("p_contract"),
-        col("value").as("price"), col("ts_t").as("p_ts"))
-      .unionByName(tickSent.toDF().select(
-        lit("__sentinel__").as("p_contract"), lit(0.0).as("price"),
-        timestamp_micros(col("value")).as("p_ts")))
-    val txs = ev.filter(col("event_id") % 5 =!= 0)
-      .select(col("event_type").as("contract_address"),
-        col("value"), col("ts_t").as("t_ts"))
-      .unionByName(txSent.toDF().select(
-        lit("__sentinel__").as("contract_address"), lit(0.0).as("value"),
-        timestamp_micros(col("value")).as("t_ts")))
-    withStatePartitions(spark) {
+    val (txs, ticks) = joinSides(spark, sfDir, sentinel = true)
+    val out = withStatePartitions(spark) {
       // the anti set IS the NULL-padded rows: filter in-stream (a filter on
       // the outer join's appended output, batch by batch), so matched pairs
       // never hit the sink — same emitted set, a fraction of the sink
@@ -870,22 +744,12 @@ object StreamingMetrics {
       // filter must NOT move in-stream — it would be pushed below the left
       // side's EventTimeWatermark and the sentinel would stop advancing
       // the watermark (measured: one boundary group withheld at sf0.001).
-      val q = StreamJoins.transfersWithRecentPricesOuter(txs, ticks, 3600L)
-        .filter(col("price").isNull)
-        .writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drainToParquet(StreamJoins.intervalJoin(txs, ticks, "left_outer")
+        .filter(col("price").isNull), "graft_saj")
     }
-    graft.Tables.parquet(spark, outDir)
-      .filter(col("contract_address") =!= "__sentinel__")
-      .groupBy(col("contract_address"),
-        (expr("unix_micros(t_ts) div 3600000000") * 3600)
-          .cast("long").as("t"))
+    graft.Tables.parquet(spark, out)
+      .filter(col("contract_address") =!= Sentinel)
+      .groupBy(col("contract_address"), hourOf("t_ts"))
       .agg(count(lit(1)).as("n_unmatched"),
         graft.ops.Num.dsum(col("value")).as("tx_volume"))
       .orderBy("contract_address", "t")
@@ -900,35 +764,15 @@ object StreamingMetrics {
     * the appended set equals the batch semi join, which the oracle states
     * as an EXISTS on epoch microseconds. */
   def streamSemiJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val outDir =
-      graft.util.TempDirs.scratch("graft_ssemi_sink")
-    val ckpt =
-      graft.util.TempDirs.scratch("graft_ssemi_ckpt")
-    val ticks = graft.Tables.eventsStream(spark, sfDir)
-      .filter(col("event_id") % 5 === 0)
-      .select(col("event_type").as("p_contract"),
-        col("value").as("price"), col("ts_t").as("p_ts"))
-    val txs = graft.Tables.eventsStream(spark, sfDir)
-      .filter(col("event_id") % 5 =!= 0)
-      .select(col("event_type").as("contract_address"),
-        col("value"), col("ts_t").as("t_ts"))
+    val (txs, ticks) = joinSides(spark, sfDir, sentinel = false)
     // semi join: matched left rows emit on match, in the data batch; the
     // no-data batch would only evict discarded state — skip it
-    withStatePartitionsNoFlush(spark) {
-      val q = StreamJoins.transfersWithRecentPricesSemi(txs, ticks, 3600L)
-        .writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val out = withStatePartitionsNoFlush(spark) {
+      drainToParquet(StreamJoins.intervalJoin(txs, ticks, "left_semi"),
+        "graft_ssemi")
     }
-    graft.Tables.parquet(spark, outDir)
-      .groupBy(col("contract_address"),
-        (expr("unix_micros(t_ts) div 3600000000") * 3600)
-          .cast("long").as("t"))
+    graft.Tables.parquet(spark, out)
+      .groupBy(col("contract_address"), hourOf("t_ts"))
       .agg(count(lit(1)).as("n_matched"),
         graft.ops.Num.dsum(col("value")).as("tx_volume"))
       .orderBy("contract_address", "t")

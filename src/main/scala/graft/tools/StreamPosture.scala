@@ -75,8 +75,7 @@ object StreamPosture {
           "event_id LONG, event_type STRING, value DOUBLE, ts_t TIMESTAMP")
           .select(col("event_type").as("contract_address"),
             col("value"), col("ts_t").as("t_ts"))
-        graft.streaming.StreamJoins
-          .transfersWithRecentPrices(txs, ticks, 3600L)
+        graft.streaming.StreamJoins.intervalJoin(txs, ticks, "inner")
       case "fullouter" =>
         // the stream-stream FULL OUTER interval-join shape
         // (q_stream_full_outer_join): same (token, bucket)-keyed state as
@@ -96,8 +95,7 @@ object StreamPosture {
           .select(col("event_id").as("t_id"),
             col("event_type").as("contract_address"),
             col("value"), col("ts_t").as("t_ts"))
-        graft.streaming.StreamJoins
-          .transfersWithRecentPricesFullOuter(txs, ticks, 3600L)
+        graft.streaming.StreamJoins.intervalJoin(txs, ticks, "full_outer")
       case _ =>
         val stage = stageShards(evAll.drop("event_id"))
         readShards(stage, "event_type STRING, value DOUBLE, ts_t TIMESTAMP")
@@ -124,7 +122,7 @@ object StreamPosture {
       if (states.isEmpty) 0L else states.map(_.numRowsTotal).max
     val dropped = states.map(_.numRowsDroppedByWatermark).sum
     val inputRows = progs.map(_.numInputRows).sum
-    val outRows = spark.read.parquet(sink).count()
+    val outRows = graft.Tables.parquet(spark, sink).count()
     println(f"""{"dir":"$sfDir","mode":"$mode","shards":$shards,""" +
       f""""batches":${progs.count(_.numInputRows > 0)},""" +
       f""""input_rows":$inputRows,"max_state_rows":$maxState,""" +

@@ -5,13 +5,16 @@ import java.nio.file.{Files, Path}
 /** Every temp directory a graft JVM creates, and when it goes away.
   *
   *  - [[scratch]]: per-invocation SCRATCH (bounded-stream sinks and
-  *    checkpoints). The catalog's ~25 bounded streaming runners each
-  *    create a fresh sink + checkpoint per invocation (fresh dirs are what
-  *    make the runs deterministic and re-runnable); nothing reads them
-  *    again once the caller has materialized the returned frame. The
-  *    harness (Bench/Verify) calls [[sweep]] only AFTER the query's result
-  *    is materialized (counted or written) — the returned DataFrames read
-  *    the sink dir lazily, so sweeping early would yield empty reads.
+  *    checkpoints). 13 of the catalog's 21 streaming runners (the 10
+  *    parquet-sink drains and the 3 `foreachBatch` drains of
+  *    [[graft.streaming.StreamingMetrics]]; the 8 memory-sink drains make
+  *    none) create a fresh sink + checkpoint per invocation (fresh dirs
+  *    are what make the runs deterministic and re-runnable); nothing
+  *    reads them again once the caller has materialized the returned
+  *    frame. The harness (Bench/Verify) calls [[sweep]] only AFTER the
+  *    query's result is materialized (counted or written) — the returned
+  *    DataFrames read the sink dir lazily, so sweeping early would yield
+  *    empty reads.
   *    Contract mirrors [[graft.ops.QueryLocal]].
   *  - [[staging]]: source staging dirs and the test warehouse. Their frames may be re-scanned later (a
   *    [[graft.ops.Shared]] rebuild re-reads its whole lineage), so they

@@ -139,6 +139,22 @@ class LineageCutObserveSpec extends AnyFunSuite {
     assert(checkpointFile(cut).exists(_.contains(ckptDir.toString)))
   }
 
+  test("reliable branch: a plain cut launches a bare checkpoint's jobs") {
+    ckptDir
+    // two exchanges, so a second computation of the frame would show
+    def frame() = (1 to 600).toDF("x").repartition(4)
+      .groupBy((col("x") % 7).as("k")).agg(count(lit(1)).as("n"))
+      .repartition(3)
+    val bare = GraftSpark.jobsDuring(frame().checkpoint(true)).size
+    var cut: DataFrame = null
+    val plain =
+      GraftSpark.jobsDuring { cut = cutReliable(frame(), Nil)._1 }.size
+    assert(plain == bare)
+    assert(checkpointFile(cut).exists(_.contains(ckptDir.toString)))
+    val rows = cut.as[(Int, Long)].collect().sorted.toSeq
+    assert(rows == frame().as[(Int, Long)].collect().sorted.toSeq)
+  }
+
   test("reliable branch with the breaker tripped: plain cut, no metrics") {
     val df = (1 to 40).toDF("x")
     val saved = ops.LineageCut.observeCooldownNanos

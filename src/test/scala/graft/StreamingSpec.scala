@@ -145,11 +145,12 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val tIn = MemoryStream[(String, Double, Long)] // (token, value, sec)
     val pIn = MemoryStream[(String, Double, Long)] // (token, price, sec)
-    val joined = graft.streaming.StreamJoins.transfersWithRecentPrices(
+    val joined = graft.streaming.StreamJoins.intervalJoin(
       tIn.toDS().toDF("contract_address", "value", "sec")
         .withColumn("t_ts", timestamp_seconds(col("sec"))).drop("sec"),
       pIn.toDS().toDF("p_contract", "price", "sec")
-        .withColumn("p_ts", timestamp_seconds(col("sec"))).drop("sec"))
+        .withColumn("p_ts", timestamp_seconds(col("sec"))).drop("sec"),
+      "inner")
     val q = joined.writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("graft_ssjoin_test").start()
     try {
@@ -172,11 +173,12 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val tIn = MemoryStream[(String, Double, Long)]
     val pIn = MemoryStream[(String, Double, Long)]
-    val semi = graft.streaming.StreamJoins.transfersWithRecentPricesSemi(
+    val semi = graft.streaming.StreamJoins.intervalJoin(
       tIn.toDS().toDF("contract_address", "value", "sec")
         .withColumn("t_ts", timestamp_seconds(col("sec"))).drop("sec"),
       pIn.toDS().toDF("p_contract", "price", "sec")
-        .withColumn("p_ts", timestamp_seconds(col("sec"))).drop("sec"))
+        .withColumn("p_ts", timestamp_seconds(col("sec"))).drop("sec"),
+      "left_semi")
     val q = semi.writeStream.outputMode(OutputMode.Append)
       .format("memory").queryName("graft_ssemi_test").start()
     try {
@@ -510,12 +512,12 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val tx = MemoryStream[(String, Long, Double)] // (token, sec, value)
     val pr = MemoryStream[(String, Long, Double)] // (token, sec, price)
-    val joined = graft.streaming.StreamJoins.transfersWithRecentPricesOuter(
+    val joined = graft.streaming.StreamJoins.intervalJoin(
       tx.toDS().toDF("contract_address", "sec", "value")
         .withColumn("t_ts", timestamp_seconds(col("sec"))).drop("sec"),
       pr.toDS().toDF("p_contract", "sec", "price")
         .withColumn("p_ts", timestamp_seconds(col("sec"))).drop("sec"),
-      3600L)
+      "left_outer")
     val out = util.TempDirs.staging("graft_soj_out").toString
     val ckpt = util.TempDirs.staging("graft_soj_ck").toString
     val q = joined.writeStream.outputMode(OutputMode.Append)
@@ -552,12 +554,12 @@ class StreamingSpec extends AnyFunSuite {
     val tx = MemoryStream[(String, Long, Double, Long)] // (token, sec, value, id)
     val pr = MemoryStream[(String, Long, Double, Long)] // (token, sec, price, id)
     val joined =
-      graft.streaming.StreamJoins.transfersWithRecentPricesFullOuter(
+      graft.streaming.StreamJoins.intervalJoin(
         tx.toDS().toDF("contract_address", "sec", "value", "t_id")
           .withColumn("t_ts", timestamp_seconds(col("sec"))).drop("sec"),
         pr.toDS().toDF("p_contract", "sec", "price", "p_id")
           .withColumn("p_ts", timestamp_seconds(col("sec"))).drop("sec"),
-        3600L)
+        "full_outer")
     val out = util.TempDirs.staging("graft_sfoj_out").toString
     val ckpt = util.TempDirs.staging("graft_sfoj_ck").toString
     val q = joined.writeStream.outputMode(OutputMode.Append)
@@ -620,6 +622,62 @@ class StreamingSpec extends AnyFunSuite {
         graft.ops.Num.dsum(col("value")).as("tx_volume"))
     assert(got.count() > 0)
     assert(got.exceptAll(batch).isEmpty && batch.exceptAll(got).isEmpty)
+  }
+
+  test("withSessionConfs restores a set conf and re-unsets an unset one " +
+      "when the body throws") {
+    // set by Session.local, and a registered conf left at its default
+    val setKey = "spark.sql.shuffle.partitions"
+    val unsetKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.unset(unsetKey)
+    val before = spark.conf.get(setKey)
+    val e = intercept[IllegalStateException] {
+      StreamingMetrics.withSessionConfs(spark,
+          Seq(setKey -> "7", unsetKey -> "false")) {
+        assert(spark.conf.get(setKey) == "7")
+        assert(spark.conf.get(unsetKey) == "false")
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    assert(spark.conf.get(setKey) == before)
+    assert(!spark.sessionState.conf.contains(unsetKey))
+  }
+
+  test("streamTokenBalances leaves the state-store provider conf as it " +
+      "found it") {
+    // found unset, and found set to a provider other than RocksDB
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    def explicit =
+      Option.when(spark.sessionState.conf.contains(key))(spark.conf.get(key))
+    def pin(v: Option[String]) =
+      v.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val saved = explicit
+    try for (found <- Seq(None, Some("org.apache.spark.sql.execution" +
+        ".streaming.state.HDFSBackedStateStoreProvider"))) {
+      pin(found)
+      assert(graft.streaming.StatefulBalances
+        .streamTokenBalances(spark, GraftSpark.Sf).count() > 0)
+      assert(explicit == found)
+    } finally pin(saved)
+  }
+
+  test("anti join: the sentinel filter stays on the sink read-out") {
+    // in-stream, the filter would sit below the transfer side's watermark
+    // and the sentinel would stop closing the last group (see
+    // streamAntiJoin): it must reach the sink scan as a pushed filter
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val plan = StreamingMetrics.streamAntiJoin(spark, GraftSpark.Sf)
+      .queryExecution.executedPlan
+    val scans = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case s: FileSourceScanExec => s }
+    assert(scans.size == 1, plan.toString)
+    val scan = scans.head
+    assert(scan.relation.location.rootPaths
+      .exists(_.toString.contains("graft_saj_sink")), scan.toString)
+    assert(scan.metadata("PushedFilters").contains("__sentinel__"),
+      scan.metadata("PushedFilters"))
   }
 
   test("no-flush drains are exactly the dedup, inner-join and semi-join") {
