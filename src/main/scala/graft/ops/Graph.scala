@@ -72,30 +72,24 @@ object LineageCut {
     * algorithms need the count every round for their convergence test, and
     * a tiny frame's per-round cost is all job-scheduling overhead, so one
     * fewer job per round is a real win (alt-star CC runs 3 actions/round
-    * without this, 2 with). On the reliable path the count job is also the
-    * job that fills the cache the checkpoint writer then reads, so nothing
-    * is computed twice. */
+    * without this, 2 with). A read of [[cutObserved]]'s `n`. */
   def cutCounted(df: DataFrame): (DataFrame, Long) = {
     val (out, m) = cutObserved(df, Seq(count(lit(1)).as("n")))
-    // "_rows": the reliable path's mandatory cache-fill count, threaded
-    // through so a metrics timeout there never re-scans the checkpoint
-    val n = m.get("n").orElse(m.get("_rows"))
-      .map(_.asInstanceOf[Long]).getOrElse(out.count())
-    (out, n)
+    (out, m("n").asInstanceOf[Long])
   }
 
   /** Observation breaker. Tripped by one await timeout (polling 2 s per
     * call on a session where metrics never arrive would cost far more
-    * than the saved count jobs) or by three consecutive SLOW (>500 ms)
-    * metric awaits (bus lag pricier than the ~30-60 ms count job this
-    * replaces). Round 12: the trip is a COOLDOWN, not a JVM-wide kill —
-    * on this box the likeliest trip cause is a transient co-tenant
-    * burst, and the r11 shape (disable forever) let one early spike
-    * silently degrade every later iterative query of a 341-query session
-    * to the extra-count-job shape. After [[observeCooldownNanos]] the
-    * breaker re-arms automatically (logged), so a burst costs at most
-    * one 2 s wait per cooldown window and recovery is self-evidencing
-    * in the session log. */
+    * than the saved aggregate jobs) or by three consecutive SLOW
+    * (>500 ms) metric awaits (bus lag pricier than the ~30-60 ms
+    * aggregate job this replaces). Round 12: the trip is a COOLDOWN, not
+    * a JVM-wide kill — on this box the likeliest trip cause is a
+    * transient co-tenant burst, and the r11 shape (disable forever) let
+    * one early spike silently degrade every later iterative query of a
+    * 341-query session to the extra-aggregate-job shape. After
+    * [[observeCooldownNanos]] the breaker re-arms automatically (logged),
+    * so a burst costs at most one 2 s wait per cooldown window and
+    * recovery is self-evidencing in the session log. */
   private[graft] var observeCooldownNanos: Long = 60L * 1000 * 1000 * 1000
   @volatile private var observeDisabledUntil = 0L // 0 = armed
   @volatile private var slowAwaits = 0
@@ -130,17 +124,16 @@ object LineageCut {
     * with fixed submission overhead, made that a real tax at small SF —
     * and one fewer action per round is equally free at cluster scale).
     *
-    * The returned map lacks the caller's metrics when they don't arrive
+    * The returned map always holds every requested key, valued as
+    * `df.agg(metrics)` would value it (so null for a max or sum over zero
+    * rows). When observation is off or its metrics do not arrive
     * (observation listeners ride the async listener bus; a bounded await
-    * covers normal delivery) — callers must fall back to computing their
-    * statistic from the cut frame, which is correct just slower. One
-    * await timeout, or three consecutive >500 ms awaits (bus lag pricier
-    * than the count job this saves), disables observation for a cooldown
-    * window, after which the breaker re-arms itself (see [[observeArmed]]
-    * — a transient co-tenant burst must not tax the rest of the session).
-    * Reserved key `_rows`: on the reliable path the mandatory cache-fill
-    * count is threaded through under it, so [[cutCounted]] never
-    * re-scans a checkpoint on fallback. */
+    * covers normal delivery), the metrics are computed by one aggregate
+    * job over the cut frame: correct, one job slower. One await timeout,
+    * or three consecutive >500 ms awaits (bus lag pricier than the job
+    * this saves), disables observation for a cooldown window, after
+    * which the breaker re-arms itself (see [[observeArmed]] — a
+    * transient co-tenant burst must not tax the rest of the session). */
   def cutObserved(df: DataFrame,
       metrics: Seq[Column]): (DataFrame, Map[String, Any]) =
     cutAs(df, reliable(df), metrics)
@@ -158,22 +151,26 @@ object LineageCut {
     val obs =
       if (metrics.nonEmpty && observeArmed) Some(Observation()) else None
     val in = obs.fold(df)(df.observe(_, metrics.head, metrics.tail: _*))
-    var rows = -1L
     val out =
       if (!reliable) in.localCheckpoint(true)
       else if (obs.isEmpty) in.checkpoint(true)
       else {
         val cached = in.persist(StorageLevel.MEMORY_AND_DISK)
-        rows = cached.count()
+        cached.count()
         val o = cached.checkpoint(true)
         cached.unpersist(false)
         o
       }
-    val m = obs.fold(Map.empty[String, Any])(awaitMetrics)
-    (out, if (rows >= 0) m + ("_rows" -> rows) else m)
+    val m = obs.flatMap(awaitMetrics).getOrElse(
+      if (metrics.isEmpty) Map.empty[String, Any]
+      else valuesOf(out.agg(metrics.head, metrics.tail: _*).first()))
+    (out, m)
   }
 
-  private def awaitMetrics(obs: Observation): Map[String, Any] = {
+  private def valuesOf(row: Row): Map[String, Any] =
+    row.getValuesMap[Any](row.schema.fieldNames.toIndexedSeq)
+
+  private def awaitMetrics(obs: Observation): Option[Map[String, Any]] = {
     val t0 = System.nanoTime()
     try {
       val row = scala.concurrent.Await.result(obs.future,
@@ -182,12 +179,12 @@ object LineageCut {
       if (awaitMs > 500) { slowAwaits += 1; if (slowAwaits >= 3)
         disableObservation(s"$slowAwaits consecutive slow metric awaits " +
           s"(last ${awaitMs}ms) — listener bus lag exceeds the cost of " +
-          "the count job this replaces")
+          "the aggregate job this replaces")
       } else slowAwaits = 0
-      row.getValuesMap[Any](row.schema.fieldNames.toIndexedSeq)
+      Some(valuesOf(row))
     } catch { case _: java.util.concurrent.TimeoutException =>
       disableObservation("metric await timed out after 2 s")
-      Map.empty[String, Any]
+      None
     }
   }
 }
@@ -245,8 +242,7 @@ object Graph {
         // exactly one self row — sym's src set IS the label universe),
         // so the round runs one join + one aggregation and the change
         // flag needs no second join. The convergence statistic rides the
-        // materialization action itself (cutObserved) — zero extra jobs;
-        // fallback scans the cut frame if metrics don't arrive.
+        // materialization action itself (cutObserved) — zero extra jobs.
         val prop = sym
           .join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
           .select(col("src").as("id"), col("label"),
@@ -260,10 +256,7 @@ object Graph {
             .as("chg")))
         LineageCut.release(labels) // superseded round (the cut above consumed it)
         labels = updated.select("id", "label")
-        converged = m.get("chg") match {
-          case Some(v) => v == null || v.asInstanceOf[Int] == 0
-          case None => updated.filter(col("label") < col("old")).isEmpty
-        }
+        converged = m("chg") == null || m("chg") == 0
         i += 1
       }
       // an unconverged result is silently WRONG (multiple keepers inside
@@ -391,8 +384,7 @@ object Graph {
         Seq(sum(when(col("est") < col("old"), 1).otherwise(0)).as("chg")))
       LineageCut.release(state) // superseded round (the cut above consumed it)
       state = next.select("v", "nbrs", "est")
-      converged = m.get("chg").map(v => v == null || v == 0L)
-        .getOrElse(next.filter(col("est") < col("old")).isEmpty)
+      converged = m("chg") == null || m("chg") == 0L
       i += 1
     }
     if (!converged) throw new IllegalStateException(
@@ -508,50 +500,55 @@ object Graph {
         .unionByName(e.select(col("dst").as("v")))
         .distinct()
         .join(deg, Seq("v"), "left"))
-    var ranks = base.withColumn("r", lit(1.0 / n))
-    // Dangling mass as a DRIVER SCALAR: round k+1 needs the decimal-exact
-    // dangling-rank sum of round k's output, which rides round k's one cut
-    // materialization as an OBSERVED metric (same pattern as the CC
-    // convergence flag) — the old spelling attached it as a one-row
-    // aggregate via crossJoin(broadcast(...)), paying a SinglePartition
-    // exchange + IdentityBroadcast + BroadcastNestedLoopJoin + a second
-    // scan of the ranks frame EVERY round. The literal is the same
-    // decimal-summed double, folded through the same IEEE ops — ranks are
-    // bit-identical (the unrolled oracle re-checks them). Round 1's mass
-    // comes from one tiny aggregate over the base-backed initial ranks.
-    val dangOf = (df: DataFrame, m: Map[String, Any]) => m.get("dang") match {
-      case Some(d: java.lang.Double) => d.doubleValue()
-      case Some(null) => 0.0 // metric arrived; sum over zero dangling rows
-      case _ => // metric not delivered: recompute from the cut frame
-        val r = df.filter(col("deg").isNull)
-          .agg(expr("CAST(SUM(CAST(r AS DECIMAL(38,18))) AS DOUBLE)")).first()
-        if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-    }
-    var dang = dangOf(ranks, Map.empty)
-    var ranksOwned = false // initial ranks is base-backed (see comment above)
+    powerIterate(base, "deg", lit(1.0 / n), iterations)(
+      live => e.join(live.select(col("v").as("src"),
+        (col("r") / col("deg")).as("c")), Seq("src")),
+      dang => lit((1.0 - alpha) / n) +
+        lit(alpha) * (coalesce(col("contrib"), lit(0.0)) + lit(dang / n)))
+  }
+
+  /** The power loop of [[pageRank]], [[pageRankWeighted]] and
+    * [[pageRankPersonalized]]. `base` holds v, the out-degree or
+    * out-weight column `deg` (null = dangling) and any column `rank`
+    * reads; the initial ranks are `base` with `r = r0`. A round joins the
+    * non-dangling ranks onto the edges (`share`: rows of dst and the
+    * edge's contribution `c`), re-sums contributions in DECIMAL(38,18)
+    * as `contrib`, and sets `r = rank(dang)` over `base`, where `dang` is
+    * the previous round's dangling mass.
+    *
+    * The dangling mass is a DRIVER SCALAR: round k+1 needs the
+    * decimal-exact dangling-rank sum of round k's output, which rides
+    * round k's one cut as an observed metric (an earlier spelling
+    * attached it as a one-row aggregate via crossJoin(broadcast(...)),
+    * paying a SinglePartition exchange, an IdentityBroadcast, a
+    * BroadcastNestedLoopJoin and a second scan of the ranks frame every
+    * round). The literal is the same decimal-summed double folded
+    * through the same IEEE ops, so ranks are bit-identical (the unrolled
+    * oracle re-checks them). Round 1's mass is one aggregate over the
+    * base-backed initial ranks; the final round's mass is never
+    * consumed, so that round is not observed. */
+  private def powerIterate(base: DataFrame, deg: String, r0: Column,
+      iterations: Int)(share: DataFrame => DataFrame,
+      rank: Double => Column): DataFrame = {
+    val dangMass = expr(s"CAST(SUM(CASE WHEN $deg IS NULL THEN " +
+      "CAST(r AS DECIMAL(38,18)) END) AS DOUBLE)").as("dang")
+    val massOf = (v: Any) => if (v == null) 0.0 else v.asInstanceOf[Double]
+    var ranks = base.withColumn("r", r0)
+    var dang = massOf(ranks.agg(dangMass).first().get(0))
     for (it <- 1 to iterations) {
-      val contribs = e
-        .join(ranks.filter(col("deg").isNotNull)
-          .select(col("v").as("src"), (col("r") / col("deg")).as("c")),
-          Seq("src"))
+      val contribs = share(ranks.filter(col(deg).isNotNull))
         .groupBy(col("dst").as("v"))
         .agg(expr("CAST(SUM(CAST(c AS DECIMAL(38,18))) AS DOUBLE)")
           .as("contrib"))
       val updated = base.join(contribs, Seq("v"), "left")
-        .select(col("v"), col("deg"),
-          (lit((1.0 - alpha) / n) +
-            lit(alpha) * (coalesce(col("contrib"), lit(0.0)) +
-              lit(dang / n))).as("r"))
-      // the FINAL round's dangling mass is never consumed — observe (and
-      // its metric await) only on rounds whose output feeds another round
+        .select(base.columns.map(col) :+ rank(dang).as("r"): _*)
       val (next, m) =
-        if (it < iterations) LineageCut.cutObserved(updated,
-          Seq(expr("CAST(SUM(CASE WHEN deg IS NULL THEN " +
-            "CAST(r AS DECIMAL(38,18)) END) AS DOUBLE)").as("dang")))
+        if (it < iterations) LineageCut.cutObserved(updated, Seq(dangMass))
         else (LineageCut.cut(updated), Map.empty[String, Any])
-      if (ranksOwned) LineageCut.release(ranks)
-      ranks = next; ranksOwned = true
-      if (it < iterations) dang = dangOf(ranks, m)
+      // the initial ranks are base-backed: releasing them would drop base
+      if (it > 1) LineageCut.release(ranks)
+      ranks = next
+      if (it < iterations) dang = massOf(m("dang"))
     }
     ranks.select(col("v"), col("r").as("rank"))
   }
@@ -568,26 +565,41 @@ object Graph {
       maxHops: Int = 4): DataFrame = {
     val e = LineageCut.cut(
       edges.select(col("src"), col("dst")).distinct())
+    relaxFromSeeds(e, seeds, lit(0), maxHops, "hops")(col("dist") + 1)
+  }
+
+  /** The seeded min-plus relaxation of [[bfsHops]],
+    * [[weightedShortestPaths]] and [[temporalReachability]]: `dist` starts
+    * at `seed` on the seeds of `seeds` (column `v`) and null elsewhere;
+    * each of `rounds` rounds takes, per dst, the min `candidate` over the
+    * edges of `e` whose src has a dist and which `admit`, and merges it
+    * with `least` (which skips nulls). One equi-join + a map-side-
+    * combinable grouped min + a left join back per round, O(|E|)
+    * shuffled bytes; rounds lineage-cut. Returns the reached vertices as
+    * (v, `out`). */
+  private def relaxFromSeeds(e: DataFrame, seeds: DataFrame, seed: Column,
+      rounds: Int, out: String)(candidate: Column,
+      admit: Column = lit(true)): DataFrame = {
     val verts = e.select(col("src").as("v"))
       .unionByName(e.select(col("dst").as("v"))).distinct()
     var dist = LineageCut.cut(
       verts.join(broadcast(seeds.select(col("v")).distinct()
-          .withColumn("d0", lit(0))), Seq("v"), "left")
+          .withColumn("d0", seed)), Seq("v"), "left")
         .select(col("v"), col("d0").as("dist")))
-    for (_ <- 1 to maxHops) {
+    for (_ <- 1 to rounds) {
       val nbr = e
         .join(dist.filter(col("dist").isNotNull)
           .select(col("v").as("src"), col("dist")), Seq("src"))
+        .filter(admit)
         .groupBy(col("dst").as("v"))
-        .agg((min(col("dist")) + 1).cast("int").as("nd"))
+        .agg(min(candidate).as("nd"))
       val next = LineageCut.cut(
         dist.join(nbr, Seq("v"), "left")
           .select(col("v"), least(col("dist"), col("nd")).as("dist")))
       LineageCut.release(dist) // superseded round (initial dist is its own cut)
       dist = next
     }
-    dist.filter(col("dist").isNotNull)
-      .select(col("v"), col("dist").as("hops"))
+    dist.filter(col("dist").isNotNull).select(col("v"), col("dist").as(out))
   }
 
   /** Bounded-round WEIGHTED shortest paths — Bellman-Ford relaxation in
@@ -604,26 +616,7 @@ object Graph {
   def weightedShortestPaths(edges: DataFrame, seeds: DataFrame,
       rounds: Int = 4): DataFrame = {
     val e = LineageCut.cut(edges.select(col("src"), col("dst"), col("w")))
-    val verts = e.select(col("src").as("v"))
-      .unionByName(e.select(col("dst").as("v"))).distinct()
-    var dist = LineageCut.cut(
-      verts.join(broadcast(seeds.select(col("v")).distinct()
-          .withColumn("d0", lit(0L))), Seq("v"), "left")
-        .select(col("v"), col("d0").as("dist")))
-    for (_ <- 1 to rounds) {
-      val nbr = e
-        .join(dist.filter(col("dist").isNotNull)
-          .select(col("v").as("src"), col("dist")), Seq("src"))
-        .groupBy(col("dst").as("v"))
-        .agg(min(col("dist") + col("w")).as("nd"))
-      val next = LineageCut.cut(
-        dist.join(nbr, Seq("v"), "left")
-          .select(col("v"), least(col("dist"), col("nd")).as("dist")))
-      LineageCut.release(dist) // superseded round
-      dist = next
-    }
-    dist.filter(col("dist").isNotNull)
-      .select(col("v"), col("dist").as("cost"))
+    relaxFromSeeds(e, seeds, lit(0L), rounds, "cost")(col("dist") + col("w"))
   }
 
   /** Seed-based harmonic centrality: per vertex, Σ_seeds ⌊10⁶/d(seed, v)⌋
@@ -1031,12 +1024,9 @@ object Graph {
         .select(col("v"), coalesce(col(c), lit(0.0)).as("raw"))
       val (cutFull, metrics) = LineageCut.cutObserved(full,
         Seq(max(col("raw")).as("m")))
-      val m = metrics.get("m") match {
-        case Some(d: java.lang.Double) => d.doubleValue()
-        case Some(null) => 0.0 // metric arrived; max over an empty frame
-        case _ => // metric not delivered: recompute from the cut frame
-          val r = cutFull.agg(max(col("raw"))).first()
-          if (r.isNullAt(0)) 0.0 else r.getDouble(0)
+      val m = metrics("m") match {
+        case d: java.lang.Double => d.doubleValue()
+        case _ => 0.0 // max over an empty frame
       }
       cutFull.select(col("v"),
         (if (m > 0) col("raw") / lit(m) else lit(0.0)).as(c))
@@ -1088,27 +1078,8 @@ object Graph {
       rounds: Int = 4): DataFrame = {
     val e = LineageCut.cut(
       edges.select(col("src"), col("dst"), col("t")).distinct())
-    val verts = e.select(col("src").as("v"))
-      .unionByName(e.select(col("dst").as("v"))).distinct()
-    var arr = LineageCut.cut(
-      verts.join(broadcast(seeds.select(col("v")).distinct()
-          .withColumn("a0", lit(-1L))), Seq("v"), "left")
-        .select(col("v"), col("a0").as("arrived")))
-    for (_ <- 1 to rounds) {
-      val nbr = e
-        .join(arr.filter(col("arrived").isNotNull)
-          .select(col("v").as("src"), col("arrived")), Seq("src"))
-        .filter(col("t") >= col("arrived"))
-        .groupBy(col("dst").as("v"))
-        .agg(min(col("t")).as("na"))
-      val next = LineageCut.cut(
-        arr.join(nbr, Seq("v"), "left")
-          .select(col("v"), least(col("arrived"), col("na")).as("arrived")))
-      LineageCut.release(arr) // superseded round
-      arr = next
-    }
-    arr.filter(col("arrived").isNotNull)
-      .select(col("v"), col("arrived").as("tainted_at"))
+    relaxFromSeeds(e, seeds, lit(-1L), rounds, "tainted_at")(
+      col("t"), admit = col("t") >= col("dist"))
   }
 
   /** Community detection by synchronous label propagation (fixed rounds,
@@ -1181,44 +1152,12 @@ object Graph {
         .unionByName(e.select(col("dst").as("v")))
         .distinct()
         .join(deg, Seq("v"), "left"))
-    var ranks = base.withColumn("r", lit(1.0 / n))
-    // dangling mass as an observed driver scalar — see [[pageRank]]'s
-    // loop for the full rationale (identical change: the per-round
-    // crossJoin(broadcast(one-row-agg)) becomes a metric riding the cut)
-    val dangOf = (df: DataFrame, m: Map[String, Any]) => m.get("dang") match {
-      case Some(d: java.lang.Double) => d.doubleValue()
-      case Some(null) => 0.0
-      case _ =>
-        val r = df.filter(col("ws").isNull)
-          .agg(expr("CAST(SUM(CAST(r AS DECIMAL(38,18))) AS DOUBLE)")).first()
-        if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-    }
-    var dang = dangOf(ranks, Map.empty)
-    var ranksOwned = false // initial ranks is base-backed (see pageRank)
-    for (it <- 1 to iterations) {
-      val contribs = e
-        .join(ranks.filter(col("ws").isNotNull)
-          .select(col("v").as("src"), col("r"), col("ws")), Seq("src"))
-        .select(col("dst"), (col("r") * (col("w") / col("ws"))).as("c"))
-        .groupBy(col("dst").as("v"))
-        .agg(expr("CAST(SUM(CAST(c AS DECIMAL(38,18))) AS DOUBLE)")
-          .as("contrib"))
-      val updated = base.join(contribs, Seq("v"), "left")
-        .select(col("v"), col("ws"),
-          (lit((1.0 - alpha) / n) +
-            lit(alpha) * (coalesce(col("contrib"), lit(0.0)) +
-              lit(dang / n))).as("r"))
-      // final round's dangling mass is never consumed — see [[pageRank]]
-      val (next, m) =
-        if (it < iterations) LineageCut.cutObserved(updated,
-          Seq(expr("CAST(SUM(CASE WHEN ws IS NULL THEN " +
-            "CAST(r AS DECIMAL(38,18)) END) AS DOUBLE)").as("dang")))
-        else (LineageCut.cut(updated), Map.empty[String, Any])
-      if (ranksOwned) LineageCut.release(ranks)
-      ranks = next; ranksOwned = true
-      if (it < iterations) dang = dangOf(ranks, m)
-    }
-    ranks.select(col("v"), col("r").as("rank"))
+    powerIterate(base, "ws", lit(1.0 / n), iterations)(
+      live => e.join(live.select(col("v").as("src"), col("r"), col("ws")),
+          Seq("src"))
+        .select(col("dst"), (col("r") * (col("w") / col("ws"))).as("c")),
+      dang => lit((1.0 - alpha) / n) +
+        lit(alpha) * (coalesce(col("contrib"), lit(0.0)) + lit(dang / n)))
   }
 
   /** PERSONALIZED PageRank: teleport (and dangling) mass returns only to
@@ -1237,8 +1176,7 @@ object Graph {
     val e = LineageCut.cut(
       edges.select(col("src"), col("dst")).distinct())
     val deg = e.groupBy(col("src").as("v")).agg(count(lit(1)).as("deg"))
-    // the seed count rides base's one materialization as an observed
-    // metric (fallback: the filter-count job the r13 spelling always ran)
+    // the seed count rides base's one materialization as an observed metric
     val (base, sm) = LineageCut.cutObserved(
       e.select(col("src").as("v"))
         .unionByName(e.select(col("dst").as("v")))
@@ -1248,51 +1186,16 @@ object Graph {
           .withColumn("is_seed", lit(true))), Seq("v"), "left")
         .withColumn("is_seed", coalesce(col("is_seed"), lit(false))),
       Seq(count(when(col("is_seed"), lit(1))).as("s")))
-    val s = sm.get("s") match {
-      case Some(c: java.lang.Long) => c.longValue()
-      case _ => base.filter(col("is_seed")).count()
-    }
+    val s = sm("s").asInstanceOf[Long]
     require(s > 0, "pageRankPersonalized: no seed vertex present in the graph")
-    var ranks = base.withColumn("r",
-      when(col("is_seed"), lit(1.0 / s)).otherwise(lit(0.0)))
-    // dangling mass as an observed driver scalar — see [[pageRank]]'s
-    // loop for the full rationale (identical change)
-    val dangOf = (df: DataFrame, m: Map[String, Any]) => m.get("dang") match {
-      case Some(d: java.lang.Double) => d.doubleValue()
-      case Some(null) => 0.0
-      case _ =>
-        val r = df.filter(col("deg").isNull)
-          .agg(expr("CAST(SUM(CAST(r AS DECIMAL(38,18))) AS DOUBLE)")).first()
-        if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-    }
-    var dang = dangOf(ranks, Map.empty)
-    var ranksOwned = false // initial ranks is base-backed (see pageRank)
-    for (it <- 1 to iterations) {
-      val contribs = e
-        .join(ranks.filter(col("deg").isNotNull)
-          .select(col("v").as("src"), (col("r") / col("deg")).as("c")),
-          Seq("src"))
-        .groupBy(col("dst").as("v"))
-        .agg(expr("CAST(SUM(CAST(c AS DECIMAL(38,18))) AS DOUBLE)")
-          .as("contrib"))
-      val updated = base.join(contribs, Seq("v"), "left")
-        .select(col("v"), col("deg"), col("is_seed"),
-          (when(col("is_seed"),
-            lit((1.0 - alpha) / s) +
-              lit(alpha) * lit(dang / s))
-            .otherwise(lit(0.0)) +
-            lit(alpha) * coalesce(col("contrib"), lit(0.0))).as("r"))
-      // final round's dangling mass is never consumed — see [[pageRank]]
-      val (next, m) =
-        if (it < iterations) LineageCut.cutObserved(updated,
-          Seq(expr("CAST(SUM(CASE WHEN deg IS NULL THEN " +
-            "CAST(r AS DECIMAL(38,18)) END) AS DOUBLE)").as("dang")))
-        else (LineageCut.cut(updated), Map.empty[String, Any])
-      if (ranksOwned) LineageCut.release(ranks)
-      ranks = next; ranksOwned = true
-      if (it < iterations) dang = dangOf(ranks, m)
-    }
-    ranks.select(col("v"), col("r").as("rank"))
+    powerIterate(base, "deg",
+      when(col("is_seed"), lit(1.0 / s)).otherwise(lit(0.0)), iterations)(
+      live => e.join(live.select(col("v").as("src"),
+        (col("r") / col("deg")).as("c")), Seq("src")),
+      dang => when(col("is_seed"),
+        lit((1.0 - alpha) / s) + lit(alpha) * lit(dang / s))
+        .otherwise(lit(0.0)) +
+        lit(alpha) * coalesce(col("contrib"), lit(0.0)))
   }
 
   /** Connected components by alternating large-star/small-star contraction
@@ -1471,8 +1374,7 @@ object Graph {
               lit(null).cast(cType).as("old"))
           val self = colors.select(col("v"), col("c"), col("c").as("old"))
           // the convergence statistic rides the materialization action
-          // (cutObserved) — zero extra jobs per round; fallback scans the
-          // cut frame if observation metrics don't arrive
+          // (cutObserved) — zero extra jobs per round
           val (upd, m) = LineageCut.cutObserved(
             prop.unionByName(self).groupBy("v")
               .agg(min(col("c")).as("c"), max(col("old")).as("old")),
@@ -1480,10 +1382,7 @@ object Graph {
               .as("chg")))
           LineageCut.release(colors) // superseded coloring round
           colors = upd.select("v", "c")
-          converged = m.get("chg") match {
-            case Some(v) => v == null || v.asInstanceOf[Int] == 0
-            case None => upd.filter(col("c") < col("old")).isEmpty
-          }
+          converged = m("chg") == null || m("chg") == 0
           i += 1
         }
         if (!converged) throw new IllegalStateException(
@@ -1952,12 +1851,7 @@ object Graph {
       val (out, m) = LineageCut.cutObserved(df,
         Seq(sum(when(col("sup") < k - 2, lit(1L)).otherwise(lit(0L)))
           .as("ndead")))
-      val n = m.get("ndead") match {
-        case Some(null) => 0L // empty frame
-        case Some(v) => v.asInstanceOf[Long]
-        case None => out.filter(col("sup") < k - 2).count() // fallback
-      }
-      (out, n)
+      (out, Option(m("ndead")).fold(0L)(_.asInstanceOf[Long])) // null: empty
     }
     var (e, nDead) = cutE(
       undId.select("eid").join(supOf(tri), Seq("eid"), "left")

@@ -78,25 +78,23 @@ object StatefulBalances {
     * The RocksDB provider transformWithState requires is pinned with the
     * state shards for the drain and restored after.
     *
-    * Concurrency: the memory sink registers a catalog table, so the whole
-    * drain runs under the object lock and the sink name carries a
-    * per-call unique suffix (two invocations never share a table). */
+    * Concurrency: every call drains into the one memory table
+    * `graft_stream_balances`, so the drain and the read of the table run
+    * under the object lock. The read resolves the table to the call's
+    * own sink, so the returned frame keeps its rows when a later call
+    * replaces the table. */
   def streamTokenBalances(spark: SparkSession, sfDir: String): DataFrame =
-    lock.synchronized { streamTokenBalances0(spark, sfDir) }
+    lock.synchronized {
+      val tableName = "graft_stream_balances"
+      StreamingMetrics.withStatePartitions(spark, RocksDb) {
+        StreamingMetrics.drainToMemory(
+          runningBalances(spark, legStream(spark, sfDir)).toDF(), tableName,
+          "update")
+      }
+      compacted(spark.table(tableName))
+    }
 
   private[this] val lock = new Object
-  private[this] val invocation = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  private def streamTokenBalances0(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val tableName = s"graft_stream_balances_${invocation.incrementAndGet()}"
-    StreamingMetrics.withStatePartitions(spark, RocksDb) {
-      StreamingMetrics.drainToMemory(
-        runningBalances(spark, legStream(spark, sfDir)).toDF(), tableName,
-        "update")
-    }
-    compacted(spark.table(tableName))
-  }
 
   /** The double-entry leg stream over the events file-source (token|wallet
     * accounts, micro-unit integer deltas) — shared by the memory-sink and

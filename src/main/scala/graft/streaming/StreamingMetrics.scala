@@ -165,12 +165,15 @@ object StreamingMetrics {
     withStatePartitions(spark,
       Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))(f)
 
-  /** Start `df` into the memory table `name` in output `mode` and drain
-    * everything available; read the result back with `spark.table(name)`. */
+  /** Start `df` into the memory table `name` in output `mode`,
+    * checkpointed at a fresh scratch `<name>_ckpt`, and drain everything
+    * available; read the result back with `spark.table(name)`. */
   private[streaming] def drainToMemory(df: DataFrame, name: String,
       mode: String): Unit = {
     val q = df.writeStream.outputMode(mode).format("memory")
-      .queryName(name).start()
+      .queryName(name)
+      .option("checkpointLocation", TempDirs.scratch(s"${name}_ckpt"))
+      .start()
     try q.processAllAvailable()
     finally q.stop()
   }

@@ -5,11 +5,10 @@ import java.nio.file.{Files, Path}
 /** Every temp directory a graft JVM creates, and when it goes away.
   *
   *  - [[scratch]]: per-invocation SCRATCH (bounded-stream sinks and
-  *    checkpoints). 13 of the catalog's 21 streaming runners (the 10
-  *    parquet-sink drains and the 3 `foreachBatch` drains of
-  *    [[graft.streaming.StreamingMetrics]]; the 8 memory-sink drains make
-  *    none) create a fresh sink + checkpoint per invocation (fresh dirs
-  *    are what make the runs deterministic and re-runnable); nothing
+  *    checkpoints). Every streaming runner of
+  *    [[graft.streaming.StreamingMetrics]] creates a fresh checkpoint per
+  *    invocation, and the 10 parquet-sink drains a fresh sink too (fresh
+  *    dirs are what make the runs deterministic and re-runnable); nothing
   *    reads them again once the caller has materialized the returned
   *    frame. The harness (Bench/Verify) calls [[sweep]] only AFTER the
   *    query's result is materialized (counted or written) — the returned

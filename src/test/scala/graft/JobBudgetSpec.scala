@@ -1,7 +1,8 @@
 package graft
 
-import graft.ops.{LineageCut, Wallet}
+import graft.ops.{Graph, LineageCut, Wallet}
 import graft.pipelines.Pipelines
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fixed cost per call, pinned: the Spark jobs one warm call launches on
@@ -13,8 +14,8 @@ class JobBudgetSpec extends AnyFunSuite {
 
   /** Jobs of one warm call of `body` (after one unmeasured call), the
     * fewest of up to three tries, are at most `ceiling`. A tripped
-    * metrics breaker ([[LineageCut.cutObserved]]) adds a fallback scan
-    * job to a loop round; with a zero cooldown it re-arms at the next
+    * metrics breaker ([[LineageCut.cutObserved]]) adds a fallback
+    * aggregate job to a loop round; with a zero cooldown it re-arms at the next
     * round, and a trip now clears one left by an earlier suite. */
   private def assertWarmJobs(ceiling: Int)(body: => Unit): Unit = {
     body
@@ -39,6 +40,22 @@ class JobBudgetSpec extends AnyFunSuite {
   // the other graph_stream ops, each called as the benchmark calls it
   for ((q, ceiling) <- Seq("q_dedup_clusters" -> 3, "q_communities" -> 3,
       "q_stream_dedup" -> 4, "q_stream_bounded_hourly" -> 5))
+    test(s"a warm $q launches at most $ceiling jobs") {
+      assertWarmJobs(ceiling)(SparkEntry.queries(q)(spark, GraftSpark.Sf).collect())
+    }
+
+  // the PageRank power loop, over the transfer edges as q_pagerank builds
+  // them (q_pagerank itself reads a session-shared result, free when warm)
+  test("q_pagerank: a warm Graph.pageRank launches at most 24 jobs") {
+    assertWarmJobs(24)(Graph.pageRank(Tables.transfers(spark, GraftSpark.Sf)
+      .select(col("from_address").as("src"), col("to_address").as("dst")))
+      .collect())
+  }
+
+  // the other PageRank forms and the seeded min-plus relaxations
+  for ((q, ceiling) <- Seq("q_pagerank_weighted" -> 26,
+      "q_pagerank_personalized" -> 28, "q_bfs_hops" -> 29,
+      "q_shortest_path" -> 29, "q_taint_trace" -> 29))
     test(s"a warm $q launches at most $ceiling jobs") {
       assertWarmJobs(ceiling)(SparkEntry.queries(q)(spark, GraftSpark.Sf).collect())
     }

@@ -79,8 +79,9 @@ class LineageCutObserveSpec extends AnyFunSuite {
     // REST OF THE JVM — on this box that means one co-tenant burst early
     // in a 341-query session silently degraded every later iterative
     // query to the extra-count-job shape. The breaker is now a cooldown:
-    // tripped → fall back to plain cut (empty metrics), past the
-    // deadline → re-armed (logged), metrics flow again.
+    // tripped → plain cut with the metrics computed by the fallback
+    // aggregate, past the deadline → re-armed (logged), metrics observed
+    // again.
     val df = (1 to 50).toDF("x")
     val saved = ops.LineageCut.observeCooldownNanos
     try {
@@ -89,7 +90,7 @@ class LineageCutObserveSpec extends AnyFunSuite {
       assert(!ops.LineageCut.observeArmed, "trip must disable immediately")
       val (cut1, m1) = ops.LineageCut.cutObserved(df,
         Seq(count(lit(1)).as("n")))
-      assert(m1.isEmpty, "tripped breaker must fall back to plain cut")
+      assert(m1 == Map("n" -> 50L), "tripped breaker: the fallback computes")
       assert(cut1.count() == 50) // fallback frame still correct
       ops.LineageCut.release(cut1)
       Thread.sleep(150)
@@ -113,16 +114,13 @@ class LineageCutObserveSpec extends AnyFunSuite {
     ops.LineageCut.release(cut)
   }
 
-  test("reliable branch: rows preserved, count exact, metrics carry _rows") {
+  test("reliable branch: rows preserved, count exact, metrics arrive") {
     val df = (1 to 1234).toDF("x").repartition(4)
     val (cut, m) = cutReliable(df,
       Seq(count(lit(1)).as("n"), max(col("x")).as("mx")))
     assert(m.nonEmpty,
       "observation metrics did not arrive within the bounded await")
-    // what cutCounted reads: the observed count, else the cache-fill count
-    assert(m("n") == 1234L)
-    assert(m("_rows") == 1234L)
-    assert(m("mx") == 1234)
+    assert(m == Map("n" -> 1234L, "mx" -> 1234))
     assert(cut.as[Int].collect().sorted.toSeq == (1 to 1234))
     val file = checkpointFile(cut)
     assert(file.exists(_.contains(ckptDir.toString)), file)
@@ -155,14 +153,16 @@ class LineageCutObserveSpec extends AnyFunSuite {
     assert(rows == frame().as[(Int, Long)].collect().sorted.toSeq)
   }
 
-  test("reliable branch with the breaker tripped: plain cut, no metrics") {
+  test("reliable branch with the breaker tripped: fallback computes metrics") {
     val df = (1 to 40).toDF("x")
     val saved = ops.LineageCut.observeCooldownNanos
     try {
       ops.LineageCut.observeCooldownNanos = 60L * 1000 * 1000 * 1000
       ops.LineageCut.tripObservationForTest()
-      val (cut, m) = cutReliable(df, Seq(count(lit(1)).as("n")))
-      assert(m.isEmpty, "tripped breaker: no metrics and no _rows")
+      val (cut, m) = cutReliable(df,
+        Seq(count(lit(1)).as("n"), max(col("x")).as("mx")))
+      assert(m == Map("n" -> 40L, "mx" -> 40),
+        "tripped breaker: the fallback aggregate computes every metric")
       assert(cut.count() == 40)
       assert(checkpointFile(cut).isDefined)
     } finally {

@@ -704,6 +704,42 @@ class StreamingSpec extends AnyFunSuite {
       "StreamingMetrics.scala:streamSemiJoin",
       "StreamingMetrics.scala:streamingDedupHashes"))
   }
+
+  test("streamTokenBalances keeps at most one memory table, and every " +
+      "returned frame keeps its rows") {
+    val frames = (1 to 3).map(_ => graft.streaming.StatefulBalances
+      .streamTokenBalances(spark, GraftSpark.Sf))
+    val tables = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_stream_balances"))
+    assert(tables.length <= 1, tables.mkString(", "))
+    assert(frames.map(_.count()) == Seq(975L, 975L, 975L))
+  }
+
+  test("a memory-sink drain checkpoints in scratch, not in a Spark " +
+      "temporary-* dir") {
+    // Spark creates its temporary checkpoint while start() resolves the
+    // query and deletes it at a clean stop, so look while the query runs:
+    // onQueryStarted is called before start() returns
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def temps() = tmp.list().filter(_.startsWith("temporary-")).toSet
+    val before = temps()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        (temps() -- before).foreach(seen.add)
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    val pending = util.TempDirs.pending()
+    spark.streams.addListener(l)
+    try assert(SparkEntry.queries("q_stream_dedup")(spark, GraftSpark.Sf)
+      .count() > 0)
+    finally spark.streams.removeListener(l)
+    assert(seen.isEmpty, seen)
+    assert(util.TempDirs.pending() > pending) // the scratch checkpoint
+  }
 }
 
 /** Minimal in-memory GroupState for unit-testing fold functions. */
