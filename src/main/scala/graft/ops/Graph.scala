@@ -1,7 +1,8 @@
 package graft.ops
 
 import scala.util.control.NonFatal
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, Row}
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -22,10 +23,12 @@ import org.apache.spark.storage.StorageLevel
   * iterative graph queries (MIS, alt-star CC, HITS, PageRank) spent most
   * of their wall time on exactly that. Every graft session is local and
   * sets no checkpoint dir, so it always cuts locally.
+  *
+  * An observed cut ([[LineageCut.cutObserved]]) reads its metrics from
+  * its own execution right after the cut returns: no listener bus, no
+  * wait and no fallback job.
   */
 object LineageCut {
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   private def reliable(df: DataFrame): Boolean = {
     val sc = df.sparkSession.sparkContext
     sc.getCheckpointDir.isDefined && !sc.isLocal
@@ -78,43 +81,6 @@ object LineageCut {
     (out, m("n").asInstanceOf[Long])
   }
 
-  /** Observation breaker. Tripped by one await timeout (polling 2 s per
-    * call on a session where metrics never arrive would cost far more
-    * than the saved aggregate jobs) or by three consecutive SLOW
-    * (>500 ms) metric awaits (bus lag pricier than the ~30-60 ms
-    * aggregate job this replaces). Round 12: the trip is a COOLDOWN, not
-    * a JVM-wide kill — on this box the likeliest trip cause is a
-    * transient co-tenant burst, and the r11 shape (disable forever) let
-    * one early spike silently degrade every later iterative query of a
-    * 341-query session to the extra-aggregate-job shape. After
-    * [[observeCooldownNanos]] the breaker re-arms automatically (logged),
-    * so a burst costs at most one 2 s wait per cooldown window and
-    * recovery is self-evidencing in the session log. */
-  private[graft] var observeCooldownNanos: Long = 60L * 1000 * 1000 * 1000
-  @volatile private var observeDisabledUntil = 0L // 0 = armed
-  @volatile private var slowAwaits = 0
-  /** Armed state, with the re-arm side effect: first check past the
-    * cooldown deadline flips the breaker back on and logs it. */
-  private[graft] def observeArmed: Boolean = {
-    val until = observeDisabledUntil
-    if (until == 0L) true
-    else if (System.nanoTime() - until >= 0) { // overflow-safe compare
-      observeDisabledUntil = 0L
-      slowAwaits = 0
-      log.warn("cutObserved: observation RE-ARMED after cooldown — " +
-        "convergence metrics ride the materialization again")
-      true
-    } else false
-  }
-  private def disableObservation(reason: String): Unit = {
-    observeDisabledUntil = System.nanoTime() + observeCooldownNanos
-    slowAwaits = 0
-    log.warn("cutObserved: observation disabled for " +
-      s"${observeCooldownNanos / 1e9} s — $reason (re-arms automatically)")
-  }
-  private[graft] def tripObservationForTest(): Unit =
-    disableObservation("test trip")
-
   /** [[cut]] plus aggregate `metrics` collected DURING the materialization
     * job via `Dataset.observe` — iterative algorithms read a convergence
     * statistic every round, and computing it as a side effect of the
@@ -124,67 +90,38 @@ object LineageCut {
     * with fixed submission overhead, made that a real tax at small SF —
     * and one fewer action per round is equally free at cluster scale).
     *
-    * The returned map always holds every requested key, valued as
-    * `df.agg(metrics)` would value it (so null for a max or sum over zero
-    * rows). When observation is off or its metrics do not arrive
-    * (observation listeners ride the async listener bus; a bounded await
-    * covers normal delivery), the metrics are computed by one aggregate
-    * job over the cut frame: correct, one job slower. One await timeout,
-    * or three consecutive >500 ms awaits (bus lag pricier than the job
-    * this saves), disables observation for a cooldown window, after
-    * which the breaker re-arms itself (see [[observeArmed]] — a
-    * transient co-tenant burst must not tax the rest of the session). */
+    * The metrics are read from the cut's own `QueryExecution` as soon as
+    * the eager cut returns: the cut action runs on that execution, whose
+    * `observedMetrics` reads the executed plan's accumulators, merged on
+    * the driver before the action's job returns. No listener bus is
+    * involved, so the read neither waits nor depends on host load. The
+    * returned map holds every requested key, valued as `df.agg(metrics)`
+    * would value it (so null for a max or sum over zero rows). */
   def cutObserved(df: DataFrame,
       metrics: Seq[Column]): (DataFrame, Map[String, Any]) =
     cutAs(df, reliable(df), metrics)
 
+  /** Per-JVM sequence behind each observed cut's metric name, so two
+    * cuts never share a name in one plan or across threads. */
+  private val observations = new AtomicLong
+
   /** The one materialization behind [[cut]] (no `metrics`) and
     * [[cutObserved]], on the branch `reliable` names; the public calls
     * pass the policy's answer, specs pass `true` to drive the reliable
-    * branch on a local master. A plain reliable cut is one eager
-    * `checkpoint(true)`, whose one write job computes the frame once; an
-    * observed one runs the cache-fill count first, so it persists before
-    * checkpointing and the writer reads the cache that count filled,
-    * never the frame's subtree a second time. */
+    * branch on a local master. Either branch is one eager checkpoint of
+    * the (observed) frame. */
   private[graft] def cutAs(df: DataFrame, reliable: Boolean,
       metrics: Seq[Column]): (DataFrame, Map[String, Any]) = {
-    val obs =
-      if (metrics.nonEmpty && observeArmed) Some(Observation()) else None
-    val in = obs.fold(df)(df.observe(_, metrics.head, metrics.tail: _*))
-    val out =
-      if (!reliable) in.localCheckpoint(true)
-      else if (obs.isEmpty) in.checkpoint(true)
-      else {
-        val cached = in.persist(StorageLevel.MEMORY_AND_DISK)
-        cached.count()
-        val o = cached.checkpoint(true)
-        cached.unpersist(false)
-        o
-      }
-    val m = obs.flatMap(awaitMetrics).getOrElse(
-      if (metrics.isEmpty) Map.empty[String, Any]
-      else valuesOf(out.agg(metrics.head, metrics.tail: _*).first()))
-    (out, m)
-  }
-
-  private def valuesOf(row: Row): Map[String, Any] =
-    row.getValuesMap[Any](row.schema.fieldNames.toIndexedSeq)
-
-  private def awaitMetrics(obs: Observation): Option[Map[String, Any]] = {
-    val t0 = System.nanoTime()
-    try {
-      val row = scala.concurrent.Await.result(obs.future,
-        scala.concurrent.duration.Duration(2, "s"))
-      val awaitMs = (System.nanoTime() - t0) / 1000000
-      if (awaitMs > 500) { slowAwaits += 1; if (slowAwaits >= 3)
-        disableObservation(s"$slowAwaits consecutive slow metric awaits " +
-          s"(last ${awaitMs}ms) — listener bus lag exceeds the cost of " +
-          "the aggregate job this replaces")
-      } else slowAwaits = 0
-      Some(valuesOf(row))
-    } catch { case _: java.util.concurrent.TimeoutException =>
-      disableObservation("metric await timed out after 2 s")
-      None
+    def eager(in: DataFrame) =
+      if (reliable) in.checkpoint(true) else in.localCheckpoint(true)
+    if (metrics.isEmpty) (eager(df), Map.empty)
+    else {
+      val name = s"graft_cut_${observations.incrementAndGet()}"
+      val in = df.observe(name, metrics.head, metrics.tail: _*)
+      val out = eager(in)
+      val row = in.queryExecution.observedMetrics.getOrElse(name,
+        throw new IllegalStateException(s"cut $name: no observed metrics"))
+      (out, row.getValuesMap[Any](row.schema.fieldNames.toIndexedSeq))
     }
   }
 }
@@ -525,8 +462,9 @@ object Graph {
     * round). The literal is the same decimal-summed double folded
     * through the same IEEE ops, so ranks are bit-identical (the unrolled
     * oracle re-checks them). Round 1's mass is one aggregate over the
-    * base-backed initial ranks; the final round's mass is never
-    * consumed, so that round is not observed. */
+    * base-backed initial ranks; every round is observed alike (an
+    * observed cut launches no job a plain one does not), and the final
+    * round's mass is never read. */
   private def powerIterate(base: DataFrame, deg: String, r0: Column,
       iterations: Int)(share: DataFrame => DataFrame,
       rank: Double => Column): DataFrame = {
@@ -542,13 +480,11 @@ object Graph {
           .as("contrib"))
       val updated = base.join(contribs, Seq("v"), "left")
         .select(base.columns.map(col) :+ rank(dang).as("r"): _*)
-      val (next, m) =
-        if (it < iterations) LineageCut.cutObserved(updated, Seq(dangMass))
-        else (LineageCut.cut(updated), Map.empty[String, Any])
+      val (next, m) = LineageCut.cutObserved(updated, Seq(dangMass))
       // the initial ranks are base-backed: releasing them would drop base
       if (it > 1) LineageCut.release(ranks)
       ranks = next
-      if (it < iterations) dang = massOf(m("dang"))
+      dang = massOf(m("dang"))
     }
     ranks.select(col("v"), col("r").as("rank"))
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{Graph, LineageCut, Wallet}
+import graft.ops.{Graph, Wallet}
 import graft.pipelines.Pipelines
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,24 +13,16 @@ class JobBudgetSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
 
   /** Jobs of one warm call of `body` (after one unmeasured call), the
-    * fewest of up to three tries, are at most `ceiling`. A tripped
-    * metrics breaker ([[LineageCut.cutObserved]]) adds a fallback
-    * aggregate job to a loop round; with a zero cooldown it re-arms at the next
-    * round, and a trip now clears one left by an earlier suite. */
+    * fewest of up to three tries, are at most `ceiling`. */
   private def assertWarmJobs(ceiling: Int)(body: => Unit): Unit = {
     body
-    val saved = LineageCut.observeCooldownNanos
-    LineageCut.observeCooldownNanos = 0L
-    LineageCut.tripObservationForTest()
-    try {
-      var n = Int.MaxValue
-      var tries = 0
-      while (n > ceiling && tries < 3) {
-        n = math.min(n, GraftSpark.jobsDuring(body).size)
-        tries += 1
-      }
-      assert(n <= ceiling)
-    } finally LineageCut.observeCooldownNanos = saved
+    var n = Int.MaxValue
+    var tries = 0
+    while (n > ceiling && tries < 3) {
+      n = math.min(n, GraftSpark.jobsDuring(body).size)
+      tries += 1
+    }
+    assert(n <= ceiling)
   }
 
   test("q_coreness: a warm Wallet.transferCoreness launches at most 9 jobs") {

@@ -8,10 +8,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
-/** Pins [[ops.LineageCut.cutObserved]] — the round-11 move that collects
-  * an iterative round's convergence statistic DURING its one
-  * materialization action (removing a scan job per round for every
-  * cutCounted consumer): the metrics arrive, the count is exact, and the
+/** Pins [[ops.LineageCut.cutObserved]], which collects an iterative
+  * round's convergence statistic DURING its one materialization action
+  * and reads it from the cut's own execution: the metrics are exact
+  * (those of `df.agg(metrics)`, empty and edge frames included), cost no
+  * job a plain cut does not, never mix between concurrent cuts, and the
   * cut frame stays a usable, released-on-demand local checkpoint. The
   * reliable branch, which no local session takes, is driven through
   * [[ops.LineageCut.cutAs]] with a checkpoint dir this spec sets. */
@@ -62,53 +63,16 @@ class LineageCutObserveSpec extends AnyFunSuite {
     val df = (1 to 100).toDF("x")
     val (cut, m) = ops.LineageCut.cutObserved(df,
       Seq(count(lit(1)).as("n"), max(col("x")).as("mx")))
-    // the metrics MUST arrive on an idle local session — a guard here
-    // would let a delivery regression (wrong listener registration, the
-    // observe node optimized away) ship silently behind the count
-    // fallback, re-growing the per-round scan job this mechanism removed
-    assert(m.nonEmpty,
-      "observation metrics did not arrive within the bounded await")
     assert(m("n") == 100L)
     assert(m("mx") == 100)
     assert(cut.count() == 100)
     ops.LineageCut.release(cut)
   }
 
-  test("observation breaker re-arms after its cooldown (burst-tolerant)") {
-    // round 12: one await timeout used to disable observation for the
-    // REST OF THE JVM — on this box that means one co-tenant burst early
-    // in a 341-query session silently degraded every later iterative
-    // query to the extra-count-job shape. The breaker is now a cooldown:
-    // tripped → plain cut with the metrics computed by the fallback
-    // aggregate, past the deadline → re-armed (logged), metrics observed
-    // again.
-    val df = (1 to 50).toDF("x")
-    val saved = ops.LineageCut.observeCooldownNanos
-    try {
-      ops.LineageCut.observeCooldownNanos = 50L * 1000 * 1000 // 50 ms
-      ops.LineageCut.tripObservationForTest()
-      assert(!ops.LineageCut.observeArmed, "trip must disable immediately")
-      val (cut1, m1) = ops.LineageCut.cutObserved(df,
-        Seq(count(lit(1)).as("n")))
-      assert(m1 == Map("n" -> 50L), "tripped breaker: the fallback computes")
-      assert(cut1.count() == 50) // fallback frame still correct
-      ops.LineageCut.release(cut1)
-      Thread.sleep(150)
-      assert(ops.LineageCut.observeArmed, "cooldown elapsed — must re-arm")
-      val (cut2, m2) = ops.LineageCut.cutObserved(df,
-        Seq(count(lit(1)).as("n")))
-      assert(m2.get("n").contains(50L),
-        "metrics must ride the materialization again after the re-arm")
-      ops.LineageCut.release(cut2)
-    } finally ops.LineageCut.observeCooldownNanos = saved
-  }
-
   test("empty frame: count 0, convergence-style max metric is null") {
     val df = spark.range(0).selectExpr("id AS x")
     val (cut, m) = ops.LineageCut.cutObserved(df,
       Seq(max(when(col("x") > 0, lit(1)).otherwise(lit(0))).as("chg")))
-    assert(m.nonEmpty,
-      "observation metrics did not arrive within the bounded await")
     assert(m("chg") == null) // max over zero rows
     assert(cut.count() == 0)
     ops.LineageCut.release(cut)
@@ -118,8 +82,6 @@ class LineageCutObserveSpec extends AnyFunSuite {
     val df = (1 to 1234).toDF("x").repartition(4)
     val (cut, m) = cutReliable(df,
       Seq(count(lit(1)).as("n"), max(col("x")).as("mx")))
-    assert(m.nonEmpty,
-      "observation metrics did not arrive within the bounded await")
     assert(m == Map("n" -> 1234L, "mx" -> 1234))
     assert(cut.as[Int].collect().sorted.toSeq == (1 to 1234))
     val file = checkpointFile(cut)
@@ -137,40 +99,92 @@ class LineageCutObserveSpec extends AnyFunSuite {
     assert(checkpointFile(cut).exists(_.contains(ckptDir.toString)))
   }
 
-  test("reliable branch: a plain cut launches a bare checkpoint's jobs") {
-    ckptDir
-    // two exchanges, so a second computation of the frame would show
-    def frame() = (1 to 600).toDF("x").repartition(4)
-      .groupBy((col("x") % 7).as("k")).agg(count(lit(1)).as("n"))
-      .repartition(3)
-    val bare = GraftSpark.jobsDuring(frame().checkpoint(true)).size
-    var cut: DataFrame = null
-    val plain =
-      GraftSpark.jobsDuring { cut = cutReliable(frame(), Nil)._1 }.size
-    assert(plain == bare)
-    assert(checkpointFile(cut).exists(_.contains(ckptDir.toString)))
-    val rows = cut.as[(Int, Long)].collect().sorted.toSeq
-    assert(rows == frame().as[(Int, Long)].collect().sorted.toSeq)
+  /** Two exchanges, so a second computation of the frame would show. */
+  private def twoExchanges(): DataFrame = (1 to 600).toDF("x")
+    .repartition(4)
+    .groupBy((col("x") % 7).as("k")).agg(count(lit(1)).as("n"))
+    .repartition(3)
+
+  private def valuesOf(df: DataFrame, metrics: Seq[Column]) = {
+    val row = df.agg(metrics.head, metrics.tail: _*).first()
+    row.getValuesMap[Any](row.schema.fieldNames.toIndexedSeq)
   }
 
-  test("reliable branch with the breaker tripped: fallback computes metrics") {
-    val df = (1 to 40).toDF("x")
-    val saved = ops.LineageCut.observeCooldownNanos
-    try {
-      ops.LineageCut.observeCooldownNanos = 60L * 1000 * 1000 * 1000
-      ops.LineageCut.tripObservationForTest()
-      val (cut, m) = cutReliable(df,
-        Seq(count(lit(1)).as("n"), max(col("x")).as("mx")))
-      assert(m == Map("n" -> 40L, "mx" -> 40),
-        "tripped breaker: the fallback aggregate computes every metric")
-      assert(cut.count() == 40)
-      assert(checkpointFile(cut).isDefined)
-    } finally {
-      // a zero-cooldown trip re-arms at the next check: leave it armed
-      ops.LineageCut.observeCooldownNanos = 0L
-      ops.LineageCut.tripObservationForTest()
-      assert(ops.LineageCut.observeArmed)
-      ops.LineageCut.observeCooldownNanos = saved
+  test("reliable branch: a plain cut launches a bare checkpoint's jobs") {
+    ckptDir
+    val bare = GraftSpark.jobsDuring(twoExchanges().checkpoint(true)).size
+    val rows = twoExchanges().as[(Int, Long)].collect().sorted.toSeq
+    // an observed cut is the same one checkpoint, its metrics read off it
+    val asks = Seq(Seq.empty[Column] -> Map.empty[String, Any],
+      Seq(count(lit(1)).as("rows"), sum(col("n")).as("total")) ->
+        Map("rows" -> 7L, "total" -> 600L))
+    for ((metrics, want) <- asks) {
+      var cut: (DataFrame, Map[String, Any]) = null
+      val jobs = GraftSpark.jobsDuring {
+        cut = cutReliable(twoExchanges(), metrics)
+      }.size
+      assert(jobs == bare, metrics)
+      assert(cut._2 == want)
+      assert(checkpointFile(cut._1).exists(_.contains(ckptDir.toString)))
+      assert(cut._1.as[(Int, Long)].collect().sorted.toSeq == rows)
+    }
+  }
+
+  private def ints(n: Int) =
+    spark.range(1, n + 1).select(col("id").cast("int").as("x"))
+
+  // frames whose metrics a plan rewrite could lose: three kinds of empty
+  // input, a global aggregate over zero rows (one row, null max) and a
+  // two-exchange aggregate
+  private val frames: Seq[(String, () => DataFrame)] = Seq(
+    "an empty local relation" -> (() => Seq.empty[Int].toDF("x")),
+    "a filter(false)" -> (() => (1 to 50).toDF("x").filter(lit(false))),
+    // a range, not a local relation, so only AQE sees the side is empty
+    "a join AQE empties" -> (() => ints(50).repartition(4)
+      .join(ints(50).repartition(3).filter(col("x") > 1000), "x")),
+    "a global aggregate over zero rows" -> (() => Seq.empty[Int].toDF("x")
+      .repartition(2).agg(max(col("x")).as("x"))),
+    "a two-exchange aggregate" -> (() => twoExchanges().select("k")
+      .withColumnRenamed("k", "x")))
+
+  private val metrics = Seq(count(lit(1)).as("n"), max(col("x")).as("mx"))
+
+  for ((what, frame) <- frames) {
+    test(s"cutObserved on $what: metrics are df.agg's, at no extra job") {
+      val (cut, m) = ops.LineageCut.cutObserved(frame(), metrics)
+      assert(m == valuesOf(frame(), metrics))
+      ops.LineageCut.release(cut)
+      var observed: DataFrame = null
+      val withMetrics = GraftSpark.jobsDuring {
+        observed = ops.LineageCut.cutObserved(frame(), metrics)._1
+      }.size
+      var plain: DataFrame = null
+      val without =
+        GraftSpark.jobsDuring { plain = ops.LineageCut.cut(frame()) }.size
+      assert(withMetrics == without)
+      Seq(observed, plain).foreach(ops.LineageCut.release)
+    }
+
+    test(s"cutObserved on $what: two threads get their own metrics") {
+      val df = frame()
+      val asks = Seq(Seq(count(lit(1)).as("v")),
+        Seq(min(col("x")).as("v"), sum(col("x")).as("w")))
+      val expected = asks.map(valuesOf(df, _))
+      for (_ <- 1 to 3) {
+        val start = new java.util.concurrent.CyclicBarrier(asks.size)
+        val got = new java.util.concurrent.ConcurrentHashMap[Int, Map[String, Any]]
+        val threads = asks.zipWithIndex.map { case (ask, i) =>
+          new Thread(() => {
+            start.await()
+            val (cut, m) = ops.LineageCut.cutObserved(df, ask)
+            got.put(i, m)
+            ops.LineageCut.release(cut)
+          })
+        }
+        threads.foreach(_.start())
+        threads.foreach(_.join())
+        assert(asks.indices.map(got.get) == expected)
+      }
     }
   }
 
