@@ -1,7 +1,9 @@
 package graft.io
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,24 +15,32 @@ import org.apache.spark.sql.functions._
   * writer (K3, reference: utils/Extract0x38Dapp.scala:40-43). Offline
   * equivalents: columnar parquet with merge-on-key semantics, and
   * distributed CSV/JSON writers.
+  *
+  * Every data write goes through [[writer]], which puts its local paths
+  * on [[LocalFs]] (no `chmod` process per created file).
   */
 object Sinks {
 
+  /** `df.write` on the engine's local write path: the options reach the
+    * job's Hadoop conf (committer and tasks) and nothing else. */
+  private def writer(df: DataFrame): DataFrameWriter[Row] =
+    df.write.options(LocalFs.HadoopConfs)
+
   /** K2: header'd CSV, overwrite. */
   def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.format("csv").option("header", "true")
+    writer(df).format("csv").option("header", "true")
       .mode(SaveMode.Overwrite).save(path)
 
   /** K3: distributed JSON lines (replaces the reference's driver-side
     * PrintWriter). */
   def writeJson(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).json(path)
+    writer(df).mode(SaveMode.Overwrite).json(path)
 
   /** Columnar ORC sibling of the parquet surface — format parity for
     * stores that standardize on ORC (same distributed writer, predicate
     * pushdown and column pruning apply on read). */
   def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).orc(path)
+    writer(df).mode(SaveMode.Overwrite).orc(path)
 
   /** Partitioned corpus sink with DYNAMIC partition overwrite: rewriting a
     * subset of partitions (one language, one day) leaves the rest of the
@@ -38,7 +48,7 @@ object Sinks {
     * layout for a 100 TB corpus store. */
   def writePartitioned(df: DataFrame, path: String,
       partitionCols: Seq[String]): Unit =
-    df.write
+    writer(df)
       .partitionBy(partitionCols: _*)
       .option("partitionOverwriteMode", "dynamic")
       .mode(SaveMode.Overwrite)
@@ -91,7 +101,7 @@ object Sinks {
     // staged promote would silently drop every earlier key on the next
     // retry). Leaving __old in place until the promote keeps a live copy at
     // every instant.
-    winner.write.mode(SaveMode.Overwrite).parquet(path + "__staged")
+    writer(winner).mode(SaveMode.Overwrite).parquet(path + "__staged")
     promote(fs, path, fs.exists(dst), "upsertParquet")
   }
 
@@ -124,25 +134,36 @@ object Sinks {
   def writeVersioned(spark: SparkSession, df: DataFrame, path: String): Long = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val root = new Path(path)
-    fs.mkdirs(root)
     // next = 1 + max over BOTH the pointer and every v= dir on disk
     // (committed or not): a crash can leave a half-written max dir with no
     // pointer, and ErrorIfExists below must never collide with it
     val next = (latestVersion(spark, path).getOrElse(-1L) +:
       versionDirs(fs, root).map(_._1)).max + 1L
     val vdir = new Path(root, f"v=$next%06d")
-    df.write.mode(SaveMode.ErrorIfExists).parquet(vdir.toString)
-    // pointer swap is the commit: write sidecar, then OVERWRITE-rename over
-    // _LATEST (FileContext supports atomic overwrite where FileSystem.rename
-    // would need a delete first — a delete→rename pair has a crash window
-    // with no pointer on disk at all)
-    val tmp = new Path(root, "_LATEST.tmp")
-    val ptr = new Path(root, "_LATEST")
-    val out = fs.create(tmp, true)
-    out.write(next.toString.getBytes("UTF-8")); out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri,
-        spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    writer(df).mode(SaveMode.ErrorIfExists).parquet(vdir.toString)
+    // pointer swap is the commit: write sidecar, then atomically replace
+    // _LATEST with it (FileSystem.rename would need a delete first — a
+    // delete→rename pair has a crash window with no pointer on disk at all)
+    val bytes = next.toString.getBytes("UTF-8")
+    if (LocalFs.isLocal(path, spark.sparkContext.hadoopConfiguration)) {
+      // rename(2) within one directory: FileContext's rename would fork
+      // `readlink` 4 times. The pointer carries no `.crc`; a checksum left
+      // by an earlier FileContext commit would fail the new bytes, so it
+      // goes before the move
+      val dir = Paths.get(fs.makeQualified(root).toUri)
+      val tmp = Files.write(dir.resolve("_LATEST.tmp"), bytes)
+      Files.deleteIfExists(dir.resolve("._LATEST.crc"))
+      Files.move(tmp, dir.resolve("_LATEST"),
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } else {
+      val tmp = new Path(root, "_LATEST.tmp")
+      val out = fs.create(tmp, true)
+      out.write(bytes); out.close()
+      org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri,
+          spark.sparkContext.hadoopConfiguration)
+        .rename(tmp, new Path(root, "_LATEST"),
+          org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    }
     next
   }
 
@@ -159,7 +180,7 @@ object Sinks {
 
   /** The committed version: `_LATEST` if present; otherwise the highest
     * `v=N` directory whose Spark `_SUCCESS` marker proves a completed
-    * write. With [[writeVersioned]]'s atomic overwrite-rename the pointer
+    * write. With [[writeVersioned]]'s atomic pointer replace the pointer
     * can only be absent before the first commit or after external damage —
     * and in that state the fallback may surface a version whose parquet
     * job finished but whose pointer swap never ran (best effort by design:
@@ -208,7 +229,7 @@ object Sinks {
     val n = df.count()
     val files = math.max(1L,
       (n + targetRecordsPerFile - 1) / targetRecordsPerFile).toInt
-    df.repartition(files).write
+    writer(df.repartition(files))
       .mode(SaveMode.Overwrite).parquet(path + "__staged")
     promote(FileSystem.get(spark.sparkContext.hadoopConfiguration), path,
       rotate = true, "compact")

@@ -1,7 +1,9 @@
 package graft.streaming
 
+import graft.io.LocalFs
 import graft.util.TempDirs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -31,7 +33,8 @@ import org.apache.spark.sql.types._
   * The caller wraps the drain in [[withStatePartitions]] or
   * [[withStatePartitionsNoFlush]], which pin the state shards (and the
   * no-data batch) for the drain, and builds the read-back after the
-  * wrapper returns.
+  * wrapper returns. Each drain writes its checkpoint, state and sink
+  * through [[withLocalIo]].
   */
 object StreamingMetrics {
 
@@ -165,26 +168,51 @@ object StreamingMetrics {
     withStatePartitions(spark,
       Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))(f)
 
+  /** Run `drain`, which starts and drains a query of `df` checkpointed at
+    * `ckpt`, with every local file the query writes (state deltas,
+    * offset and commit log entries, sink files) on [[LocalFs]], which
+    * forks no `chmod` per created file. A checkpoint on the local file
+    * system also gets Spark's `FileSystemBasedCheckpointFileManager`
+    * instead of the default FileContext one, whose renames fork 4
+    * `readlink` processes each: its atomic write is a temp file renamed
+    * within the same directory, and on a local disk that rename is one
+    * POSIX rename(2), so it is atomic. Other schemes keep Spark's default
+    * manager. Pinned and restored around the drain like
+    * [[withStatePartitions]]. */
+  private def withLocalIo[T](df: DataFrame, ckpt: String)(drain: => T): T = {
+    val spark = df.sparkSession
+    val manager = Option.when(
+        LocalFs.isLocal(ckpt, spark.sparkContext.hadoopConfiguration))(
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[FileSystemBasedCheckpointFileManager].getName)
+    withSessionConfs(spark, LocalFs.HadoopConfs.toSeq ++ manager)(drain)
+  }
+
   /** Start `df` into the memory table `name` in output `mode`,
     * checkpointed at a fresh scratch `<name>_ckpt`, and drain everything
     * available; read the result back with `spark.table(name)`. */
   private[streaming] def drainToMemory(df: DataFrame, name: String,
       mode: String): Unit = {
-    val q = df.writeStream.outputMode(mode).format("memory")
-      .queryName(name)
-      .option("checkpointLocation", TempDirs.scratch(s"${name}_ckpt"))
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+    val ckpt = TempDirs.scratch(s"${name}_ckpt")
+    withLocalIo(df, ckpt) {
+      val q = df.writeStream.outputMode(mode).format("memory")
+        .queryName(name)
+        .option("checkpointLocation", ckpt)
+        .start()
+      try q.processAllAvailable()
+      finally q.stop()
+    }
   }
 
   /** AvailableNow append of `df` into the parquet sink `sink`, checkpointed
     * at `ckpt`; returns `sink`. */
   private[streaming] def drainToParquet(df: DataFrame, sink: String,
       ckpt: String): String = {
-    df.writeStream.outputMode("append").format("parquet")
-      .option("path", sink).option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    withLocalIo(df, ckpt) {
+      df.writeStream.outputMode("append").format("parquet")
+        .option("path", sink).option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    }
     sink
   }
 
@@ -200,11 +228,15 @@ object StreamingMetrics {
     * once per micro-batch, checkpointed at a fresh scratch
     * `<prefix>_ckpt`. */
   private[streaming] def drainBatches(df: DataFrame, mode: String,
-      prefix: String)(write: DataFrame => Unit): Unit =
-    df.writeStream.outputMode(mode)
-      .foreachBatch((batch: DataFrame, _: Long) => write(batch))
-      .option("checkpointLocation", TempDirs.scratch(s"${prefix}_ckpt"))
-      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      prefix: String)(write: DataFrame => Unit): Unit = {
+    val ckpt = TempDirs.scratch(s"${prefix}_ckpt")
+    withLocalIo(df, ckpt) {
+      df.writeStream.outputMode(mode)
+        .foreachBatch((batch: DataFrame, _: Long) => write(batch))
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    }
+  }
 
   /** Run [[hourlyVolumeBounded]] over the static testdata into a PARQUET
     * sink (AvailableNow trigger) and return the sink's contents. Windows

@@ -18,7 +18,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * `shuffle.read_mb`/`write_mb`, `sources.input_mb`), its heaviest stage
   * rows, and — when it ran micro-batches — the summed
   * `StreamingQueryProgress` phases and state-store commit time
-  * (`stream.*`), and `rounds`: the pass's executed plans grouped per
+  * (`stream.*`), `io.process_starts` (operating-system processes the JVM
+  * started during the pass, by [[ProcessStarts]]; their command lines go
+  * to stderr), and `rounds`: the pass's executed plans grouped per
   * action into distinct shapes (the per-round plans of iterative loops,
   * which a query's final `explain` never shows), with exchange/sort/join
   * counts in the record and each shape's plan text on stderr. The last
@@ -100,18 +102,20 @@ final class Probe(spark: SparkSession, sfDir: String, opts: Probe.Opts) {
     audit.setLabel(s"$q/$pass")
     var df: Option[DataFrame] = None
     val phases = Array(-1L, -1L, -1L)
-    try {
-      var t0 = System.nanoTime()
-      df = Some(build)
-      phases(0) = ms(t0)
-      t0 = System.nanoTime()
-      df.get.queryExecution.executedPlan
-      phases(1) = ms(t0)
-      t0 = System.nanoTime()
-      df.get.count()
-      phases(2) = ms(t0)
-    } catch { case e: Throwable =>
-      System.err.println(s"[probe] $q/$pass failed: ${e.getMessage}") }
+    val (_, starts) = ProcessStarts.during {
+      try {
+        var t0 = System.nanoTime()
+        df = Some(build)
+        phases(0) = ms(t0)
+        t0 = System.nanoTime()
+        df.get.queryExecution.executedPlan
+        phases(1) = ms(t0)
+        t0 = System.nanoTime()
+        df.get.count()
+        phases(2) = ms(t0)
+      } catch { case e: Throwable =>
+        System.err.println(s"[probe] $q/$pass failed: ${e.getMessage}") }
+    }
     // QueryExecutionListener calls run on the listener bus' shared queue,
     // which the stage rows settle on; stream progress rides the separate
     // `streams` queue, so wait (bounded) until every stream query started
@@ -123,7 +127,9 @@ final class Probe(spark: SparkSession, sfDir: String, opts: Probe.Opts) {
     def drain[T](queue: java.util.concurrent.ConcurrentLinkedQueue[T]): Seq[T] =
       Iterator.continually(queue.poll()).takeWhile(_ != null).toSeq
     val rec = Record(q, pass, phases(0), phases(1), phases(2), phases(2) >= 0,
-      rows, drain(progress), drain(plans))
+      rows, drain(progress), drain(plans), starts)
+    if (starts.nonEmpty)
+      System.err.println(s"[probe] $q/$pass started: ${starts.mkString("; ")}")
     rec.shapes.foreach { case (shape, n) =>
       System.err.println(s"===== $q/$pass x$n =====\n" +
         shape.linesIterator.take(40).mkString("\n"))
@@ -169,10 +175,12 @@ object Probe {
 
   /** One pass of one query (or one warmup part): phase walls (-1 where
     * the pass failed before reaching the phase), its stage rows, stream
-    * progress, and the executed plan of every action. */
+    * progress, the executed plan of every action and the command line of
+    * every process started. */
   final case class Record(q: String, pass: String, buildMs: Long, planMs: Long,
       execMs: Long, ok: Boolean, rows: Seq[StageAudit.Row],
-      progress: Seq[StreamingQueryProgress], actionPlans: Seq[String]) {
+      progress: Seq[StreamingQueryProgress], actionPlans: Seq[String],
+      processStarts: Seq[String]) {
     def label: String = s"$q/$pass"
 
     /** The numeric fields, in record order. */
@@ -185,7 +193,8 @@ object Probe {
         "gc.ms" -> rows.map(_.gcMs).sum.toDouble,
         "shuffle.read_mb" -> rows.map(_.sReadB).sum / MB,
         "shuffle.write_mb" -> rows.map(_.sWriteB).sum / MB,
-        "sources.input_mb" -> rows.map(_.inputB).sum / MB)
+        "sources.input_mb" -> rows.map(_.inputB).sum / MB,
+        "io.process_starts" -> processStarts.size.toDouble)
       val states = progress.flatMap(_.stateOperators.toSeq)
       val stream = if (progress.isEmpty) Nil else
         ("stream.batches" -> progress.size.toDouble) +:

@@ -67,6 +67,12 @@ class ProbeSpec extends AnyFunSuite {
         assert(r.ok, r.label)
         assert(r.metric("stream.batches") >= 1, r.json)
         assert(r.json.contains("\"stream.state_commit_ms\":"))
+        // its checkpoint, state store and memory sink write fork-free; a
+        // cloned session's artifact cleanup may `rm -rf` whenever GC runs
+        assert(r.json.contains(
+          s""""io.process_starts":${r.processStarts.size},"""), r.json)
+        assert(LocalIoSpec.fileSystemForks(r.processStarts).isEmpty,
+          r.processStarts.mkString("; "))
       }
     }
   }
