@@ -1,7 +1,5 @@
 package graft.io
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -134,6 +132,7 @@ object Sinks {
   def writeVersioned(spark: SparkSession, df: DataFrame, path: String): Long = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val root = new Path(path)
+    fs.mkdirs(root)
     // next = 1 + max over BOTH the pointer and every v= dir on disk
     // (committed or not): a crash can leave a half-written max dir with no
     // pointer, and ErrorIfExists below must never collide with it
@@ -141,29 +140,17 @@ object Sinks {
       versionDirs(fs, root).map(_._1)).max + 1L
     val vdir = new Path(root, f"v=$next%06d")
     writer(df).mode(SaveMode.ErrorIfExists).parquet(vdir.toString)
-    // pointer swap is the commit: write sidecar, then atomically replace
-    // _LATEST with it (FileSystem.rename would need a delete first — a
-    // delete→rename pair has a crash window with no pointer on disk at all)
-    val bytes = next.toString.getBytes("UTF-8")
-    if (LocalFs.isLocal(path, spark.sparkContext.hadoopConfiguration)) {
-      // rename(2) within one directory: FileContext's rename would fork
-      // `readlink` 4 times. The pointer carries no `.crc`; a checksum left
-      // by an earlier FileContext commit would fail the new bytes, so it
-      // goes before the move
-      val dir = Paths.get(fs.makeQualified(root).toUri)
-      val tmp = Files.write(dir.resolve("_LATEST.tmp"), bytes)
-      Files.deleteIfExists(dir.resolve("._LATEST.crc"))
-      Files.move(tmp, dir.resolve("_LATEST"),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    } else {
-      val tmp = new Path(root, "_LATEST.tmp")
-      val out = fs.create(tmp, true)
-      out.write(bytes); out.close()
-      org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri,
-          spark.sparkContext.hadoopConfiguration)
-        .rename(tmp, new Path(root, "_LATEST"),
-          org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
+    // pointer swap is the commit: write sidecar, then OVERWRITE-rename over
+    // _LATEST (FileContext supports atomic overwrite where FileSystem.rename
+    // would need a delete first — a delete→rename pair has a crash window
+    // with no pointer on disk at all)
+    val tmp = new Path(root, "_LATEST.tmp")
+    val ptr = new Path(root, "_LATEST")
+    val out = fs.create(tmp, true)
+    out.write(next.toString.getBytes("UTF-8")); out.close()
+    org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri,
+        spark.sparkContext.hadoopConfiguration)
+      .rename(tmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     next
   }
 
@@ -180,7 +167,7 @@ object Sinks {
 
   /** The committed version: `_LATEST` if present; otherwise the highest
     * `v=N` directory whose Spark `_SUCCESS` marker proves a completed
-    * write. With [[writeVersioned]]'s atomic pointer replace the pointer
+    * write. With [[writeVersioned]]'s atomic overwrite-rename the pointer
     * can only be absent before the first commit or after external damage —
     * and in that state the fallback may surface a version whose parquet
     * job finished but whose pointer swap never ran (best effort by design:

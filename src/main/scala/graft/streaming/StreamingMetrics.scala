@@ -176,9 +176,15 @@ object StreamingMetrics {
     * instead of the default FileContext one, whose renames fork 4
     * `readlink` processes each: its atomic write is a temp file renamed
     * within the same directory, and on a local disk that rename is one
-    * POSIX rename(2), so it is atomic. Other schemes keep Spark's default
-    * manager. Pinned and restored around the drain like
-    * [[withStatePartitions]]. */
+    * POSIX rename(2), so it is atomic. Unlike the default manager, it
+    * replaces an offset or commit entry that already exists instead of
+    * failing, so a second writer on the same checkpoint would commit the
+    * same batch silently: the drains rely on one writer per checkpoint.
+    * Spark refuses a second active query on one checkpoint only within one
+    * JVM; a caller of [[runHourlyVolumeBounded]] that passes its own
+    * checkpoint dir must not share it across processes. Other schemes
+    * keep Spark's default manager. Pinned and restored around the drain
+    * like [[withStatePartitions]]. */
   private def withLocalIo[T](df: DataFrame, ckpt: String)(drain: => T): T = {
     val spark = df.sparkSession
     val manager = Option.when(
@@ -242,7 +248,9 @@ object StreamingMetrics {
     * sink (AvailableNow trigger) and return the sink's contents. Windows
     * still open when the source drains stay in state — append emits only
     * watermark-closed windows, which is the contract (a live deployment
-    * keeps running; the final partial hour is not final data). */
+    * keeps running; the final partial hour is not final data). One
+    * process at a time may run it on a given `checkpointDir` (see
+    * [[withLocalIo]]). */
   def runHourlyVolumeBounded(spark: SparkSession, sfDir: String,
       outDir: String, checkpointDir: String): DataFrame = {
     withStatePartitions(spark) {

@@ -76,36 +76,18 @@ class LocalIoSpec extends AnyFunSuite {
     assert(Tables.parquet(spark, s"$out/tokens").count() > 0)
   }
 
-  test("every other io.Sinks writer forks nothing and pins nothing") {
+  test("the csv, json, orc, partitioned and compact writers fork nothing " +
+      "and pin nothing") {
     val dir = util.TempDirs.staging("graft_localio_sinks").toString
     val df = Seq((1L, "en"), (2L, "de"), (3L, "en")).toDF("id", "lang")
-    val versions = forkFree("io.Sinks writers") {
+    forkFree("io.Sinks writers") {
       io.Sinks.writeCsv(df, s"$dir/csv")
       io.Sinks.writeJson(df, s"$dir/json")
       io.Sinks.writeOrc(df, s"$dir/orc")
       io.Sinks.writePartitioned(df, s"$dir/part", Seq("lang"))
       io.Sinks.compact(spark, s"$dir/part", 2L)
-      Seq.fill(2)(io.Sinks.writeVersioned(spark, df, s"$dir/ver"))
     }
-    assert(versions == Seq(0L, 1L))
-    assert(io.Sinks.latestVersion(spark, s"$dir/ver").contains(1L))
-    assert(io.Sinks.readVersioned(spark, s"$dir/ver").count() == 3)
     assert(Tables.parquet(spark, s"$dir/part").count() == 3)
-  }
-
-  test("writeVersioned replaces a pointer that carries a Hadoop checksum") {
-    val path = s"${util.TempDirs.staging("graft_localio_crc")}/t"
-    io.Sinks.writeVersioned(spark, Seq(1L).toDF("id"), path)
-    // the layout a FileContext commit leaves: `_LATEST` with its `.crc`
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(path, "_LATEST"), true)
-    out.write("0".getBytes("UTF-8")); out.close()
-    assert(Files.exists(Paths.get(path, "._LATEST.crc")))
-    assert(io.Sinks.writeVersioned(spark, Seq(1L, 2L).toDF("id"), path) == 1L)
-    assert(!Files.exists(Paths.get(path, "._LATEST.crc")))
-    assert(io.Sinks.latestVersion(spark, path).contains(1L))
-    assert(io.Sinks.readVersioned(spark, path).count() == 2)
   }
 
   test("bounded streams: checkpoints, state stores and sinks fork nothing, " +
